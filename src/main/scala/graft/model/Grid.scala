@@ -67,6 +67,30 @@ final case class AxisSpec(origin: Double, step: Double, n: Int) {
   def nearestValue(v: Double): Double = valueAt(nearestIndex(v))
 }
 
+object AxisSpec {
+  /** The uniform axis through `values` (sorted ascending, distinct), or
+    * None. An axis is returned only when `valueAt(i)` reproduces
+    * `values(i)` bit for bit: the snapped crop's `between` filter
+    * compares stored coordinates against recomputed doubles, so an axis
+    * off by one ulp would silently drop an edge row. The values must
+    * also be uniform in exact arithmetic, so a sub-axis re-originated on
+    * a stored value (as [[graft.operators.Crop.bbox]] does) recomputes
+    * stored values too. A longer axis on a decimal step such as 0.1 is
+    * not uniform in binary and gives None. Fewer than two values give
+    * no step, so None.
+    */
+  def fromSorted(values: IndexedSeq[Double]): Option[AxisSpec] = {
+    if (values.length < 2) return None
+    val ax = AxisSpec(values(0), values(1) - values(0), values.length)
+    def exact(d: Double) = new java.math.BigDecimal(d)
+    val uniform = values.indices.forall { i =>
+      ax.valueAt(i) == values(i) && exact(values(i)).compareTo(
+        exact(ax.origin).add(exact(ax.step).multiply(java.math.BigDecimal.valueOf(i)))) == 0
+    }
+    if (uniform && ax.step > 0) Some(ax) else None
+  }
+}
+
 final case class GridMeta(
     datasetName: String,
     institution: String = "",

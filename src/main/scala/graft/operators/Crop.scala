@@ -3,7 +3,6 @@ package graft.operators
 import java.time.{LocalDateTime, ZoneId}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.{BBox, GridDataset}
@@ -23,31 +22,39 @@ import graft.model.{BBox, GridDataset}
   */
 object Crop {
 
-  /** Nearest distinct value of `colName` to `target`; ties resolve to the
-    * smaller value (NumPy argmin first-occurrence on an ascending axis).
-    * Used only when the grid has no uniform-axis metadata; the distinct
-    * set is axis-sized (tiny), so this is a metadata-scale job.
+  /** Sorted distinct values of the grid's x and y columns, both axes
+    * in ONE aggregate job over the two projected columns. The result is
+    * axis-sized (metadata scale), so it is collected as plain arrays.
+    * Used when the grid has no uniform-axis metadata, and by
+    * [[graft.sources.LakeAdapter]] to derive that metadata.
     */
-  def nearestAxisValue(df: DataFrame, colName: String, target: Double): Double =
-    df.select(col(colName)).distinct()
-      .orderBy(abs(col(colName) - lit(target)), col(colName))
-      .limit(1).collect()(0).getDouble(0)
+  def axisValues(g: GridDataset): (IndexedSeq[Double], IndexedSeq[Double]) = {
+    val r = g.df.agg(array_sort(collect_set(g.x)), array_sort(collect_set(g.y))).head()
+    (r.getSeq[Double](0).toIndexedSeq, r.getSeq[Double](1).toIndexedSeq)
+  }
+
+  /** Nearest of the ascending `values` to `target`; ties resolve to the
+    * smaller value (NumPy argmin first-occurrence on an ascending axis).
+    */
+  def nearestOf(values: IndexedSeq[Double], target: Double): Double = {
+    require(values.nonEmpty, "axis has no values to snap to")
+    values.minBy(v => math.abs(v - target))(Ordering.Double.TotalOrdering)
+  }
 
   /** Snapped inclusive bbox crop. Closed-form snap when axis metadata is
     * present (no extra jobs — the filter constant-folds into the scan);
-    * otherwise two tiny distinct-axis lookups.
+    * otherwise one axis-sized job ([[axisValues]]) and a snap over its result.
     */
   def bbox(g: GridDataset, b: BBox): GridDataset = {
     val box = b.expandIfDegenerate()
+    lazy val scanned = axisValues(g)
     val (xLo, xHi) = g.meta.xAxis match {
       case Some(ax) => (ax.nearestValue(box.west), ax.nearestValue(box.east))
-      case None => (nearestAxisValue(g.df, g.meta.xDim, box.west),
-                    nearestAxisValue(g.df, g.meta.xDim, box.east))
+      case None => (nearestOf(scanned._1, box.west), nearestOf(scanned._1, box.east))
     }
     val (yLo, yHi) = g.meta.yAxis match {
       case Some(ay) => (ay.nearestValue(box.south), ay.nearestValue(box.north))
-      case None => (nearestAxisValue(g.df, g.meta.yDim, box.south),
-                    nearestAxisValue(g.df, g.meta.yDim, box.north))
+      case None => (nearestOf(scanned._2, box.south), nearestOf(scanned._2, box.north))
     }
     val df = g.df.filter(
       g.x.between(math.min(xLo, xHi), math.max(xLo, xHi)) &&

@@ -22,16 +22,17 @@ import graft.model.GridDataset
 object PointExtract {
 
   /** (pointId, lon, lat) -> nearest cell (x, y), computed from axis
-    * metadata (closed form) or tiny distinct-axis jobs.
+    * metadata (closed form) or, without it, from ONE axis-sized job for
+    * the whole point list ([[Crop.axisValues]]) and a snap over its result.
     */
-  def snapPoints(g: GridDataset, points: Seq[(String, Double, Double)]): Seq[(String, Double, Double)] =
+  def snapPoints(g: GridDataset, points: Seq[(String, Double, Double)]): Seq[(String, Double, Double)] = {
+    lazy val scanned = Crop.axisValues(g)
     points.map { case (id, lon, lat) =>
-      val sx = g.meta.xAxis.map(_.nearestValue(lon))
-        .getOrElse(Crop.nearestAxisValue(g.df, g.meta.xDim, lon))
-      val sy = g.meta.yAxis.map(_.nearestValue(lat))
-        .getOrElse(Crop.nearestAxisValue(g.df, g.meta.yDim, lat))
+      val sx = g.meta.xAxis.fold(Crop.nearestOf(scanned._1, lon))(_.nearestValue(lon))
+      val sy = g.meta.yAxis.fold(Crop.nearestOf(scanned._2, lat))(_.nearestValue(lat))
       (id, sx, sy)
     }
+  }
 
   /** Wide table: time x point-id for one variable, ordered by time.
     * Ties (two points snapping to the same cell) are fine — each point id

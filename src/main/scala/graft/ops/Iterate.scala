@@ -61,12 +61,18 @@ object Iterate {
     * which round r-1's blocks are dead (r's lineage was truncated at
     * its own blocks). Reliable checkpoints (dir configured) keep their
     * files; unpersist is a no-op there.
+    *
+    * Only a checkpoint ITSELF is accepted: the analyzed plan's root must
+    * be the checkpoint's `LogicalRDD`. A derived plan (a join, filter or
+    * projection over checkpoints) is rejected, since the checkpoints it
+    * embeds may still be live — e.g. the `edges` every CC round reads.
     */
   def releaseCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+    df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
-      case _ => ()
+      case other => throw new IllegalArgumentException(
+        s"releaseCheckpointed takes a checkpoint, not a plan derived from one: ${other.nodeName}")
     }
 
   /** Run `step` from `init` until `measure` stops changing or

@@ -1,8 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.model.{BBox, GridDataset, GridMeta}
+import graft.model.{AxisSpec, BBox, GridDataset, GridMeta}
 
 /** Source-adapter registry — the Spark analog of the reference's
   * `DataAccessorFactory` plugin surface (reference: factory.py:8-59,
@@ -52,6 +55,22 @@ object SyntheticEra5Adapter extends SourceAdapter {
 /** Parquet-lake adapter: datasets are directories of long-format grid
   * Parquet (partitioned by year/month for pruning at scale — SURVEY.md
   * §4). Variables project; bbox/time filters push down to the scan.
+  *
+  * The lake is schema-on-read, so its grid axes come from an axis
+  * catalog derived once per lake VERSION (the reference reads the same
+  * axes from dataset metadata, shared_functions.py:185-191): one
+  * aggregate job over the projected (x, y) columns yields the sorted
+  * distinct values ([[graft.operators.Crop.axisValues]]), and an axis
+  * whose values are exactly uniform becomes an [[AxisSpec]]
+  * ([[AxisSpec.fromSorted]]) — so [[graft.operators.Crop.bbox]] and
+  * [[graft.operators.PointExtract.snapPoints]] snap in closed form, and
+  * the loaded grid feeds [[graft.operators.SpatialResample]] as is. A
+  * non-uniform axis stays None and takes the crop's fallback.
+  *
+  * The catalog holds one entry per dataset path, keyed by the leaf-file
+  * listing (path, length, modification time) that `spark.read.parquet`
+  * already built: loading an unchanged lake adds no job to the Parquet
+  * read, and rewriting any file replaces the entry on the next load.
   */
 object LakeAdapter extends SourceAdapter {
   val name = "ParquetLake"
@@ -62,10 +81,47 @@ object LakeAdapter extends SourceAdapter {
     else Seq.empty
   }
   def supportedVariables(dataset: String): Seq[String] = Seq.empty // schema-on-read
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private type Axes = (Option[AxisSpec], Option[AxisSpec])
+  private val catalog = new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, Axes)]()
+
+  /** The leaf files the relation's file index listed when the scan was
+    * resolved, or None for an index that keeps no listing.
+    */
+  private def version(df: DataFrame): Option[Fingerprint] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.collect { case idx: PartitioningAwareFileIndex =>
+      idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+    }
+
+  private def axes(path: String, g: GridDataset): Axes = {
+    val coordsAreDoubles = Seq(g.meta.xDim, g.meta.yDim).forall(c =>
+      g.df.schema.exists(f => f.name == c && f.dataType == DoubleType))
+    def derive(): Axes = {
+      val (xs, ys) = graft.operators.Crop.axisValues(g)
+      (AxisSpec.fromSorted(xs), AxisSpec.fromSorted(ys))
+    }
+    if (!coordsAreDoubles) (None, None)
+    else version(g.df) match {
+      case None => derive()
+      case Some(v) =>
+        Option(catalog.get(path)).collect { case (`v`, a) => a }.getOrElse {
+          val a = derive()
+          catalog.put(path, (v, a))
+          a
+        }
+    }
+  }
+
   def load(spark: SparkSession, dataset: String, variables: Seq[String],
            bbox: Option[BBox], timeRange: Option[(String, String)]): GridDataset = {
-    val df = spark.read.parquet(s"$root/$dataset")
-    var g = GridDataset(df, GridMeta(datasetName = dataset))
+    val path = s"$root/$dataset"
+    val lake = GridDataset(spark.read.parquet(path), GridMeta(datasetName = dataset))
+    val (xAxis, yAxis) = axes(path, lake)
+    var g = lake.copy(meta = lake.meta.copy(xAxis = xAxis, yAxis = yAxis))
     if (variables.nonEmpty) g = g.selectVariables(variables)
     bbox.foreach(b => g = graft.operators.Crop.bbox(g, b))
     timeRange.foreach { case (s, e) => g = graft.operators.Crop.time(g, s, e) }

@@ -321,6 +321,11 @@ object SimilarityKernels {
     * reads both arrays once. On sorted-distinct inputs the count is
     * identical to array_intersect's by definition (distinct common
     * elements).
+    *
+    * Null contract: a NULL array gives a NULL count (the expression is
+    * null-safe), but the elements must be non-null — the kernels'
+    * arrays are `containsNull = false`. A null element is not checked
+    * for: it reads as whatever its slot holds, so the count is undefined.
     */
   def sortedIntersectCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
@@ -644,6 +649,8 @@ object GraftFunctions {
     column(DotProduct(expression(a), expression(b)))
   /** |A ∩ B| of two sorted-distinct long arrays (the shingle-set
     * contract) — the allocation-free exact-Jaccard verify kernel.
+    * NULL if either array is NULL; the arrays must hold no null
+    * element (the shingle kernels' outputs never do).
     */
   def sorted_intersect_count(a: Column, b: Column): Column =
     column(SortedIntersectCount(expression(a), expression(b)))

@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TimeParse, Udafs}
-import graft.sources.{JsonlDocs, PointSource, SourceRegistry, TableSink}
+import graft.model.{AxisSpec, BBox, GridDataset, GridMeta}
+import graft.operators.{Crop, SpatialResample}
+import graft.sources.{JsonlDocs, LakeAdapter, PointSource, SourceRegistry, SyntheticGrid,
+  TableSink}
 
 class ExtensionsAndSourcesSpec extends SparkSpec {
 
@@ -236,6 +239,92 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") &&
       (plan.contains("(month") || plan.contains("month#")))
     assert(pruned.count() == 25L * 7 * 19) // Feb 1-2: 25 hourly steps
+  }
+
+  /** A lake dataset written from `df`, with LakeAdapter pointed at it. */
+  private def lake(df: org.apache.spark.sql.DataFrame): String = {
+    val dir = Files.createTempDirectory("lake").toString
+    df.write.mode("overwrite").parquet(s"$dir/grid")
+    LakeAdapter.root = dir
+    dir
+  }
+
+  private def loadLake(bbox: Option[BBox] = None): GridDataset =
+    LakeAdapter.load(spark, "grid", Seq("t2m"), bbox, None)
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("time", "y", "x").collect().toSeq
+
+  test("lake axis catalog: a uniform lake yields exactly the SyntheticGrid axes") {
+    lake(SyntheticGrid.df(spark))
+    val g = loadLake()
+    assert(g.meta.xAxis == SyntheticGrid.meta.xAxis && g.meta.yAxis == SyntheticGrid.meta.yAxis)
+    // the lake crops in closed form exactly as the in-engine grid does
+    val b = BBox(-82.9, 41.6, -80.2, 42.4)
+    val viaLake = loadLake(Some(b))
+    val viaGrid = Crop.bbox(SyntheticGrid.grid(spark).selectVariables(Seq("t2m")), b)
+    assert(viaLake.meta.xAxis == viaGrid.meta.xAxis && viaLake.meta.yAxis == viaGrid.meta.yAxis)
+    assert(sortedRows(viaLake.df) == sortedRows(viaGrid.df))
+    // and regrids without the caller supplying axes (sums of weighted
+    // corners may differ in the last bit with shuffle order)
+    val Seq(fromLake, fromGrid) = Seq(viaLake, viaGrid).map(SpatialResample.bilinear(_, 2.0, 2.0))
+    assert(fromLake.meta.xAxis == fromGrid.meta.xAxis && fromLake.meta.yAxis == fromGrid.meta.yAxis)
+    val (lakeRows, gridRows) = (sortedRows(fromLake.df), sortedRows(fromGrid.df))
+    assert(lakeRows.nonEmpty && lakeRows.length == gridRows.length)
+    assert(lakeRows.zip(gridRows).forall { case (a, b) =>
+      a.get(0) == b.get(0) && a.getDouble(1) == b.getDouble(1) && a.getDouble(2) == b.getDouble(2) &&
+        math.abs(a.getDouble(3) - b.getDouble(3)) <= 1e-9
+    })
+  }
+
+  test("lake axis catalog: a second load of an unchanged lake adds no job to the Parquet read") {
+    val dir = lake(SyntheticGrid.df(spark))
+    // spark.read.parquet's own schema-inference job runs on every load;
+    // the catalog adds one fused job on a new lake version, none after
+    val (_, readJobs) = countingJobs(spark.read.parquet(s"$dir/grid"))
+    val b = BBox(-82.9, 41.6, -80.2, 42.4)
+    def request() = LakeAdapter.load(spark, "grid", Seq("t2m"), Some(b),
+      Some(("2019-01-31 00:00:00", "2019-01-31 23:00:00")))
+    val (_, cold) = countingJobs(request())
+    val (_, warm) = countingJobs(request())
+    assert(cold == readJobs + 1, s"cold load ran $cold jobs, the read alone $readJobs")
+    assert(warm == readJobs, s"warm load ran $warm jobs, the read alone $readJobs")
+  }
+
+  test("lake axis catalog: rewriting the lake's files invalidates the entry") {
+    val dir = lake(SyntheticGrid.df(spark))
+    assert(loadLake().meta.xAxis == SyntheticGrid.meta.xAxis)
+    // same dataset path, new files: the grid moved 10 degrees east
+    SyntheticGrid.df(spark).withColumn("x", col("x") + 10.0)
+      .write.mode("overwrite").parquet(s"$dir/grid")
+    assert(loadLake().meta.xAxis == Some(AxisSpec(-73.5, 0.25, SyntheticGrid.NX)))
+    assert(loadLake().meta.yAxis == SyntheticGrid.meta.yAxis)
+  }
+
+  test("lake axis catalog: jittered and 0.1-degree axes stay None and crop like the fallback") {
+    val base = SyntheticGrid.df(spark)
+    val jittered = base.withColumn("x", col("x") + (col("jx") % 3) * 1e-9)
+    val decimal = base
+      .withColumn("x", lit(-83.5) + col("jx") * lit(0.1))
+      .withColumn("y", lit(41.0) + col("jy") * lit(0.1))
+    def stored(origin: Double, i: Int) = origin + i * 0.1
+    val boxes = Seq(
+      BBox(-82.9, 41.6, -80.2, 42.4),
+      BBox(-83.375, 41.375, -79.125, 42.625), // exact midpoints on the 0.25 grid
+      BBox(stored(-83.5, 3), stored(41.0, 2), stored(-83.5, 12), stored(41.0, 5)))
+    for ((df, wantX, wantY) <- Seq(
+        (jittered, None, SyntheticGrid.meta.yAxis),
+        (decimal, None, None))) {
+      val dir = lake(df)
+      val g = loadLake()
+      assert(g.meta.xAxis == wantX && g.meta.yAxis == wantY)
+      val noAxes = GridDataset(spark.read.parquet(s"$dir/grid"), GridMeta("grid"))
+        .selectVariables(Seq("t2m"))
+      boxes.foreach { b =>
+        val want = sortedRows(Crop.bbox(noAxes, b).df)
+        assert(want.nonEmpty && sortedRows(loadLake(Some(b)).df) == want, s"crop of $b")
+      }
+    }
   }
 
   test("parquet schema evolution: mergeSchema unions columns, absent fields read NULL") {

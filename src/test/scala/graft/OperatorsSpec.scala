@@ -89,12 +89,27 @@ class OperatorsSpec extends SparkSpec {
     val g = grid
     val noMeta = g.copy(meta = g.meta.copy(xAxis = None, yAxis = None))
     val b = BBox(-82.9, 41.6, -80.2, 42.4)
-    val viaScan = Crop.bbox(noMeta, b)
-    val viaAxis = Crop.bbox(g, b)
+    // both axes' distinct values come back in ONE job; closed form runs none
+    val (viaScan, scanJobs) = countingJobs(Crop.bbox(noMeta, b))
+    val (viaAxis, axisJobs) = countingJobs(Crop.bbox(g, b))
+    assert(scanJobs == 1 && axisJobs == 0, s"crop jobs: $scanJobs via scan, $axisJobs via axis")
     assert(viaScan.df.count() == viaAxis.df.count())
     assert(viaScan.df.except(viaAxis.df).count() == 0)
-    val pts = Seq(("p0", -82.98, 41.63))
-    assert(PointExtract.snapPoints(noMeta, pts) == PointExtract.snapPoints(g, pts))
+    // an exact-midpoint box: both edges tie, and ties take the smaller line
+    val mid = Crop.bbox(noMeta, BBox(-83.375, 41.375, -79.125, 42.625))
+    assert(mid.df.agg(min("x"), max("x"), min("y"), max("y")).head().toSeq ==
+      Seq(-83.5, -79.25, 41.25, 42.5))
+    val pts = Seq(
+      ("p0", -82.98, 41.63),
+      ("tie", -83.375, 41.375),   // exact midpoints -> lower lines
+      ("tie_hi", -79.125, 42.625),
+      ("same", -82.99, 41.66),    // shares p0's cell
+      ("far", -200.0, 99.0))      // clamps to the axis ends
+    val (snapped, snapJobs) = countingJobs(PointExtract.snapPoints(noMeta, pts))
+    assert(snapJobs == 1, s"a point list snaps in one job, ran $snapJobs")
+    assert(snapped == PointExtract.snapPoints(g, pts))
+    assert(snapped == Seq(("p0", -83.0, 41.75), ("tie", -83.5, 41.25),
+      ("tie_hi", -79.25, 42.5), ("same", -83.0, 41.75), ("far", -83.5, 42.75)))
   }
 
   test("time crop is inclusive on both ends: 73 hourly steps (P3)") {

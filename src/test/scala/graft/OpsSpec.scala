@@ -439,6 +439,7 @@ class OpsSpec extends SparkSpec {
       (13L, "mike november oscar"),        // slice-internal dup -> dropped
       (14L, "")                            // empty is a legitimate text
     ).toDF("doc_id", "text")
+    assert(disjointIds(existing, incoming, "doc_id"), "precondition: slice ids are new")
     val inc = Dedup.incrementalDedup(existing, incoming)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(inc == Seq(10L, 12L, 14L))
@@ -779,6 +780,7 @@ class OpsSpec extends SparkSpec {
       (104L, c + " y"),    // drops: near-dups old 4
       (105L, "totally different short text about engines here")
     ).toDF("doc_id", "text")
+    assert(disjointIds(old, incoming, "doc_id"), "precondition: slice ids are new")
     val index = Dedup.minhashBandIndex(old, k = 5, numHashes = 64, bands = 16)
     val inc = Dedup.incrementalMinhashDedup(index, old, incoming,
         k = 5, numHashes = 64, bands = 16, threshold = 0.5)
@@ -1236,6 +1238,7 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "sh")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(disjointIds(old, incoming, "doc_id"), "precondition: slice ids are new")
     val index = Dedup.hammingBandIndex(old, maxDistance = 2)
     spark.catalog.clearCache()
     val inc = ids(Dedup.incrementalHammingDedup(index, old, incoming,
@@ -1737,6 +1740,7 @@ class OpsSpec extends SparkSpec {
     val incoming = base.filter(col("vec_id") >= 20 && col("vec_id") < 60)
       .unionAll(scaled(base.filter(col("vec_id") < 2), 1000L))   // near-dups of old 0/1
       .unionAll(scaled(base.filter(col("vec_id") === 21L), 2000L)) // within-slice dup of 21
+    assert(disjointIds(old, incoming, "vec_id"), "precondition: slice ids are new")
     val index = Dedup.signBucketIndex(old, planes = 12, tables = 4)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -4147,6 +4151,17 @@ class OpsSpec extends SparkSpec {
     val full = Similarity.mmrSelect(emb, 0L, 4, 0.75)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     assert(viaIvf == full, s"IVF-shortlisted MMR diverged: $viaIvf != $full")
+  }
+
+  test("Iterate.releaseCheckpointed rejects a derived plan; the live checkpoint under it stays readable") {
+    val ckpt = spark.range(1000).toDF("id").localCheckpoint(eager = true)
+    val derived = ckpt.filter(col("id") % 2 === 0).join(ckpt, "id")
+    intercept[IllegalArgumentException](Iterate.releaseCheckpointed(derived))
+    // a local checkpoint cannot recompute: had its blocks been dropped,
+    // these reads would fail
+    assert(derived.count() == 500)
+    assert(ckpt.agg(sum("id")).head().getLong(0) == 999L * 1000 / 2)
+    Iterate.releaseCheckpointed(ckpt) // the checkpoint itself is accepted
   }
 
   test("Iterate.checkpointed: reliable branch with a checkpoint dir set, files written, cleaned up") {

@@ -29,6 +29,24 @@ class PropertySpec extends SparkSpec {
     }))
   }
 
+  test("sorted_intersect_count equals size(array_intersect) on shingle_set/word_shingle_set outputs") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.GraftFunctions.{shingle_set, sorted_intersect_count,
+      word_shingle_set}
+    // a tiny vocabulary makes shared and repeated shingles common
+    val text = Gen.listOf(Gen.oneOf("ab", "ba", "abc", "c", "a b")).map(_.mkString(" "))
+    val pair = Gen.oneOf(Gen.zip(text, text), text.map(t => (t, t + " ab c")))
+    def agrees(a: String, b: String) =
+      sorted_intersect_count(col(a), col(b)) === size(array_intersect(col(a), col(b)))
+    assert(passes(Prop.forAll(Gen.listOfN(40, pair)) { ps =>
+      ps.toDF("a", "b").select(
+          shingle_set(col("a"), 3).as("ca"), shingle_set(col("b"), 3).as("cb"),
+          word_shingle_set(col("a"), 2).as("wa"), word_shingle_set(col("b"), 2).as("wb"))
+        .filter(!(agrees("ca", "cb") && agrees("wa", "wb")))
+        .isEmpty
+    }))
+  }
+
   test("upsample row-count law: steps = floor(span/step) + 1 per cell") {
     val g = SyntheticGrid.grid(spark).selectVariables(Seq("t2m"))
     val one = g.copy(df = g.df.filter(col("x") === -83.5 && col("y") === 41.25))
@@ -506,6 +524,7 @@ class PropertySpec extends SparkSpec {
       val df = docs.toDF("doc_id", "text")
       val old = df.filter(col("doc_id") < split)
       val incoming = df.filter(col("doc_id") >= split)
+      assert(disjointIds(old, incoming, "doc_id"), "precondition: slice ids are new")
       val index = graft.ops.Dedup.minhashBandIndex(old, k = 5,
         numHashes = 64, bands = 16)
       spark.catalog.clearCache() // clean baseline for the no-leak law below

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per forked test JVM). */
@@ -20,4 +24,34 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the number of Spark jobs it started, counted as
+    * the benchmark counts them: with AQE off, so a shuffle stage runs
+    * inside its action's job instead of as a job of its own. The
+    * session's AQE setting is restored afterwards.
+    */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    val savedAqe = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.removeSparkListener(listener)
+      savedAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
+  }
+
+  /** The incremental operators' precondition: a slice reuses no corpus id. */
+  def disjointIds(corpus: DataFrame, slice: DataFrame, id: String): Boolean =
+    corpus.select(id).intersect(slice.select(id)).isEmpty
 }
