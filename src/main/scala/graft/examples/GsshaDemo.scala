@@ -31,6 +31,12 @@ import graft.sources.SourceRegistry
   */
 object GsshaDemo {
 
+  /** The reference's Lake Erie AOI: the WGS84 bounds of
+    * `LEEM_boundary.shp` as pinned by its `test_2_era5.py:91-104`
+    * (FIXTURES.md). The demo's fallback AOI.
+    */
+  val LakeErieAoi: BBox = BBox(-83.47519, 41.38284, -78.85399, 42.90550)
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/gssha_demo")
     val spark = SparkSession.builder()
@@ -61,30 +67,25 @@ object GsshaDemo {
 
     // ---- cells 10–12: watershed AOI ---------------------------------
     // the notebook reads inflitration_export_poly.shp with geopandas;
-    // Crs.wgs84Bounds parses the same .shp header when present (the
-    // CrsSpec golden), with the parsed Lake Erie bounds as the offline
-    // fallback so a fresh checkout runs without the reference tree
+    // ShapefileBounds.wgs84Bounds reads the same .shp header (and its
+    // UTM 15N .prj) when the file is present, else there is no watershed
     val shp = "/root/reference/examples/example_data/inflitration_export_poly.shp"
     val watershed =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(shp)))
         Some(graft.functions.ShapefileBounds.wgs84Bounds(shp))
       else None
     watershed.foreach(b => println(s"watershed bounds (UTM 15N .prj → WGS84): $b"))
-    // the notebook's watershed sits near St. Louis — outside the
-    // synthetic fixture's Lake Erie domain — so when they are disjoint
-    // the demo falls back to the reference's own Lake Erie AOI
-    // (LEEM_boundary.shp, the CrsSpec golden) to keep the grid
-    // value-bearing; the pipeline below is identical either way
+    // the notebook's watershed sits near St. Louis, outside the synthetic
+    // fixture's domain; when it is absent or disjoint from that domain
+    // the demo crops the reference's Lake Erie AOI instead (LakeErieAoi,
+    // test_2_era5.py:91-104), so the grid stays value-bearing and the
+    // output does not depend on any file outside the repository; the
+    // pipeline below is identical either way
     val domain = BBox(-83.5, 41.25, -79.0, 42.75)
     val aoi = watershed
       .filter(b => b.west <= domain.east && b.east >= domain.west &&
         b.south <= domain.north && b.north >= domain.south)
-      .getOrElse {
-        val leem = "/root/reference/testing/test_data/LEEM_boundary.shp"
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(leem)))
-          graft.functions.ShapefileBounds.wgs84Bounds(leem)
-        else domain
-      }
+      .getOrElse(LakeErieAoi)
     println(s"AOI: $aoi")
 
     // ---- cell 15: fetch the precipitation grid ----------------------
