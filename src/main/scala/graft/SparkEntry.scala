@@ -2893,12 +2893,12 @@ object SparkEntry {
         .select(col("hub").as("doc_id_a"), col("doc_id").as("doc_id_b"))
       val titleEdges = Dedup.fuzzyTitlePairs(d, keyLen = 32)
         .select("doc_id_a", "doc_id_b")
-      // pointer-jumping CC (identical fixpoint — the n141 law):
-      // the r10 stage profile put the CC rounds at ~60% of this
-      // query's cost, and the shortcut cuts the round count below the
-      // star+bridge graph's propagation depth (PLANS.md "n129 stage
-      // profile": 6.3 -> 5.7 s measured, hashes unchanged)
-      val comps = Dedup.dupClustersFast(urlEdges.unionAll(titleEdges))
+      // dupClusters' pointer jumping: the r10 stage profile put the
+      // CC rounds at ~60% of this query's cost, and the shortcut cuts
+      // the round count below the star+bridge graph's propagation
+      // depth (PLANS.md "n129 stage profile": 6.3 -> 5.7 s measured,
+      // hashes unchanged)
+      val comps = Dedup.dupClusters(urlEdges.unionAll(titleEdges))
       d.select("doc_id").join(comps, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("entity_id"))
@@ -3378,14 +3378,14 @@ object SparkEntry {
       // the shortcut needs O(log diameter). The oracle replays the
       // COMPONENT STRUCTURE, not the rounds — a recursive-CTE
       // transitive closure is algorithm-independent, and the shortcut
-      // provably shares dupClusters' fixpoint
+      // provably shares plain min-label propagation's fixpoint
       val docs = t(s, dir, "documents")
       val chain = docs.filter(col("doc_id") < 249)
         .select(col("doc_id").as("doc_id_a"),
           (col("doc_id") + 1).as("doc_id_b"))
       val pairs = Dedup.simhashNearDups(docs, maxDistance = 6)
         .select("doc_id_a", "doc_id_b").unionAll(chain)
-      Dedup.dupClustersFast(pairs).orderBy("doc_id")
+      Dedup.dupClusters(pairs).orderBy("doc_id")
     }),
 
     "n165_incremental_clusters" -> ((s, dir) => {
@@ -3408,7 +3408,7 @@ object SparkEntry {
           .select("doc_id_a", "doc_id_b").unionAll(chain))
       val old = pairs.filter(col("doc_id_a") < 125 && col("doc_id_b") < 125)
       val slice = pairs.filter(!(col("doc_id_a") < 125 && col("doc_id_b") < 125))
-      val published = Dedup.dupClustersFast(old)
+      val published = Dedup.dupClusters(old)
       Dedup.incrementalDupClusters(published, slice).orderBy("doc_id")
     }),
 
@@ -3427,7 +3427,7 @@ object SparkEntry {
       val pairs = graft.ops.Iterate.lazyCheckpointed(
         Dedup.simhashNearDups(docs, maxDistance = 6)
           .select("doc_id_a", "doc_id_b").unionAll(chain))
-      val published = Dedup.dupClustersFast(pairs)
+      val published = Dedup.dupClusters(pairs)
       val removed = docs.filter(col("doc_id") % 83 === 0).select("doc_id")
       Dedup.retractFromClusters(published, pairs, removed).orderBy("doc_id")
     }),

@@ -22,7 +22,7 @@ import graft.sources.Tables
   *                 ([[Dedup.hammingBandIndex]]) + the exact-substring
   *                 gram index ([[TextAnalysis.exactSubstrGramIndex]]) +
   *                 the duplicate-cluster assignment
-  *                 ([[Dedup.dupClustersFast]], with its retained edge
+  *                 ([[Dedup.dupClusters]], with its retained edge
   *                 relation) + the mergeable data-card state
   *                 ([[Profile.cardState]]) + the BM25 text-search
   *                 serving state ([[TextAnalysis.retrievalPostings]] +
@@ -128,7 +128,7 @@ object TakedownDemo {
     // mergeable data-card state
     val nearPairs = checkpointed(Dedup.simhashNearDups(corpus, maxDistance = 6)
       .select("doc_id_a", "doc_id_b"))
-    val clusters = Dedup.dupClustersFast(nearPairs)
+    val clusters = Dedup.dupClusters(nearPairs)
     val cardState = checkpointed(Profile.cardState(corpus))
     // the TENTH family: text-search serving state (BM25 postings +
     // doc stats — per-doc rows, so takedown is the same doc-keyed

@@ -288,7 +288,7 @@ object Dedup {
     * Scale shape: the two pair relations are near-duplicate-sized
     * (both inputs already did their anti-quadratic work); this is one
     * ids-only join plus three 1-row aggs. Each input is eagerly
-    * checkpoint-materialized FIRST (the [[withReleased]] flavor —
+    * checkpoint-materialized FIRST ([[Iterate.checkpointed]] —
     * reliable checkpoint when a dir is configured, local otherwise):
     * both relations are referenced twice below (their own count + the
     * hit join), and Spark has no cross-branch subplan reuse, so
@@ -677,29 +677,11 @@ object Dedup {
     * existing-then-incoming restricted to incoming rows — with the old
     * side's signatures READ from the index, not recomputed.
     *
-    * 100 TB shape: the slice's band rows are computed once (persisted
-    * — two consumers: the key probe and the bucket union); the index
-    * enters through one (band, bucket)-keyed semi-join — the
-    * bloom-prunable shape, and partition-prunable when the index is
-    * laid out by band — so index rows in buckets no incoming doc
-    * touches are never read twice. Bucket membership then replays the
-    * batch construction exactly: every old member of any bucket an
-    * incoming doc presents is present, so bucket sizes (and the
-    * maxBucket drop) match the batch run on old∪new. Candidate pairs
-    * keep only new-involving combinations; texts are fetched back
-    * candidate-sized from each side. Internal persists (slice bands,
-    * candidate pairs, candidate ids) are RELEASED on any exit — the
-    * verified-pair relation is checkpoint-materialized first (eager;
-    * reliable checkpoint when the session has a checkpoint dir,
-    * localCheckpoint otherwise), so a slice run leaves nothing in the
-    * session CacheManager and the weekly re-crawl service loop
-    * accumulates zero cached state across slices (the Graph.scala
-    * track-and-release convention). Pass `bloom` (the published
-    * [[indexBloom]] sidecar) to pre-prune the index probe: identical
-    * result — the semi-join re-checks every surviving key — with the
-    * join input shrunk to the keys the sidecar admits. Beyond the
-    * aggregate caps, publish the SHARDED sidecar instead and pass it
-    * as `bloomPerBand` ([[indexBloomPerBand]] — same hash, same laws,
+    * The candidate → verify stage, its release discipline and the
+    * bloom sidecars are [[incrementalVerifiedPairs]]'s: pass `bloom`
+    * (the published [[indexBloom]] sidecar) to pre-prune the index
+    * probe, or beyond the aggregate caps the SHARDED sidecar as
+    * `bloomPerBand` ([[indexBloomPerBand]] — same hash, same laws,
     * bands x the capacity); the two flavors are mutually exclusive.
     */
   def incrementalMinhashDedup(index: DataFrame, corpus: DataFrame,
@@ -709,107 +691,50 @@ object Dedup {
                               seed: Long = 42L,
                               wordGrams: Boolean = false,
                               bloom: Option[Array[Byte]] = None,
-                              bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    val verified = incrementalVerifiedPairs(index, corpus, incoming, k,
+                              bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame =
+    survivors(incoming, minhashVerifiedPairs(index, corpus, incoming, k,
       numHashes, bands, threshold, maxBucket, seed, wordGrams, bloom,
-      bloomPerBand)
-    // the victim is the NEW side of a cross pair (the corpus is
-    // immutable, whatever the ids say) and the higher id of a
-    // within-slice pair (the minhashDedup rule)
-    val victims = verified.select(
-      when(col("a_new") && !col("b_new"), col("a")).otherwise(col("b"))
-        .as("doc_id")).distinct()
-    incoming.join(victims, Seq("doc_id"), "left_anti")
-  }
+      bloomPerBand), "doc_id")
 
-  /** The banded + verified pair stage shared by
-    * [[incrementalMinhashDedup]] and [[minhashSliceDiffReport]]:
-    * new-involving candidate pairs from the index join, exact-Jaccard
-    * verified on candidate-sized text fetch-back from both sides.
-    * Returns (a, a_new, b, b_new) with a < b, Jaccard >= threshold.
+  /** [[incrementalVerifiedPairs]] for the minhash modality — shared by
+    * [[incrementalMinhashDedup]] and [[minhashSliceDiffReport]], so the
+    * report can never disagree with the drop: the slice banded by
+    * [[bandRows]], candidates verified by exact Jaccard over the
+    * shingle sets of the fetched texts.
     */
-  private def incrementalVerifiedPairs(index: DataFrame, corpus: DataFrame,
-                                       incoming: DataFrame, k: Int,
-                                       numHashes: Int, bands: Int,
-                                       threshold: Double, maxBucket: Int,
-                                       seed: Long,
-                                       wordGrams: Boolean,
-                                       bloom: Option[Array[Byte]] = None,
-                                       bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
+  private def minhashVerifiedPairs(index: DataFrame, corpus: DataFrame,
+                                   incoming: DataFrame, k: Int,
+                                   numHashes: Int, bands: Int,
+                                   threshold: Double, maxBucket: Int,
+                                   seed: Long, wordGrams: Boolean,
+                                   bloom: Option[Array[Byte]],
+                                   bloomPerBand: Option[Map[Int, Array[Byte]]]): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    def shOf(c: org.apache.spark.sql.Column) =
-      if (wordGrams) word_shingle_set(c, k) else shingle_set(c, k)
-    val newBands = bandRows(incoming, k, numHashes, bands, seed, wordGrams)
-    val (pairs, owned) = incrementalCandidatePairs(index, newBands, maxBucket,
-      bloom, bloomPerBand)
-    withReleased(owned) { released =>
-      // exact verification, candidate-sized on BOTH sides: one inline
-      // candidate-id explode over the persisted pair cache pruning one
-      // unioned text fetch, one shingle projection. The pre-r10 shape
-      // built four filtered-union id branches and two separate
-      // semi-join trees, which compounded — through the doubled verify
-      // reference — into ~50 broadcast exchanges of the SAME tiny
-      // relations and a 140-stage orchestration bill (2.5x the batch
-      // operator on identical data). r14 trims further: id spaces are
-      // disjoint by contract, so the fetch-back needs no is_new
-      // routing — ONE semi-join against corpus ∪ slice by bare id —
-      // and semi-join build sides tolerate duplicate ids, so the
-      // candidate ids need no distinct exchange and no persist of
-      // their own (the explode re-reads the pair cache, guide §2.4).
-      val candIds = pairs.select(explode(array(col("a"), col("b"))).as("doc_id"))
-      // old texts come from the corpus via semi-join (point reads — the
-      // corpus is never re-shingled wholesale), new from the slice
-      val texts = corpus.select(col("doc_id"), col("text"))
-        .unionByName(incoming.select(col("doc_id"), col("text")))
-        .join(candIds, Seq("doc_id"), "left_semi")
-      val sh = texts.select(col("doc_id"), shOf(col("text")).as("sh"))
-      val verified = pairs
-        .join(sh.withColumnsRenamed(Map("doc_id" -> "a", "sh" -> "sh_a")), Seq("a"))
-        .join(sh.withColumnsRenamed(Map("doc_id" -> "b", "sh" -> "sh_b")), Seq("b"))
-        // merge-scan intersection over the sorted-distinct shingle sets
-        // (allocation-free; identical count — see minhashNearDups)
-        .withColumn("inter", sorted_intersect_count(col("sh_a"), col("sh_b")))
-        .withColumn("uni", size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-        .filter(col("inter").cast("double") / col("uni") >= threshold)
-        .select(col("a"), col("a_new"), col("b"), col("b_new"))
-      verified
+    val sh = if (wordGrams) word_shingle_set(col("text"), k) else shingle_set(col("text"), k)
+    incrementalVerifiedPairs(index,
+      bandRows(incoming, k, numHashes, bands, seed, wordGrams), corpus,
+      incoming, "doc_id", "text", sh.as("sh"), maxBucket, bloom,
+      bloomPerBand) { (a, b) =>
+      // merge-scan intersection over the sorted-distinct shingle sets
+      // (allocation-free; identical count — see minhashNearDups)
+      val inter = sorted_intersect_count(a, b)
+      inter.cast("double") / (size(a) + size(b) - inter) >= threshold
     }
   }
 
-  /** The incremental family's release discipline, in ONE place so the
-    * minhash and embedding paths cannot drift (the cross-modality
-    * principle of [[incrementalCandidatePairs]]): `build` constructs
-    * the verified-pair relation over persisted internals — `owned` plus
-    * whatever it appends to the tracked list — and its result is
-    * eagerly checkpoint-materialized (lineage cut) BEFORE the finally
-    * releases every internal persist. After the checkpoint the
-    * internals are never re-read, so releasing them cannot trigger
-    * recompute, and the caller receives a relation with zero
-    * CacheManager footprint (VERDICT r10 nit: the pre-r11 shape leaked
-    * three persisted relations per slice that no caller could
-    * unpersist).
-    *
-    * SERVICE-LOOP LIFECYCLE (ADVICE r11): with a RELIABLE checkpoint
-    * dir configured, `Dataset.checkpoint` runs the verify plan once
-    * more for the checkpoint write, and the checkpoint FILES are never
-    * deleted unless `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * is set true (default false) — a long-lived weekly-slice service
-    * must set that conf (or sweep the dir itself) or it trades the old
-    * CacheManager leak for unbounded checkpoint-dir growth. The
-    * localCheckpoint fallback (no dir configured) has the opposite
-    * trade: no files and no double execution, but the materialized
-    * blocks are unrecoverable on executor loss — a failed executor
-    * fails the job instead of recomputing. Single-session batch runs
-    * (Bench, Verify, the driver gate) are indifferent to both.
+  /** The incremental ladder's victim rule over verified pairs
+    * (a, a_new, b, b_new): the NEW side of a cross pair — the corpus is
+    * immutable, whatever the ids say — and the higher id of a
+    * within-slice pair (the batch dedups' keep-lowest rule).
     */
-  private def withReleased(owned: Seq[DataFrame])(
-      build: scala.collection.mutable.ListBuffer[DataFrame] => DataFrame)
-      : DataFrame = {
-    val released = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    released ++= owned
-    try Iterate.checkpointed(build(released))
-    finally released.foreach(_.unpersist(blocking = false))
-  }
+  private def victim: Column =
+    when(col("a_new") && !col("b_new"), col("a")).otherwise(col("b"))
+
+  /** The incoming rows no verified pair names as its [[victim]]. */
+  private def survivors(incoming: DataFrame, verified: DataFrame,
+                        idCol: String): DataFrame =
+    incoming.join(verified.select(victim.as(idCol)).distinct(), Seq(idCol),
+      "left_anti")
 
   /** Per-source NEAR-dup diff report for a crawl slice against the
     * published band index — the observability twin of
@@ -833,14 +758,12 @@ object Dedup {
                              wordGrams: Boolean = false,
                              bloom: Option[Array[Byte]] = None,
                              bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    val verified = incrementalVerifiedPairs(index, corpus, incoming, k,
+    val verified = minhashVerifiedPairs(index, corpus, incoming, k,
       numHashes, bands, threshold, maxBucket, seed, wordGrams, bloom,
       bloomPerBand)
-    // per incoming victim, the evidence kind: the victim of a cross
-    // pair is its new side; of a within pair, the higher id
-    val evidence = verified.select(
-        when(col("a_new") && !col("b_new"), col("a")).otherwise(col("b"))
-          .as("doc_id"),
+    // per incoming victim, the evidence kind: cross unless both sides
+    // are new
+    val evidence = verified.select(victim.as("doc_id"),
         (!(col("a_new") && col("b_new"))).as("is_cross"))
       .groupBy("doc_id")
       .agg(max(col("is_cross")).as("has_cross"))
@@ -854,42 +777,77 @@ object Dedup {
         sum(when(col("has_cross").isNull, 1L).otherwise(0L)).as("n_new"))
   }
 
-  /** The index-vs-slice candidate stage shared by
-    * [[incrementalMinhashDedup]] and [[incrementalEmbeddingDedup]]:
-    * `index` and `newBands` are (doc_id, band, bucket) relations (the
-    * published corpus index and the slice's freshly-banded rows); the
-    * result is the distinct new-involving candidate pairs
-    * (a, a_new, b, b_new) with a < b, built from exactly the union
-    * buckets a slice row touches. The slice bands and the pair
-    * relation persist for the stage's own multi-consumer reads; both
-    * are returned to the caller for deterministic release after its
-    * one eager materialization (the Graph.scala convention — nothing
-    * survives the slice run in the CacheManager). `bloom` (the
-    * published [[indexBloom]] sidecar) pre-prunes the key probe only:
-    * the slice's OWN bucket union is never filtered (within-slice
-    * collisions owe nothing to the index), and no-false-negatives
-    * makes the pruned probe return exactly the unpruned old rows.
+  /** The incremental ladder's candidate → verify stage, ONE
+    * implementation for all three near-dup modalities (minhash text,
+    * sign-LSH embeddings, Hamming fingerprints — the candidate-
+    * generation / verification split of distributed similarity joins).
+    * `index` and `newBands` are (doc_id, band, bucket) relations: the
+    * published corpus index and the slice's freshly-banded rows.
+    * Returns the verified new-involving pairs (a, a_new, b, b_new),
+    * a < b, as a checkpoint-materialized relation.
+    *
+    *  - Candidates: only index rows in buckets the slice actually
+    *    presents matter (old docs confined to untouched buckets cannot
+    *    pair with the slice, and old-old pairs never drop an incoming
+    *    doc), so the index enters through one (band, bucket)-keyed
+    *    semi-join — the bloom-prunable shape, and partition-prunable
+    *    when the index is laid out by band. Bucket membership then
+    *    replays the batch construction exactly: every old member of
+    *    any bucket an incoming doc presents is present, so bucket
+    *    sizes (and the maxBucket drop) match the batch run on old∪new.
+    *  - Bloom sidecar: `bloom` ([[indexBloom]]) or `bloomPerBand`
+    *    ([[indexBloomPerBand]]) pre-prunes the key probe only — the
+    *    slice's OWN bucket union is never filtered (within-slice
+    *    collisions owe nothing to the index). Bloom filters have no
+    *    false negatives and the semi-join re-checks every surviving
+    *    key, so the pruned probe returns exactly the unpruned old rows.
+    *  - Verification: candidate-sized on BOTH sides — one inline
+    *    candidate-id explode over the persisted pair cache pruning one
+    *    semi-join fetch of (`idCol`, `payloadCol`) over corpus ∪ slice,
+    *    projected to the compared `payload` (a named column; the sides
+    *    join as `<name>_a` / `<name>_b`), then `keep(a, b)`. Id spaces
+    *    are DISJOINT by contract (the corpus is immutable; a slice
+    *    reusing an existing id is an upstream bug), so the fetch needs
+    *    no is_new routing, and semi-join build sides tolerate duplicate
+    *    ids, so the candidate ids need no distinct exchange and no
+    *    persist of their own.
+    *
+    * Release discipline: the slice bands (two consumers: the key probe
+    * and the bucket union) and the candidate pairs (the explode and
+    * both pair-side joins) persist for the stage's own reads; the
+    * verified pairs are EAGERLY checkpoint-materialized (lineage cut)
+    * before the finally releases both, so the release cannot trigger
+    * recompute and the caller receives a relation with zero
+    * CacheManager footprint.
+    *
+    * SERVICE-LOOP LIFECYCLE: with a RELIABLE checkpoint dir configured,
+    * `Dataset.checkpoint` runs the verify plan once more for the
+    * checkpoint write, and the checkpoint FILES are never deleted
+    * unless `spark.cleaner.referenceTracking.cleanCheckpoints` is set
+    * true (default false) — a long-lived weekly-slice service must set
+    * that conf (or sweep the dir itself) or it trades a CacheManager
+    * leak for unbounded checkpoint-dir growth. The localCheckpoint
+    * fallback (no dir configured) has the opposite trade: no files and
+    * no double execution, but the materialized blocks are
+    * unrecoverable on executor loss — a failed executor fails the job
+    * instead of recomputing. Single-session batch runs are indifferent
+    * to both.
     */
-  private def incrementalCandidatePairs(index: DataFrame, newBands: DataFrame,
-                                        maxBucket: Int,
-                                        bloom: Option[Array[Byte]] = None,
-                                        bloomPerBand: Option[Map[Int, Array[Byte]]] = None)
-      : (DataFrame, Seq[DataFrame]) = {
+  private def incrementalVerifiedPairs(index: DataFrame, newBands: DataFrame,
+                                       corpus: DataFrame, incoming: DataFrame,
+                                       idCol: String, payloadCol: String,
+                                       payload: Column, maxBucket: Int,
+                                       bloom: Option[Array[Byte]],
+                                       bloomPerBand: Option[Map[Int, Array[Byte]]])(
+      keep: (Column, Column) => Column): DataFrame = {
     require(bloom.isEmpty || bloomPerBand.isEmpty,
       "pass ONE sidecar flavor: bloom (single) or bloomPerBand (sharded)")
-    // persisted: two consumers (the key probe and the bucket union)
-    // would otherwise band the slice twice. A/B'd at bench scale
-    // (PLANS.md "n150 orchestration"): FLAT — the cache fill's barrier
-    // cancels the saved recompute on a 5k-doc slice — kept because at
-    // a production slice size the second signature pass is the
-    // dominated cost, not the barrier
+    // A/B'd at bench scale (PLANS.md "n150 orchestration"): FLAT — the
+    // cache fill's barrier cancels the saved recompute on a 5k-doc
+    // slice — kept because at a production slice size the second
+    // banding pass is the dominated cost, not the barrier
     val nb = newBands
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // only index rows in buckets the slice actually presents matter:
-    // old docs confined to untouched buckets cannot pair with the
-    // slice, and old-old pairs never drop an incoming doc. The bloom
-    // sidecar (when published) rejects provably-absent keys BEFORE the
-    // semi-join — the scan-side prune the index scaladoc promises.
     val allKeys = nb.select(col("band"), col("bucket")).distinct()
     val keys = (bloom, bloomPerBand) match {
       case (Some(bf), _) => allKeys.filter(
@@ -913,7 +871,22 @@ object Dedup {
         col("ib.doc_id").as("b"), col("ib.is_new").as("b_new"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (pairs, Seq(nb, pairs))
+    try {
+      val candIds = pairs.select(explode(array(col("a"), col("b"))).as(idCol))
+      val fetched = corpus.select(col(idCol), col(payloadCol))
+        .unionByName(incoming.select(col(idCol), col(payloadCol)))
+        .join(candIds, Seq(idCol), "left_semi")
+        .select(col(idCol), payload)
+      val p = fetched.columns(1)
+      Iterate.checkpointed(pairs
+        .join(fetched.withColumnsRenamed(Map(idCol -> "a", p -> s"${p}_a")), Seq("a"))
+        .join(fetched.withColumnsRenamed(Map(idCol -> "b", p -> s"${p}_b")), Seq("b"))
+        .filter(keep(col(s"${p}_a"), col(s"${p}_b")))
+        .select(col("a"), col("a_new"), col("b"), col("b_new")))
+    } finally {
+      nb.unpersist(blocking = false)
+      pairs.unpersist(blocking = false)
+    }
   }
 
   /** The persisted sign-LSH BUCKET INDEX of an embedding corpus: one
@@ -943,8 +916,8 @@ object Dedup {
     * embeddings (point semi-joins, the [[incrementalMinhashDedup]]
     * convention); id spaces must be disjoint.
     *
-    * Same candidate stage as the minhash path
-    * ([[incrementalCandidatePairs]] — the two cannot drift), same
+    * Same candidate → verify stage as the minhash path
+    * ([[incrementalVerifiedPairs]] — the modalities cannot drift), same
     * victim rule (the new side of a cross pair, the higher id within
     * the slice), exact-cosine verification on the candidate-sized
     * fetch-back. Spec law: under the ingest-order id invariant the
@@ -958,33 +931,11 @@ object Dedup {
                                 maxBucket: Int = 2000,
                                 dim: Int = -1,
                                 bloom: Option[Array[Byte]] = None,
-                                bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    val newBands = signBucketIndex(incoming, planes, tables, dim)
-    val (pairs, owned) = incrementalCandidatePairs(index, newBands, maxBucket,
-      bloom, bloomPerBand)
-    // the minhash path's release discipline, through the SAME helper:
-    // verified pairs checkpoint-materialize, every internal persist is
-    // dropped — nothing from the slice run survives in the CacheManager
-    val verified = withReleased(owned) { released =>
-      // one inline candidate-id explode pruning one unioned fetch —
-      // disjoint id spaces need no is_new routing, and semi-join build
-      // sides tolerate duplicate ids, so no distinct exchange and no
-      // extra persist (the incrementalVerifiedPairs r14 shape)
-      val candIds = pairs.select(explode(array(col("a"), col("b"))).as("vec_id"))
-      val e = corpus.select(col("vec_id"), col("embedding"))
-        .unionByName(incoming.select(col("vec_id"), col("embedding")))
-        .join(candIds, Seq("vec_id"), "left_semi")
-      pairs
-        .join(e.withColumnsRenamed(Map("vec_id" -> "a", "embedding" -> "emb_a")), Seq("a"))
-        .join(e.withColumnsRenamed(Map("vec_id" -> "b", "embedding" -> "emb_b")), Seq("b"))
-        .filter(cosine_similarity(col("emb_a"), col("emb_b")) >= threshold)
-        .select(col("a"), col("a_new"), col("b"), col("b_new"))
-    }
-    val victims = verified.select(
-      when(col("a_new") && !col("b_new"), col("a")).otherwise(col("b"))
-        .as("vec_id")).distinct()
-    incoming.join(victims, Seq("vec_id"), "left_anti")
-  }
+                                bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame =
+    survivors(incoming, incrementalVerifiedPairs(index,
+      signBucketIndex(incoming, planes, tables, dim), corpus, incoming,
+      "vec_id", "embedding", col("embedding"), maxBucket, bloom,
+      bloomPerBand)(cosine_similarity(_, _) >= threshold), "vec_id")
 
   /** SimHash near-duplicate pairs at Hamming distance <= maxDistance.
     *
@@ -1092,8 +1043,8 @@ object Dedup {
     * semi-joins — and sh is 8 bytes, so even the fetch-back moves
     * nothing but ids and longs); id spaces must be disjoint.
     *
-    * Same candidate stage as the other two modalities
-    * ([[incrementalCandidatePairs]] — the three cannot drift), same
+    * Same candidate → verify stage as the other two modalities
+    * ([[incrementalVerifiedPairs]] — the three cannot drift), same
     * victim rule (the new side of a cross pair — the corpus wins
     * whatever the ids say — and the higher id within the slice), exact
     * `bit_count` verification on the candidate-sized fetch-back. Spec
@@ -1102,38 +1053,17 @@ object Dedup {
     * rows, with the old side's bands READ from the index, not
     * recomputed; pigeonhole banding makes the candidate stage
     * recall-LOSSLESS for the declared bound, so the law is exact
-    * equality, not an approximation. Internal persists release on any
-    * exit (the [[withReleased]] discipline — nothing survives in the
-    * CacheManager).
+    * equality, not an approximation.
     */
   def incrementalHammingDedup(index: DataFrame, corpus: DataFrame,
                               incoming: DataFrame, maxDistance: Int,
                               maxBucket: Int = 1000,
                               bloom: Option[Array[Byte]] = None,
-                              bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    val newBands = hammingBandIndex(incoming, maxDistance)
-    val (pairs, owned) = incrementalCandidatePairs(index, newBands, maxBucket,
-      bloom, bloomPerBand)
-    val verified = withReleased(owned) { released =>
-      // one inline candidate-id explode pruning one unioned fetch —
-      // disjoint id spaces need no is_new routing, and semi-join build
-      // sides tolerate duplicate ids, so no distinct exchange and no
-      // extra persist (the incrementalVerifiedPairs r14 shape)
-      val candIds = pairs.select(explode(array(col("a"), col("b"))).as("doc_id"))
-      val fps = corpus.select(col("doc_id"), col("sh"))
-        .unionByName(incoming.select(col("doc_id"), col("sh")))
-        .join(candIds, Seq("doc_id"), "left_semi")
-      pairs
-        .join(fps.withColumnsRenamed(Map("doc_id" -> "a", "sh" -> "sh_a")), Seq("a"))
-        .join(fps.withColumnsRenamed(Map("doc_id" -> "b", "sh" -> "sh_b")), Seq("b"))
-        .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= maxDistance)
-        .select(col("a"), col("a_new"), col("b"), col("b_new"))
-    }
-    val victims = verified.select(
-      when(col("a_new") && !col("b_new"), col("a")).otherwise(col("b"))
-        .as("doc_id")).distinct()
-    incoming.join(victims, Seq("doc_id"), "left_anti")
-  }
+                              bloomPerBand: Option[Map[Int, Array[Byte]]] = None): DataFrame =
+    survivors(incoming, incrementalVerifiedPairs(index,
+      hammingBandIndex(incoming, maxDistance), corpus, incoming, "doc_id",
+      "sh", col("sh"), maxBucket, bloom, bloomPerBand)(
+      (a, b) => bit_count(a.bitwiseXOR(b)) <= maxDistance), "doc_id")
 
   /** Word n-gram Jaccard near-dup pairs: minhash-LSH candidates over
     * word n-grams with exact n-gram-Jaccard verification. 32 two-row
@@ -1275,131 +1205,58 @@ object Dedup {
     * pair graph, labeling every member with the minimum id reachable —
     * the canonical representative a clustering dedup keeps (pairwise
     * drop-the-higher-id under-merges transitive chains; components are
-    * the standard fix). Distributed min-label propagation: every
-    * iteration pushes labels across edges with one shuffle, so total
-    * cost is O(diameter) shuffles over the PAIR graph (candidate-sized,
-    * not corpus-sized — near-dup components are shallow in practice).
-    * Cf. the MapReduce connected-components family (Kiveris et al.
-    * 2014, "Connected components in MapReduce and beyond").
+    * the standard fix). Returns (doc_id, cluster_id) for every id that
+    * appears in some pair. Cf. the MapReduce connected-components
+    * family (Kiveris et al. 2014, "Connected components in MapReduce
+    * and beyond").
+    *
+    * Each round is min-label propagation with POINTER JUMPING: the
+    * neighbor-min hook (one keyed aggregation over the labels unioned
+    * with the raw neighbor contributions — min(label(v), min over
+    * incoming lu), map-side combinable, no outer join), then the
+    * Shiloach–Vishkin 1982 shortcut `label(v) <- label(label(v))`.
+    * Plain propagation moves a component's minimum one hop per round —
+    * O(diameter) shuffles, thousands of rounds on a chain-shaped
+    * component (chained edits, re-crawls of re-crawls) at corpus
+    * scale; the shortcut roughly doubles the distance a label has
+    * travelled every round, so convergence drops to O(log diameter)
+    * rounds for one extra nodes-bounded self-join per round (the
+    * edges-bounded hook join still dominates a round's cost). Labels
+    * only ever decrease and floor at the component minimum, so the
+    * shortcut changes the path to the fixpoint, never the fixpoint.
+    *
+    * The rounds run on [[Iterate.toFixpoint]] (lazy per-round
+    * checkpoint, probe-as-materializer, superseded rounds released);
+    * the label sum is the convergence witness — it strictly decreases
+    * until the fixpoint. `edges` is one lazy checkpoint, materialized
+    * inside the first probe's job and read by every round; once the
+    * final labels are materialized their lineage no longer reaches it,
+    * so it is released before returning.
     */
   def dupClusters(pairs: DataFrame, idA: String = "doc_id_a",
                   idB: String = "doc_id_b", maxIter: Int = 50): DataFrame = {
-    // Checkpoint after every step: truncates the logical plan so
-    // iteration N does not carry N levels of join lineage (a growing
-    // plan OOMs the driver long before the data would), and makes each
-    // join read a materialized relation instead of re-deriving
-    // same-lineage branches. The checkpoints are LAZY and the labelSum
-    // convergence probe doubles as each round's materializing action,
-    // so a round is one driver round-trip, not two (the r13 job-count
-    // profile put the CC loops at ~2 jobs/round, half of them pure
-    // checkpoint fills; edges materialize inside the first probe's
-    // job the same way). Flavor choice lives in Iterate.lazyCheckpointed
-    // (reliable checkpoint when a dir is configured, local otherwise).
-    def ckpt(df: DataFrame): DataFrame = Iterate.lazyCheckpointed(df)
-    val edges = ckpt(pairs.select(col(idA).as("u"), col(idB).as("v"))
-      .unionAll(pairs.select(col(idB).as("u"), col(idA).as("v")))
-      .distinct())
-    var labels = ckpt(edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id")))
-    // min-label propagation only ever lowers labels, so the label sum
-    // strictly decreases until the fixpoint — a cheap convergence test
-    // with no self-join of consecutive iterations
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // the round's update is ONE keyed aggregation over the current
-      // labels unioned with the raw neighbor contributions:
-      // min(label(v), min over incoming lu) — algebraically the old
-      // groupBy-then-left-join-then-least, with one exchange fewer per
-      // round, no outer join, and map-side partial aggregation
-      // collapsing each node's contributions before the shuffle
-      // (guide §2.3/§2.4); a node with no incoming rows keeps its
-      // label (its own row is in the union)
-      val old = labels
+    val edges = Iterate.lazyCheckpointed(
+      pairs.select(col(idA).as("u"), col(idB).as("v"))
+        .unionAll(pairs.select(col(idB).as("u"), col(idA).as("v")))
+        .distinct())
+    val init = edges.select(col("u").as("id")).distinct()
+      .withColumn("label", col("id"))
+    val (labels, _) = Iterate.toFixpoint(init, maxIter) { cur =>
       val contrib = edges
-        .join(labels.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))
+        .join(cur.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))
         .select(col("v").as("id"), col("lu").as("label"))
-      labels = ckpt(labels.unionByName(contrib)
-        .groupBy(col("id")).agg(min(col("label")).as("label")))
-      val s = labelSum(labels)
-      // the probe materialized the new round, so the superseded label
-      // state's checkpoint blocks are dead (edges stay live — every
-      // round reads them); release instead of leaking to GC
-      Iterate.releaseCheckpointed(old)
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** [[dupClusters]] with POINTER JUMPING: each round does the same
-    * neighbor-min hook, then additionally shortcuts every label to its
-    * label's label (`label(v) <- label(label(v))`, the Shiloach–Vishkin
-    * 1982 shortcut; cf. Kiveris et al. 2014 for the MapReduce CC
-    * family). Plain min-label propagation moves a component's minimum
-    * one hop per round — O(diameter) shuffles, which on a chain-shaped
-    * component (chained edits, re-crawls of re-crawls, citation chains)
-    * means thousands of rounds at corpus scale. The shortcut roughly
-    * doubles the distance a label has travelled every round, so
-    * convergence drops to O(log diameter) rounds for one extra
-    * nodes-bounded self-join per round — the edges-bounded hook join
-    * still dominates each round's cost, so rounds shrink log-fold at
-    * ~the same per-round price.
-    *
-    * Fixpoint and output are IDENTICAL to [[dupClusters]] (labels only
-    * ever decrease, floor = component minimum; the shortcut never
-    * changes the fixpoint, only the path there) — the spec proves
-    * equality, plus a diameter-250 chain that converges here in <= 12
-    * rounds where min-label propagation at the same bound is still
-    * mid-chain. Same convergence witness (strictly decreasing label
-    * sum), same per-round eager checkpoint, same (doc_id, cluster_id)
-    * schema.
-    */
-  def dupClustersFast(pairs: DataFrame, idA: String = "doc_id_a",
-                      idB: String = "doc_id_b", maxIter: Int = 50): DataFrame = {
-    // lazy checkpoints, labelSum as the materializer — the dupClusters
-    // one-job-per-round discipline (see the comment there)
-    def ckpt(df: DataFrame): DataFrame = Iterate.lazyCheckpointed(df)
-    val edges = ckpt(pairs.select(col(idA).as("u"), col(idB).as("v"))
-      .unionAll(pairs.select(col(idB).as("u"), col(idA).as("v")))
-      .distinct())
-    var labels = ckpt(edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id")))
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // hook = one keyed aggregation over labels ∪ raw contributions
-      // (the dupClusters round shape — one exchange fewer than the old
-      // groupBy + left join, map-side partial agg)
-      val old = labels
-      val contrib = edges
-        .join(labels.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))
-        .select(col("v").as("id"), col("lu").as("label"))
-      val hooked = labels.unionByName(contrib)
+      val hooked = cur.unionByName(contrib)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-      // shortcut: a label is always a node id (self-initialized, only
-      // ever replaced by another node's label), so label(label) is a
+      // a label is always a node id (self-initialized, only ever
+      // replaced by another node's label), so label(label) is a
       // nodes-bounded self-join; left + coalesce keeps the row if the
       // label's own row is somehow absent rather than dropping it
       val jump = hooked.withColumnsRenamed(Map("id" -> "jid", "label" -> "jl"))
-      labels = ckpt(hooked.join(jump, hooked("label") === jump("jid"), "left")
+      hooked.join(jump, hooked("label") === jump("jid"), "left")
         .select(hooked("id"),
-          least(hooked("label"), coalesce(col("jl"), hooked("label"))).as("label")))
-      val s = labelSum(labels)
-      // superseded round's blocks are dead once the probe materialized
-      // the new one (edges stay live); release instead of leaking
-      Iterate.releaseCheckpointed(old)
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
-    }
+          least(hooked("label"), coalesce(col("jl"), hooked("label"))).as("label"))
+    } { _.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0) }
+    Iterate.releaseCheckpointed(edges)
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -1436,7 +1293,7 @@ object Dedup {
     * the contracted CC's node count (≤ 2·|slice pairs|, metadata-sized
     * for a weekly slice) and therefore BROADCASTS. The CC iteration
     * itself runs on the contracted graph: slice-sized rounds where a
-    * from-scratch [[dupClustersFast]] would iterate over the full
+    * from-scratch [[dupClusters]] would iterate over the full
     * corpus pair graph every week.
     */
   def incrementalDupClusters(assignment: DataFrame, newPairs: DataFrame,
@@ -1461,7 +1318,7 @@ object Dedup {
       .join(endpoints.select(col("id").as("v"), col("rep").as("rv")), Seq("v"))
       .select(col("ru").as("a"), col("rv").as("b"))
       .filter(col("a") =!= col("b"))
-    val mergeMap = dupClustersFast(contracted, "a", "b", maxIter)
+    val mergeMap = dupClusters(contracted, "a", "b", maxIter)
       .select(col("doc_id").as("rep"), col("cluster_id").as("merged"))
     // one broadcastable relabel join over the corpus-sized assignment
     val relabeled = asg
@@ -1488,7 +1345,7 @@ object Dedup {
     * The recompute is COMPONENT-LOCAL: only clusters that actually
     * contained a removed doc are re-clustered — their surviving
     * members' edge subgraph (minus removed-touching edges) goes back
-    * through [[dupClustersFast]]; every untouched cluster's rows pass
+    * through [[dupClusters]]; every untouched cluster's rows pass
     * through verbatim (bit-identical, no shuffle beyond the
     * broadcastable semi/anti-joins on the metadata-sized affected-
     * cluster list). A survivor that lost its every edge drops out of
@@ -1518,7 +1375,7 @@ object Dedup {
       .join(broadcast(removed.withColumnRenamed("doc_id", idB)), Seq(idB), "left_anti")
     val affectedEdges = survivingEdges.join(
       affectedMembers.withColumnRenamed("doc_id", idA), Seq(idA), "left_semi")
-    untouched.unionByName(dupClustersFast(affectedEdges, idA, idB, maxIter))
+    untouched.unionByName(dupClusters(affectedEdges, idA, idB, maxIter))
   }
 
   /** Cluster-aware dedup that keeps the BEST-scored member of every

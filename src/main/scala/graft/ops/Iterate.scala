@@ -10,10 +10,10 @@ import org.apache.spark.sql.DataFrame
   * before the data would. A real 100 TB run needs run-to-convergence,
   * and the safe shape for that is an eager checkpoint per round: the
   * plan is truncated to a materialized relation, so round N+1 never
-  * re-derives rounds 1..N. [[Dedup.dupClusters]] pioneered the
-  * pattern; this helper is that pattern lifted out so
-  * [[Graph.kCoreConverged]] / [[Graph.pageRankConverged]] and any
-  * future fixpoint loop share one implementation.
+  * re-derives rounds 1..N. [[toFixpoint]] is that loop, shared by
+  * [[Dedup.dupClusters]] and [[Graph.kCoreConverged]];
+  * [[Graph.pageRankConverged]] still hand-rolls its own loop over
+  * eager per-round [[checkpointed]] states.
   */
 object Iterate {
 

@@ -513,12 +513,12 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     val diskClusters = graft.sources.Manifest.readAt(spark, dir, "clusters", 2L)
     def cmap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cmap(diskClusters) == cmap(graft.ops.Dedup.dupClustersFast(diskPairs)),
+    assert(cmap(diskClusters) == cmap(graft.ops.Dedup.dupClusters(diskPairs)),
       "retracted cluster assignment must equal the re-closure over surviving edges")
     val slicePairs = Seq((4L, 3000004L), (3100001L, 3100002L))
       .toDF("doc_id_a", "doc_id_b")
     assert(cmap(graft.ops.Dedup.incrementalDupClusters(diskClusters, slicePairs)) ==
-      cmap(graft.ops.Dedup.dupClustersFast(diskPairs.unionAll(slicePairs))),
+      cmap(graft.ops.Dedup.dupClusters(diskPairs.unionAll(slicePairs))),
       "incremental fold must equal the batch closure over surviving ∪ slice")
     // the card-state family (r12): the subtracted state on disk equals
     // the from-scratch state of the survivors

@@ -2113,39 +2113,42 @@ class OpsSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  test("dupClustersFast: same fixpoint as dupClusters; log-round chain convergence") {
+  test("dupClusters: log-round chain convergence; disjoint chains never merge") {
     import spark.implicits._
-    // equality law on the mixed fixture (chain + isolated pair)
-    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_id_a", "doc_id_b")
-    val slow = Dedup.dupClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = Dedup.dupClustersFast(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fast == slow, "shortcutting must not change the fixpoint")
     // the O(log d) claim, pinned: a diameter-249 chain converges under
     // 12 rounds with pointer jumping (distance covered doubles per
-    // round: 2, 6, 14, ... 2^(k+1)-2 ≥ 249 at k = 7), while plain
-    // min-label propagation at the SAME round budget is still
-    // mid-chain — the label walks one hop per round
+    // round: 2, 6, 14, ... 2^(k+1)-2 ≥ 249 at k = 7)
     val chain = (0 until 249).map(i => (i.toLong, i + 1L))
       .toDF("doc_id_a", "doc_id_b")
-    val fastChain = Dedup.dupClustersFast(chain, maxIter = 12).collect()
+    val c = Dedup.dupClusters(chain, maxIter = 12).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fastChain.size == 250)
-    assert(fastChain.values.forall(_ == 0L),
+    assert(c.size == 250)
+    assert(c.values.forall(_ == 0L),
       "pointer jumping must collapse the 250-node chain within 12 rounds")
-    val slowChain = Dedup.dupClusters(chain, maxIter = 12).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(slowChain.values.exists(_ != 0L),
-      "min-label propagation cannot finish a 250-chain in 12 rounds " +
-        "(if it could, the fast variant would be pointless)")
     // cross-component isolation: two disjoint chains never merge
     val two = ((0 until 9).map(i => (i.toLong, i + 1L)) ++
       (100 until 109).map(i => (i.toLong, i + 1L))).toDF("doc_id_a", "doc_id_b")
-    val t2 = Dedup.dupClustersFast(two).collect()
+    val t2 = Dedup.dupClusters(two).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 9L).forall(t2(_) == 0L))
     assert((100L to 109L).forall(t2(_) == 100L))
+  }
+
+  test("dupClusters: releases its edge checkpoint; only the returned labels stay persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_id_a", "doc_id_b")
+    val before = sc.getPersistentRDDs.keySet
+    val clusters = Dedup.dupClusters(pairs)
+    // every superseded round and the edges are released; the result is
+    // one materialized local checkpoint (no checkpoint dir is set here)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 1, s"dupClusters left ${held.size} persisted RDDs: $held")
+    // a local checkpoint cannot recompute: the result must not depend
+    // on the released edges
+    assert(clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    held.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = false))
   }
 
   test("incrementalDupClusters: equals batch over the union for every slice-edge shape") {
@@ -2155,14 +2158,14 @@ class OpsSpec extends SparkSpec {
     // published crawl: three clusters {1,2,3}, {7,9}, {20,21}
     val oldPairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (20L, 21L))
       .toDF("doc_id_a", "doc_id_b")
-    val published = Dedup.dupClustersFast(oldPairs)
+    val published = Dedup.dupClusters(oldPairs)
     // slice exercises all four edge shapes at once: new-new (50-51),
     // new-old (52 joins {7,9}), old-old ACROSS clusters (3-20 bridges
     // {1,2,3} and {20,21}), old-old WITHIN a cluster (1-3, no-op)
     val slice = Seq((50L, 51L), (52L, 9L), (3L, 20L), (1L, 3L))
       .toDF("doc_id_a", "doc_id_b")
     val inc = asMap(Dedup.incrementalDupClusters(published, slice))
-    val batch = asMap(Dedup.dupClustersFast(oldPairs.unionAll(slice)))
+    val batch = asMap(Dedup.dupClusters(oldPairs.unionAll(slice)))
     assert(inc == batch, "incremental must equal the batch fixpoint on the union")
     assert(inc(20L) == 1L && inc(21L) == 1L, "bridged clusters must merge to the union min")
     assert(inc(52L) == 7L && inc(50L) == 50L && inc(51L) == 50L)
@@ -2174,7 +2177,7 @@ class OpsSpec extends SparkSpec {
     // empty-assignment degeneracy: incremental from nothing IS batch
     val none = Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
     assert(asMap(Dedup.incrementalDupClusters(none, oldPairs)) ==
-      asMap(Dedup.dupClustersFast(oldPairs)))
+      asMap(Dedup.dupClusters(oldPairs)))
     // a slice entirely inside existing clusters changes nothing
     assert(asMap(Dedup.incrementalDupClusters(published,
       Seq((1L, 2L)).toDF("doc_id_a", "doc_id_b"))) == asMap(published))
@@ -2188,13 +2191,13 @@ class OpsSpec extends SparkSpec {
     // cluster {7,8,9} losing a non-bridge member, one untouched {20,21}
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
       (7L, 8L), (8L, 9L), (7L, 9L), (20L, 21L)).toDF("doc_id_a", "doc_id_b")
-    val published = Dedup.dupClustersFast(pairs)
+    val published = Dedup.dupClusters(pairs)
     val removed = Seq(2L, 8L).toDF("doc_id")
     val got = asMap(Dedup.retractFromClusters(published, pairs, removed))
     // batch truth: re-close over edges whose BOTH endpoints survive
     val surviving = pairs.filter(col("doc_id_a") =!= 2L && col("doc_id_b") =!= 2L &&
       col("doc_id_a") =!= 8L && col("doc_id_b") =!= 8L)
-    assert(got == asMap(Dedup.dupClustersFast(surviving)),
+    assert(got == asMap(Dedup.dupClusters(surviving)),
       "retraction must equal the batch closure over surviving edges")
     assert(got(0L) == 0L && got(1L) == 0L, "left chain segment keeps its min")
     assert(got(3L) == 3L && got(4L) == 3L, "right segment re-roots at ITS min — the split")
@@ -2205,14 +2208,14 @@ class OpsSpec extends SparkSpec {
     // (matches batch: no edge, no row)
     val star = Seq((30L, 31L), (30L, 32L)).toDF("doc_id_a", "doc_id_b")
     val starGone = asMap(Dedup.retractFromClusters(
-      Dedup.dupClustersFast(star), star, Seq(30L).toDF("doc_id")))
+      Dedup.dupClusters(star), star, Seq(30L).toDF("doc_id")))
     assert(!starGone.contains(31L) && !starGone.contains(32L))
     // lifecycle chaining: retract-then-append equals batch on
     // survivors' edges plus the slice (the n154 law, cluster edition)
     val slice = Seq((4L, 40L), (9L, 41L)).toDF("doc_id_a", "doc_id_b")
     val chained = asMap(Dedup.incrementalDupClusters(
       Dedup.retractFromClusters(published, pairs, removed), slice))
-    assert(chained == asMap(Dedup.dupClustersFast(surviving.unionAll(slice))),
+    assert(chained == asMap(Dedup.dupClusters(surviving.unionAll(slice))),
       "retract-then-append must equal the from-scratch rebuild")
   }
 

@@ -626,15 +626,15 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id_a", "doc_id_b")
       def cmap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batch = cmap(graft.ops.Dedup.dupClustersFast(all))
+      val batch = cmap(graft.ops.Dedup.dupClusters(all))
       val inc = cmap(graft.ops.Dedup.incrementalDupClusters(
-        graft.ops.Dedup.dupClustersFast(old), slice))
+        graft.ops.Dedup.dupClusters(old), slice))
       val surviving = es.filter(e => !rm.contains(e._1) && !rm.contains(e._2))
         .toDF("doc_id_a", "doc_id_b")
       val retracted = cmap(graft.ops.Dedup.retractFromClusters(
-        graft.ops.Dedup.dupClustersFast(all), all, rm.toDF("doc_id")))
+        graft.ops.Dedup.dupClusters(all), all, rm.toDF("doc_id")))
       inc == batch &&
-        retracted == cmap(graft.ops.Dedup.dupClustersFast(surviving))
+        retracted == cmap(graft.ops.Dedup.dupClusters(surviving))
     }).passed,
       "incremental == batch on the union AND retraction == batch on survivors")
   }
