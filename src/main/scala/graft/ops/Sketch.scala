@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.GraftFunctions._
@@ -39,7 +39,7 @@ import org.apache.spark.sql.graft.GraftFunctions._
 object Sketch {
 
   /** Saturating upper bin edge shared by every quantile bracket
-    * (batch bisection x2 + the streaming histogram): `binLo + w - 1`
+    * ([[bisectQuantiles]] and the streaming histogram): `binLo + w - 1`
     * wraps past Long.MaxValue when `hi` sits within one bin width of
     * it — a range the `hi - lo < 2^63 - bins` guard permits — and a
     * wrapped negative edge breaks containment where a plain min()
@@ -281,88 +281,144 @@ object Sketch {
         col("exact_value"))
   }
 
-  /** EXACT quantiles of an integral column WITHOUT a global sort — the
-    * iterative completion of [[histQuantiles]]: each round bins the
-    * current candidate range, finds the bin holding the target rank
-    * (rank = ceil(q·n), the n43 convention), and recurses into it;
-    * when the range fits inside one bin span the per-value pass reads
-    * the answer off the cumulative counts. log_bins(range) combinable
-    * aggregation passes — 3 rounds cover a 2^24 value range at 256
-    * bins — versus the full shuffle+sort an exact quantile normally
-    * costs. This is distributed selection (the k-th-element algorithm
-    * of Blum et al. re-expressed as range bisection), and the shape
-    * Spark's own approxQuantile refuses to make exact.
+  /** One (group, quantile) target of [[bisectQuantiles]]: rank `r` of
+    * the group's `total` mass, its candidate range [lo, hi], the mass
+    * `below` lo already accounted for, and the corpus aggregations it
+    * has taken (the final per-value pass included).
+    */
+  private final class QuantileTarget(val grp: String, val q: Double,
+                                     val total: Long, val r: Long,
+                                     var lo: Long, var hi: Long) {
+    var below = 0L
+    var passes = 1L
+    var value = 0L
+  }
+
+  /** The one exact-quantile kernel behind [[exactQuantiles]],
+    * [[weightedQuantiles]] and their ByGroup twins: for every group of
+    * `vals` (columns `grp`, `v`, `w`) and every q, the smallest `v`
+    * whose cumulative `w` reaches rank ceil(q·total) (the n43
+    * convention; unit `w` makes it the row-count order statistic) —
+    * WITHOUT a global sort. This is distributed selection (the k-th
+    * element algorithm of Blum et al. re-expressed as range bisection),
+    * the shape Spark's own approxQuantile refuses to make exact.
     *
-    * All range/rank arithmetic is LONG (partition-invariant); each
-    * driver decision reads a `bins`-sized collect (cap-before-collect
-    * by construction — the bpeTrain iteration convention). The oracle
-    * states the DEFINITION instead (smallest v with cum count >= r via
-    * one window), so a green row proves the bisection finds the true
-    * order statistic, not a replay of itself.
+    * Every (group, q) target bisects its OWN candidate range, but all
+    * targets advance in LOCK-STEP: each round is ONE corpus aggregation
+    * (the distinct candidate ranges broadcast-joined on the group,
+    * `w` summed per bin), after which the driver walks each target's
+    * bins to the one holding its rank and recurses into it; upper bin
+    * edges saturate ([[saturatedHi]]). Once a range fits one bin span
+    * it stops; one final per-value pass reads every answer off the
+    * cumulative sums. Rounds run until the widest range fits —
+    * log_bins(range), 3 rounds for a 2^24 range at 256 bins — so the
+    * job count follows the round count, not |qs| or the group count.
+    * Targets sharing a range (every q of a group in round one) share
+    * its rows. The group match is null-safe: null is one group, as in
+    * `groupBy` and a `PARTITION BY` oracle.
+    *
+    * All range/rank arithmetic is LONG (partition-invariant; weight
+    * sums exact for a total below 2^63), and a range within `bins` of
+    * 2^63 is refused because the ceil width (hi - lo + bins) / bins
+    * must not wrap. Each round's collect is `ranges × bins`-bounded
+    * and the driver holds `groups × qs` targets, so `groupCap`
+    * (operator name, maxGroups) refuses an over-cardinal group column
+    * with one distinct count BEFORE any per-group state is collected;
+    * the scalar operators pass None — their one constant group needs
+    * neither the probe nor a group name in the range refusal. The
+    * working-set cache is released on every exit. The oracles state the
+    * DEFINITION (a rank window over value-grouped sums), so a green row
+    * proves the bisection finds the true order statistic, not a replay
+    * of itself.
+    */
+  private def bisectQuantiles(vals: DataFrame, qs: Seq[Double], bins: Int,
+                              groupCap: Option[(String, Int)]): Seq[QuantileTarget] = {
+    require(bins >= 2, "need at least two bins")
+    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
+      "quantiles must lie in (0, 1]")
+    groupCap.foreach { case (_, cap) => require(cap >= 1, "maxGroups must be >= 1") }
+    val spark = vals.sparkSession
+    import spark.implicits._
+    val working = vals.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      groupCap.foreach { case (op, cap) =>
+        val nGroups = working.select("grp").distinct().count()
+        if (nGroups > cap) throw new IllegalArgumentException(
+          s"$op holds groups x qs driver state and collects " +
+          s"groups x qs x bins rows per round: got $nGroups groups " +
+          s"(cap $cap). Use histQuantilesByGroup for unbounded group " +
+          "counts - its bracketed quantiles stay fully distributed.")
+      }
+      val targets = working.groupBy("grp")
+        .agg(min("v"), max("v"), sum("w")).collect().toSeq.flatMap { b =>
+          val (g, lo, hi, total) = (b.getString(0), b.getLong(1), b.getLong(2), b.getLong(3))
+          require(BigInt(hi) - BigInt(lo) < BigInt(Long.MaxValue) - bins,
+            (if (groupCap.isEmpty) "value range" else s"value range of group $g") +
+              " exceeds 2^63 - bins - shift/scale values first")
+          qs.map(q => new QuantileTarget(g, q, total,
+            math.max(1L, math.ceil(q * total).toLong), lo, hi))
+        }
+      def binWidth(lo: Long, hi: Long): Long = (hi - lo + bins) / bins // ceil: >= 1
+      // one corpus aggregation for all of `ts`: `w` summed per (range, key)
+      def sums(ts: Seq[QuantileTarget], key: Column): QuantileTarget => Array[(Long, Long)] = {
+        val ranges = ts.map(t => (t.grp, t.lo, t.hi)).distinct
+        val byRange = ranges.zipWithIndex
+          .map { case ((g, lo, hi), i) => (i, g, lo, hi, binWidth(lo, hi)) }
+          .toDF("rid", "rgrp", "lo", "hi", "bw")
+        val rows = working.join(broadcast(byRange), col("grp") <=> col("rgrp") &&
+            col("v") >= col("lo") && col("v") <= col("hi"))
+          .groupBy(col("rid"), key.as("k")).agg(sum("w").as("s"))
+          .collect() // ranges x bins bounded by construction
+          .groupBy(_.getInt(0)).map { case (i, rs) =>
+            ranges(i) -> rs.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1) }
+        t => rows.getOrElse((t.grp, t.lo, t.hi), Array.empty)
+      }
+      // the first key whose cumulative sum reaches the rank, and the sum below it
+      def reach(t: QuantileTarget, keyed: Array[(Long, Long)]): (Long, Long) = {
+        var cum = t.below
+        keyed.collectFirst { case (k, s) if { cum += s; cum >= t.r } => (k, cum - s) }
+          .getOrElse(throw new IllegalStateException(
+            s"rank ${t.r} not reached for group ${t.grp}, q=${t.q}"))
+      }
+      var active = targets.filter(t => t.hi - t.lo + 1 > bins)
+      while (active.nonEmpty) {
+        val binSums = sums(active, expr("(v - lo) div bw"))
+        active.foreach { t =>
+          val w = binWidth(t.lo, t.hi)
+          val (bin, below) = reach(t, binSums(t))
+          val binLo = t.lo + bin * w
+          t.hi = saturatedHi(binLo, w, t.hi)
+          t.lo = binLo
+          t.below = below
+          t.passes += 1
+        }
+        active = active.filter(t => t.hi - t.lo + 1 > bins)
+      }
+      if (targets.nonEmpty) {
+        val valueSums = sums(targets, col("v"))
+        targets.foreach(t => t.value = reach(t, valueSums(t))._1)
+      }
+      targets
+    } finally working.unpersist()
+  }
+
+  /** EXACT quantiles of an integral column without a global sort
+    * ([[bisectQuantiles]] over one constant group, unit weights): one
+    * row per `qs` entry, `n` the non-null count, `r` = ceil(q·n), and
+    * `agg_passes` the corpus aggregations that q needed (its bisection
+    * rounds plus the final per-value pass).
     */
   def exactQuantiles(df: DataFrame, valueCol: String,
                      qs: Seq[Double] = Seq(0.5, 0.99),
                      bins: Int = 256): DataFrame = {
-    require(bins >= 2, "need at least two bins")
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      "quantiles must lie in (0, 1]")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df.select(col(valueCol).cast("long").as("v"))
-      .filter(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b0 = vals.agg(min("v").as("lo"), max("v").as("hi"),
-      count(lit(1)).as("n")).collect()(0)
-    val n = b0.getAs[Long]("n")
-    require(n > 0, "no non-null values")
-    // fail fast instead of silently wrapping: hi - lo overflow would
-    // skip bisection and collect every distinct value to the driver;
-    // the bound leaves `bins` of headroom because the per-round ceil
-    // width (hi - lo + bins) / bins must itself not wrap
-    require(BigInt(b0.getAs[Long]("hi")) - BigInt(b0.getAs[Long]("lo"))
-      < BigInt(Long.MaxValue) - bins,
-      "value range exceeds 2^63 - bins - shift/scale values first")
-    val results = qs.map { q =>
-      val target = math.max(1L, math.ceil(q * n).toLong)
-      var lo = b0.getAs[Long]("lo")
-      var hi = b0.getAs[Long]("hi")
-      var below = 0L // values < lo already accounted for
-      var passes = 0
-      while (hi - lo + 1 > bins) {
-        passes += 1
-        val width = (hi - lo + bins) / bins // ceil: width >= 1
-        val counts = vals.filter(col("v") >= lo && col("v") <= hi)
-          .withColumn("bin", expr(s"(v - ${lo}L) div ${width}L"))
-          .groupBy("bin").agg(count(lit(1)).as("cnt"))
-          .orderBy("bin").collect() // bins-bounded by construction
-        var cum = below
-        var found = false
-        for (r <- counts if !found) {
-          val bin = r.getAs[Long]("bin"); val c = r.getAs[Long]("cnt")
-          if (cum + c >= target) {
-            lo = lo + bin * width
-            hi = math.min(hi, lo + width - 1)
-            below = cum
-            found = true
-          } else cum += c
-        }
-        assert(found, "target rank not covered — inconsistent counts")
-      }
-      passes += 1
-      val finals = vals.filter(col("v") >= lo && col("v") <= hi)
-        .groupBy("v").agg(count(lit(1)).as("cnt"))
-        .orderBy("v").collect() // <= bins distinct values
-      var cum = below
-      val value = finals.collectFirst {
-        case r if { cum += r.getAs[Long]("cnt"); cum >= target } =>
-          r.getAs[Long]("v")
-      }.getOrElse(throw new IllegalStateException("rank not reached"))
-      (q, n, target, value, passes.toLong)
-    }
-    // the results are driver rows by now — the working-set cache must
-    // not outlive the call (the weightedQuantiles/Graph.hits hygiene)
-    vals.unpersist()
-    results.toDF("q", "n", "r", "exact_value", "agg_passes")
+    val ts = bisectQuantiles(df.select(lit(null).cast("string").as("grp"),
+        col(valueCol).cast("long").as("v"), lit(1L).as("w"))
+      .filter(col("v").isNotNull), qs, bins, None)
+    require(ts.nonEmpty, "no non-null values")
+    ts.map(t => (t.q, t.total, t.r, t.value, t.passes))
+      .toDF("q", "n", "r", "exact_value", "agg_passes")
   }
 
   /** WEIGHTED [[exactQuantiles]] — exact quantiles of `valueCol` under
@@ -371,96 +427,29 @@ object Sketch {
     * This is the curation pipeline's budget question — "what length /
     * quality cutoff keeps 90% of the TOKEN MASS" — where the unweighted
     * quantile answers the wrong thing (documents are not equal-sized:
-    * a p50 over docs can sit far from the p50 over tokens).
-    *
-    * Same distributed-selection shape as [[exactQuantiles]] (range
-    * bisection, log_bins(range) combinable aggregation passes, never a
-    * global sort): each round bins the candidate range and sums
-    * WEIGHTS per bin, the driver walks the bins-bounded result to find
-    * the bin holding the target mass, and the final per-value pass
-    * reads the answer off cumulative weights. Rows with null or
-    * non-positive weight carry no mass and are dropped up front
+    * a p50 over docs can sit far from the p50 over tokens). Rows with
+    * null or non-positive weight carry no mass and are dropped up front
     * (weights are counts — token counts, byte sizes; fractional mass
-    * belongs upstream as a scaled integer). The oracle states the
-    * DEFINITION (smallest v with cumulative weight >= r via one
-    * window over value-grouped sums), so a green row proves the
-    * weighted bisection finds the true weighted order statistic.
-    * `cum + c` sums stay exact in LONG for total weight < 2^63.
+    * belongs upstream as a scaled integer). Same kernel, output and
+    * `agg_passes` as [[exactQuantiles]], with `total_w` for `n`.
     */
   def weightedQuantiles(df: DataFrame, valueCol: String, weightCol: String,
                         qs: Seq[Double] = Seq(0.5, 0.99),
                         bins: Int = 256): DataFrame = {
-    require(bins >= 2, "need at least two bins")
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      "quantiles must lie in (0, 1]")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df.select(col(valueCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("v").isNotNull && col("w").isNotNull && col("w") > 0L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b0 = vals.agg(min("v").as("lo"), max("v").as("hi"),
-      coalesce(sum("w"), lit(0L)).as("tw")).collect()(0)
-    val tw = b0.getAs[Long]("tw")
-    require(tw > 0, "no positive-weight values")
-    // bins of headroom: the ceil width (hi - lo + bins) / bins must not
-    // wrap either — a range within `bins` of 2^63 would produce a
-    // negative width and a corrupt bisection instead of a clear error
-    require(BigInt(b0.getAs[Long]("hi")) - BigInt(b0.getAs[Long]("lo"))
-      < BigInt(Long.MaxValue) - bins,
-      "value range exceeds 2^63 - bins - shift/scale values first")
-    val results = qs.map { q =>
-      val target = math.max(1L, math.ceil(q * tw).toLong)
-      var lo = b0.getAs[Long]("lo")
-      var hi = b0.getAs[Long]("hi")
-      var below = 0L // weight on values < lo already accounted for
-      var passes = 0
-      while (hi - lo + 1 > bins) {
-        passes += 1
-        val width = (hi - lo + bins) / bins // ceil: width >= 1
-        val counts = vals.filter(col("v") >= lo && col("v") <= hi)
-          .withColumn("bin", expr(s"(v - ${lo}L) div ${width}L"))
-          .groupBy("bin").agg(sum(col("w")).as("cnt"))
-          .orderBy("bin").collect() // bins-bounded by construction
-        var cum = below
-        var found = false
-        for (r <- counts if !found) {
-          val bin = r.getAs[Long]("bin"); val c = r.getAs[Long]("cnt")
-          if (cum + c >= target) {
-            lo = lo + bin * width
-            hi = math.min(hi, lo + width - 1)
-            below = cum
-            found = true
-          } else cum += c
-        }
-        assert(found, "target mass not covered — inconsistent weight sums")
-      }
-      passes += 1
-      val finals = vals.filter(col("v") >= lo && col("v") <= hi)
-        .groupBy("v").agg(sum(col("w")).as("cnt"))
-        .orderBy("v").collect() // <= bins distinct values
-      var cum = below
-      val value = finals.collectFirst {
-        case r if { cum += r.getAs[Long]("cnt"); cum >= target } =>
-          r.getAs[Long]("v")
-      }.getOrElse(throw new IllegalStateException("mass not reached"))
-      (q, tw, target, value, passes.toLong)
-    }
-    vals.unpersist()
-    results.toDF("q", "total_w", "r", "exact_value", "agg_passes")
+    val ts = bisectQuantiles(df.select(lit(null).cast("string").as("grp"),
+        col(valueCol).cast("long").as("v"), col(weightCol).cast("long").as("w"))
+      .filter(col("v").isNotNull && col("w").isNotNull && col("w") > 0L),
+      qs, bins, None)
+    require(ts.nonEmpty, "no positive-weight values")
+    ts.map(t => (t.q, t.total, t.r, t.value, t.passes))
+      .toDF("q", "total_w", "r", "exact_value", "agg_passes")
   }
 
   /** Group-wise [[exactQuantiles]] — per-domain exact p50/p99 without
-    * sorting anything: every (group, quantile) pair bisects its OWN
-    * candidate range, but all pairs advance in LOCK-STEP — each round
-    * is ONE corpus pass (broadcast range join + combinable bin
-    * count, `groups × qs × bins`-bounded output), not a round per
-    * group. Rounds run until every pair's range fits one bin span
-    * (the widest group decides the round count, log_bins of its
-    * range); the driver holds `groups × qs` range state — bounded
-    * like the n59 bins walk. Same definitional-oracle stance as n86:
-    * the oracle is the per-group rank window, so green proves the
-    * lock-step bisection finds every group's true order statistic.
+    * sorting anything, all (group, q) targets in one [[bisectQuantiles]]
+    * run: one row per (group, distinct q); a null group is one group.
     *
     * The driver state and each round's collect are `groups`-bounded,
     * so the group column must be LOW-CARDINALITY by declaration
@@ -474,92 +463,14 @@ object Sketch {
                             qs: Seq[Double] = Seq(0.5, 0.99),
                             bins: Int = 256,
                             maxGroups: Int = 10000): DataFrame = {
-    require(bins >= 2, "need at least two bins")
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      "quantiles must lie in (0, 1]")
-    require(maxGroups >= 1, "maxGroups must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df.select(col(groupCol).cast("string").as("grp"),
-        col(valueCol).cast("long").as("v"))
-      .filter(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cap-before-collect: count the groups in one scalar agg BEFORE
-    // materializing per-group bounds on the driver — refusing here is
-    // what keeps a per-URL group column from OOMing the driver. The
-    // working-set cache releases on the refusal path too (no leaked
-    // persisted state on any exit, the Graph.hits hygiene).
-    val nGroups = vals.select(col("grp")).distinct().count()
-    if (nGroups > maxGroups) {
-      vals.unpersist()
-      throw new IllegalArgumentException(
-        s"exactQuantilesByGroup holds groups x qs driver state and collects " +
-        s"groups x qs x bins rows per round: got $nGroups groups " +
-        s"(cap $maxGroups). Use histQuantilesByGroup for unbounded group " +
-        "counts - its bracketed quantiles stay fully distributed.")
-    }
-    val bounds = vals.groupBy("grp").agg(min("v").as("lo"), max("v").as("hi"),
-      count(lit(1)).as("n")).collect()
-    final case class St(var lo: Long, var hi: Long, var below: Long,
-                        target: Long, n: Long)
-    val state = scala.collection.mutable.LinkedHashMap[(String, Double), St]()
-    bounds.foreach { r =>
-      val (g, lo, hi, n) = (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      require(BigInt(hi) - BigInt(lo) < BigInt(Long.MaxValue) - bins,
-        s"value range of group $g exceeds 2^63 - bins - shift/scale values first")
-      qs.foreach { q =>
-        state((g, q)) = St(lo, hi, 0L, math.max(1L, math.ceil(q * n).toLong), n)
-      }
-    }
-    def active = state.filter { case (_, s) => s.hi - s.lo + 1 > bins }
-    while (active.nonEmpty) {
-      val ranges = active.toSeq.map { case ((g, q), s) =>
-        (g, q, s.lo, s.hi, (s.hi - s.lo + bins) / bins)
-      }.toDF("grp", "q", "lo", "hi", "w")
-      val counts = vals.join(broadcast(ranges), Seq("grp"))
-        .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-        .withColumn("bin", expr("(v - lo) div w"))
-        .groupBy("grp", "q", "bin").agg(count(lit(1)).as("cnt"))
-        .collect() // groups × qs × bins bounded by construction
-      counts.groupBy(r => (r.getString(0), r.getDouble(1))).foreach {
-        case (key, rows) =>
-          val s = state(key)
-          val w = (s.hi - s.lo + bins) / bins
-          var cum = s.below
-          var done = false
-          rows.sortBy(_.getLong(2)).foreach { r =>
-            if (!done) {
-              val c = r.getLong(3)
-              if (cum + c >= s.target) {
-                val newLo = s.lo + r.getLong(2) * w
-                s.hi = saturatedHi(newLo, w, s.hi)
-                s.lo = newLo
-                s.below = cum
-                done = true
-              } else cum += c
-            }
-          }
-          assert(done, s"target rank not covered for $key")
-      }
-    }
-    val ranges = state.toSeq.map { case ((g, q), s) => (g, q, s.lo, s.hi) }
-      .toDF("grp", "q", "lo", "hi")
-    val finals = vals.join(broadcast(ranges), Seq("grp"))
-      .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-      .groupBy("grp", "q", "v").agg(count(lit(1)).as("cnt"))
-      .collect()
-    val out = finals.groupBy(r => (r.getString(0), r.getDouble(1))).map {
-      case (key, rows) =>
-        val s = state(key)
-        var cum = s.below
-        val v = rows.sortBy(_.getLong(2)).collectFirst {
-          case r if { cum += r.getLong(3); cum >= s.target } => r.getLong(2)
-        }.getOrElse(throw new IllegalStateException(s"rank not reached: $key"))
-        (key._1, key._2, s.n, s.target, v)
-    }.toSeq
-    // driver rows from here on — release the lock-step working set
-    vals.unpersist()
-    out.toDF(groupCol, "q", "n", "r", "exact_value")
+    bisectQuantiles(df.select(col(groupCol).cast("string").as("grp"),
+        col(valueCol).cast("long").as("v"), lit(1L).as("w"))
+      .filter(col("v").isNotNull), qs.distinct, bins,
+      Some(("exactQuantilesByGroup", maxGroups)))
+      .map(t => (t.grp, t.q, t.total, t.r, t.value))
+      .toDF(groupCol, "q", "n", "r", "exact_value")
   }
 
   /** Group-wise [[weightedQuantiles]] — per-language / per-source
@@ -567,20 +478,10 @@ object Sketch {
     * THIS language's token mass"), the question per-group curation
     * budgets actually pose: [[exactQuantilesByGroup]] weights every
     * document equally, which misprices any group whose documents skew
-    * long or short. Same lock-step bisection — every (group, quantile)
-    * pair bisects its own range but all pairs advance together, one
-    * broadcast-range-joined corpus pass per round summing WEIGHTS per
-    * bin, `groups × qs × bins`-bounded collects — and the same
-    * definitional-oracle stance: the gate replays a per-group window
-    * over value-grouped weight sums, so green proves the bisection
-    * finds every group's true weighted order statistic. Rows with
-    * null or non-positive weight carry no mass (the
-    * [[weightedQuantiles]] convention); the working-set cache releases
-    * before return.
-    *
-    * Same `maxGroups` refusal as [[exactQuantilesByGroup]]: the driver
-    * state and per-round collects are groups-bounded, so an unbounded
-    * group column (per-URL, per-domain) is refused up front —
+    * long or short. Rows with null or non-positive weight carry no mass
+    * (the [[weightedQuantiles]] convention), so a group with no
+    * positive weight has no rows. Same kernel, `maxGroups` refusal and
+    * null group as [[exactQuantilesByGroup]] —
     * [[histQuantilesByGroup]] is the fully-distributed alternative
     * (weight its input rows upstream or accept per-document brackets).
     */
@@ -589,90 +490,14 @@ object Sketch {
                                qs: Seq[Double] = Seq(0.5, 0.99),
                                bins: Int = 256,
                                maxGroups: Int = 10000): DataFrame = {
-    require(bins >= 2, "need at least two bins")
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      "quantiles must lie in (0, 1]")
-    require(maxGroups >= 1, "maxGroups must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df.select(col(groupCol).cast("string").as("grp"),
-        col(valueCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("v").isNotNull && col("w").isNotNull && col("w") > 0L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cap-before-collect with cache release on refusal, as
-    // exactQuantilesByGroup
-    val nGroups = vals.select(col("grp")).distinct().count()
-    if (nGroups > maxGroups) {
-      vals.unpersist()
-      throw new IllegalArgumentException(
-        s"weightedQuantilesByGroup holds groups x qs driver state and collects " +
-        s"groups x qs x bins rows per round: got $nGroups groups " +
-        s"(cap $maxGroups). Use histQuantilesByGroup for unbounded group " +
-        "counts - its bracketed quantiles stay fully distributed.")
-    }
-    val bounds = vals.groupBy("grp").agg(min("v").as("lo"), max("v").as("hi"),
-      sum("w").as("tw")).collect()
-    final case class St(var lo: Long, var hi: Long, var below: Long,
-                        target: Long, tw: Long)
-    val state = scala.collection.mutable.LinkedHashMap[(String, Double), St]()
-    bounds.foreach { r =>
-      val (g, lo, hi, tw) = (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))
-      require(BigInt(hi) - BigInt(lo) < BigInt(Long.MaxValue) - bins,
-        s"value range of group $g exceeds 2^63 - bins - shift/scale values first")
-      qs.foreach { q =>
-        state((g, q)) = St(lo, hi, 0L, math.max(1L, math.ceil(q * tw).toLong), tw)
-      }
-    }
-    def active = state.filter { case (_, s) => s.hi - s.lo + 1 > bins }
-    while (active.nonEmpty) {
-      val ranges = active.toSeq.map { case ((g, q), s) =>
-        (g, q, s.lo, s.hi, (s.hi - s.lo + bins) / bins)
-      }.toDF("grp", "q", "lo", "hi", "w_")
-      val counts = vals.join(broadcast(ranges), Seq("grp"))
-        .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-        .withColumn("bin", expr("(v - lo) div w_"))
-        .groupBy("grp", "q", "bin").agg(sum(col("w")).as("cnt"))
-        .collect() // groups × qs × bins bounded by construction
-      counts.groupBy(r => (r.getString(0), r.getDouble(1))).foreach {
-        case (key, rows) =>
-          val s = state(key)
-          val w = (s.hi - s.lo + bins) / bins
-          var cum = s.below
-          var done = false
-          rows.sortBy(_.getLong(2)).foreach { r =>
-            if (!done) {
-              val c = r.getLong(3)
-              if (cum + c >= s.target) {
-                val newLo = s.lo + r.getLong(2) * w
-                s.hi = saturatedHi(newLo, w, s.hi)
-                s.lo = newLo
-                s.below = cum
-                done = true
-              } else cum += c
-            }
-          }
-          assert(done, s"target mass not covered for $key")
-      }
-    }
-    val ranges = state.toSeq.map { case ((g, q), s) => (g, q, s.lo, s.hi) }
-      .toDF("grp", "q", "lo", "hi")
-    val finals = vals.join(broadcast(ranges), Seq("grp"))
-      .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-      .groupBy("grp", "q", "v").agg(sum(col("w")).as("cnt"))
-      .collect()
-    val out = finals.groupBy(r => (r.getString(0), r.getDouble(1))).map {
-      case (key, rows) =>
-        val s = state(key)
-        var cum = s.below
-        val v = rows.sortBy(_.getLong(2)).collectFirst {
-          case r if { cum += r.getLong(3); cum >= s.target } => r.getLong(2)
-        }.getOrElse(throw new IllegalStateException(s"mass not reached: $key"))
-        (key._1, key._2, s.tw, s.target, v)
-    }.toSeq
-    vals.unpersist()
-    out.toDF(groupCol, "q", "total_w", "r", "exact_value")
+    bisectQuantiles(df.select(col(groupCol).cast("string").as("grp"),
+        col(valueCol).cast("long").as("v"), col(weightCol).cast("long").as("w"))
+      .filter(col("v").isNotNull && col("w").isNotNull && col("w") > 0L),
+      qs.distinct, bins, Some(("weightedQuantilesByGroup", maxGroups)))
+      .map(t => (t.grp, t.q, t.total, t.r, t.value))
+      .toDF(groupCol, "q", "total_w", "r", "exact_value")
   }
 
   /** Group-wise [[histQuantiles]] — per-source/per-language value

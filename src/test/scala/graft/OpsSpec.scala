@@ -3157,18 +3157,19 @@ class OpsSpec extends SparkSpec {
 
   test("exactQuantiles: bisection == global-sort order statistic across bins") {
     import spark.implicits._
-    // skewed multiset with duplicates and a wide range
+    // skewed multiset with duplicates and a wide range; and a range
+    // ending at Long.MaxValue, where the upper bin edge must saturate
     val vs = (Seq.fill(50)(7L) ++ (1L to 200L) ++ Seq(100000L, 100001L))
     val df = vs.toDF("x")
     val qs = Seq(0.01, 0.25, 0.5, 0.9, 0.99, 1.0)
-    val sorted = vs.sorted
-    def reference(q: Double): Long =
-      sorted(math.max(1, math.ceil(q * sorted.size).toInt) - 1)
-    for (bins <- Seq(2, 16, 256)) {
-      val got = Sketch.exactQuantiles(df, "x", qs, bins).collect()
+    for (input <- Seq(vs, Seq(Long.MaxValue - 1000, Long.MaxValue));
+         bins <- Seq(2, 16, 256)) {
+      val sorted = input.sorted
+      val got = Sketch.exactQuantiles(input.toDF("x"), "x", qs, bins).collect()
         .map(r => r.getAs[Double]("q") -> r.getAs[Long]("exact_value")).toMap
       qs.foreach { q =>
-        assert(got(q) == reference(q), s"q=$q bins=$bins")
+        assert(got(q) == sorted(math.max(1, math.ceil(q * sorted.size).toInt) - 1),
+          s"q=$q bins=$bins max=${sorted.last}")
       }
     }
     // partition invariance of the whole loop
@@ -3183,19 +3184,20 @@ class OpsSpec extends SparkSpec {
     import spark.implicits._
     // duplicates, skewed weights, a wide range — the reference expands
     // every (v, w) into w copies and reads the rank off the sort
+    // — and, with unit weights, a range ending at Long.MaxValue
     val rows = Seq((7L, 50L), (100000L, 2L)) ++ (1L to 200L).map(v => (v, v % 5 + 1))
     val df = rows.toDF("x", "w")
-    val expanded = rows.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.sorted
-    val tw = expanded.size.toLong
     val qs = Seq(0.01, 0.25, 0.5, 0.9, 0.99, 1.0)
-    def reference(q: Double): Long =
-      expanded(math.max(1L, math.ceil(q * tw).toLong).toInt - 1)
-    for (bins <- Seq(2, 16, 256)) {
-      val got = Sketch.weightedQuantiles(df, "x", "w", qs, bins).collect()
-        .map(r => r.getAs[Double]("q") ->
+    for (input <- Seq(rows, Seq((Long.MaxValue - 1000, 1L), (Long.MaxValue, 1L)));
+         bins <- Seq(2, 16, 256)) {
+      val expanded = input.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.sorted
+      val tw = expanded.size.toLong
+      val got = Sketch.weightedQuantiles(input.toDF("x", "w"), "x", "w", qs, bins)
+        .collect().map(r => r.getAs[Double]("q") ->
           (r.getAs[Long]("total_w"), r.getAs[Long]("exact_value"))).toMap
       qs.foreach { q =>
-        assert(got(q) == (tw, reference(q)), s"q=$q bins=$bins")
+        assert(got(q) == (tw, expanded(math.max(1L, math.ceil(q * tw).toLong).toInt - 1)),
+          s"q=$q bins=$bins max=${expanded.last}")
       }
     }
     // unit-weight degeneracy: weight 1 everywhere IS exactQuantiles
@@ -3239,6 +3241,20 @@ class OpsSpec extends SparkSpec {
           r.getAs[Long]("exact_value")).toMap
       for (g <- Seq("a", "b"); q <- qs)
         assert(got((g, q)) == reference(g, q), s"g=$g q=$q bins=$bins")
+    }
+    // a null group is one group, as in groupBy: one narrower than a bin
+    // span (final pass only), then one wide enough to bisect
+    for (nulls <- Seq(Seq((3L, 2L), (5L, 1L)), Seq((3L, 2L), (5L, 1L), (70000L, 4L)))) {
+      val withNull = rows ++ nulls.map { case (v, w) => (null: String, v, w) }
+      val got = Sketch.weightedQuantilesByGroup(withNull.toDF("grp", "x", "w"),
+          "grp", "x", "w", qs, bins = 8)
+        .collect().map(r => (r.getString(0), r.getAs[Double]("q")) ->
+          r.getAs[Long]("exact_value")).toMap
+      val exp = nulls.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.sorted
+      assert(got.size == 3 * qs.size, s"groups a, b and null: $got")
+      for (q <- qs)
+        assert(got((null, q)) == exp(math.max(1L, math.ceil(q * exp.size).toLong).toInt - 1),
+          s"null group q=$q values=$nulls")
     }
     // unit-weight degeneracy: reduces to exactQuantilesByGroup
     val ones = rows.map { case (g, v, _) => (g, v, 1L) }.toDF("grp", "x", "w")
@@ -3295,6 +3311,20 @@ class OpsSpec extends SparkSpec {
       val expected = vs(math.max(1, math.ceil(q * vs.size).toInt) - 1)
       assert(got((g, q)) == expected, s"group $g q=$q")
     }
+    // a null group is one group, as in groupBy: one narrower than a bin
+    // span (final pass only), then one wide enough to bisect
+    for (nulls <- Seq(Seq(3L, 5L, 5L), Seq(3L, 5L, 1000L, 70000L))) {
+      val withNull = rows ++ nulls.map(v => (null: String, v))
+      val out = Sketch.exactQuantilesByGroup(withNull.toDF("grp", "x"), "grp", "x",
+          qs, bins = 8)
+        .collect().map(r => (r.getString(0), r.getDouble(1)) ->
+          r.getAs[Long]("exact_value")).toMap
+      val vs = nulls.sorted
+      assert(out.size == 4 * qs.size, s"groups narrow, wide, tiny and null: $out")
+      for (q <- qs)
+        assert(out((null, q)) == vs(math.max(1, math.ceil(q * vs.size).toInt) - 1),
+          s"null group q=$q values=$nulls")
+    }
     // agrees with the ungrouped operator on a single-group frame
     val single = Sketch.exactQuantiles(
       df.filter(col("grp") === "wide").select("x"), "x", qs, bins = 8)
@@ -3328,6 +3358,35 @@ class OpsSpec extends SparkSpec {
       "grp", "x", Seq(1.0), bins = 8, maxGroups = 10).collect()
     assert(atCap.length == 10 &&
       atCap.forall(r => r.getAs[Long]("exact_value") == r.getString(0).drop(1).toLong))
+  }
+
+  test("exact quantiles job budget: jobs follow the rounds, not the number of qs") {
+    import spark.implicits._
+    // every q advances in lock-step: the bounds pass, then per round a
+    // range broadcast and a bin collect, then the same pair for the
+    // final per-value pass — so four qs cost what the single q with the
+    // most passes costs. Counted as the benchmark counts (AQE off); the
+    // ByGroup bound, 12, is their cost with a bisection loop of their own.
+    val df = (1L to 100000L).toDF("x").withColumn("w", lit(1L))
+      .withColumn("g", lit("a"))
+    val qs = Seq(0.25, 0.5, 0.9, 0.99)
+    val passes = Sketch.exactQuantiles(df, "x", qs, 16).collect()
+      .map(_.getAs[Long]("agg_passes")).toSeq
+    assert(passes == Seq(4L, 4L, 5L, 5L))
+    val deepest = qs(passes.indexOf(passes.max))
+    val scalarBound = 2 * passes.max.toInt + 1
+    val budget = Seq[(String, Seq[Double] => org.apache.spark.sql.DataFrame, Int, Int)](
+      ("exactQuantiles", Sketch.exactQuantiles(df, "x", _, 16), 11, scalarBound),
+      ("weightedQuantiles", Sketch.weightedQuantiles(df, "x", "w", _, 16), 11, scalarBound),
+      ("exactQuantilesByGroup", Sketch.exactQuantilesByGroup(df, "g", "x", _, 16), 12, 12),
+      ("weightedQuantilesByGroup",
+        Sketch.weightedQuantilesByGroup(df, "g", "x", "w", _, 16), 12, 12))
+    for ((op, run, pinned, atMost) <- budget) {
+      val (_, all) = countingJobs(run(qs).collect())
+      val (_, one) = countingJobs(run(Seq(deepest)).collect())
+      assert(all == pinned && one == pinned && pinned <= atMost,
+        s"$op: ${qs.mkString(",")} ran $all jobs, $deepest alone $one (pinned $pinned)")
+    }
   }
 
   test("hllOverlapByGroup: inclusion-exclusion tracks the planted overlap") {
