@@ -327,16 +327,22 @@ object Bench {
     // that budget (every prior round recorded parsed:null), so: dump the
     // full-precision line to a file, then print a compact line — total +
     // as many of the slowest queries as fit — guaranteed to sit entirely
-    // inside the tail window.
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_FULL.json"),
-        (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
-    }
+    // inside the tail window. A restricted run writes no file: its full
+    // line is printed anyway, and the committed BENCH_FULL.json is the
+    // full sweep's record. `full` names where the full line went.
+    val fullAt =
+      if (restricted) "stdout"
+      else try {
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get("BENCH_FULL.json"),
+          (fullLine + "\n").getBytes("UTF-8"))
+        "BENCH_FULL.json"
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
+        "stdout"
+      }
     def r3(v: Double): String = "%.3f".format(v)
-    val prefix = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","full":"BENCH_FULL.json","queries":{"""
+    val prefix = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","full":"$fullAt","queries":{"""
     val suffix = "}}"
     val budget = 1700 - prefix.length - suffix.length
     val slowestFirst = results.toSeq.sortBy(-_._2)

@@ -4334,9 +4334,8 @@ object SparkEntry {
         .select(col("a.domain").as("src"), col("b.domain").as("dst"))
       val edges = pairs.groupBy("src", "dst").agg(count(lit(1)).as("wt"))
       // the a/b self-join emits every co-citation pair in BOTH
-      // directions: symmetrized by construction, so the kernel skips
-      // the dangling probe entirely
-      graft.ops.Graph.integerPageRank(edges, iters = 3, symmetrized = true)
+      // directions, so no domain is dangling
+      graft.ops.Graph.integerPageRank(edges, iters = 3)
         .select(col("node").as("domain"), col("rank"))
         .orderBy(col("rank").desc, col("domain"))
     }),

@@ -97,7 +97,9 @@ object Clustering {
       // un-truncated chain grows ~3^rounds references to the corpus
       // scan (the kCore disease; guide §7.2 — plan size is a
       // first-class cost). The k-row checkpoint materializes inside
-      // the caller's one action and adds no job.
+      // the caller's one action, but building it runs the round's
+      // broadcast of the previous centroids (`assign`'s
+      // `broadcast(cents)`) at call time ([[Iterate.lazyCheckpointed]]).
       cents = Iterate.lazyCheckpointed(upd.unionByName(
         cents.join(upd.select("cluster"), Seq("cluster"), "left_anti")))
     }

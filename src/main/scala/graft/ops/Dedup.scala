@@ -1228,36 +1228,38 @@ object Dedup {
     * The rounds run on [[Iterate.toFixpoint]] (lazy per-round
     * checkpoint, probe-as-materializer, superseded rounds released);
     * the label sum is the convergence witness — it strictly decreases
-    * until the fixpoint. `edges` is one lazy checkpoint, materialized
-    * inside the first probe's job and read by every round; once the
-    * final labels are materialized their lineage no longer reaches it,
-    * so it is released before returning.
+    * until the fixpoint. `edges` is one lazy checkpoint
+    * ([[Iterate.withCheckpointed]]), materialized inside the first
+    * probe's job and read by every round; once the final labels are
+    * materialized their lineage no longer reaches it, so it is
+    * released before returning.
     */
   def dupClusters(pairs: DataFrame, idA: String = "doc_id_a",
                   idB: String = "doc_id_b", maxIter: Int = 50): DataFrame = {
-    val edges = Iterate.lazyCheckpointed(
-      pairs.select(col(idA).as("u"), col(idB).as("v"))
-        .unionAll(pairs.select(col(idB).as("u"), col(idA).as("v")))
-        .distinct())
-    val init = edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id"))
-    val (labels, _) = Iterate.toFixpoint(init, maxIter) { cur =>
-      val contrib = edges
-        .join(cur.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))
-        .select(col("v").as("id"), col("lu").as("label"))
-      val hooked = cur.unionByName(contrib)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-      // a label is always a node id (self-initialized, only ever
-      // replaced by another node's label), so label(label) is a
-      // nodes-bounded self-join; left + coalesce keeps the row if the
-      // label's own row is somehow absent rather than dropping it
-      val jump = hooked.withColumnsRenamed(Map("id" -> "jid", "label" -> "jl"))
-      hooked.join(jump, hooked("label") === jump("jid"), "left")
-        .select(hooked("id"),
-          least(hooked("label"), coalesce(col("jl"), hooked("label"))).as("label"))
-    } { _.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0) }
-    Iterate.releaseCheckpointed(edges)
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    Iterate.withCheckpointed(
+        pairs.select(col(idA).as("u"), col(idB).as("v"))
+          .unionAll(pairs.select(col(idB).as("u"), col(idA).as("v")))
+          .distinct()) { edges =>
+      val init = edges.select(col("u").as("id")).distinct()
+        .withColumn("label", col("id"))
+      val (labels, _) = Iterate.toFixpoint(init, maxIter)(
+          _.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)) { (cur, _) =>
+        val contrib = edges
+          .join(cur.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))
+          .select(col("v").as("id"), col("lu").as("label"))
+        val hooked = cur.unionByName(contrib)
+          .groupBy(col("id")).agg(min(col("label")).as("label"))
+        // a label is always a node id (self-initialized, only ever
+        // replaced by another node's label), so label(label) is a
+        // nodes-bounded self-join; left + coalesce keeps the row if the
+        // label's own row is somehow absent rather than dropping it
+        val jump = hooked.withColumnsRenamed(Map("id" -> "jid", "label" -> "jl"))
+        hooked.join(jump, hooked("label") === jump("jid"), "left")
+          .select(hooked("id"),
+            least(hooked("label"), coalesce(col("jl"), hooked("label"))).as("label"))
+      }(_ == _)
+      labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    }
   }
 
   /** Incremental duplicate-cluster maintenance — the [[dupClusters]]

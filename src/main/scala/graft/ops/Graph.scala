@@ -11,9 +11,13 @@ import org.apache.spark.sql.functions._
   * (damping 85/100, truncating division at every step): LONG sums are
   * partition-order-independent where float PageRank never
   * hash-matches, so an oracle replays the iterations bit-exactly as
-  * unrolled CTEs. Two graph instances in the query surface share this
-  * one kernel: the word co-occurrence graph (TextRank keywords, n76)
-  * and the domain co-citation graph from crawl outlinks (n89) — the
+  * unrolled CTEs. [[integerPageRank]], [[trustRank]] and
+  * [[pageRankConverged]] are one kernel, [[dampedRank]]: a teleport
+  * set (every node, or the seeds) and a stop rule (fixed `iters`, or
+  * `tol`/`maxIter`). Its graph instances in the query surface are the
+  * word co-occurrence graph (TextRank keywords, n76), the domain
+  * co-citation graph from crawl outlinks (n89), the directed
+  * successor-word graph (n136) and its seeded variant (n142) — the
   * point of the factoring is that "rank a graph" is one operator, not
   * a per-use-case rewrite.
   */
@@ -24,173 +28,25 @@ object Graph {
 
   /** Damped PageRank over a weighted directed edge relation
     * `(src, dst, wt)` — to rank an undirected graph, pass both edge
-    * directions (as the callers here do). Returns `(node, rank)`.
+    * directions (as the n76/n89 callers do). Returns `(node, rank)`
+    * after exactly `iters` rounds of [[dampedRank]] with a uniform
+    * teleport.
     *
     * The node universe is src ∪ dst, and DANGLING nodes (no outbound
     * edges) redistribute their rank mass uniformly each round — the
     * standard correction (Page et al. 1999 §2.6): without it a
     * directed graph leaks mass through every sink and the ranks drift
-    * toward zero. The dangling sum is one extra node-bounded agg per
-    * round, its per-node share an integer `div n` folded into the
-    * same damped update. On symmetrized graphs (every node out-degree
-    * >= 1, the n76/n89 callers) the dangling relation is EMPTY and
-    * the term contributes exactly 0 — those results are bit-identical
-    * with or without it. Nodes with no INBOUND edges are equally
-    * fine: the per-round left join keeps them at their teleport rank
-    * instead of silently dropping them.
-    *
-    * 100 TB shape: the edge relation (with out-degrees joined) is
-    * persisted ONCE and is the sole ancestor of the node list and
-    * node count, so whatever pipeline built the edges runs exactly
-    * once into the cache; each of the `iters` rounds is one
-    * edges-bounded join-agg shuffle plus the nodes-bounded dangling
-    * agg. `rank * wt` must stay under 2^63: per-edge weights up to
-    * ~9e6 at full scale — lower Scale beyond (documented, the n76
-    * convention).
-    *
-    * Evaluation semantics: on symmetrized / dangling-free graphs the
-    * result is FULLY LAZY (caller-owned cache lifecycle for `ed`, the
-    * repo convention). Directed graphs pay ONE probe at call time — a
-    * single-shuffle node universe tagged `has_out` (src ∪ dst in one
-    * groupBy, replacing the old distinct + anti-join + union triple) —
-    * and, when dangling nodes exist, the kernel is EAGER AT CALL TIME:
-    * the `has_out` flag rides inside each round's persisted rank
-    * vector, so the round's dangling mass is a filter + scalar agg on
-    * the cached vector (no join), snapshotted into the next round's
-    * plan as a literal; round r's probe materializes round r's cache,
-    * at which point round r-1's is released (at most TWO rank vectors
-    * cached, at any iters). The final vector is materialized through
-    * one checkpointed action ([[Iterate.checkpointed]]), after which
-    * every remaining internal cache (last vector, universe, edges) is
-    * released and the returned relation has O(1) lineage. The per-round scalar
-    * action is a MEASURED choice, not an oversight: the lazy
-    * alternative (dsum as a 1-row crossJoin, the [[pageRankConverged]]
-    * shape) A/B'd 20-30% SLOWER here — without per-round plan
-    * truncation the doubled `cur` reference nests broadcast subtrees
-    * and doubles plan size per round (PLANS.md "n136 dangling A/B").
-    * Snapshotting is sound because inputs are immutable lake reads; a
-    * mutating source needs the checkpointing converged variant.
+    * toward zero. On a graph without dangling nodes (every edge given
+    * both ways) the dangling sum is 0 and the term adds exactly 0.
+    * Nodes with no INBOUND edges keep their teleport rank instead of
+    * vanishing. `iters <= 8` is the oracle's unrolled-CTE bound; run
+    * deeper with [[pageRankConverged]].
     */
-  def integerPageRank(edges: DataFrame, iters: Int,
-                      symmetrized: Boolean = false): DataFrame = {
+  def integerPageRank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
       "iters outside [1,8]: deeper power iterations need checkpointing " +
         "(see pageRankConverged) before the lineage is safe")
-    val deg = edges.groupBy("src").agg(sum(col("wt")).as("wdeg"))
-    val ed = edges.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // `symmetrized = true` is the caller's declaration that every edge
-    // was emitted in both directions (out-degree >= 1 by construction,
-    // so node universe = src set and dangling mass = 0): the TextRank /
-    // co-citation callers pass it and skip the universe probe — their
-    // plans and costs are exactly the pre-dangling kernel's. Directed
-    // callers pay one single-shuffle probe: src ∪ dst grouped by node
-    // with a max(has_out) flag gives the universe AND the dangling set
-    // in one cached relation.
-    val univ =
-      if (symmetrized) None
-      else Some(ed.select(col("src").as("node"), lit(1).as("has_out"))
-        .unionAll(ed.select(col("dst").as("node"), lit(0).as("has_out")))
-        .groupBy("node").agg(max(col("has_out")).as("has_out"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // rolling two-vector cache of the dangling path, hoisted so the
-    // failure handler below can release it: any job failure inside the
-    // probes or the checkpoint must not leak persisted state (the r9
-    // ADVICE item — the success path releases these deliberately late,
-    // so a blanket finally would break the lazy dangling-free return).
-    // A LIST, not an Option: the current round's vector is pushed
-    // BEFORE its probe runs, so a probe failure still finds it here
-    var prevCache: List[DataFrame] = Nil
-    try {
-    val hasDangling = univ.exists(_.filter(col("has_out") === 0)
-      .limit(1).count() > 0)
-    if (!hasDangling) {
-      // dangling-free (symmetrized or probed): dst ⊆ src, so the node
-      // universe is the src set and the plan stays fully lazy — the
-      // probe relation (if any) was probe-only, release it.
-      //
-      // Per-round LAZY checkpoints (r14): the un-truncated chain's
-      // round r referenced `nodes` twice and `ranks_{r-1}` once, so
-      // the analyzed plan carried ~3·iters copies of the whole
-      // edge-pipeline subtree (92-134 KB for the n76/n89 callers —
-      // guide §7.2, plan size is a first-class cost). This is NOT the
-      // restructure the r9 A/B rejected: that A/B measured the lazy
-      // 1-row crossJoin(dsum) (plan-doubling) and eager per-round
-      // checkpoints (extra job per round) on the DANGLING path; a
-      // lazy checkpoint adds no job — the chain materializes inside
-      // the caller's one action (the kCore/LPA treatment) — and the
-      // result stays fully lazy as documented. `nodes` is checkpointed
-      // once so the per-round self-references read round-sized blocks
-      // instead of re-deriving the distinct per segment (checkpoint
-      // boundaries end ReusedExchange sharing).
-      univ.foreach(_.unpersist())
-      val nodes = Iterate.lazyCheckpointed(
-        ed.select(col("src").as("node")).distinct())
-      val n = nodes.agg(count(lit(1)).as("n"))
-      var ranks = nodes.crossJoin(n)
-        .select(col("node"), expr(s"$Scale div n").as("rank"))
-      for (_ <- 1 to iters) {
-        val contrib = ed.join(ranks, ed("src") === ranks("node"))
-          .select(col("dst"), expr("(rank * wt) div wdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("csum"))
-        ranks = Iterate.lazyCheckpointed(
-          nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-            .crossJoin(n)
-            .select(nodes("node"),
-              (expr(s"(15 * $Scale div 100) div n") +
-                expr("(85 * coalesce(csum, 0)) div 100")).as("rank")))
-      }
-      ranks
-    } else {
-      val nodes = univ.get
-      val n = nodes.agg(count(lit(1)).as("n"))
-      // the has_out flag rides inside the rank vector, so each round's
-      // dangling mass is a filter + scalar agg over the round's OWN
-      // cache — never a join against a separate dangling relation
-      var ranks = nodes.crossJoin(n)
-        .select(col("node"), col("has_out"), expr(s"$Scale div n").as("rank"))
-      // rolling release: round r's scalar probe fully materializes
-      // round r's cache, after which round r-1's vector is dead — at
-      // most two rank vectors are ever cached, not iters of them
-      for (_ <- 1 to iters) {
-        val cur = ranks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        prevCache = cur :: prevCache
-        val dsumLit: Long = cur.filter(col("has_out") === 0)
-          .agg(coalesce(sum(col("rank")), lit(0L))).head().getLong(0)
-        prevCache.tail.foreach(_.unpersist())
-        prevCache = List(cur)
-        val contrib = ed.join(cur, ed("src") === cur("node"))
-          .select(col("dst"), expr("(rank * wt) div wdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("csum"))
-        // dangling nodes spread their whole rank uniformly (dsum div n
-        // joins every node's inbound sum before damping); LEFT join
-        // from the node list: a node with no inbound edges keeps its
-        // teleport rank instead of vanishing from the result
-        ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .crossJoin(n)
-          .select(nodes("node"), nodes("has_out"),
-            (expr(s"(15 * $Scale div 100) div n") +
-              expr(s"(85 * (coalesce(csum, 0) + $dsumLit div n)) div 100")).as("rank"))
-      }
-      // one checkpointed action materializes the final vector (the
-      // last round's cache was filled by its scalar probe), then the
-      // remaining internal caches are released — the caller gets an
-      // O(1)-lineage relation and no leaked persisted state (the r8
-      // ADVICE item)
-      val out = Iterate.checkpointed(ranks.select(col("node"), col("rank")))
-      prevCache.foreach(_.unpersist())
-      univ.foreach(_.unpersist())
-      ed.unpersist()
-      out
-    }
-    } catch { case t: Throwable =>
-      // no leaked persisted state on ANY exit path: a mid-loop job
-      // failure releases everything the success path would have
-      prevCache.foreach(_.unpersist())
-      univ.foreach(_.unpersist())
-      ed.unpersist()
-      throw t
-    }
+    dampedRank(edges, None, iters, None)
   }
 
   /** Fixed-round k-core peeling over an undirected graph given as a
@@ -205,8 +61,8 @@ object Graph {
     *
     * Rounds are join-filtered degree aggs over an edges-bounded
     * relation; `rounds <= 6` is the same lineage bound as the n76
-    * power iteration — deeper peeling wants per-round checkpoints
-    * (see Dedup.dupClusters) on a real cluster.
+    * power iteration — deeper peeling runs to the fixpoint in
+    * [[kCoreConverged]].
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -226,10 +82,13 @@ object Graph {
       // analysis/codegen/task binaries still carry the exponential tree
       // (r13 profile: 10 MiB task binaries, wall 3.7x the task time,
       // all driver). A LAZY per-round checkpoint truncates the lineage
-      // to a round-sized plan while adding no job — the chain
-      // materializes inside the caller's one action, and the per-round
-      // persisted blocks make each round's recompute O(1) (guide §7.2:
-      // plan size is a first-class cost).
+      // to a round-sized plan — the chain materializes inside the
+      // caller's one action, and the per-round persisted blocks make
+      // each round's recompute O(1) (guide §7.2: plan size is a
+      // first-class cost). Building each checkpoint runs the round's
+      // broadcasts (the `keep` side of both joins on small graphs), so
+      // the rounds cost those broadcast jobs at call time
+      // ([[Iterate.lazyCheckpointed]]).
       val keep = cur.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("src")
       cur = graft.ops.Iterate.lazyCheckpointed(
@@ -242,8 +101,9 @@ object Graph {
   }
 
   /** [[kCore]] run to the TRUE fixpoint — peel until a round removes
-    * nothing — with an eager checkpoint per round ([[Iterate]]), so
-    * the lineage stays O(1) at any peel depth: the production shape
+    * nothing — on [[Iterate.toFixpoint]]: a lazy checkpoint per round,
+    * filled by the round's count probe, so the lineage stays O(1) at
+    * any peel depth: the production shape
     * for a real cluster, where the cascade depth is data-dependent
     * and a fixed `rounds` bound either wastes rounds or stops early.
     * Convergence witness: the peeled edge count, which strictly
@@ -260,65 +120,32 @@ object Graph {
       .distinct()
     val init = und.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-    val (core, _) = Iterate.toFixpoint(init, maxIter) { cur =>
+    val (core, _) = Iterate.toFixpoint(init, maxIter)(_.count()) { (cur, _) =>
       val keep = cur.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("src")
       cur.join(keep, "src")
         .join(keep.withColumnRenamed("src", "dst"), "dst")
         .select(col("src"), col("dst"))
-    }(_.count())
+    }(_ == _)
     core.groupBy("src").agg(count(lit(1)).as("degree"))
       .select(col("src").as("node"), col("degree"))
   }
 
-  /** [[integerPageRank]] run to convergence: iterate the same damped
-    * integer update (dangling-mass term included) until the largest
-    * per-node rank change is <= `tol` (in 1e-12 rank units) or
-    * `maxIter` rounds pass, checkpointing each rank vector
-    * ([[Iterate.checkpointed]]) so the lineage never grows — the
-    * production variant of the fixed-`iters` kernel, whose [1,8]
-    * bound exists only because unchecked lineage is driver-fatal.
-    * The convergence test is one nodes-bounded self-join + agg per
-    * round. Returns (node, rank).
+  /** [[integerPageRank]] run to convergence: the same damped integer
+    * update (dangling-mass term included) until the largest per-node
+    * rank change of a round is <= `tol` (in 1e-12 rank units) or
+    * `maxIter` rounds pass — the production variant of the fixed-`iters`
+    * operator, with no lineage bound because every round of
+    * [[dampedRank]] is checkpointed. The largest change is read by the
+    * round's one probe off the `prev_rank` the rank vector carries, so
+    * a round costs the same single job as a fixed round. Returns
+    * (node, rank).
     */
   def pageRankConverged(edges: DataFrame, tol: Long = 1000L,
                         maxIter: Int = 100): DataFrame = {
     require(tol >= 0L, "tol must be >= 0")
     require(maxIter >= 1, "maxIter must be >= 1")
-    val deg = edges.groupBy("src").agg(sum(col("wt")).as("wdeg"))
-    val ed = Iterate.checkpointed(edges.join(deg, "src"))
-    val nodes = Iterate.checkpointed(
-      ed.select(col("src").as("node"))
-        .unionAll(ed.select(col("dst").as("node"))).distinct())
-    val dangling = Iterate.checkpointed(
-      nodes.join(ed.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_anti"))
-    val n = nodes.agg(count(lit(1)).as("n"))
-    var ranks = Iterate.checkpointed(nodes.crossJoin(n)
-      .select(col("node"), expr(s"$Scale div n").as("rank")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val contrib = ed.join(ranks, ed("src") === ranks("node"))
-        .select(col("dst"), expr("(rank * wt) div wdeg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("csum"))
-      val dsum = dangling.join(ranks, Seq("node"))
-        .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
-      val next = Iterate.checkpointed(
-        nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .crossJoin(n).crossJoin(dsum)
-          .select(nodes("node"),
-            (expr(s"(15 * $Scale div 100) div n") +
-              expr("(85 * (coalesce(csum, 0) + dsum div n)) div 100")).as("rank")))
-      val maxDelta = next.withColumnRenamed("rank", "r2")
-        .join(ranks, "node")
-        .agg(coalesce(max(abs(col("r2") - col("rank"))), lit(0L)))
-        .head().getLong(0)
-      ranks = next
-      converged = maxDelta <= tol
-      iter += 1
-    }
-    ranks
+    dampedRank(edges, None, maxIter, Some(tol))
   }
 
   /** Seed-biased PageRank — TrustRank (Gyöngyi, Garcia-Molina &
@@ -328,123 +155,108 @@ object Graph {
     * with link distance — the standard device for propagating domain
     * trust over a crawl graph (or topic affinity over a term graph)
     * when curating training data. Same 1e-12 integer fixed point and
-    * damping 85/100 as [[integerPageRank]], so an oracle replays every
-    * round bit-exactly: with d the uniform-on-seeds teleport vector,
-    * r0 = d and each round computes
+    * damping 85/100 as [[integerPageRank]] — it is [[dampedRank]] with
+    * the seeds as the teleport set — so an oracle replays every round
+    * bit-exactly: with d the uniform-on-seeds teleport vector, r0 = d
+    * and each round computes
     * `rank' = is_seed * ((15*Scale div 100) div ns)
     *          + (85 * (csum + is_seed * (dsum div ns))) div 100`
     * — dangling mass follows the TELEPORT distribution (the TrustRank
-    * convention), i.e. it re-enters at the seeds, not uniformly.
+    * convention), i.e. it re-enters at the seeds, not uniformly. With
+    * every node a seed this is [[integerPageRank]], bit for bit.
     *
     * `seeds` is a single-column `node` relation and is intersected
     * with the graph's node universe; `ns` is the count of seeds
-    * actually present (must be >= 1 — validated by the one scalar
-    * probe this operator always pays, which also snapshots `ns`;
-    * sound for immutable lake reads, the [[integerPageRank]] snapshot
-    * argument, and a seed list is tiny and vetted by definition).
-    *
-    * `symmetrized = true` is the same caller declaration as
-    * [[integerPageRank]]'s (every edge emitted both ways, so dst ⊆ src
-    * and no dangling nodes): the plan stays fully lazy with the
-    * caller-owned `ed` cache. Directed callers get the src ∪ dst
-    * universe probe; when dangling nodes exist each round pays the
-    * same cached-vector dsum probe as [[integerPageRank]] (rolling
-    * two-vector cache), and either way the directed path returns a
-    * checkpointed O(1)-lineage relation with every internal cache
-    * released. 100 TB shape: identical to [[integerPageRank]] — one
-    * persisted edges-with-degrees relation, one edges-bounded
-    * join-agg shuffle per round; the spec pins both branches and the
-    * branch-equality law on a dangling-free graph.
+    * actually present (must be >= 1 — validated by the kernel's
+    * up-front probe, which also snapshots `ns`; sound for immutable
+    * lake reads, and a seed list is tiny and vetted by definition).
     */
-  def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                symmetrized: Boolean = false): DataFrame = {
+  def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
       "iters outside [1,8]: deeper power iterations need checkpointing " +
         "(see pageRankConverged) before the lineage is safe")
-    val deg = edges.groupBy("src").agg(sum(col("wt")).as("wdeg"))
-    val ed = edges.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seedIds = seeds.select(col("node")).distinct()
-      .withColumn("is_seed", lit(1L))
-    // hoisted so the failure handler can release them: the ns probe,
-    // the require(ns >= 1), and every per-round scalar can throw with
-    // ed/univ/prevCache persisted (the r9 ADVICE leak); prevCache is a
-    // list so the current round's vector is tracked BEFORE its probe
-    var univP: Option[DataFrame] = None
-    var prevCache: List[DataFrame] = Nil
-    try {
-    if (symmetrized) {
-      val nodes = ed.select(col("src").as("node")).distinct()
-        .join(seedIds, Seq("node"), "left")
-        .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      val nsLit: Long = nodes.agg(coalesce(sum(col("is_seed")), lit(0L)))
-        .head().getLong(0)
-      require(nsLit >= 1L, "no seed node present in the graph")
-      var ranks = nodes
-        .select(col("node"), col("is_seed"),
-          expr(s"is_seed * ($Scale div $nsLit)").as("rank"))
-      for (_ <- 1 to iters) {
-        val contrib = ed.join(ranks, ed("src") === ranks("node"))
-          .select(col("dst"), expr("(rank * wt) div wdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("csum"))
-        ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(nodes("node"), nodes("is_seed"),
-            (expr(s"is_seed * ((15 * $Scale div 100) div $nsLit)") +
-              expr("(85 * coalesce(csum, 0)) div 100")).as("rank"))
-      }
-      ranks.select(col("node"), col("rank"))
-    } else {
-      val univ = ed.select(col("src").as("node"), lit(1).as("has_out"))
+    dampedRank(edges, Some(seeds), iters, None)
+  }
+
+  /** The damped integer rank kernel behind [[integerPageRank]],
+    * [[trustRank]] and [[pageRankConverged]]. `seeds` is the teleport
+    * set (None = every node); the stop rule is `maxIter` rounds, or
+    * earlier once a round changes no rank by more than `tol`. With
+    * `tele` = 1 on teleport nodes (else 0) and `ns` = the number of
+    * them, r0 = tele * (Scale div ns), and each round computes
+    * `rank' = tele * ((15*Scale div 100) div ns)
+    *          + (85 * (csum + tele * (dsum div ns))) div 100`,
+    * where `csum` is the node's inbound `(rank * wt) div wdeg` sum and
+    * `dsum` the rank mass of the dangling (no-outbound) nodes. With
+    * tele = 1 everywhere this is the uniform PageRank update.
+    *
+    * Evaluation is EAGER at call time and costs one job per round plus
+    * two (plus one broadcast job for a small seed set):
+    *  - `ed`, the edges with their out-weight `wdeg`, is one lazy
+    *    checkpoint hash-partitioned and sorted by `src` (`wdeg` is a
+    *    window sum over `src`), read by every round;
+    *  - the universe src ∪ dst, tagged `has_out` and `tele`, is one
+    *    lazy checkpoint; the up-front probe over it (one job) fills
+    *    both and returns `ns`, inlined into every round as a literal;
+    *  - every rank vector `(node, has_out, tele, rank, prev_rank)` is a
+    *    [[Iterate.toFixpoint]] state: its probe — the dangling sum and
+    *    the largest `|rank - prev_rank|`, one job — fills its
+    *    checkpoint, the dangling sum enters the next round as a
+    *    literal, and the superseded round is released.
+    * Snapshotting the scalars is sound because inputs are immutable
+    * lake reads; it is also the measured choice: the lazy alternative,
+    * a 1-row crossJoin of the dangling sum, nests the previous round's
+    * plan twice per round (PLANS.md "n136 dangling A/B").
+    *
+    * 100 TB shape: the rank vector stays hash-partitioned by `node`
+    * and `ed` by `src` (and sorted), so neither sort-merge join of a
+    * round shuffles its inputs: the inbound-sum aggregate is the
+    * round's one shuffle, plus local sorts of the nodes-bounded sides.
+    * The joins are hinted `merge`: a rank vector
+    * small enough to broadcast would otherwise cost a broadcast job at
+    * every round's checkpoint build ([[Iterate.lazyCheckpointed]]).
+    * `rank * wt` must stay under 2^63: per-edge weights up to ~9e6 at
+    * full scale — lower Scale beyond. Returns `(node, rank)`, a
+    * projection of the last round's materialized checkpoint; `ed`, the
+    * universe and every earlier round are released on every exit path.
+    */
+  private def dampedRank(edges: DataFrame, seeds: Option[DataFrame], maxIter: Int,
+                         tol: Option[Long]): DataFrame =
+    Iterate.withCheckpointed(edges.select(col("src"), col("dst"), col("wt"),
+        sum(col("wt")).over(Window.partitionBy("src")).as("wdeg"))) { ed =>
+      val tagged = ed.select(col("src").as("node"), lit(1).as("has_out"))
         .unionAll(ed.select(col("dst").as("node"), lit(0).as("has_out")))
         .groupBy("node").agg(max(col("has_out")).as("has_out"))
-        .join(seedIds, Seq("node"), "left")
-        .select(col("node"), col("has_out"),
-          coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      univP = Some(univ)
-      val probe = univ.agg(
-        coalesce(sum(col("is_seed")), lit(0L)).as("ns"),
-        coalesce(max(when(col("has_out") === 0, 1).otherwise(0)), lit(0)).as("dang"))
-        .head()
-      val nsLit: Long = probe.getLong(0)
-      val hasDangling = probe.getInt(1) == 1
-      require(nsLit >= 1L, "no seed node present in the graph")
-      var ranks = univ
-        .select(col("node"), col("has_out"), col("is_seed"),
-          expr(s"is_seed * ($Scale div $nsLit)").as("rank"))
-      for (_ <- 1 to iters) {
-        val dsumLit: Long = if (!hasDangling) 0L else {
-          val cur = ranks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prevCache = cur :: prevCache
-          val d = cur.filter(col("has_out") === 0)
-            .agg(coalesce(sum(col("rank")), lit(0L))).head().getLong(0)
-          prevCache.tail.foreach(_.unpersist())
-          prevCache = List(cur)
-          d
-        }
-        val cur = prevCache.headOption.getOrElse(ranks)
-        val contrib = ed.join(cur, ed("src") === cur("node"))
-          .select(col("dst"), expr("(rank * wt) div wdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("csum"))
-        ranks = univ.join(contrib, univ("node") === contrib("dst"), "left")
-          .select(univ("node"), univ("has_out"), univ("is_seed"),
-            (expr(s"is_seed * ((15 * $Scale div 100) div $nsLit)") +
-              expr(s"(85 * (coalesce(csum, 0) + is_seed * ($dsumLit div $nsLit))) div 100"))
-              .as("rank"))
+      val universe = seeds.fold(tagged.withColumn("tele", lit(1L))) { s =>
+        tagged.join(s.select(col("node")).distinct().withColumn("tele", lit(1L)),
+            Seq("node"), "left")
+          .select(col("node"), col("has_out"), coalesce(col("tele"), lit(0L)).as("tele"))
       }
-      val out = Iterate.checkpointed(ranks.select(col("node"), col("rank")))
-      prevCache.foreach(_.unpersist())
-      univ.unpersist()
-      ed.unpersist()
-      out
+      Iterate.withCheckpointed(universe) { univ =>
+        val present = univ.agg(coalesce(sum(col("tele")), lit(0L))).head().getLong(0)
+        require(seeds.isEmpty || present >= 1L, "no seed node present in the graph")
+        // only an empty graph has no teleport node: no row divides by
+        // `ns` then, but a `div 0` literal fails when the plan is folded
+        val ns = present max 1L
+        val init = univ.withColumn("rank", expr(s"tele * ($Scale div $ns)"))
+          .withColumn("prev_rank", col("rank"))
+        val (ranks, _) = Iterate.toFixpoint(init, maxIter) { cur =>
+          val p = cur.agg(
+            coalesce(sum(when(col("has_out") === 0, col("rank"))), lit(0L)),
+            coalesce(max(abs(col("rank") - col("prev_rank"))), lit(0L))).head()
+          (p.getLong(0), p.getLong(1))
+        } { case (cur, (dsum, _)) =>
+          val csum = ed.join(cur.hint("merge"), col("src") === col("node"))
+            .groupBy("dst").agg(sum(expr("(rank * wt) div wdeg")).as("csum"))
+          cur.join(csum.hint("merge"), col("node") === col("dst"), "left")
+            .select(col("node"), col("has_out"), col("tele"),
+              expr(s"tele * ((15 * $Scale div 100) div $ns) + " +
+                s"(85 * (coalesce(csum, 0) + tele * ($dsum div $ns))) div 100").as("rank"),
+              col("rank").as("prev_rank"))
+        } { case (_, (_, delta)) => tol.exists(delta <= _) }
+        ranks.select(col("node"), col("rank"))
+      }
     }
-    } catch { case t: Throwable =>
-      prevCache.foreach(_.unpersist())
-      univP.foreach(_.unpersist())
-      ed.unpersist()
-      throw t
-    }
-  }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over a weighted
     * directed edge relation `(src, dst, wt)` — the OTHER classic link
@@ -612,9 +424,12 @@ object Graph {
       // union), so an un-truncated plan carries ~2^rounds references to
       // the symmetrized edge build — the kCore disease in miniature,
       // bounded only by rounds <= 6. A LAZY per-round checkpoint
-      // truncates the lineage to a round-sized plan while adding no
-      // job: the chain materializes inside the caller's one action
-      // (guide §7.2 — plan size is a first-class cost).
+      // truncates the lineage to a round-sized plan: the chain
+      // materializes inside the caller's one action (guide §7.2 — plan
+      // size is a first-class cost), except that building each
+      // checkpoint runs the round's broadcast (the `labels` side of the
+      // neighbor join on small graphs) at call time
+      // ([[Iterate.lazyCheckpointed]]).
       val votes = sym.join(labels, sym("dst") === labels("node"))
         .select(sym("src"), col("label"))
         .unionAll(labels.select(col("node").as("src"), col("label")))

@@ -4,16 +4,17 @@ import org.apache.spark.sql.DataFrame
 
 /** Shared iteration machinery for the unbounded-rounds graph/dedup
   * kernels. The fixed-round operators ([[Graph.kCore]],
-  * [[Graph.integerPageRank]], [[Graph.labelPropagation]]) carry honest
-  * lineage bounds (`rounds <= 6/8`) because each DataFrame round
-  * stacks join lineage — a growing logical plan OOMs the DRIVER long
-  * before the data would. A real 100 TB run needs run-to-convergence,
-  * and the safe shape for that is an eager checkpoint per round: the
-  * plan is truncated to a materialized relation, so round N+1 never
-  * re-derives rounds 1..N. [[toFixpoint]] is that loop, shared by
-  * [[Dedup.dupClusters]] and [[Graph.kCoreConverged]];
-  * [[Graph.pageRankConverged]] still hand-rolls its own loop over
-  * eager per-round [[checkpointed]] states.
+  * [[Graph.labelPropagation]]) carry honest lineage bounds
+  * (`rounds <= 6`) because each DataFrame round stacks join lineage —
+  * a growing logical plan OOMs the DRIVER long before the data would.
+  * A real 100 TB run needs run-to-convergence, and the safe shape for
+  * that is a lazy checkpoint per round whose convergence probe is the
+  * action that materializes it: the plan is truncated to a
+  * materialized relation, so round N+1 never re-derives rounds 1..N.
+  * [[toFixpoint]] is that loop, shared by [[Dedup.dupClusters]],
+  * [[Graph.kCoreConverged]] and the damped-rank kernel behind
+  * [[Graph.integerPageRank]], [[Graph.trustRank]] and
+  * [[Graph.pageRankConverged]].
   */
 object Iterate {
 
@@ -32,17 +33,26 @@ object Iterate {
 
   /** [[checkpointed]] with the materialization DEFERRED to the caller's
     * next action (eager = false): the returned relation has the same
-    * O(1) lineage, but no job runs until something consumes it — so a
-    * loop whose very next statement is an action (the convergence
-    * probe) pays ONE job per round instead of two (checkpoint fill +
-    * probe), and a fixed-round chain pays its whole materialization in
-    * the single final action (r13 job-count profile: the CC loops were
-    * 2 driver round-trips per round, ~half the wall of the
-    * orchestration-bound queries at local[32]). NOT a drop-in for
-    * [[checkpointed]] where eagerness is the contract — e.g. the
-    * incremental dedups materialize BEFORE releasing internal persists
-    * (a lazy swap there would recompute released internals), and
-    * one-shot "publish the artifact now" sites stay eager.
+    * O(1) lineage, and the checkpoint's blocks fill inside whichever
+    * job first computes it — so a loop whose very next statement is an
+    * action (the convergence probe) pays ONE job per round instead of
+    * two (checkpoint fill + probe), and a fixed-round chain pays its
+    * whole materialization in the single final action (r13 job-count
+    * profile: the CC loops were 2 driver round-trips per round, ~half
+    * the wall of the orchestration-bound queries at local[32]).
+    *
+    * Building the checkpoint still plans `df` and builds its RDD, and
+    * that runs every broadcast in the plan: a plan holding a broadcast
+    * exchange pays one job per broadcast HERE, at call time (a
+    * `crossJoin` against an aggregate, or a join whose side is under
+    * the broadcast threshold), and only a broadcast-free plan adds no
+    * job (the OpsSpec lazy-checkpoint spec pins both cases, AQE off).
+    *
+    * NOT a drop-in for [[checkpointed]] where eagerness is the
+    * contract — e.g. the incremental dedups materialize BEFORE
+    * releasing internal persists (a lazy swap there would recompute
+    * released internals), and one-shot "publish the artifact now"
+    * sites stay eager.
     */
   def lazyCheckpointed(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
@@ -75,36 +85,56 @@ object Iterate {
         s"releaseCheckpointed takes a checkpoint, not a plan derived from one: ${other.nodeName}")
     }
 
-  /** Run `step` from `init` until `measure` stops changing or
-    * `maxIter` rounds pass, checkpointing every state so lineage
-    * stays O(1) regardless of round count. `measure` is the
-    * convergence witness — a cheap scalar of the state (count, label
-    * sum) whose fixpoint implies the state's fixpoint for the
-    * monotone iterations used here. Returns (state, rounds run).
+  /** Lazily checkpoint `df`, run `body` on the checkpoint and release
+    * it on every exit path — for an input that every round reads but
+    * that the result's lineage no longer reaches once `body` has
+    * materialized its result (`body` must return a materialized
+    * relation, e.g. [[toFixpoint]]'s state, never a lazy plan over the
+    * checkpoint).
     */
-  def toFixpoint(init: DataFrame, maxIter: Int)(step: DataFrame => DataFrame)(
-      measure: DataFrame => Long): (DataFrame, Int) = {
+  def withCheckpointed[T](df: DataFrame)(body: DataFrame => T): T = {
+    val c = lazyCheckpointed(df)
+    try body(c) finally releaseCheckpointed(c)
+  }
+
+  /** Run `step` from `init` until `converged(previous measure, current
+    * measure)` holds or `maxIter` rounds pass, checkpointing every
+    * state so lineage stays O(1) regardless of round count. `measure`
+    * is the convergence witness — a cheap scalar probe of the state
+    * (count, label sum, dangling mass and largest rank change) — and
+    * `step` receives the measure of the state it advances, so a round
+    * can inline the previous probe's scalars as literals. Returns
+    * (state, rounds run); the state is materialized.
+    */
+  def toFixpoint[M](init: DataFrame, maxIter: Int)(measure: DataFrame => M)(
+      step: (DataFrame, M) => DataFrame)(converged: (M, M) => Boolean): (DataFrame, Int) = {
     require(maxIter >= 1, "maxIter must be >= 1")
     // lazy checkpoint + probe-as-materializer: `measure` is the action
     // that fills each round's checkpoint, so a round is ONE driver
     // round-trip, not two (guide §1.2 — the per-round fixed cost IS
-    // the distributed algorithm at local bench scale)
-    var state = lazyCheckpointed(init)
-    var prev = measure(state)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val old = state
-      state = lazyCheckpointed(step(state))
-      val cur = measure(state)
-      // `measure` materialized the new state, so the superseded
-      // round's blocks are dead — release them instead of leaving
-      // them to ContextCleaner GC (VERDICT r13 #4)
-      releaseCheckpointed(old)
-      converged = cur == prev
-      prev = cur
-      iter += 1
-    }
-    (state, iter)
+    // the distributed algorithm at local bench scale). `live` holds
+    // every checkpoint not yet released, so a failing round releases
+    // them too.
+    var live = List(lazyCheckpointed(init))
+    try {
+      var prev = measure(live.head)
+      var iter = 0
+      var done = false
+      while (!done && iter < maxIter) {
+        live = lazyCheckpointed(step(live.head, prev)) :: live
+        val cur = measure(live.head)
+        // `measure` materialized the new state, so the superseded
+        // round's blocks are dead — release them instead of leaving
+        // them to ContextCleaner GC (VERDICT r13 #4)
+        live.tail.foreach(releaseCheckpointed)
+        live = List(live.head)
+        done = converged(prev, cur)
+        prev = cur
+        iter += 1
+      }
+      val out = live.head
+      live = Nil
+      (out, iter)
+    } finally live.foreach(releaseCheckpointed)
   }
 }

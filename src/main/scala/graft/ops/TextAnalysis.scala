@@ -1417,11 +1417,12 @@ object TextAnalysis {
     *
     * 100 TB shape: the corpus-sized work is ONE adjacent-pair
     * explode + groupBy count (the n63 BPE-pair shape); everything
-    * after runs on the vocabulary-sized edge relation, persisted once
-    * and reused by all `iters` join-agg rounds (each round is one
-    * vocab-bounded shuffle — O(iters) shuffles total, never
-    * corpus-sized). Every node of the undirected graph has in-degree
-    * >= 1, so the per-round inner join is total. The final top-k uses
+    * after runs on the vocabulary-sized edge relation, which
+    * [[Graph.integerPageRank]] checkpoints once and reads in all
+    * `iters` rounds (each round is one vocab-bounded shuffle and one
+    * probe job — O(iters) shuffles total, never corpus-sized). Both
+    * directions of every pair are edges, so no word is dangling and
+    * the kernel's dangling term adds exactly 0. The final top-k uses
     * orderBy+limit (TakeOrderedAndProject, a distributed partial
     * top-k) with the row_number window running on the k-bounded
     * relation only — the n55 pattern.
@@ -1448,8 +1449,7 @@ object TextAnalysis {
     val und = dirPairs.unionAll(dirPairs.select(col("b").as("a"), col("a").as("b")))
     val edges = und.groupBy(col("a").as("src"), col("b").as("dst"))
       .agg(count(lit(1)).as("wt"))
-    // und emits both directions above: symmetrized by construction
-    Graph.integerPageRank(edges, iters, symmetrized = true)
+    Graph.integerPageRank(edges, iters)
       .select(col("node").as("word"), col("rank"))
       .orderBy(col("rank").desc, col("word")).limit(topK)
       .withColumn("rk", row_number()

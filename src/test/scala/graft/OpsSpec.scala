@@ -3816,12 +3816,12 @@ class OpsSpec extends SparkSpec {
     val r3 = Graph.integerPageRank(edges, iters = 3).collect()
       .map(x => x.getLong(1)).sum
     assert(r3 <= Graph.Scale && r3 >= Graph.Scale - 1000L)
-    // symmetrized graphs are bit-identical with the dangling term
-    // (empty dangling relation contributes exactly 0): the star spec
-    // above and the n76/n89 oracles hold unchanged
+    // graphs without dangling nodes are bit-identical with the
+    // dangling term (a zero dangling sum contributes exactly 0): the
+    // star spec above and the n76/n89 oracles hold unchanged
   }
 
-  test("trustRank: hand-computed seeded rounds, degeneracy and branch-equality laws") {
+  test("trustRank: hand-computed seeded rounds, degeneracy and seed-decay laws") {
     import spark.implicits._
     // a -> b with b a pure sink, seed = {a}, ns = 1: every division is
     // by 1, so rounds are EXACT. r0 = (S, 0).
@@ -3849,20 +3849,15 @@ class OpsSpec extends SparkSpec {
     val pr = Graph.integerPageRank(edges, iters = 3).collect()
       .map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(tr == pr, "all-nodes seed set must degenerate to integerPageRank")
-    // branch-equality law: on a symmetrized (dangling-free) graph the
-    // declared-symmetrized lazy path and the probed directed path give
-    // bit-identical ranks
+    // on a dangling-free graph (the symmetric star) authority decays
+    // with distance from the seed
     val leaves = Seq("l1", "l2", "l3", "l4")
     val star = (leaves.map(l => ("c", l, 1L)) ++ leaves.map(l => (l, "c", 1L)))
       .toDF("src", "dst", "wt")
     val seedC = Seq("c").toDF("node")
-    val sym = Graph.trustRank(star, seedC, iters = 3, symmetrized = true)
-      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    val dir = Graph.trustRank(star, seedC, iters = 3).collect()
+    val onStar = Graph.trustRank(star, seedC, iters = 3).collect()
       .map(x => x.getString(0) -> x.getLong(1)).toMap
-    assert(sym == dir, "probe path must equal the declared-symmetrized path")
-    // authority decays with distance from the seed on the star
-    assert(sym("c") > sym("l1") && sym("l1") == sym("l4"))
+    assert(onStar("c") > onStar("l1") && onStar("l1") == onStar("l4"))
     // a seed absent from the graph is a misuse, not a silent zero-rank
     val ghost = Seq("zz-not-in-graph").toDF("node")
     intercept[IllegalArgumentException] {
@@ -4105,6 +4100,51 @@ class OpsSpec extends SparkSpec {
     assert(rc <= Graph.Scale && rc >= Graph.Scale - 3000L)
   }
 
+  test("rank family budget: jobs within the pre-kernel figures, one RDD held per call") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val d = Seq(("a", "b", 1L), ("b", "c", 1L), ("c", "a", 1L), ("c", "d", 2L),
+      ("e", "a", 1L)).toDF("src", "dst", "wt")
+    val leaves = Seq("l1", "l2", "l3", "l4")
+    val star = (leaves.map(l => ("c", l, 1L)) ++ leaves.map(l => (l, "c", 1L)))
+      .toDF("src", "dst", "wt")
+    // bound: the jobs each call started plus the jobs of its first
+    // collect before the shared kernel (local[4], 4 partitions, AQE
+    // off); the star row was the `symmetrized = true` call, 7-9 + 1
+    val budget = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
+      ("integerPageRank(D, 3)", () => Graph.integerPageRank(d, 3), 16 + 1),
+      ("integerPageRank(star, 3)", () => Graph.integerPageRank(star, 3), 7 + 1),
+      ("trustRank(D, {a}, 3)", () => Graph.trustRank(d, Seq("a").toDF("node"), 3), 13 + 1),
+      ("pageRankConverged(star, 2e9, 40)",
+        () => Graph.pageRankConverged(star, 2000000000L, 40), 223),
+      ("pageRankConverged(D, 2e9, 40)", () => Graph.pageRankConverged(d, 2000000000L, 40), 69))
+    for ((call, run, bound) <- budget) {
+      val ((ranks, held), callJobs) = countingJobs {
+        val before = sc.getPersistentRDDs.keySet
+        val r = run()
+        // read straight after the call: the registry holds RDDs weakly,
+        // so a GC before the read could hide a leaked, unreferenced one
+        (r, sc.getPersistentRDDs.keySet -- before)
+      }
+      val (rows, collectJobs) = countingJobs(ranks.collect())
+      assert(callJobs + collectJobs <= bound,
+        s"$call ran $callJobs + $collectJobs jobs, bound $bound")
+      assert(held.size == 1, s"$call left ${held.size} persisted RDDs: $held")
+      assert(rows.map(_.getString(0)).toSet ==
+        (if (call.contains("star")) leaves.toSet + "c" else Set("a", "b", "c", "d", "e")))
+      held.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    }
+    // a converging round costs one job (its probe), whatever maxIter
+    // allows; at tol 0 the star is still oscillating after 6 rounds
+    def converged(maxIter: Int) =
+      countingJobs(Graph.pageRankConverged(star, 0L, maxIter))._2
+    assert(converged(6) - converged(5) == 1)
+    // an empty edge relation ranks nothing (no row divides by ns = 0)
+    val empty = Seq.empty[(String, String, Long)].toDF("src", "dst", "wt")
+    assert(Graph.integerPageRank(empty, 2).count() == 0L)
+    assert(Graph.pageRankConverged(empty, 10L, 3).count() == 0L)
+  }
+
   test("kCoreConverged: peels past the fixed-round bound to the true fixpoint") {
     import spark.implicits._
     // a 20-node path at k=2 peels from both ends — needs 10 rounds,
@@ -4213,6 +4253,22 @@ class OpsSpec extends SparkSpec {
     val full = Similarity.mmrSelect(emb, 0L, 4, 0.75)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     assert(viaIvf == full, s"IVF-shortlisted MMR diverged: $viaIvf != $full")
+  }
+
+  test("Iterate.lazyCheckpointed: building the checkpoint runs the plan's broadcasts, nothing else") {
+    // a broadcast-free plan runs no job until an action consumes it
+    val (free, freeJobs) = countingJobs(Iterate.lazyCheckpointed(
+      spark.range(1000).groupBy((col("id") % 7).as("k")).count()))
+    assert(freeJobs == 0)
+    // a crossJoin against an aggregate broadcasts the aggregate: building
+    // the checkpoint's RDD runs that broadcast, one job at call time
+    val agg = spark.range(1000).agg(sum("id").as("s"))
+    val (bc, bcJobs) = countingJobs(
+      Iterate.lazyCheckpointed(spark.range(1000).crossJoin(agg)))
+    assert(bcJobs == 1)
+    assert(free.count() == 7L && bc.count() == 1000L)
+    Iterate.releaseCheckpointed(free)
+    Iterate.releaseCheckpointed(bc)
   }
 
   test("Iterate.releaseCheckpointed rejects a derived plan; the live checkpoint under it stays readable") {
