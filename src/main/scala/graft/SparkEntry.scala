@@ -3296,8 +3296,10 @@ object SparkEntry {
     "n107_kcore" -> ((s, dir) => {
       // k-core of the word graph at k=29 with the planted hub/spoke
       // cascade (spoke peels round 1, hub — at exactly the bar —
-      // peels round 2): survivors + their in-core degrees after 4
-      // rounds, replayed by unrolled peel CTEs
+      // peels round 2): survivors + their in-core degrees after at
+      // most 4 rounds, replayed by 4 unrolled peel CTEs (the shared
+      // peel kernel stops at the first round that removes no edge,
+      // which is exact because extra rounds are no-ops there)
       import s.implicits._
       val planted = Seq(
         (9700001L, kcoreHubText, "en", "planted", 0L),
@@ -3317,13 +3319,13 @@ object SparkEntry {
     }),
 
     "n135_kcore_converged" -> ((s, dir) => {
-      // run-to-FIXPOINT k-core (checkpoint per round via
-      // Iterate.toFixpoint, no lineage bound): the n107 fixture again,
-      // so this green row proves the converged variant returns the
-      // true core through the driver gate (the oracle unrolls peel
-      // rounds well past convergence — peeling is idempotent at the
-      // fixpoint, so extra rounds are no-ops); the spec separately
-      // proves convergence beyond kCore's rounds<=6 bound
+      // run-to-FIXPOINT k-core (n107's peel kernel with no round
+      // bound): the n107 fixture again, so this green row proves the
+      // converged variant returns the true core through the driver
+      // gate (the oracle unrolls peel rounds well past convergence —
+      // peeling is idempotent at the fixpoint, so extra rounds are
+      // no-ops); the spec separately proves convergence beyond
+      // kCore's rounds<=6 oracle bound
       import s.implicits._
       val planted = Seq(
         (9700001L, kcoreHubText, "en", "planted", 0L),

@@ -40,71 +40,66 @@ object Clustering {
     * the update, whose output is k×dim rows. The distance fold is an
     * interpreted HOF per (row, centroid) — fine while k is small; a
     * codegen L2 kernel (the cosine_similarity precedent) is the
-    * production path if k grows. `rounds <= 4` is the kCore/PageRank
-    * lineage bound — checkpoint between rounds beyond that.
+    * production path if k grows. `rounds <= 4` is the oracle's
+    * unrolled-CTE bound.
+    *
+    * Evaluation is EAGER at call time. The quantized codes are one lazy
+    * checkpoint, read by every round and by the final assignment. The
+    * k-row centroid table is the [[Iterate.toFixpoint]] state (fixed
+    * rounds, never converged early); its count probe fills each round's
+    * checkpoint and checks that `k` vectors seeded `k` clusters. A
+    * round costs that probe plus the deliberate broadcast of the
+    * previous centroids, and the final assignment is one more eager
+    * checkpoint, so the codes and the last centroids are released
+    * before returning and a call holds exactly its result.
     */
   def kMeans(emb: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"need k >= 2 clusters, got $k")
     require(rounds >= 1 && rounds <= 4,
-      "rounds outside [1,4]: deeper Lloyd iterations need checkpointing")
-    // persisted: the quantized code relation is read by every round's
-    // assignment AND the final assignment, but each round's centroid
-    // table nests the previous round's whole assign+update pipeline in
-    // its lineage, so without the cache the scan+quantize pass executes
-    // once per NESTED reference — ~3^rounds corpus passes (the r14
-    // profile measured the n132 plan at 245 KB with ~9 embedded scans
-    // at rounds = 2). One fill, every later pass reads blocks
-    // (guide §5: reuse justifies the cache; caller/Bench owns release
-    // via clearCache, the dsir counts convention).
-    val sq = Similarity.scalarQuantize(emb)
-      .select(col("vec_id"), col("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      "rounds outside [1,4], the oracle's unrolled-CTE bound")
     def dist2(a: Column, b: Column): Column = aggregate(
       zip_with(a, b, (x, y) => ((x - y) * (x - y)).cast("long")),
       lit(0L), (acc, x) => acc + x)
-    def assign(cents: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("dist").asc, col("cluster").asc)
-      sq.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("codes"), col("cluster"),
-          dist2(col("codes"), col("cent")).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("codes"), col("cluster"), col("dist"))
+    Iterate.withCheckpointed(Similarity.scalarQuantize(emb)
+        .select(col("vec_id"), col("codes"))) { sq =>
+      def assign(cents: DataFrame): DataFrame = {
+        val w = Window.partitionBy(col("vec_id"))
+          .orderBy(col("dist").asc, col("cluster").asc)
+        sq.crossJoin(broadcast(cents))
+          .select(col("vec_id"), col("codes"), col("cluster"),
+            dist2(col("codes"), col("cent")).as("dist"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("vec_id"), col("codes"), col("cluster"), col("dist"))
+      }
+      // init really takes the k smallest vec_ids (not "ids < k", which
+      // silently under-seeds on non-0-based id spaces); cluster ids are
+      // their ranks, so 0-based fixtures keep cluster == vec_id
+      val init = sq.orderBy("vec_id").limit(k)
+        .withColumn("cluster",
+          (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
+        .select(col("cluster"), col("codes").as("cent"))
+      val (cents, _, _) = Iterate.toFixpoint(init, rounds) { c =>
+        require(c.count() == k, s"need at least $k vectors to seed $k clusters")
+      } { (cents, _) =>
+        val upd = assign(cents)
+          .select(col("cluster"), posexplode(col("codes")).as(Seq("pos", "v")))
+          .groupBy("cluster", "pos")
+          .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
+          .withColumn("cv", expr("s div c").cast("int"))
+          .groupBy("cluster")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
+            e => e.getField("cv")).as("cent"))
+        // a cluster that lost every member keeps its previous centroid;
+        // the join is hinted `merge` so that only the centroid broadcast
+        // of `assign` costs a job when the round's checkpoint is built
+        cents.join(upd.hint("merge"), Seq("cluster"), "left")
+          .select(col("cluster"), coalesce(upd("cent"), cents("cent")).as("cent"))
+      }((_, _) => false)
+      try Iterate.checkpointed(assign(cents).select(col("vec_id"),
+          col("cluster").cast("long").as("cluster"), col("dist")))
+      finally Iterate.releaseCheckpointed(cents)
     }
-    // init really takes the k smallest vec_ids (not "ids < k", which
-    // silently under-seeds on non-0-based id spaces); cluster ids are
-    // their ranks, so 0-based fixtures keep cluster == vec_id
-    var cents = sq.orderBy("vec_id").limit(k)
-      .withColumn("cluster",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-      .select(col("cluster"), col("codes").as("cent"))
-    require(cents.count() == k,
-      s"need at least $k vectors to seed $k clusters")
-    for (_ <- 1 to rounds) {
-      val assigned = assign(cents)
-      val upd = assigned
-        .select(col("cluster"), posexplode(col("codes")).as(Seq("pos", "v")))
-        .groupBy("cluster", "pos")
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-        .withColumn("cv", expr("s div c").cast("int"))
-        .groupBy("cluster")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-          e => e.getField("cv")).as("cent"))
-      // empty clusters keep their previous centroid. The new centroid
-      // table is LAZY-checkpointed: it references `upd` twice (union +
-      // anti-join probe) and `cents` nests the previous round, so an
-      // un-truncated chain grows ~3^rounds references to the corpus
-      // scan (the kCore disease; guide §7.2 — plan size is a
-      // first-class cost). The k-row checkpoint materializes inside
-      // the caller's one action, but building it runs the round's
-      // broadcast of the previous centroids (`assign`'s
-      // `broadcast(cents)`) at call time ([[Iterate.lazyCheckpointed]]).
-      cents = Iterate.lazyCheckpointed(upd.unionByName(
-        cents.join(upd.select("cluster"), Seq("cluster"), "left_anti")))
-    }
-    assign(cents).select(col("vec_id"), col("cluster").cast("long").as("cluster"),
-      col("dist"))
   }
 
   /** Cluster cartography over [[kMeans]]'s assignment: per cluster the

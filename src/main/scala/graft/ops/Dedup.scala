@@ -1242,7 +1242,7 @@ object Dedup {
           .distinct()) { edges =>
       val init = edges.select(col("u").as("id")).distinct()
         .withColumn("label", col("id"))
-      val (labels, _) = Iterate.toFixpoint(init, maxIter)(
+      val (labels, _, _) = Iterate.toFixpoint(init, maxIter)(
           _.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)) { (cur, _) =>
         val contrib = edges
           .join(cur.withColumnsRenamed(Map("id" -> "u", "label" -> "lu")), Seq("u"))

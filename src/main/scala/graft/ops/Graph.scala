@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +20,15 @@ import org.apache.spark.sql.functions._
   * successor-word graph (n136) and its seeded variant (n142) — the
   * point of the factoring is that "rank a graph" is one operator, not
   * a per-use-case rewrite.
+  *
+  * Every iterative operator here runs its rounds on
+  * [[Iterate.toFixpoint]]: a lazy checkpoint per round, filled by the
+  * round's one probe job, the superseded round released, and a call
+  * holding exactly its materialized result. The round joins are hinted
+  * `merge`, so building a round's lazy checkpoint runs no broadcast
+  * job (see [[Iterate]]). The `rounds`/`iters` bounds of the
+  * fixed-round operators are the oracle's unrolled-CTE bound, not a
+  * lineage bound.
   */
 object Graph {
 
@@ -44,8 +53,8 @@ object Graph {
     */
   def integerPageRank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
-      "iters outside [1,8]: deeper power iterations need checkpointing " +
-        "(see pageRankConverged) before the lineage is safe")
+      "iters outside [1,8], the oracle's unrolled-CTE bound: " +
+        "run deeper with pageRankConverged")
     dampedRank(edges, None, iters, None)
   }
 
@@ -57,78 +66,64 @@ object Graph {
     * removes nothing the survivors ARE the k-core (Seidman 1983; the
     * spec asserts convergence on its graphs). Returns
     * (node, degree) of the survivors after `rounds` rounds with
-    * degrees measured in the peeled subgraph.
-    *
-    * Rounds are join-filtered degree aggs over an edges-bounded
-    * relation; `rounds <= 6` is the same lineage bound as the n76
-    * power iteration — deeper peeling runs to the fixpoint in
-    * [[kCoreConverged]].
+    * degrees measured in the peeled subgraph: [[peel]] with
+    * `maxIter = rounds`. `rounds <= 6` is the oracle's unrolled-CTE
+    * bound; [[kCoreConverged]] peels to the fixpoint at any depth.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1 && rounds <= 6,
-      "rounds outside [1,6]: deeper peeling needs checkpointing")
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    var cur = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-    for (_ <- 1 to rounds) {
-      // each round references `cur` three times (degree agg + both join
-      // prunes), so an un-truncated plan grows 3^rounds references to
-      // the edge build — ReusedExchange collapses the EXECUTION, but
-      // analysis/codegen/task binaries still carry the exponential tree
-      // (r13 profile: 10 MiB task binaries, wall 3.7x the task time,
-      // all driver). A LAZY per-round checkpoint truncates the lineage
-      // to a round-sized plan — the chain materializes inside the
-      // caller's one action, and the per-round persisted blocks make
-      // each round's recompute O(1) (guide §7.2: plan size is a
-      // first-class cost). Building each checkpoint runs the round's
-      // broadcasts (the `keep` side of both joins on small graphs), so
-      // the rounds cost those broadcast jobs at call time
-      // ([[Iterate.lazyCheckpointed]]).
-      val keep = cur.groupBy("src").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("src")
-      cur = graft.ops.Iterate.lazyCheckpointed(
-        cur.join(keep, "src")
-          .join(keep.withColumnRenamed("src", "dst"), "dst")
-          .select(col("src"), col("dst")))
-    }
-    cur.groupBy("src").agg(count(lit(1)).as("degree"))
-      .select(col("src").as("node"), col("degree"))
+      "rounds outside [1,6], the oracle's unrolled-CTE bound: " +
+        "peel deeper with kCoreConverged")
+    peel(edges, k, rounds)
   }
 
   /** [[kCore]] run to the TRUE fixpoint — peel until a round removes
-    * nothing — on [[Iterate.toFixpoint]]: a lazy checkpoint per round,
-    * filled by the round's count probe, so the lineage stays O(1) at
-    * any peel depth: the production shape
-    * for a real cluster, where the cascade depth is data-dependent
-    * and a fixed `rounds` bound either wastes rounds or stops early.
-    * Convergence witness: the peeled edge count, which strictly
-    * decreases until the fixpoint (peeling only removes). Returns the
-    * same (node, degree) relation as a converged [[kCore]] — the spec
-    * proves equality beyond kCore's round bound.
+    * nothing, or `maxIter` rounds pass — the production shape for a
+    * real cluster, where the cascade depth is data-dependent and a
+    * fixed `rounds` bound either wastes rounds or stops early. Returns
+    * the same (node, degree) relation as a converged [[kCore]] — the
+    * spec proves equality beyond kCore's round bound.
     */
   def kCoreConverged(edges: DataFrame, k: Int, maxIter: Int = 1000): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    val init = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-    val (core, _) = Iterate.toFixpoint(init, maxIter)(_.count()) { (cur, _) =>
+    peel(edges, k, maxIter)
+  }
+
+  /** The k-core peel behind [[kCore]] and [[kCoreConverged]]: the
+    * [[undirected]] edge relation is the [[Iterate.toFixpoint]] state,
+    * and a round keeps the edges whose endpoints both have degree >= k
+    * (one degree agg, two join prunes hinted `merge`). Convergence
+    * witness: the edge count, whose probe fills the round's checkpoint.
+    * Peeling only removes edges, so an unchanged count IS the fixpoint
+    * and stopping there is exact for the fixed-round contract too.
+    * A call costs one job per round plus one (the initial count); the
+    * result is a degree agg over the last round's checkpoint.
+    */
+  private def peel(edges: DataFrame, k: Int, maxIter: Int): DataFrame = {
+    val (core, _, _) = Iterate.toFixpoint(undirected(edges), maxIter)(_.count()) { (cur, _) =>
       val keep = cur.groupBy("src").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("src")
+        .filter(col("d") >= k).select("src").hint("merge")
       cur.join(keep, "src")
         .join(keep.withColumnRenamed("src", "dst"), "dst")
         .select(col("src"), col("dst"))
     }(_ == _)
     core.groupBy("src").agg(count(lit(1)).as("degree"))
       .select(col("src").as("node"), col("degree"))
+  }
+
+  /** `edges` as an undirected graph: every unordered pair {u, v} with
+    * u ≠ v (self-loops, nulls and duplicate or reverse pairs normalized
+    * away), given in both directions as `(src, dst)`.
+    */
+  private def undirected(edges: DataFrame): DataFrame = {
+    val und = edges.select(
+        least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
+      .distinct()
+    und.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
   }
 
   /** [[integerPageRank]] run to convergence: the same damped integer
@@ -173,8 +168,8 @@ object Graph {
     */
   def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
-      "iters outside [1,8]: deeper power iterations need checkpointing " +
-        "(see pageRankConverged) before the lineage is safe")
+      "iters outside [1,8], the oracle's unrolled-CTE bound: " +
+        "run deeper with pageRankConverged")
     dampedRank(edges, Some(seeds), iters, None)
   }
 
@@ -214,7 +209,7 @@ object Graph {
     * round's one shuffle, plus local sorts of the nodes-bounded sides.
     * The joins are hinted `merge`: a rank vector
     * small enough to broadcast would otherwise cost a broadcast job at
-    * every round's checkpoint build ([[Iterate.lazyCheckpointed]]).
+    * every round's checkpoint build.
     * `rank * wt` must stay under 2^63: per-edge weights up to ~9e6 at
     * full scale — lower Scale beyond. Returns `(node, rank)`, a
     * projection of the last round's materialized checkpoint; `ed`, the
@@ -240,7 +235,7 @@ object Graph {
         val ns = present max 1L
         val init = univ.withColumn("rank", expr(s"tele * ($Scale div $ns)"))
           .withColumn("prev_rank", col("rank"))
-        val (ranks, _) = Iterate.toFixpoint(init, maxIter) { cur =>
+        val (ranks, _, _) = Iterate.toFixpoint(init, maxIter) { cur =>
           val p = cur.agg(
             coalesce(sum(when(col("has_out") === 0, col("rank"))), lit(0L)),
             coalesce(max(abs(col("rank") - col("prev_rank"))), lit(0L))).head()
@@ -283,107 +278,55 @@ object Graph {
     * long — the oracle does the same in HUGEINT and casts. `auth·wt`
     * and the raw sums must stay under 2^63: per-edge weights up to
     * ~9e6 at full scale — lower Scale beyond (the [[integerPageRank]]
-    * convention).
+    * convention). `iters <= 8` is the oracle's unrolled-CTE bound.
     *
-    * Evaluation semantics: EAGER AT CALL TIME — each round pays two
-    * scalar normalization probes (asum, hsum), each doubling as the
-    * cache fill of its RAW join-agg relation (the raw relation, not
-    * the derived vector, is what persists: it is the round's dominant
-    * edges-bounded cost and has two consumers — its probe and the next
-    * half-round's join — while the vector is a cheap nodes-bounded
-    * derivation; caching the vector instead re-ran every join-agg
-    * twice, and the A/B normalized against the co-measured n142 put
-    * the vector-cached shape ~30% slower — PLANS.md "n143 raw-cache
-    * A/B"). Rolling release keeps at
-    * most one round's raw pair cached. This is the [[integerPageRank]]
-    * dangling-path shape, chosen on its MEASURED A/B: the lazy 1-row
-    * crossJoin alternative doubles the analyzed plan every half-round
-    * (PLANS.md "n136 dangling A/B") and HITS has TWO such scalars per
-    * round. The result is checkpointed ([[Iterate.checkpointed]]) and
-    * every internal cache released — O(1) lineage, no leaked persisted
-    * state. 100 TB shape: edges persisted once; each half-round is one
-    * edges-bounded join-agg shuffle plus a nodes-bounded scalar agg.
+    * Evaluation is EAGER at call time: `2·iters` half-rounds, each an
+    * [[Iterate.toFixpoint]] state — the node vector with one side
+    * fresh and raw, `(node, hub, araw)` or `(node, auth, hraw)`. A
+    * state's probe (one job) sums its raw side, checks that the mass
+    * has not vanished, and fills its checkpoint; the next half-round
+    * inlines that sum as a literal to normalize the side and compute
+    * the other raw side from it — no 1-row crossJoin, which would nest
+    * the previous half-round's plan (PLANS.md "n136 dangling A/B").
+    * The start is a raw hub of 1 per node: its sum is n, and
+    * `(1·Scale) div n` is the uniform `Scale div n`. The last state's
+    * sum normalizes the final hub side, so a call costs `2·iters + 1`
+    * jobs. 100 TB shape: the edges are one lazy checkpoint, filled by
+    * the first probe; a half-round is one edges-bounded join-agg
+    * shuffle, both joins hinted `merge`. Returns a projection of the
+    * last half-round's checkpoint; the edges and every earlier state
+    * are released on every exit path.
     */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
-      "iters outside [1,8]: deeper power iterations need per-round " +
-        "checkpointing before the lineage is safe")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ed = edges.persist(lvl)
-    val nodes = ed.select(col("src").as("node"))
-      .unionAll(ed.select(col("dst").as("node")))
-      .distinct().persist(lvl)
-    // raw-pair rolling cache hoisted above the try so the failure
-    // handler can release it: the mass-vanished requires and every
-    // normalization probe can throw mid-loop with ed/nodes/the raw
-    // pair persisted (the r9 ADVICE leak)
-    var prevRound: List[DataFrame] = Nil
-    try {
-    val n: Long = nodes.count()
-    require(n >= 1, "edges relation is empty")
-    var hubs = nodes.select(col("node"), lit(Scale / n).as("hub"))
-    var auths: DataFrame = hubs.select(col("node"), lit(0L).as("auth"))
-    // the RAW join-agg relations are what gets cached, not the derived
-    // vectors: each half-round's edges-bounded join-agg is the dominant
-    // cost and has TWO consumers (its normalization probe and the next
-    // half-round's join) — caching the vector instead would recompute
-    // the join-agg once per consumer (measured ~2x the round price).
-    // The scalar probe doubles as the cache fill (the n136 shape);
-    // rolling release keeps at most the two live raw relations.
-    // liveness: round r's araw probe is the LAST evaluation that reads
-    // round r-1's lineage (hubs_{r-1} = f(hraw_{r-1}), and araw_{r-1}
-    // only feeds the auths that round r reassigns), so both prior raw
-    // caches release right after it; round r's own pair must survive
-    // the loop when r == iters (the final checkpoint re-evaluates
-    // auths = f(araw) and hubs = f(hraw))
-    for (_ <- 1 to iters) {
-      val araw = ed.join(hubs, ed("src") === hubs("node"))
-        .select(col("dst"), expr("hub * wt").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("araw"))
-        .persist(lvl)
-      prevRound = araw :: prevRound
-      val asum: Long = araw.agg(coalesce(sum(col("araw")), lit(0L)))
-        .head().getLong(0)
-      require(asum > 0, "hub mass vanished: graph has no followable edge")
-      // rolling release: the current round's araw is fully probed, so
-      // the previous round's raw pair (everything in the list but the
-      // head) is dead
-      prevRound.tail.foreach(_.unpersist())
-      prevRound = List(prevRound.head)
-      auths = nodes.join(araw, nodes("node") === araw("dst"), "left")
-        .select(nodes("node"),
-          expr(s"(CAST(coalesce(araw, 0) AS DECIMAL(38,0)) * $Scale) div $asum")
-            .as("auth"))
-      val hraw = ed.join(auths, ed("dst") === auths("node"))
-        .select(col("src"), expr("auth * wt").as("c"))
-        .groupBy("src").agg(sum(col("c")).as("hraw"))
-        .persist(lvl)
-      prevRound = hraw :: prevRound
-      val hsum: Long = hraw.agg(coalesce(sum(col("hraw")), lit(0L)))
-        .head().getLong(0)
-      require(hsum > 0, "authority mass vanished: graph has no followable edge")
-      hubs = nodes.join(hraw, nodes("node") === hraw("src"), "left")
-        .select(nodes("node"),
-          expr(s"(CAST(coalesce(hraw, 0) AS DECIMAL(38,0)) * $Scale) div $hsum")
-            .as("hub"))
-    }
-    val out = Iterate.checkpointed(
-      hubs.join(auths.withColumnsRenamed(Map("node" -> "anode")),
-          hubs("node") === col("anode"))
-        .select(col("node"), col("hub"), col("auth")))
-    prevRound.foreach(_.unpersist())
-    nodes.unpersist()
-    ed.unpersist()
-    out
-    } catch { case t: Throwable =>
-      // no leaked persisted state on ANY exit path: prevRound tracks
-      // every currently-persisted raw relation (the current round's
-      // entries are pushed BEFORE their probes run), so a mid-loop
-      // failure releases exactly what is live
-      prevRound.foreach(_.unpersist())
-      nodes.unpersist()
-      ed.unpersist()
-      throw t
+      "iters outside [1,8], the oracle's unrolled-CTE bound")
+    def normalized(raw: String, total: Long): Column =
+      expr(s"(CAST(coalesce($raw, 0) AS DECIMAL(38,0)) * $Scale) div $total")
+    Iterate.withCheckpointed(edges.select(col("src"), col("dst"), col("wt"))) { ed =>
+      val init = ed.select(col("src").as("node")).unionAll(ed.select(col("dst").as("node")))
+        .distinct().withColumn("hraw", lit(1L))
+      val (last, _, hsum) = Iterate.toFixpoint(init, 2 * iters) { cur =>
+        val raw = cur.columns.last
+        val s = cur.agg(coalesce(sum(col(raw)), lit(0L))).head().getLong(0)
+        require(s > 0L, cur.columns.toSeq match {
+          case Seq(_, _) => "edges relation is empty"
+          case Seq(_, _, "araw") => "hub mass vanished: graph has no followable edge"
+          case _ => "authority mass vanished: graph has no followable edge"
+        })
+        s
+      } { (cur, s) =>
+        // a fresh hub side feeds the authorities along src -> dst, a
+        // fresh authority side the hubs along dst -> src
+        val (side, from, to, raw) =
+          if (cur.columns.last == "hraw") ("hub", "src", "dst", "araw")
+          else ("auth", "dst", "src", "hraw")
+        val vec = cur.select(col("node"), normalized(cur.columns.last, s).as(side))
+        val sums = ed.join(vec.hint("merge"), col(from) === col("node"))
+          .groupBy(to).agg(sum(col(side) * col("wt")).as(raw))
+        vec.join(sums.hint("merge"), col("node") === col(to), "left")
+          .select(col("node"), col(side), col(raw))
+      }((_, _) => false)
+      last.select(col("node"), normalized("hraw", hsum).as("hub"), col("auth"))
     }
   }
 
@@ -396,50 +339,38 @@ object Graph {
     * two-cycles on bipartite/star structure; with it, ties break to
     * the SMALLEST label and propagation is stable), deterministically
     * replayable where vanilla random-tie LPA is not. Fixed `rounds`
-    * is still the contract (the n107 kCore fixed-round convention).
-    * Returns (node, label).
+    * is the contract (the n107 kCore fixed-round convention);
+    * `rounds <= 6` is the oracle's unrolled-CTE bound. Returns
+    * (node, label).
     *
-    * Each round is one edges-bounded join-agg plus a per-node argmax
-    * under WindowGroupLimit — never a neighborhood collection; the
-    * symmetrized edge relation is the round's only corpus-scale input,
-    * built once by the caller's lineage. `rounds <= 6` is the same
-    * lineage bound as [[kCore]].
+    * The label table is the [[Iterate.toFixpoint]] state (never
+    * converged early): each round is one edges-bounded join-agg, the
+    * neighbor join hinted `merge`, plus a per-node argmax under
+    * WindowGroupLimit — never a neighborhood collection — and its
+    * count probe fills the round's checkpoint, so a call costs one job
+    * per round plus one. The [[undirected]] edges are one lazy
+    * checkpoint read by every round and released before returning;
+    * the result is the last round's checkpoint.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 6,
-      "rounds outside [1,6]: deeper propagation needs checkpointing")
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    val sym = und.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
+      "rounds outside [1,6], the oracle's unrolled-CTE bound")
     val w = Window.partitionBy(col("src"))
       .orderBy(col("cnt").desc, col("label").asc)
-    for (_ <- 1 to rounds) {
-      // each round references `labels` twice (neighbor join + self-vote
-      // union), so an un-truncated plan carries ~2^rounds references to
-      // the symmetrized edge build — the kCore disease in miniature,
-      // bounded only by rounds <= 6. A LAZY per-round checkpoint
-      // truncates the lineage to a round-sized plan: the chain
-      // materializes inside the caller's one action (guide §7.2 — plan
-      // size is a first-class cost), except that building each
-      // checkpoint runs the round's broadcast (the `labels` side of the
-      // neighbor join on small graphs) at call time
-      // ([[Iterate.lazyCheckpointed]]).
-      val votes = sym.join(labels, sym("dst") === labels("node"))
-        .select(sym("src"), col("label"))
-        .unionAll(labels.select(col("node").as("src"), col("label")))
-      labels = graft.ops.Iterate.lazyCheckpointed(votes
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("src").as("node"), col("label")))
+    Iterate.withCheckpointed(undirected(edges)) { sym =>
+      val init = sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+      val (labels, _, _) = Iterate.toFixpoint(init, rounds)(_.count()) { (cur, _) =>
+        sym.join(cur.hint("merge"), sym("dst") === cur("node"))
+          .select(sym("src"), col("label"))
+          .unionAll(cur.select(col("node").as("src"), col("label")))
+          .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("src").as("node"), col("label"))
+      }((_, _) => false)
+      labels
     }
-    labels
   }
 
   /** Per-node triangle counts over an undirected graph given as a
@@ -460,13 +391,10 @@ object Graph {
     * keyed by a high-degree node's full neighborhood.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges.select(
-        least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    val deg = und.select(col("u").as("node")).unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val sym = undirected(edges)
+    val und = sym.filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+    val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     val withDeg = und
       .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")

@@ -2,19 +2,20 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared iteration machinery for the unbounded-rounds graph/dedup
-  * kernels. The fixed-round operators ([[Graph.kCore]],
-  * [[Graph.labelPropagation]]) carry honest lineage bounds
-  * (`rounds <= 6`) because each DataFrame round stacks join lineage —
-  * a growing logical plan OOMs the DRIVER long before the data would.
-  * A real 100 TB run needs run-to-convergence, and the safe shape for
-  * that is a lazy checkpoint per round whose convergence probe is the
-  * action that materializes it: the plan is truncated to a
-  * materialized relation, so round N+1 never re-derives rounds 1..N.
-  * [[toFixpoint]] is that loop, shared by [[Dedup.dupClusters]],
-  * [[Graph.kCoreConverged]] and the damped-rank kernel behind
-  * [[Graph.integerPageRank]], [[Graph.trustRank]] and
-  * [[Graph.pageRankConverged]].
+/** Shared iteration machinery: the one round loop, [[toFixpoint]], and
+  * the checkpoint lifecycle around it. Every iterative operator in
+  * `ops/` runs its rounds here — [[Dedup.dupClusters]], the k-core
+  * peel behind [[Graph.kCore]] and [[Graph.kCoreConverged]], the
+  * damped-rank kernel behind [[Graph.integerPageRank]],
+  * [[Graph.trustRank]] and [[Graph.pageRankConverged]],
+  * [[Graph.hits]], [[Graph.labelPropagation]] and
+  * [[Clustering.kMeans]] — so no operator creates or releases
+  * per-round state itself. Each round is a lazy checkpoint whose probe
+  * is the action that materializes it: the plan is truncated to a
+  * materialized relation, so round N+1 never re-derives rounds 1..N
+  * and the lineage stays O(1) at any depth; the superseded round is
+  * released as soon as the next one is filled, and a call holds
+  * exactly its materialized result.
   */
 object Iterate {
 
@@ -104,10 +105,11 @@ object Iterate {
     * (count, label sum, dangling mass and largest rank change) — and
     * `step` receives the measure of the state it advances, so a round
     * can inline the previous probe's scalars as literals. Returns
-    * (state, rounds run); the state is materialized.
+    * (state, rounds run, the state's measure); the state is
+    * materialized.
     */
   def toFixpoint[M](init: DataFrame, maxIter: Int)(measure: DataFrame => M)(
-      step: (DataFrame, M) => DataFrame)(converged: (M, M) => Boolean): (DataFrame, Int) = {
+      step: (DataFrame, M) => DataFrame)(converged: (M, M) => Boolean): (DataFrame, Int, M) = {
     require(maxIter >= 1, "maxIter must be >= 1")
     // lazy checkpoint + probe-as-materializer: `measure` is the action
     // that fills each round's checkpoint, so a round is ONE driver
@@ -134,7 +136,7 @@ object Iterate {
       }
       val out = live.head
       live = Nil
-      (out, iter)
+      (out, iter, prev)
     } finally live.foreach(releaseCheckpointed)
   }
 }

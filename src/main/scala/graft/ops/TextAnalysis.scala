@@ -1431,8 +1431,7 @@ object TextAnalysis {
                        topK: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(iters >= 1 && iters <= 8,
-      "iters outside [1,8]: deeper power iterations need checkpointing " +
-        "(see Dedup.dupClusters) before the lineage is safe")
+      "iters outside [1,8], the oracle's unrolled-CTE bound")
     require(topK > 0, "topK must be positive")
     // empty tokens filtered like every sibling text operator — a
     // doubled space must not mint a high-degree "" graph node

@@ -4100,7 +4100,7 @@ class OpsSpec extends SparkSpec {
     assert(rc <= Graph.Scale && rc >= Graph.Scale - 3000L)
   }
 
-  test("rank family budget: jobs within the pre-kernel figures, one RDD held per call") {
+  test("iterative family budget: jobs within the parent figures, one RDD held per call") {
     import spark.implicits._
     val sc = spark.sparkContext
     val d = Seq(("a", "b", 1L), ("b", "c", 1L), ("c", "a", 1L), ("c", "d", 2L),
@@ -4108,30 +4108,60 @@ class OpsSpec extends SparkSpec {
     val leaves = Seq("l1", "l2", "l3", "l4")
     val star = (leaves.map(l => ("c", l, 1L)) ++ leaves.map(l => (l, "c", 1L)))
       .toDF("src", "dst", "wt")
+    // a 30-node ring with 6 chords: the 12 chord ends have degree 3
+    val ringIds = (0 until 30).map(i => s"r$i")
+    val ring = ((0 until 30).map(i => (s"r$i", s"r${(i + 1) % 30}")) ++
+      (0 until 30 by 5).map(i => (s"r$i", s"r${(i + 12) % 30}"))).toDF("src", "dst")
+    val tri = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L), (12L, 10L))
+      .toDF("src", "dst")
+    val sep = Seq(0L -> Seq(10f, 0f), 1L -> Seq(0f, 10f), 2L -> Seq(9f, 1f),
+      3L -> Seq(10f, 0.5f), 4L -> Seq(1f, 9f), 5L -> Seq(0.2f, 10f)).toDF("vec_id", "embedding")
+    type Rows = Array[org.apache.spark.sql.Row]
+    def nodes(expect: Set[String]): Rows => Boolean = _.map(_.getString(0)).toSet == expect
+    val ringCore: Rows => Boolean = rs =>
+      nodes(ringIds.toSet)(rs) && rs.map(_.getLong(1)).sum == 72L
     // bound: the jobs each call started plus the jobs of its first
-    // collect before the shared kernel (local[4], 4 partitions, AQE
-    // off); the star row was the `symmetrized = true` call, 7-9 + 1
-    val budget = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
-      ("integerPageRank(D, 3)", () => Graph.integerPageRank(d, 3), 16 + 1),
-      ("integerPageRank(star, 3)", () => Graph.integerPageRank(star, 3), 7 + 1),
-      ("trustRank(D, {a}, 3)", () => Graph.trustRank(d, Seq("a").toDF("node"), 3), 13 + 1),
+    // collect before the call ran on the shared round loop (local[4],
+    // 4 partitions, AQE off); the star row was the `symmetrized = true`
+    // call, 7-9 + 1; labelPropagation and kMeans may spend one more job
+    // than their parent 3 + 1 and 5 + 2, on the init probe
+    val budget = Seq[(String, () => org.apache.spark.sql.DataFrame, Int, Rows => Boolean)](
+      ("integerPageRank(D, 3)", () => Graph.integerPageRank(d, 3), 16 + 1,
+        nodes(Set("a", "b", "c", "d", "e"))),
+      ("integerPageRank(star, 3)", () => Graph.integerPageRank(star, 3), 7 + 1,
+        nodes(leaves.toSet + "c")),
+      ("trustRank(D, {a}, 3)", () => Graph.trustRank(d, Seq("a").toDF("node"), 3), 13 + 1,
+        nodes(Set("a", "b", "c", "d", "e"))),
       ("pageRankConverged(star, 2e9, 40)",
-        () => Graph.pageRankConverged(star, 2000000000L, 40), 223),
-      ("pageRankConverged(D, 2e9, 40)", () => Graph.pageRankConverged(d, 2000000000L, 40), 69))
-    for ((call, run, bound) <- budget) {
-      val ((ranks, held), callJobs) = countingJobs {
-        val before = sc.getPersistentRDDs.keySet
+        () => Graph.pageRankConverged(star, 2000000000L, 40), 223, nodes(leaves.toSet + "c")),
+      ("pageRankConverged(D, 2e9, 40)", () => Graph.pageRankConverged(d, 2000000000L, 40), 69,
+        nodes(Set("a", "b", "c", "d", "e"))),
+      ("kCore(ring, 2, 4)", () => Graph.kCore(ring, 2, 4), 8 + 1, ringCore),
+      ("kCoreConverged(ring, 2)", () => Graph.kCoreConverged(ring, 2), 4 + 1, ringCore),
+      ("labelPropagation(triangles, 3)", () => Graph.labelPropagation(tri, 3), 3 + 1 + 1,
+        _.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L)),
+      ("kMeans(sep, 2, 2)", () => graft.ops.Clustering.kMeans(sep, 2, 2), 5 + 2 + 1, { rs =>
+        val c = rs.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        c.size == 6 && c(0L) == c(2L) && c(0L) == c(3L) && c(1L) == c(4L) &&
+          c(1L) == c(5L) && c(0L) != c(1L)
+      }),
+      ("hits(D, 2)", () => Graph.hits(d, 2), 16 + 1, nodes(Set("a", "b", "c", "d", "e"))))
+    for ((call, run, bound, check) <- budget) {
+      val before = sc.getPersistentRDDs.keySet
+      val ((result, held), callJobs) = countingJobs {
         val r = run()
         // read straight after the call: the registry holds RDDs weakly,
         // so a GC before the read could hide a leaked, unreferenced one
         (r, sc.getPersistentRDDs.keySet -- before)
       }
-      val (rows, collectJobs) = countingJobs(ranks.collect())
+      val (rows, collectJobs) = countingJobs(result.collect())
       assert(callJobs + collectJobs <= bound,
         s"$call ran $callJobs + $collectJobs jobs, bound $bound")
       assert(held.size == 1, s"$call left ${held.size} persisted RDDs: $held")
-      assert(rows.map(_.getString(0)).toSet ==
-        (if (call.contains("star")) leaves.toSet + "c" else Set("a", "b", "c", "d", "e")))
+      assert(sc.getPersistentRDDs.keySet -- before == held,
+        s"$call: the collect changed the persisted RDDs")
+      assert(check(rows), s"$call returned ${rows.mkString(" ")}")
       held.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     }
     // a converging round costs one job (its probe), whatever maxIter
@@ -4294,8 +4324,8 @@ class OpsSpec extends SparkSpec {
     try {
       sc.setCheckpointDir(dir.toString)
       assert(sc.getCheckpointDir.isDefined)
-      // both converged kernels, green through the reliable path, same
-      // fixpoints the localCheckpoint specs prove
+      // the converged kernels and HITS, green through the reliable path,
+      // same fixpoints the localCheckpoint specs prove
       val path = (0 until 19).map(i => (s"p$i", s"p${i + 1}"))
       assert(Graph.kCoreConverged(path.toDF("src", "dst"), 2).count() == 0L)
       val leaves = Seq("l1", "l2", "l3", "l4")
@@ -4305,6 +4335,12 @@ class OpsSpec extends SparkSpec {
         .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
       assert(conv.keySet == (leaves.toSet + "c"))
       assert(math.abs(conv("c") - 475675675675L) <= 25000000000L)
+      // HITS on the bipartite star: authority on v, hub mass split 3 ways
+      val hs = Graph.hits(Seq(("u1", "v", 1L), ("u2", "v", 1L), ("u3", "v", 1L))
+          .toDF("src", "dst", "wt"), iters = 2)
+        .collect().map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
+      assert(hs == Map("v" -> (0L, Graph.Scale)) ++
+        Seq("u1", "u2", "u3").map(_ -> (Graph.Scale / 3, 0L)))
       // proof the RELIABLE branch ran: checkpoint part-files exist
       // under the configured dir (localCheckpoint writes nothing here)
       val written = java.nio.file.Files.walk(dir).filter(p =>
@@ -5164,9 +5200,23 @@ class OpsSpec extends SparkSpec {
       graft.ops.Clustering.kMeans(sep.limit(1), 2, 1))
     // scale shape: the assignment broadcasts the centroid table (never
     // a shuffled or cartesian corpus join) and the argmin rank filter
-    // runs under WindowGroupLimit
-    val plan = graft.ops.Clustering.kMeans(emb, 4, 1)
-      .queryExecution.executedPlan.toString
+    // runs under WindowGroupLimit. The result is the assignment's
+    // materialized checkpoint, so the plan is read off the last
+    // checkpoint execution of the call.
+    val ckpts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        if (f.toLowerCase.contains("checkpoint")) ckpts.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.Clustering.kMeans(emb, 4, 1)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plan = ckpts.toArray.last.toString
     assert(plan.contains("Broadcast"), "centroids must broadcast")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"))
     assert(plan.contains("WindowGroupLimit"), "argmin must prune per task")

@@ -121,15 +121,10 @@ class PlanLintSpec extends SparkSpec {
     "n79_hll_overlap" ->
       ("register-algebra pairwise joins are sketch-sized by construction " +
         "(sources^2 x 2^p register rows, never corpus rows)"),
-    "n126_kmeans" ->
-      ("broadcast centroid table is k-bounded (grouped agg keyed by " +
-        "cluster, k=4) — a bound a static plan walk cannot see"),
-    "n132_cluster_profile" ->
-      "same k-bounded centroid broadcasts as n126 (shared kernel)",
     // global-window (empty partitionSpec) entries: every one is a
     // window over a relation a grouped aggregation already reduced to
-    // metadata size — a cardinality bound the static walk cannot see
-    // (the n126 class). The corpus-sized input is consumed by the agg
+    // metadata size — a cardinality bound the static walk cannot see.
+    // The corpus-sized input is consumed by the agg
     // BELOW the window in each of these plans.
     "g48_spatial_sum_acf" ->
       ("ACF lag windows run over the per-timestep domain-total series " +
