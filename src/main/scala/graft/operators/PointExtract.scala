@@ -15,9 +15,13 @@ import graft.model.GridDataset
   * pivots ALL cells x time and then selects ~3 columns): the point list
   * is tiny, so snapping happens driver-side (exactly like the reference's
   * NumPy argmin) and the grid is filtered to the matched cells BEFORE the
-  * pivot — predicate pushdown to the scan, then a single shuffle for the
-  * groupBy-pivot whose width (#points) is known up front, so Spark skips
-  * the extra distinct-values job.
+  * pivot — predicate pushdown to the scan, then the groupBy-pivot whose
+  * width (#points) is known up front, so Spark skips the extra
+  * distinct-values job (its two aggregation phases, by (time, point_id)
+  * and then by time, shuffle twice unless the input is already
+  * partitioned by time). The table has one row per timestep, so it is
+  * sorted in one partition: no range shuffle, no sampling job, one
+  * output file.
   */
 object PointExtract {
 
@@ -59,6 +63,7 @@ object PointExtract {
       .groupBy(g.time)
       .pivot("point_id", ids)
       .agg(first(col(variable)))
+      .coalesce(1)
       .orderBy(g.time)
   }
 

@@ -18,12 +18,15 @@ import graft.model.{AxisSpec, GridDataset, GridMeta}
   *     equal subdivisions of the same extent, labeled at centers);
   *  2. map each target center into fractional source-index space;
   *  3. `nearest`: the containing source cell (floor), one equi-join;
-  *     `bilinear`: the 4 bracketing cells via a corner explode, one
-  *     equi-join + weighted-sum groupBy.
+  *     `bilinear`, `cubic`, `cubicSpline`, `lanczos`: the 2x2, 4x4 or
+  *     6x6 tap window via a tap explode, one equi-join + weighted-sum
+  *     groupBy ([[tapRegrid]]).
   *
   * The target-cell mapping is metadata-sized (n'x * n'y rows) and
-  * broadcasts; the only shuffle is the bilinear groupBy, keyed by output
-  * cell — linear in output size, so the plan survives 100x scale-up.
+  * broadcasts. An interpolating regrid's only shuffle exchanges the
+  * source crop once, hash-partitioned on time, before the join; the
+  * groupBy keyed by output cell runs inside those partitions, so the
+  * shuffle is linear in input size and the plan survives 100x scale-up.
   */
 object SpatialResample {
 
@@ -91,7 +94,7 @@ object SpatialResample {
       .withColumn("wx1", col("gx") - floor(col("gx")))
       .withColumn("wy1", col("gy") - floor(col("gy")))
     // 4 corners exploded: (jy, jx, weight) per target cell
-    val corners = withBracket.select(col("jy2"), col("jx2"), col("x2"), col("y2"),
+    val corners = withBracket.select(col("x2"), col("y2"),
       explode(array(
         struct(col("jy0").as("jy"), col("jx0").as("jx"),
                ((lit(1.0) - col("wy1")) * (lit(1.0) - col("wx1"))).as("w")),
@@ -101,18 +104,10 @@ object SpatialResample {
                (col("wy1") * (lit(1.0) - col("wx1"))).as("w")),
         struct(col("jy1").as("jy"), col("jx1").as("jx"),
                (col("wy1") * col("wx1")).as("w")))).as("c"))
-      .select(col("jy2"), col("jx2"), col("x2"), col("y2"),
+      .select(col("x2"), col("y2"),
               col("c.jy").as("jy"), col("c.jx").as("jx"), col("c.w").as("w"))
       .filter(col("w") =!= 0.0)
-    val src = withIndexes(g, xa, ya)
-    val vars = g.variables
-    val aggs = vars.map(v => sum(col(v) * col("w")).as(v))
-    val out = src
-      .join(broadcast(corners), Seq("jy", "jx"))
-      .groupBy(col(g.meta.timeDim), col("y2"), col("x2"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumnsRenamed(Map("y2" -> g.meta.yDim, "x2" -> g.meta.xDim))
-    g.copy(df = out, meta = g.meta.copy(xAxis = Some(xt), yAxis = Some(yt)))
+    tapRegrid(g, xa, ya, xt, yt, corners)
   }
 
   /** Keys cubic-convolution kernel, a = -0.5 (the rasterio/GDAL
@@ -146,49 +141,11 @@ object SpatialResample {
     * keeping the per-axis weight sum at 1 everywhere.
     */
   def cubic(g: GridDataset, fy: Double, fx: Double): GridDataset =
-    tap4Regrid(g, fy, fx, keysKernel)
+    windowRegrid(g, fy, fx, -1 to 2, keysKernel, normalize = false)
 
   /** GDAL `cubic_spline` regrid: the same 4x4 tap plan with B3 weights. */
   def cubicSpline(g: GridDataset, fy: Double, fx: Double): GridDataset =
-    tap4Regrid(g, fy, fx, bsplineKernel)
-
-  private def tap4Regrid(g: GridDataset, fy: Double, fx: Double,
-      kernel: org.apache.spark.sql.Column => org.apache.spark.sql.Column): GridDataset = {
-    val (xa, ya) = axes(g)
-    val (m, xt, yt) = mapping(g.df.sparkSession, xa, ya, fx, fy)
-    val taps = for (ky <- -1 to 2; kx <- -1 to 2) yield (ky, kx)
-    // evaluate the kernel once per axis offset (8 columns) instead of
-    // inlining the CASE tree into all 16 tap weights — keeps the
-    // generated code small enough for fast whole-stage compilation
-    val withK = (-1 to 2).foldLeft(
-      m.withColumn("fx", col("gx") - floor(col("gx")))
-       .withColumn("fy", col("gy") - floor(col("gy")))) { (d, k) =>
-      d.withColumn(s"wx_$k", kernel(col("fx") - k))
-       .withColumn(s"wy_$k", kernel(col("fy") - k))
-    }
-    val tapStructs = taps.map { case (ky, kx) =>
-      struct(
-        clampIdx((floor(col("gy")) + ky).cast("long"), ya.n).as("jy"),
-        clampIdx((floor(col("gx")) + kx).cast("long"), xa.n).as("jx"),
-        (col(s"wx_$kx") * col(s"wy_$ky")).as("w"))
-    }
-    val corners = withK.select(col("x2"), col("y2"),
-        explode(array(tapStructs: _*)).as("c"))
-      .select(col("x2"), col("y2"), col("c.jy").as("jy"),
-        col("c.jx").as("jx"), col("c.w").as("w"))
-      .filter(col("w") =!= 0.0)
-      // clamped taps can coincide at edges: merge duplicate (cell, tap)
-      .groupBy("y2", "x2", "jy", "jx").agg(sum("w").as("w"))
-    val src = withIndexes(g, xa, ya)
-    val vars = g.variables
-    val aggs = vars.map(v => sum(col(v) * col("w")).as(v))
-    val out = src
-      .join(broadcast(corners), Seq("jy", "jx"))
-      .groupBy(col(g.meta.timeDim), col("y2"), col("x2"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumnsRenamed(Map("y2" -> g.meta.yDim, "x2" -> g.meta.xDim))
-    g.copy(df = out, meta = g.meta.copy(xAxis = Some(xt), yAxis = Some(yt)))
-  }
+    windowRegrid(g, fy, fx, -1 to 2, bsplineKernel, normalize = false)
 
   /** Lanczos-3 kernel: sinc(d)*sinc(d/3) = 3*sin(pi*d)*sin(pi*d/3)/(pi*d)^2
     * for |d| < 3 (rasterio/GDAL `lanczos`; the reference's test loops
@@ -207,40 +164,69 @@ object SpatialResample {
 
   /** Lanczos-3 regrid: 6x6 tap window per target cell, per-axis weight
     * normalization (GDAL normalizes the accumulated kernel weight; for a
-    * separable kernel the 2D sum factors into the per-axis sums). Same
-    * join-aggregate shape as cubic: the tap mapping is metadata-sized and
-    * broadcast, the only shuffle is keyed by output cell.
+    * separable kernel the 2D sum factors into the per-axis sums).
     */
-  def lanczos(g: GridDataset, fy: Double, fx: Double): GridDataset = {
+  def lanczos(g: GridDataset, fy: Double, fx: Double): GridDataset =
+    windowRegrid(g, fy, fx, -2 to 3, lanczosKernel, normalize = true)
+
+  /** A separable window kernel's taps: for each target cell, the source
+    * cells at `offsets` from floor(g) along each axis, weighted by the
+    * kernel of the unclamped tap distance (each axis divided by its
+    * weight sum when `normalize`). The kernel is evaluated once per axis
+    * offset instead of inlining its CASE tree into every tap weight,
+    * which keeps the generated code small enough for fast whole-stage
+    * compilation.
+    */
+  private def windowRegrid(g: GridDataset, fy: Double, fx: Double, offsets: Range,
+      kernel: Column => Column, normalize: Boolean): GridDataset = {
     val (xa, ya) = axes(g)
     val (m, xt, yt) = mapping(g.df.sparkSession, xa, ya, fx, fy)
-    val taps = for (ky <- -2 to 3; kx <- -2 to 3) yield (ky, kx)
-    val withK = (-2 to 3).foldLeft(
+    val withK = offsets.foldLeft(
       m.withColumn("fx", col("gx") - floor(col("gx")))
        .withColumn("fy", col("gy") - floor(col("gy")))) { (d, k) =>
-      d.withColumn(s"wx_$k", lanczosKernel(col("fx") - k))
-       .withColumn(s"wy_$k", lanczosKernel(col("fy") - k))
+      d.withColumn(s"wx_$k", kernel(col("fx") - k))
+       .withColumn(s"wy_$k", kernel(col("fy") - k))
     }
-      .withColumn("swx", (-2 to 3).map(k => col(s"wx_$k")).reduce(_ + _))
-      .withColumn("swy", (-2 to 3).map(k => col(s"wy_$k")).reduce(_ + _))
-    val tapStructs = taps.map { case (ky, kx) =>
+    val withSums = if (!normalize) withK else withK
+      .withColumn("swx", offsets.map(k => col(s"wx_$k")).reduce(_ + _))
+      .withColumn("swy", offsets.map(k => col(s"wy_$k")).reduce(_ + _))
+    def axisW(a: String, k: Int) =
+      if (normalize) col(s"w${a}_$k") / col(s"sw$a") else col(s"w${a}_$k")
+    val tapStructs = for (ky <- offsets; kx <- offsets) yield
       struct(
         clampIdx((floor(col("gy")) + ky).cast("long"), ya.n).as("jy"),
         clampIdx((floor(col("gx")) + kx).cast("long"), xa.n).as("jx"),
-        (col(s"wx_$kx") / col("swx") * (col(s"wy_$ky") / col("swy"))).as("w"))
-    }
-    val corners = withK.select(col("x2"), col("y2"),
+        (axisW("x", kx) * axisW("y", ky)).as("w"))
+    val taps = withSums.select(col("x2"), col("y2"),
         explode(array(tapStructs: _*)).as("c"))
       .select(col("x2"), col("y2"), col("c.jy").as("jy"),
         col("c.jx").as("jx"), col("c.w").as("w"))
       .filter(col("w") =!= 0.0)
       // clamped taps can coincide at edges: merge duplicate (cell, tap)
       .groupBy("y2", "x2", "jy", "jx").agg(sum("w").as("w"))
-    val src = withIndexes(g, xa, ya)
-    val vars = g.variables
-    val aggs = vars.map(v => sum(col(v) * col("w")).as(v))
-    val out = src
-      .join(broadcast(corners), Seq("jy", "jx"))
+    tapRegrid(g, xa, ya, xt, yt, taps)
+  }
+
+  /** The interpolating regrids' join-aggregate: each target cell
+    * (y2, x2) is the weighted sum of its source taps (jy, jx, w).
+    *
+    * The tap relation is metadata-sized and broadcasts. These regrids
+    * upsample, so the indexed source crop is the smallest relation in
+    * the plan (the target grid has fy·fx times its rows, the taps 4, 16
+    * or 36 times the target's): it is the one relation exchanged, hash
+    * partitioned on the time column. That partitioning already
+    * satisfies the (time, y2, x2) aggregate, so the join and both halves
+    * of the aggregate run after the one exchange and no partial
+    * aggregate is shuffled again. Each task holds whole timesteps — the
+    * unit the reference chunks by — and a request runs at most
+    * min(timesteps, shuffle partitions) tasks after the exchange.
+    */
+  private def tapRegrid(g: GridDataset, xa: AxisSpec, ya: AxisSpec, xt: AxisSpec,
+                        yt: AxisSpec, taps: DataFrame): GridDataset = {
+    val aggs = g.variables.map(v => sum(col(v) * col("w")).as(v))
+    val out = withIndexes(g, xa, ya)
+      .repartition(col(g.meta.timeDim))
+      .join(broadcast(taps), Seq("jy", "jx"))
       .groupBy(col(g.meta.timeDim), col("y2"), col("x2"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumnsRenamed(Map("y2" -> g.meta.yDim, "x2" -> g.meta.xDim))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 import graft.model.{AxisSpec, BBox, GridDataset, GridMeta}
 
@@ -67,10 +67,13 @@ object SyntheticEra5Adapter extends SourceAdapter {
   * the loaded grid feeds [[graft.operators.SpatialResample]] as is. A
   * non-uniform axis stays None and takes the crop's fallback.
   *
-  * The catalog holds one entry per dataset path, keyed by the leaf-file
-  * listing (path, length, modification time) that `spark.read.parquet`
-  * already built: loading an unchanged lake adds no job to the Parquet
-  * read, and rewriting any file replaces the entry on the next load.
+  * The catalog holds one entry per dataset path: the schema Parquet
+  * inferred and the axes, keyed by the leaf-file listing (path, length,
+  * modification time) of the read. A load reads with the cached schema,
+  * so an unchanged lake runs no job at all (neither schema inference nor
+  * axis derivation); when the listing differs, the load re-reads with
+  * inference and derives the axes again, at the cost of a second file
+  * listing.
   */
 object LakeAdapter extends SourceAdapter {
   val name = "ParquetLake"
@@ -84,7 +87,8 @@ object LakeAdapter extends SourceAdapter {
 
   private type Fingerprint = Seq[(String, Long, Long)]
   private type Axes = (Option[AxisSpec], Option[AxisSpec])
-  private val catalog = new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, Axes)]()
+  private final case class Entry(version: Fingerprint, schema: StructType, axes: Axes)
+  private val catalog = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
   /** The leaf files the relation's file index listed when the scan was
     * resolved, or None for an index that keeps no listing.
@@ -97,31 +101,37 @@ object LakeAdapter extends SourceAdapter {
         .sortBy(_._1)
     }
 
-  private def axes(path: String, g: GridDataset): Axes = {
+  private def axes(g: GridDataset): Axes = {
     val coordsAreDoubles = Seq(g.meta.xDim, g.meta.yDim).forall(c =>
       g.df.schema.exists(f => f.name == c && f.dataType == DoubleType))
-    def derive(): Axes = {
+    if (!coordsAreDoubles) (None, None)
+    else {
       val (xs, ys) = graft.operators.Crop.axisValues(g)
       (AxisSpec.fromSorted(xs), AxisSpec.fromSorted(ys))
     }
-    if (!coordsAreDoubles) (None, None)
-    else version(g.df) match {
-      case None => derive()
-      case Some(v) =>
-        Option(catalog.get(path)).collect { case (`v`, a) => a }.getOrElse {
-          val a = derive()
-          catalog.put(path, (v, a))
-          a
-        }
+  }
+
+  /** The lake at `path` with its axes: from the catalog while the
+    * listing matches its entry, else inferred and derived afresh.
+    */
+  private def read(spark: SparkSession, path: String, dataset: String): GridDataset = {
+    def withAxes(df: DataFrame, a: Axes) =
+      GridDataset(df, GridMeta(datasetName = dataset, xAxis = a._1, yAxis = a._2))
+    val cached = Option(catalog.get(path)).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      if (version(df).contains(e.version)) Some(withAxes(df, e.axes)) else None
+    }
+    cached.getOrElse {
+      val df = spark.read.parquet(path)
+      val a = axes(GridDataset(df, GridMeta(datasetName = dataset)))
+      version(df).foreach(v => catalog.put(path, Entry(v, df.schema, a)))
+      withAxes(df, a)
     }
   }
 
   def load(spark: SparkSession, dataset: String, variables: Seq[String],
            bbox: Option[BBox], timeRange: Option[(String, String)]): GridDataset = {
-    val path = s"$root/$dataset"
-    val lake = GridDataset(spark.read.parquet(path), GridMeta(datasetName = dataset))
-    val (xAxis, yAxis) = axes(path, lake)
-    var g = lake.copy(meta = lake.meta.copy(xAxis = xAxis, yAxis = yAxis))
+    var g = read(spark, s"$root/$dataset", dataset)
     if (variables.nonEmpty) g = g.selectVariables(variables)
     bbox.foreach(b => g = graft.operators.Crop.bbox(g, b))
     timeRange.foreach { case (s, e) => g = graft.operators.Crop.time(g, s, e) }

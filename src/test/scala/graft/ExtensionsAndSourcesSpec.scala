@@ -279,8 +279,9 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
 
   test("lake axis catalog: a second load of an unchanged lake adds no job to the Parquet read") {
     val dir = lake(SyntheticGrid.df(spark))
-    // spark.read.parquet's own schema-inference job runs on every load;
-    // the catalog adds one fused job on a new lake version, none after
+    // a new lake version pays spark.read.parquet's schema-inference job
+    // plus one fused axis job; after that the cached schema and axes
+    // leave the load with no job at all
     val (_, readJobs) = countingJobs(spark.read.parquet(s"$dir/grid"))
     val b = BBox(-82.9, 41.6, -80.2, 42.4)
     def request() = LakeAdapter.load(spark, "grid", Seq("t2m"), Some(b),
@@ -288,7 +289,7 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     val (_, cold) = countingJobs(request())
     val (_, warm) = countingJobs(request())
     assert(cold == readJobs + 1, s"cold load ran $cold jobs, the read alone $readJobs")
-    assert(warm == readJobs, s"warm load ran $warm jobs, the read alone $readJobs")
+    assert(warm == 0, s"warm load ran $warm jobs")
   }
 
   test("lake axis catalog: rewriting the lake's files invalidates the entry") {
@@ -299,6 +300,78 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/grid")
     assert(loadLake().meta.xAxis == Some(AxisSpec(-73.5, 0.25, SyntheticGrid.NX)))
     assert(loadLake().meta.yAxis == SyntheticGrid.meta.yAxis)
+    // a rewrite that adds a variable: the next load infers the new schema
+    SyntheticGrid.df(spark).withColumn("sst", col("t2m") + 1.0)
+      .write.mode("overwrite").parquet(s"$dir/grid")
+    val added = LakeAdapter.load(spark, "grid", Seq("sst"), None, None)
+    assert(added.variables == Seq("sst") && added.meta.xAxis == SyntheticGrid.meta.xAxis)
+    assert(added.df.agg(sum("sst")).head().getDouble(0) ==
+      SyntheticGrid.df(spark).agg(sum(col("t2m") + 1.0)).head().getDouble(0))
+  }
+
+  test("analyst-path budget: the regrid exchanges the crop once on time, the sinks sort without a range shuffle") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import graft.operators.{Gssha, PointExtract, TemporalResample}
+    // the benchmark's request shape on a small day-partitioned lake
+    val dir = Files.createTempDirectory("lake").toString
+    SyntheticGrid.df(spark).withColumn("day", dayofmonth(col("time")))
+      .write.partitionBy("day").parquet(s"$dir/grid")
+    LakeAdapter.root = dir
+    val stations = Seq(("p0", -82.4, 41.9), ("p1", -81.6, 42.1), ("p2", -80.9, 41.8),
+      ("p3", -81.1, 42.2))
+    val hmet = Map("t2m" -> "Dry Bulb Temperature", "u100" -> "Wind Speed")
+    def load() = LakeAdapter.load(spark, "grid", Seq("t2m", "u100"),
+      Some(BBox(-82.9, 41.6, -80.2, 42.4)), Some(("2019-01-31 00:00:00", "2019-02-01 23:00:00")))
+    def coarse(g: GridDataset) =
+      TemporalResample.downsample(SpatialResample.bilinear(g, 2.0, 2.0), "6 hours", "mean")
+    def request(i: Int): Array[String] = {
+      val c = coarse(load())
+      TableSink.write(PointExtract.pointsToTable(c, stations, "t2m"), s"$dir/out/req=$i.parquet")
+      Gssha.wesRows(c, hmet, roundTo = Some(4)).select("line").collect().map(_.getString(0))
+    }
+    // each shuffle exchange outside a broadcast, top-down: "time" for a
+    // hash partitioning on time alone, else its kind
+    def exchanges(df: DataFrame): Seq[String] = {
+      def walk(p: SparkPlan): Seq[String] = p match {
+        case _: BroadcastExchangeExec => Nil
+        case e: ShuffleExchangeExec =>
+          (e.outputPartitioning match {
+            case HashPartitioning(Seq(a: Attribute), _) if a.name == "time" => "time"
+            case _: HashPartitioning => "hash"
+            case _: RangePartitioning => "range"
+            case other => other.getClass.getSimpleName
+          }) +: walk(e.child)
+        case other => other.children.flatMap(walk)
+      }
+      withoutAqe(walk(df.queryExecution.executedPlan))
+    }
+    val g = load()
+    val budget = Seq(
+      ("bilinear", SpatialResample.bilinear(g, 2.0, 2.0).df, Seq("time")),
+      ("cubic", SpatialResample.cubic(g, 2.0, 2.0).df, Seq("time")),
+      ("cubicSpline", SpatialResample.cubicSpline(g, 2.0, 2.0).df, Seq("time")),
+      ("lanczos", SpatialResample.lanczos(g, 2.0, 2.0).df, Seq("time")),
+      ("bilinear -> downsample", coarse(g).df, Seq("hash", "time")),
+      // the pivot aggregates by (time, point_id), then by time
+      ("pointsToTable", PointExtract.pointsToTable(coarse(g), stations, "t2m"),
+        Seq("time", "hash", "hash", "time")),
+      ("wesRows", Gssha.wesRows(coarse(g), hmet), Seq("time", "hash", "time")))
+    for ((name, df, want) <- budget)
+      assert(exchanges(df) == want, s"$name: exchanges ${exchanges(df)}, want $want")
+    // the bilinear plan's broadcast side shuffles nothing either
+    val bilinearPlan = withoutAqe(SpatialResample.bilinear(g, 2.0, 2.0).df.queryExecution.executedPlan)
+    assert(bilinearPlan.collect { case e: ShuffleExchangeExec => e }.size == 1)
+    // a warm request: no load job, one broadcast job and one result job
+    // for the table write and again for the WES collect
+    val first = request(0)
+    val (second, jobs) = countingJobs(request(1))
+    assert(second.length == 8 && second.toSeq == first.toSeq)
+    assert(jobs == 4, s"warm request ran $jobs jobs")
+    assert(spark.read.parquet(s"$dir/out/req=1.parquet").inputFiles.length == 1)
   }
 
   test("lake axis catalog: jittered and 0.1-degree axes stay None and crop like the fallback") {

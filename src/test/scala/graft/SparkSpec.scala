@@ -30,25 +30,30 @@ trait SparkSpec extends AnyFunSuite {
     * inside its action's job instead of as a job of its own. The
     * session's AQE setting is restored afterwards.
     */
-  def countingJobs[T](body: => T): (T, Int) = {
+  def countingJobs[T](body: => T): (T, Int) = withoutAqe {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    val aqe = "spark.sql.adaptive.enabled"
-    val savedAqe = spark.conf.getOption(aqe)
-    spark.conf.set(aqe, "false")
     ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       val r = body
       ListenerBus.drain(sc)
       (r, jobs.get)
-    } finally {
-      sc.removeSparkListener(listener)
-      savedAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-    }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body` run with AQE off, as the benchmark runs (a plan built inside
+    * shows its exchanges as planned); the session's setting is restored.
+    */
+  def withoutAqe[T](body: => T): T = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val savedAqe = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try body
+    finally savedAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
   }
 
   /** The incremental operators' precondition: a slice reuses no corpus id. */
