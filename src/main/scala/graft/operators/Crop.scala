@@ -4,6 +4,7 @@ import java.time.{LocalDateTime, ZoneId}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.model.{BBox, GridDataset}
 
@@ -90,8 +91,8 @@ object Crop {
 
   /** Inclusive-both-ends time crop (P3). */
   def time(g: GridDataset, start: String, end: String): GridDataset =
-    g.copy(df = g.df.filter(g.time.between(lit(start).cast("timestamp"),
-                                           lit(end).cast("timestamp"))))
+    g.copy(df = g.df.filter(g.time.between(lit(start).cast(TimestampType),
+                                           lit(end).cast(TimestampType))))
 
   /** Timezone-aware subset (P4): interpret `start`/`end` as wall-clock in
     * `localZone`, convert to the dataset's zone (default UTC when the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.GridDataset
@@ -9,19 +9,19 @@ import graft.model.GridDataset
   * (SURVEY.md §2.9 R1; reference: to_tables.py:24-130).
   *
   * Pipeline: snap each sample point to its nearest grid cell (J2), then
-  * pivot to a wide table: one row per timestamp, one column per point id.
+  * widen to a table: one row per timestamp, one column per point id.
   *
   * Plan shape (the deliberate improvement over the reference, which
   * pivots ALL cells x time and then selects ~3 columns): the point list
   * is tiny, so snapping happens driver-side (exactly like the reference's
   * NumPy argmin) and the grid is filtered to the matched cells BEFORE the
-  * pivot — predicate pushdown to the scan, then the groupBy-pivot whose
-  * width (#points) is known up front, so Spark skips the extra
-  * distinct-values job (its two aggregation phases, by (time, point_id)
-  * and then by time, shuffle twice unless the input is already
-  * partitioned by time). The table has one row per timestep, so it is
-  * sorted in one partition: no range shuffle, no sampling job, one
-  * output file.
+  * widening — predicate pushdown to the scan (or, over a regrid, into the
+  * local target relation). Each row's points come from one literal map
+  * keyed by cell, and the table is ONE aggregate keyed by time with a
+  * conditional `first` per point: one exchange on time, where a pivot
+  * aggregates by (time, point_id) and then by time. The table has one row
+  * per timestep, so it is sorted in one partition: no range shuffle, no
+  * sampling job, one output file.
   */
 object PointExtract {
 
@@ -44,25 +44,33 @@ object PointExtract {
     */
   def pointsToTable(g: GridDataset, points: Seq[(String, Double, Double)],
                     variable: String): DataFrame = {
+    require(points.nonEmpty, "need at least one point")
     val snapped = snapPoints(g, points)
-    val ids = snapped.map(_._1)
-    // point_id assignment as a literal CASE over the snapped cells —
-    // no join needed for a handful of points; the filter prunes the scan.
-    // Two points may snap to the same cell, so the CASE maps a cell to
-    // the ARRAY of its point ids and explodes (one output column each).
     val cellFilter = snapped.map { case (_, sx, sy) =>
       g.x === sx && g.y === sy
     }.reduce(_ || _)
-    val byCell = snapped.groupBy(p => (p._2, p._3)).toSeq
-    val idArray = byCell.foldLeft(lit(null).cast("array<string>")) {
-      case (acc, ((sx, sy), ps)) =>
-        when(g.x === sx && g.y === sy, array(ps.map(p => lit(p._1)): _*)).otherwise(acc)
+    // points by cell as one literal map, which constant-folds to a
+    // single object the generated code references, so the station
+    // coordinates stay out of the compiled source. Two points may snap
+    // to the same cell, so a cell maps to the ARRAY of its points. A
+    // point is its position in the list, not its id: string ids in the
+    // aggregate would reorder Spark's common subexpressions by their
+    // hashes, so every new id set would compile new code.
+    def cell(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
+    val indexed = snapped.zipWithIndex
+    val byCell = indexed.groupBy { case ((_, sx, sy), _) => (sx, sy) }.toSeq
+    val pointsByCell = map_from_arrays(
+      array(byCell.map { case ((sx, sy), _) => cell(lit(sx), lit(sy)) }: _*),
+      array(byCell.map { case (_, ps) => array(ps.map(p => lit(p._2)): _*) }: _*))
+    // each (time, point) is one row: a point's cell holds one value per
+    // timestep, so `first` ignoring the other points' nulls is it
+    val columns = indexed.map { case ((id, _, _), i) =>
+      first(when(col("point") === i, col(variable)), ignoreNulls = true).as(id)
     }
     g.df.filter(cellFilter)
-      .select(g.time, explode(idArray).as("point_id"), col(variable))
+      .select(g.time, explode(pointsByCell(cell(g.x, g.y))).as("point"), col(variable))
       .groupBy(g.time)
-      .pivot("point_id", ids)
-      .agg(first(col(variable)))
+      .agg(columns.head, columns.tail: _*)
       .coalesce(1)
       .orderBy(g.time)
   }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.model.{AxisSpec, GridDataset, GridMeta}
 
@@ -12,10 +13,11 @@ import graft.model.{AxisSpec, GridDataset, GridMeta}
   * resampling kernel (reference: core_functions.py:258-347; target shape
   * at :317-318; default bilinear at :293-299). Re-expressed relationally:
   *
-  *  1. generate the target grid from `spark.range` (GDAL-style geometry:
-  *     source cells are centers on a regular axis; the raster extent is
-  *     [origin - step/2, last + step/2]; target cells are `n' = int(n*f)`
-  *     equal subdivisions of the same extent, labeled at centers);
+  *  1. build the target grid as a driver-local relation of cell indices
+  *     (GDAL-style geometry: source cells are centers on a regular axis;
+  *     the raster extent is [origin - step/2, last + step/2]; target
+  *     cells are `n' = int(n*f)` equal subdivisions of the same extent,
+  *     labeled at centers);
   *  2. map each target center into fractional source-index space;
   *  3. `nearest`: the containing source cell (floor), one equi-join;
   *     `bilinear`, `cubic`, `cubicSpline`, `lanczos`: the 2x2, 4x4 or
@@ -23,10 +25,15 @@ import graft.model.{AxisSpec, GridDataset, GridMeta}
   *     groupBy ([[tapRegrid]]).
   *
   * The target-cell mapping is metadata-sized (n'x * n'y rows) and
-  * broadcasts. An interpolating regrid's only shuffle exchanges the
-  * source crop once, hash-partitioned on time, before the join; the
-  * groupBy keyed by output cell runs inside those partitions, so the
-  * shuffle is linear in input size and the plan survives 100x scale-up.
+  * broadcasts. Every per-request constant (the crop and target origins,
+  * extents, a pushed-down station filter) lives in the projections and
+  * filters over that local relation, which Catalyst folds into its rows
+  * while optimizing; the tap stage that remains is the same generated
+  * code for every request of a regrid kind, so warm requests reuse it.
+  * An interpolating regrid's only shuffle exchanges the source crop
+  * once, hash-partitioned on time, before the join; the groupBy keyed
+  * by output cell runs inside those partitions, so the shuffle is
+  * linear in input size and the plan survives 100x scale-up.
   */
 object SpatialResample {
 
@@ -41,19 +48,28 @@ object SpatialResample {
     AxisSpec(west + step2 / 2.0, step2, n2)
   }
 
-  /** Target-cell mapping: one row per output cell with the source index
-    * bracket and interpolation weights along each axis.
+  private val cellSchema = StructType(Seq(
+    StructField("jy2", LongType, nullable = false),
+    StructField("jx2", LongType, nullable = false)))
+
+  /** Target-cell mapping: one row per output cell with its center and
+    * its fractional position in source-center index space. The cell
+    * indices are a driver-local relation (row-major, as `spark.range`
+    * would number them), so the axis arithmetic here and in the callers'
+    * projections folds into its rows instead of into generated code.
+    * `createDataFrame` over Rows, not `toDF`: no reflection encoder.
     */
   private def mapping(spark: SparkSession, xa: AxisSpec, ya: AxisSpec,
                       fx: Double, fy: Double): (DataFrame, AxisSpec, AxisSpec) = {
     val xt = targetAxis(xa, fx); val yt = targetAxis(ya, fy)
-    val m = spark.range(xt.n.toLong * yt.n)
-      .select(expr(s"id div ${xt.n}").as("jy2"), expr(s"id % ${xt.n}").as("jx2"))
-      .withColumn("x2", lit(xt.origin) + col("jx2") * lit(xt.step))
-      .withColumn("y2", lit(yt.origin) + col("jy2") * lit(yt.step))
-      // fractional position in source-center index space
-      .withColumn("gx", (col("x2") - lit(xa.origin)) / lit(xa.step))
-      .withColumn("gy", (col("y2") - lit(ya.origin)) / lit(ya.step))
+    val cells = new java.util.ArrayList[Row](xt.n * yt.n)
+    for (jy <- 0L until yt.n; jx <- 0L until xt.n) cells.add(Row(jy, jx))
+    val x2 = lit(xt.origin) + col("jx2") * lit(xt.step)
+    val y2 = lit(yt.origin) + col("jy2") * lit(yt.step)
+    val m = spark.createDataFrame(cells, cellSchema).select(
+      col("jy2"), col("jx2"), x2.as("x2"), y2.as("y2"),
+      ((x2 - lit(xa.origin)) / lit(xa.step)).as("gx"),
+      ((y2 - lit(ya.origin)) / lit(ya.step)).as("gy"))
     (m, xt, yt)
   }
 
@@ -69,8 +85,8 @@ object SpatialResample {
     val (xa, ya) = axes(g)
     val (m, xt, yt) = mapping(g.df.sparkSession, xa, ya, fx, fy)
     val tgt = m.select(col("jy2"), col("jx2"), col("x2"), col("y2"),
-      clampIdx(floor(col("gx") + 0.5).cast("long"), xa.n).as("jx"),
-      clampIdx(floor(col("gy") + 0.5).cast("long"), ya.n).as("jy"))
+      clampIdx(floor(col("gx") + 0.5).cast(LongType), xa.n).as("jx"),
+      clampIdx(floor(col("gy") + 0.5).cast(LongType), ya.n).as("jy"))
     val src = withIndexes(g, xa, ya)
     val vars = g.variables
     val out = src
@@ -86,13 +102,13 @@ object SpatialResample {
   def bilinear(g: GridDataset, fy: Double, fx: Double): GridDataset = {
     val (xa, ya) = axes(g)
     val (m, xt, yt) = mapping(g.df.sparkSession, xa, ya, fx, fy)
-    val withBracket = m
-      .withColumn("jx0", clampIdx(floor(col("gx")).cast("long"), xa.n))
-      .withColumn("jx1", clampIdx(floor(col("gx")).cast("long") + 1, xa.n))
-      .withColumn("jy0", clampIdx(floor(col("gy")).cast("long"), ya.n))
-      .withColumn("jy1", clampIdx(floor(col("gy")).cast("long") + 1, ya.n))
-      .withColumn("wx1", col("gx") - floor(col("gx")))
-      .withColumn("wy1", col("gy") - floor(col("gy")))
+    val withBracket = m.select(col("x2"), col("y2"),
+      clampIdx(floor(col("gx")).cast(LongType), xa.n).as("jx0"),
+      clampIdx(floor(col("gx")).cast(LongType) + 1, xa.n).as("jx1"),
+      clampIdx(floor(col("gy")).cast(LongType), ya.n).as("jy0"),
+      clampIdx(floor(col("gy")).cast(LongType) + 1, ya.n).as("jy1"),
+      (col("gx") - floor(col("gx"))).as("wx1"),
+      (col("gy") - floor(col("gy"))).as("wy1"))
     // 4 corners exploded: (jy, jx, weight) per target cell
     val corners = withBracket.select(col("x2"), col("y2"),
       explode(array(
@@ -173,31 +189,29 @@ object SpatialResample {
     * cells at `offsets` from floor(g) along each axis, weighted by the
     * kernel of the unclamped tap distance (each axis divided by its
     * weight sum when `normalize`). The kernel is evaluated once per axis
-    * offset instead of inlining its CASE tree into every tap weight,
-    * which keeps the generated code small enough for fast whole-stage
-    * compilation.
+    * offset and the tap indices once per axis, in projections over the
+    * local target relation that fold into its rows, so the explode
+    * only pairs up columns and its generated code is small and the same
+    * for every request.
     */
   private def windowRegrid(g: GridDataset, fy: Double, fx: Double, offsets: Range,
       kernel: Column => Column, normalize: Boolean): GridDataset = {
     val (xa, ya) = axes(g)
     val (m, xt, yt) = mapping(g.df.sparkSession, xa, ya, fx, fy)
-    val withK = offsets.foldLeft(
-      m.withColumn("fx", col("gx") - floor(col("gx")))
-       .withColumn("fy", col("gy") - floor(col("gy")))) { (d, k) =>
-      d.withColumn(s"wx_$k", kernel(col("fx") - k))
-       .withColumn(s"wy_$k", kernel(col("fy") - k))
-    }
-    val withSums = if (!normalize) withK else withK
-      .withColumn("swx", offsets.map(k => col(s"wx_$k")).reduce(_ + _))
-      .withColumn("swy", offsets.map(k => col(s"wy_$k")).reduce(_ + _))
+    val (fracX, fracY) = (col("gx") - floor(col("gx")), col("gy") - floor(col("gy")))
+    val withK = m.select(Seq(col("x2"), col("y2"), col("gx"), col("gy")) ++
+      offsets.flatMap(k => Seq(kernel(fracX - k).as(s"wx_$k"), kernel(fracY - k).as(s"wy_$k"))): _*)
     def axisW(a: String, k: Int) =
-      if (normalize) col(s"w${a}_$k") / col(s"sw$a") else col(s"w${a}_$k")
+      if (normalize) col(s"w${a}_$k") / offsets.map(j => col(s"w${a}_$j")).reduce(_ + _)
+      else col(s"w${a}_$k")
+    val perAxis = withK.select(Seq(col("x2"), col("y2")) ++ offsets.flatMap(k => Seq(
+      clampIdx((floor(col("gy")) + k).cast(LongType), ya.n).as(s"jy_$k"),
+      clampIdx((floor(col("gx")) + k).cast(LongType), xa.n).as(s"jx_$k"),
+      axisW("x", k).as(s"nx_$k"), axisW("y", k).as(s"ny_$k"))): _*)
     val tapStructs = for (ky <- offsets; kx <- offsets) yield
-      struct(
-        clampIdx((floor(col("gy")) + ky).cast("long"), ya.n).as("jy"),
-        clampIdx((floor(col("gx")) + kx).cast("long"), xa.n).as("jx"),
-        (axisW("x", kx) * axisW("y", ky)).as("w"))
-    val taps = withSums.select(col("x2"), col("y2"),
+      struct(col(s"jy_$ky").as("jy"), col(s"jx_$kx").as("jx"),
+        (col(s"nx_$kx") * col(s"ny_$ky")).as("w"))
+    val taps = perAxis.select(col("x2"), col("y2"),
         explode(array(tapStructs: _*)).as("c"))
       .select(col("x2"), col("y2"), col("c.jy").as("jy"),
         col("c.jx").as("jx"), col("c.w").as("w"))
@@ -241,7 +255,7 @@ object SpatialResample {
   private def blockIdx(coord: org.apache.spark.sql.Column, src: AxisSpec,
                        tgt: AxisSpec) = {
     val west = src.origin - src.step / 2.0
-    clampIdx(floor((coord - lit(west)) / lit(tgt.step)).cast("long"), tgt.n)
+    clampIdx(floor((coord - lit(west)) / lit(tgt.step)).cast(LongType), tgt.n)
   }
 
   /** Aggregating downsample — the reduction half of the
@@ -355,9 +369,9 @@ object SpatialResample {
     * stale, and trusting them shifts every joined value.
     */
   private[operators] def withIndexes(g: GridDataset, xa: AxisSpec, ya: AxisSpec): DataFrame =
-    g.df.drop("jx", "jy")
-      .withColumn("jx", floor((g.x - lit(xa.origin)) / lit(xa.step) + 0.5).cast("long"))
-      .withColumn("jy", floor((g.y - lit(ya.origin)) / lit(ya.step) + 0.5).cast("long"))
+    g.df.drop("jx", "jy").withColumns(Map(
+      "jx" -> floor((g.x - lit(xa.origin)) / lit(xa.step) + 0.5).cast(LongType),
+      "jy" -> floor((g.y - lit(ya.origin)) / lit(ya.step) + 0.5).cast(LongType)))
 
   /** Latitude-weighted spatial mean per timestep — the xarray
     * `ds.weighted(np.cos(np.deg2rad(ds.lat))).mean(("y","x"))` surface:

@@ -133,6 +133,8 @@ object LakeAdapter extends SourceAdapter {
            bbox: Option[BBox], timeRange: Option[(String, String)]): GridDataset = {
     var g = read(spark, s"$root/$dataset", dataset)
     if (variables.nonEmpty) g = g.selectVariables(variables)
+    // the crop filters stay literals so Parquet and partition pushdown
+    // see them: the scan stage is the one stage a warm request compiles
     bbox.foreach(b => g = graft.operators.Crop.bbox(g, b))
     timeRange.foreach { case (s, e) => g = graft.operators.Crop.time(g, s, e) }
     g

@@ -310,6 +310,7 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
   }
 
   test("analyst-path budget: the regrid exchanges the crop once on time, the sinks sort without a range shuffle") {
+    import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
@@ -324,13 +325,16 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     val stations = Seq(("p0", -82.4, 41.9), ("p1", -81.6, 42.1), ("p2", -80.9, 41.8),
       ("p3", -81.1, 42.2))
     val hmet = Map("t2m" -> "Dry Bulb Temperature", "u100" -> "Wind Speed")
-    def load() = LakeAdapter.load(spark, "grid", Seq("t2m", "u100"),
-      Some(BBox(-82.9, 41.6, -80.2, 42.4)), Some(("2019-01-31 00:00:00", "2019-02-01 23:00:00")))
+    val box = BBox(-82.9, 41.6, -80.2, 42.4)
+    val window = ("2019-01-31 00:00:00", "2019-02-01 23:00:00")
+    def load(b: BBox = box, w: (String, String) = window) =
+      LakeAdapter.load(spark, "grid", Seq("t2m", "u100"), Some(b), Some(w))
     def coarse(g: GridDataset) =
       TemporalResample.downsample(SpatialResample.bilinear(g, 2.0, 2.0), "6 hours", "mean")
-    def request(i: Int): Array[String] = {
-      val c = coarse(load())
-      TableSink.write(PointExtract.pointsToTable(c, stations, "t2m"), s"$dir/out/req=$i.parquet")
+    def request(i: Int, b: BBox = box, w: (String, String) = window,
+                pts: Seq[(String, Double, Double)] = stations): Array[String] = {
+      val c = coarse(load(b, w))
+      TableSink.write(PointExtract.pointsToTable(c, pts, "t2m"), s"$dir/out/req=$i.parquet")
       Gssha.wesRows(c, hmet, roundTo = Some(4)).select("line").collect().map(_.getString(0))
     }
     // each shuffle exchange outside a broadcast, top-down: "time" for a
@@ -356,9 +360,9 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
       ("cubicSpline", SpatialResample.cubicSpline(g, 2.0, 2.0).df, Seq("time")),
       ("lanczos", SpatialResample.lanczos(g, 2.0, 2.0).df, Seq("time")),
       ("bilinear -> downsample", coarse(g).df, Seq("hash", "time")),
-      // the pivot aggregates by (time, point_id), then by time
+      // the wide table is one aggregate keyed by time
       ("pointsToTable", PointExtract.pointsToTable(coarse(g), stations, "t2m"),
-        Seq("time", "hash", "hash", "time")),
+        Seq("time", "hash", "time")),
       ("wesRows", Gssha.wesRows(coarse(g), hmet), Seq("time", "hash", "time")))
     for ((name, df, want) <- budget)
       assert(exchanges(df) == want, s"$name: exchanges ${exchanges(df)}, want $want")
@@ -372,6 +376,21 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     assert(second.length == 8 && second.toSeq == first.toSeq)
     assert(jobs == 4, s"warm request ran $jobs jobs")
     assert(spark.read.parquet(s"$dir/out/req=1.parquet").inputFiles.length == 1)
+    // a second warm request over another bbox, window and station set
+    // compiles 5 classes: the scan stage of the table write and of the
+    // WES collect (their crop filters stay literals for pushdown), each
+    // once on the driver and once in a task, since the codegen cache is
+    // keyed by class loader; and the station filter, which Catalyst folds
+    // into the local target relation with a compiled predicate. Every
+    // other stage (taps, join and aggregates, downsample, point table,
+    // WES lines) reuses the classes the request above compiled.
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val other = request(2, BBox(-83.2, 41.4, -81.0, 42.2),
+      ("2019-01-30 06:00:00", "2019-01-31 11:00:00"),
+      Seq(("q0", -82.7, 41.6), ("q1", -81.9, 41.8), ("q2", -81.3, 42.0), ("q3", -82.2, 42.1)))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(other.length == 5 && spark.read.parquet(s"$dir/out/req=2.parquet").count() == 5)
+    assert(compiles == 5, s"second warm request compiled $compiles classes")
   }
 
   test("lake axis catalog: jittered and 0.1-degree axes stay None and crop like the fallback") {

@@ -209,6 +209,9 @@ class OperatorsSpec extends SparkSpec {
       .orderBy("time").select("t2m").collect().map(_.getDouble(0))
     val got = tbl.orderBy("time").select("p0").collect().map(_.getDouble(0))
     assert(got.toSeq == expect.toSeq)
+    // no points, no table: rejected up front like bilinearPoints
+    val e = intercept[IllegalArgumentException](PointExtract.pointsToTable(grid, Seq.empty, "t2m"))
+    assert(e.getMessage.contains("need at least one point"))
   }
 
   test("two points snapping to the same cell each get a column") {
