@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are materialized through the `noop`
@@ -141,24 +141,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup, plus one tiny parquet read (5 rows) so the
-    // vectorized-reader classes are loaded before the first timed query
-    spark.range(1000000L).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // warm the io-probe path itself: the probes certify BOX health, so
-    // their own cold start must not read as drift — an unwarmed io0
-    // ran 3-4x the family median every sweep (cold file cache + footer
-    // parse) and false-flagged every early-position query whose first
-    // run carried JIT
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .selectExpr("sum(length(text))").collect()
+    val spark = LocalSession(cpus.toInt)
+    warmUp(spark, sfDir)
     // SPARK_GRAFT_ONLY restricts the run (the EnvFilter contract
     // shared with Verify; unknown names fail fast); unset = the
     // driver's full sweep
@@ -179,20 +163,6 @@ object Bench {
     // which positions to discount. Both runs do full work (noop sink,
     // cache cleared between runs — only OS page cache persists, which
     // a warm cluster has too).
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // operators that persist() intermediates register them in the
-      // CacheManager keyed by canonicalized plan — run 2 of the same
-      // query would silently reuse run 1's cache and underreport; it
-      // also stops cached relations accumulating across the sweep
-      spark.catalog.clearCache()
-      dt
-    }
     // TWO calibration probe families ride the sweep (VERDICT r8 #2):
     // posN is pure compute (certifies against JVM/GC aging and CPU
     // steal), ioN scans a fixed parquet file end to end (footer +
@@ -252,8 +222,8 @@ object Bench {
       if (i % 16 == 0) calibrate(i)
       if (i % 32 == 16) System.gc()
       i += 1
-      val r1 = once(name, fn)
-      val r2 = once(name, fn)
+      val r1 = once(spark, sfDir, name, fn)
+      val r2 = once(spark, sfDir, name, fn)
       runPairs += (name -> (r1, r2))
       name -> math.min(r1, r2)
     }
@@ -355,5 +325,41 @@ object Bench {
     println(fullLine)
     println(prefix + kept.mkString(",") + suffix)
     spark.stop()
+  }
+
+  /** The session warm-up a sweep starts with: JVM/codegen warmup, plus
+    * one tiny parquet read (5 rows) so the vectorized-reader classes are
+    * loaded before the first timed query.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id * 2)").collect()
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+    // warm the io-probe path itself: the probes certify BOX health, so
+    // their own cold start must not read as drift — an unwarmed io0
+    // ran 3-4x the family median every sweep (cold file cache + footer
+    // parse) and false-flagged every early-position query whose first
+    // run carried JIT
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .selectExpr("sum(length(text))").collect()
+  }
+
+  /** One timed run of query `name`: its construction and a `noop`-sink
+    * write of its result, in seconds. A failure is reported and timed,
+    * never thrown.
+    */
+  private[graft] def once(spark: SparkSession, sfDir: String, name: String,
+                           fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+    }
+    val dt = (System.nanoTime() - t0) / 1e9
+    // operators that persist() intermediates register them in the
+    // CacheManager keyed by canonicalized plan — run 2 of the same
+    // query would silently reuse run 1's cache and underreport; it
+    // also stops cached relations accumulating across the sweep
+    spark.catalog.clearCache()
+    dt
   }
 }

@@ -39,13 +39,7 @@ object GsshaDemo {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/gssha_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(4)
     val files = run(spark, outDir)
     println(s"\nGSSHA inputs written under $outDir:")
     files.foreach(f => println(s"  $f"))

@@ -69,13 +69,7 @@ object TakedownDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/takedown_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(4)
     val summary = run(spark, sfDir, outDir)
     println(s"\ntakedown summary ($sfDir -> $outDir):")
     summary.toSeq.sortBy(_._1).foreach { case (k, v) => println(f"  $k%-26s $v") }

@@ -193,11 +193,7 @@ object TextAnalysis {
   def bpeTrain(docs: DataFrame,
                numMerges: Int): (Seq[(String, String, Long)], DataFrame) = {
     require(numMerges >= 1 && numMerges <= 65536)
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    var cur = ckpt(docs
+    var cur = Iterate.checkpointed(docs
       .select(explode(filter(split(col("text"), " "), w => w =!= lit(""))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wcount"))
       .withColumn("syms",
@@ -220,7 +216,8 @@ object TextAnalysis {
       else {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((l, r, c))
-        cur = ckpt(cur.withColumn("syms", applyBpeMerge(col("syms"), l, r)))
+        cur = Iterate.checkpointed(
+          cur.withColumn("syms", applyBpeMerge(col("syms"), l, r)))
       }
     }
     (merges.toSeq, cur)

@@ -2,7 +2,7 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Test access to the listener bus, which is private to the `spark`
+/** Access to the listener bus, which is private to the `spark`
   * package: a listener read after [[drain]] has seen every event posted
   * so far.
   */

@@ -5203,20 +5203,9 @@ class OpsSpec extends SparkSpec {
     // runs under WindowGroupLimit. The result is the assignment's
     // materialized checkpoint, so the plan is read off the last
     // checkpoint execution of the call.
-    val ckpts = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit =
-        if (f.toLowerCase.contains("checkpoint")) ckpts.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      graft.ops.Clustering.kMeans(emb, 4, 1)
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    val plan = ckpts.toArray.last.toString
+    val (_, rec) = graft.tools.Profile.record(spark)(graft.ops.Clustering.kMeans(emb, 4, 1))
+    val plan = rec.executions.filter(_.action.toLowerCase.contains("checkpoint"))
+      .last.qe.executedPlan.toString
     assert(plan.contains("Broadcast"), "centroids must broadcast")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"))
     assert(plan.contains("WindowGroupLimit"), "argmin must prune per task")

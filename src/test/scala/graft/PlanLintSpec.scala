@@ -10,7 +10,10 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
   * top item): the per-round manual plan audits, turned into a spec
   * that fails the build if a future query ships a scale-killer plan.
   *
-  * Lints, on the pre-AQE physical plan (subqueries included):
+  * Lints, on the pre-AQE physical plan (planned subqueries included) of the
+  * query each entry returns and of every SQL execution the entry runs
+  * while building it (the iterative operators' round checkpoints and
+  * probes):
   *   - `CartesianProductExec` — never acceptable outside the declared
   *     audit allowlist;
   *   - `BroadcastNestedLoopJoinExec` whose build side is NOT provably
@@ -60,8 +63,17 @@ class PlanLintSpec extends SparkSpec {
     case _ => false
   }
 
+  /** `plan`'s nodes and those of its planned subqueries. A subquery a
+    * pre-preparation plan still holds in logical form (a runtime
+    * filter's bloom aggregate) is not walked.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+    p +: (p.children ++ p.expressions.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.ExecSubqueryExpression => s.plan
+    })).flatMap(nodes)
+
   private def violations(plan: SparkPlan): Seq[String] =
-    plan.collectWithSubqueries {
+    nodes(plan).collect {
       case c: CartesianProductExec => Seq(s"CartesianProduct")
       case b: BroadcastNestedLoopJoinExec =>
         // a BNLJ is bounded when EITHER side is provably metadata-sized:
@@ -118,6 +130,15 @@ class PlanLintSpec extends SparkSpec {
       ("contamination scan broadcasts the eval set by declaration " +
         "(benchmark-sized; an eval too big to broadcast is a near-dup " +
         "problem, per the operator scaladoc)"),
+    // kMeans runs its rounds inside the call, so these two entries
+    // price round plans the lint reads off the call's executions
+    "n126_kmeans" ->
+      ("kMeans assignment crossJoins the codes with broadcast(cents), the " +
+        "k-row centroid table (the round state, k = 4 here); the build " +
+        "side is a checkpoint scan the walk cannot prove tiny"),
+    "n132_cluster_profile" ->
+      ("clusterProfile runs kMeans (k = 4): the same k-row centroid " +
+        "broadcast crossJoin as n126 in every round"),
     "n79_hll_overlap" ->
       ("register-algebra pairwise joins are sketch-sized by construction " +
         "(sources^2 x 2^p register rows, never corpus rows)"),
@@ -142,6 +163,9 @@ class PlanLintSpec extends SparkSpec {
       ("greedy-prefix window over the score-histogram level relation " +
         "(histogram-threshold decomposition — the operator exists to " +
         "avoid the corpus-wide ORDER BY)"),
+    "n170_card_render" ->
+      ("cardFromState's cumulative bin window runs over the card state's " +
+        "tok_bin rows, at most `bins` (256) after the state's groupBy"),
     "q53_skyline" ->
       ("running max over the distinct-price LEVEL relation; the " +
         "Skyline scaladoc documents the range-partitioned two-phase " +
@@ -152,8 +176,11 @@ class PlanLintSpec extends SparkSpec {
     val stale = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val vs =
-        try violations(fn(spark, sf).queryExecution.sparkPlan)
-        catch { case e: Throwable =>
+        try {
+          val (df, rec) = graft.tools.Profile.record(spark)(fn(spark, sf))
+          (violations(df.queryExecution.sparkPlan) ++ rec.executions.flatMap(e =>
+            violations(e.qe.sparkPlan).map(v => s"$v in ${e.action}"))).distinct
+        } catch { case e: Throwable =>
           bad += s"$name: failed to plan: ${e.getMessage}"; Seq.empty
         }
       if (vs.nonEmpty && !allow.contains(name))

@@ -1,0 +1,53 @@
+package graft
+
+import java.io.{ByteArrayOutputStream, PrintStream}
+
+import graft.tools.Profile
+
+/** The profiling tool's three modes on one sf0.001 query, run against
+  * the shared test session: each leaves the session running, and
+  * `dump` counts the jobs [[SparkSpec.countingJobs]] counts for the
+  * same run.
+  */
+class ProfileSpec extends SparkSpec {
+  private val q = "n89_domain_pagerank"
+
+  private def profile(mode: String, names: String*): String = {
+    val buf = new ByteArrayOutputStream
+    Profile.run(spark, sf, mode, names, new PrintStream(buf, true, "UTF-8"))
+    assert(!spark.sparkContext.isStopped, s"$mode stopped the shared session")
+    buf.toString("UTF-8")
+  }
+
+  test("Profile dump: countingJobs' job count, the job list, the result's rows and hash, scan counts") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val savedAqe = spark.conf.getOption(aqe)
+    val text = profile("dump", q)
+    assert(spark.conf.getOption(aqe) == savedAqe, "dump must restore the AQE setting")
+    val jobs = s"(?m)^== $q: (\\d+) jobs ==$$".r.findFirstMatchIn(text)
+      .map(_.group(1).toInt)
+    val (_, counted) = countingJobs(Bench.once(spark, sf, q, SparkEntry.queries(q)))
+    assert(jobs.contains(counted), s"dump job count $jobs, countingJobs $counted")
+    assert("(?m)^job +\\d+: stages=[1-9]\\d* tasks=[1-9]\\d* site=\\S".r
+      .findAllIn(text).size == counted)
+    val rows = SparkEntry.queries(q)(spark, sf).count()
+    assert(rows > 0)
+    assert(s"(?m)^result: $rows rows, sha256 of sorted rows [0-9a-f]{16}$$".r
+      .findFirstIn(text).isDefined)
+    assert("(?m)^---- execution \\d+: .*, [1-9]\\d* scans ----$".r
+      .findFirstIn(text).isDefined, "no execution reports a scan")
+    assert(text.contains("== Physical Plan ==") && text.contains("---- metrics ----"))
+    assert(!text.contains(sf), "the test-data directory is written as <testdata>")
+  }
+
+  test("Profile stages and explain leave the session running; unknown modes and names fail") {
+    val st = profile("stages", q, q)
+    assert(st.contains(s"[stages] $q run=1 ") && st.contains(s"[stages] $q run=2 "))
+    assert("(?m)^ +\\d+\\.\\d+ s \\(deser=".r.findFirstIn(st).isDefined,
+      "no per-stage table")
+    val ex = profile("explain", q)
+    assert(ex.contains(s"========== $q ==========") && ex.contains("== Physical Plan =="))
+    intercept[IllegalArgumentException](profile("bogus", q))
+    intercept[IllegalArgumentException](profile("dump", "no_such_query"))
+  }
+}

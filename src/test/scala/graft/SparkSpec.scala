@@ -1,21 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per forked test JVM). */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession(4)
+    // specs log at ERROR: the expected-failure specs would fill the
+    // test output with their warnings
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -31,30 +24,14 @@ trait SparkSpec extends AnyFunSuite {
     * session's AQE setting is restored afterwards.
     */
   def countingJobs[T](body: => T): (T, Int) = withoutAqe {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (r, rec) = graft.tools.Profile.record(spark)(body)
+    (r, rec.jobs.size)
   }
 
   /** `body` run with AQE off, as the benchmark runs (a plan built inside
     * shows its exchanges as planned); the session's setting is restored.
     */
-  def withoutAqe[T](body: => T): T = {
-    val aqe = "spark.sql.adaptive.enabled"
-    val savedAqe = spark.conf.getOption(aqe)
-    spark.conf.set(aqe, "false")
-    try body
-    finally savedAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-  }
+  def withoutAqe[T](body: => T): T = graft.tools.Profile.withoutAqe(spark)(body)
 
   /** The incremental operators' precondition: a slice reuses no corpus id. */
   def disjointIds(corpus: DataFrame, slice: DataFrame, id: String): Boolean =
