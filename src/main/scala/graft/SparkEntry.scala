@@ -1901,7 +1901,9 @@ object SparkEntry {
     }),
 
     "g10_spatial_bilinear_x2" -> ((s, _) => {
-      // 2x bilinear spatial regrid via generated-mapping join (X1)
+      // 2x bilinear spatial regrid via generated-mapping join (X1); the
+      // crop exchange is planned once and read by every action over the
+      // regrid, which cuts the plan there: crop before regridding
       val g = SyntheticGrid.grid(s).selectVariables(Seq("t2m"))
       SpatialResample.bilinear(g, fy = 2.0, fx = 2.0).df
         .withColumn("t2m", round(col("t2m"), 6))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SharedPlan
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.model.{AxisSpec, GridDataset, GridMeta}
@@ -34,6 +35,15 @@ import graft.model.{AxisSpec, GridDataset, GridMeta}
   * once, hash-partitioned on time, before the join; the groupBy keyed
   * by output cell runs inside those partitions, so the shuffle is
   * linear in input size and the plan survives 100x scale-up.
+  *
+  * That crop exchange is also where the plan is cut: it is planned once
+  * per regrid ([[org.apache.spark.sql.graft.SharedPlan]]), and every
+  * action over the regrid or anything derived from it (a point table, a
+  * WES render) reads its one shuffle output, so a request's sinks scan
+  * and exchange the crop once between them. Nothing above the cut
+  * reaches the scan any more, so crop before regridding, in the
+  * reference's order: a bbox, time window or variable selection written
+  * after the regrid filters the regridded rows, not the Parquet read.
   */
 object SpatialResample {
 
@@ -234,12 +244,20 @@ object SpatialResample {
     * aggregate is shuffled again. Each task holds whole timesteps — the
     * unit the reference chunks by — and a request runs at most
     * min(timesteps, shuffle partitions) tasks after the exchange.
+    *
+    * The exchanged crop is a [[org.apache.spark.sql.graft.SharedPlan]]:
+    * planned here, with no job run, and read as the same shuffle by
+    * every later action, so the second sink of a request skips the scan
+    * and exchange stage. It declares the exchange's hash partitioning,
+    * so the join and aggregate above plan exactly as before. Filters and
+    * column pruning written after the regrid stay above the cut; a
+    * point table's station filter still folds into the tap relation.
     */
   private def tapRegrid(g: GridDataset, xa: AxisSpec, ya: AxisSpec, xt: AxisSpec,
                         yt: AxisSpec, taps: DataFrame): GridDataset = {
     val aggs = g.variables.map(v => sum(col(v) * col("w")).as(v))
-    val out = withIndexes(g, xa, ya)
-      .repartition(col(g.meta.timeDim))
+    val crop = SharedPlan(withIndexes(g, xa, ya).repartition(col(g.meta.timeDim)))
+    val out = crop
       .join(broadcast(taps), Seq("jy", "jx"))
       .groupBy(col(g.meta.timeDim), col("y2"), col("x2"))
       .agg(aggs.head, aggs.tail: _*)

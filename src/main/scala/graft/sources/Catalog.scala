@@ -67,13 +67,9 @@ object SyntheticEra5Adapter extends SourceAdapter {
   * the loaded grid feeds [[graft.operators.SpatialResample]] as is. A
   * non-uniform axis stays None and takes the crop's fallback.
   *
-  * The catalog holds one entry per dataset path: the schema Parquet
-  * inferred and the axes, keyed by the leaf-file listing (path, length,
-  * modification time) of the read. A load reads with the cached schema,
-  * so an unchanged lake runs no job at all (neither schema inference nor
-  * axis derivation); when the listing differs, the load re-reads with
-  * inference and derives the axes again, at the cost of a second file
-  * listing.
+  * The catalog is a [[SchemaCatalog]] that keeps the axes beside each
+  * dataset path's schema, so an unchanged lake runs no job at all
+  * (neither schema inference nor axis derivation).
   */
 object LakeAdapter extends SourceAdapter {
   val name = "ParquetLake"
@@ -85,21 +81,8 @@ object LakeAdapter extends SourceAdapter {
   }
   def supportedVariables(dataset: String): Seq[String] = Seq.empty // schema-on-read
 
-  private type Fingerprint = Seq[(String, Long, Long)]
   private type Axes = (Option[AxisSpec], Option[AxisSpec])
-  private final case class Entry(version: Fingerprint, schema: StructType, axes: Axes)
-  private val catalog = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
-
-  /** The leaf files the relation's file index listed when the scan was
-    * resolved, or None for an index that keeps no listing.
-    */
-  private def version(df: DataFrame): Option[Fingerprint] =
-    df.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
-    }.collect { case idx: PartitioningAwareFileIndex =>
-      idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-        .sortBy(_._1)
-    }
+  private val catalog = new SchemaCatalog[Axes]
 
   private def axes(g: GridDataset): Axes = {
     val coordsAreDoubles = Seq(g.meta.xDim, g.meta.yDim).forall(c =>
@@ -115,18 +98,9 @@ object LakeAdapter extends SourceAdapter {
     * listing matches its entry, else inferred and derived afresh.
     */
   private def read(spark: SparkSession, path: String, dataset: String): GridDataset = {
-    def withAxes(df: DataFrame, a: Axes) =
-      GridDataset(df, GridMeta(datasetName = dataset, xAxis = a._1, yAxis = a._2))
-    val cached = Option(catalog.get(path)).flatMap { e =>
-      val df = spark.read.schema(e.schema).parquet(path)
-      if (version(df).contains(e.version)) Some(withAxes(df, e.axes)) else None
-    }
-    cached.getOrElse {
-      val df = spark.read.parquet(path)
-      val a = axes(GridDataset(df, GridMeta(datasetName = dataset)))
-      version(df).foreach(v => catalog.put(path, Entry(v, df.schema, a)))
-      withAxes(df, a)
-    }
+    val (df, (x, y)) = catalog.read(spark, path)(df =>
+      axes(GridDataset(df, GridMeta(datasetName = dataset))))
+    GridDataset(df, GridMeta(datasetName = dataset, xAxis = x, yAxis = y))
   }
 
   def load(spark: SparkSession, dataset: String, variables: Seq[String],
@@ -141,13 +115,63 @@ object LakeAdapter extends SourceAdapter {
   }
 }
 
+/** Parquet reads that infer a path's schema once per version of its
+  * files. Each entry holds the schema Parquet inferred and a value
+  * derived from that read (the lake's axes), keyed by the leaf-file
+  * listing (path, length, modification time) the read resolved. A read
+  * while the listing matches uses the kept schema and runs no
+  * schema-inference job; when it differs, the path is read again with
+  * inference and the value derived afresh, at the cost of a second file
+  * listing. A path whose index keeps no listing is never kept.
+  */
+final class SchemaCatalog[A] {
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private final case class Entry(version: Fingerprint, schema: StructType, value: A)
+  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  /** The leaf files the relation's file index listed when the scan was
+    * resolved, or None for an index that keeps no listing.
+    */
+  private def version(df: DataFrame): Option[Fingerprint] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.collect { case idx: PartitioningAwareFileIndex =>
+      idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+    }
+
+  /** `path` read as Parquet, and the value `derive` gave for this
+    * version of its files.
+    */
+  def read(spark: SparkSession, path: String)(derive: DataFrame => A): (DataFrame, A) = {
+    val cached = Option(entries.get(path)).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      if (version(df).contains(e.version)) Some((df, e.value)) else None
+    }
+    cached.getOrElse {
+      val df = spark.read.parquet(path)
+      val value = derive(df)
+      version(df).foreach(v => entries.put(path, Entry(v, df.schema, value)))
+      (df, value)
+    }
+  }
+}
+
 /** TPC-H-ish driver-fixture tables (TESTDATA.md). */
 object Tables {
   val names = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+  private val catalog = new SchemaCatalog[Unit]
+
+  /** Table `name`, read with the schema [[SchemaCatalog]] keeps for its
+    * path, so only the first read of a table version infers it.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    catalog.read(spark, path)(_ => ())._1
 
   /** `events.ts` normalized to session-zoned TIMESTAMP whatever the
     * fixture's physical layout: TIMESTAMP(NANOS) (early driver
@@ -164,7 +188,7 @@ object Tables {
     import org.apache.spark.sql.functions.{expr, timestamp_micros, col}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -8,10 +8,12 @@ import scala.collection.mutable
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{DataSourceScanExec, FormattedMode, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{DataSourceScanExec, ExplainUtils, FormattedMode, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.graft.SharedPlan
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Bench, EnvFilter, LocalSession, SparkEntry}
@@ -36,9 +38,11 @@ import graft.{Bench, EnvFilter, LocalSession, SparkEntry}
 object Profile {
 
   /** A job as planned at its start: stage and task counts, and the call
-    * site of its last stage.
+    * site of its last stage; and how many of those stages, and of their
+    * tasks, it skipped because their shuffle output was already written.
     */
-  final case class Job(id: Int, stages: Int, tasks: Int, site: String)
+  final case class Job(id: Int, stages: Int, tasks: Int, site: String,
+                       skippedStages: Int = 0, skippedTasks: Int = 0)
   final case class Stage(name: String, tasks: Int, taskMs: Long,
                          deserMs: Long, runMs: Long, gcMs: Long)
   final case class Execution(action: String, qe: QueryExecution)
@@ -52,15 +56,18 @@ object Profile {
     */
   def record[T](spark: SparkSession)(body: => T): (T, Record) = {
     val sc = spark.sparkContext
-    val jobs = mutable.ArrayBuffer.empty[Job]
+    val jobs = mutable.ArrayBuffer.empty[(Job, Seq[StageInfo])]
+    val submitted = mutable.Set.empty[Int]
     val stages = mutable.ArrayBuffer.empty[Stage]
     val execs = mutable.ArrayBuffer.empty[Execution]
     val taskSums = mutable.Map.empty[(Int, Int), Array[Long]]
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += Job(e.jobId, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum,
-          e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))
+        jobs += ((Job(e.jobId, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum,
+          e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name)), e.stageInfos))
       }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        jobs.synchronized { submitted += e.stageInfo.stageId }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskInfo != null && e.taskMetrics != null) stages.synchronized {
           val m = e.taskMetrics
@@ -86,7 +93,11 @@ object Profile {
     try {
       val r = body
       ListenerBus.drain(sc)
-      (r, Record(jobs.synchronized(jobs.sortBy(_.id).toSeq),
+      val ran = jobs.synchronized(jobs.sortBy(_._1.id).toSeq.map { case (j, infos) =>
+        val skipped = infos.filterNot(i => submitted(i.stageId))
+        j.copy(skippedStages = skipped.size, skippedTasks = skipped.map(_.numTasks).sum)
+      })
+      (r, Record(ran,
         stages.synchronized(stages.toSeq), execs.synchronized(execs.toSeq)))
     } finally {
       sc.removeSparkListener(counter)
@@ -127,8 +138,9 @@ object Profile {
     require(unknown.isEmpty, s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
     if (mode == "explain") names.foreach { n =>
       out.println(s"\n========== $n ==========")
-      out.println(SparkEntry.queries(n)(spark, sfDir).queryExecution
-        .explainString(FormattedMode))
+      val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      out.println(qe.explainString(FormattedMode))
+      sharedIn(qe.executedPlan).foreach(p => out.println(sharedExplain(p)))
     } else {
       Bench.warmUp(spark, sfDir)
       if (mode == "dump") withoutAqe(spark)(names.foreach(dump(spark, sfDir, _, out)))
@@ -152,24 +164,34 @@ object Profile {
     out.println(s"""# $name at ${new File(sfDir).getName}, written by graft.tools.Profile dump.
       |# ${spark.sparkContext.master}, $parts shuffle partitions, AQE off (the benchmark's conf).
       |# Every job the query started from its construction through one noop-sink run
-      |# (Bench's run), in order: stages and tasks as planned at job start, and the call
-      |# site of its last stage. Then the result's row count and the hash of its sorted rows
-      |# (one more, uncounted collect). Then every SQL execution in order: its node, Exchange
-      |# and data-source scan counts (subqueries and cached relations included), its executed
-      |# plan (expression ids stripped) and each node's nonzero row and time metrics.
+      |# (Bench's run), in order: stages and tasks as planned at job start, the call site
+      |# of its last stage, and the stages it skipped (shuffle output already written).
+      |# Then the result's row count and the hash of its sorted rows (one more, uncounted
+      |# collect). Then every SQL execution in order: its node, Exchange and data-source
+      |# scan counts (subqueries, cached relations and shared sub-plans included; a shared
+      |# sub-plan is counted and shown once, after the first execution that reads it), its
+      |# executed plan (expression ids stripped) and each node's nonzero row and time metrics.
       |# <testdata> is the test-data directory.
       |
       |== $name: ${rec.jobs.size} jobs ==""".stripMargin)
     rec.jobs.zipWithIndex.foreach { case (j, i) =>
-      out.println(f"job ${i + 1}%2d: stages=${j.stages} tasks=${j.tasks} site=${j.site}")
+      val skipped = if (j.skippedStages == 0) ""
+        else s" skipped: ${j.skippedStages} stages, ${j.skippedTasks} tasks"
+      out.println(f"job ${i + 1}%2d: stages=${j.stages} tasks=${j.tasks} site=${j.site}$skipped")
     }
     out.println(s"result: ${rows.length} rows, sha256 of sorted rows ${sha.take(16)}")
-    val walked = rec.executions.map(e => (e, nodes(e.qe.executedPlan)))
+    val shared = mutable.ArrayBuffer.empty[SparkPlan]
+    val walked = rec.executions.map { e =>
+      val before = shared.size
+      val ns = nodes(e.qe.executedPlan, shared)
+      (e, ns, shared.drop(before).toSeq)
+    }
     out.println(s"\n== executed plans: ${walked.size} SQL executions, " +
       counts(walked.flatMap(_._2.map(_._2))) + " ==")
-    walked.zipWithIndex.foreach { case ((e, ns), i) =>
+    walked.zipWithIndex.foreach { case ((e, ns, firstRead), i) =>
       out.println(s"---- execution ${i + 1}: ${e.action}: ${counts(ns.map(_._2))} ----")
       out.println(clean(e.qe.explainString(FormattedMode)))
+      firstRead.foreach(p => out.println(clean(sharedExplain(p))))
       out.println("---- metrics ----")
       ns.foreach { case (depth, p) =>
         val ms = metrics(p)
@@ -180,26 +202,48 @@ object Profile {
 
   /** Every node of `plan` with its depth, as the formatted plan shows
     * them (whole-stage codegen wrappers skipped): children, subqueries,
-    * and the plan inside each cached relation, once per relation.
+    * the plan inside each cached relation, once per relation, and the
+    * planned sub-plan of each [[SharedPlan]] relation not in `shared`
+    * yet (added), so a sub-plan every action reads is walked once.
     */
-  private def nodes(plan: SparkPlan): Seq[(Int, SparkPlan)] = {
+  private[graft] def nodes(plan: SparkPlan,
+                           shared: mutable.ArrayBuffer[SparkPlan]): Seq[(Int, SparkPlan)] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     def walk(p: SparkPlan, depth: Int): Seq[(Int, SparkPlan)] = p match {
       case _: WholeStageCodegenExec | _: InputAdapter => p.children.flatMap(walk(_, depth))
       case _ =>
-        val cached = p match {
+        val inner = p match {
           case im: InMemoryTableScanExec
               if seen.add(im.relation.cacheBuilder.cachedPlan) =>
             Seq(im.relation.cacheBuilder.cachedPlan)
-          case _ => Nil
+          case _ =>
+            val first = SharedPlan.subPlan(p).filterNot(sp => shared.exists(_ eq sp)).toSeq
+            shared ++= first
+            first
         }
-        (depth, p) +: (p.children ++ p.subqueries ++ cached).flatMap(walk(_, depth + 1))
+        (depth, p) +: (p.children ++ p.subqueries ++ inner).flatMap(walk(_, depth + 1))
     }
     walk(plan, 0)
   }
 
-  private def counts(ps: Seq[SparkPlan]): String = {
+  /** The planned sub-plans of the [[SharedPlan]] relations an unexecuted
+    * `plan` reads, inside an adaptive plan's initial plan too.
+    */
+  private def sharedIn(plan: SparkPlan): Seq[SparkPlan] = plan.flatMap {
+    case a: AdaptiveSparkPlanExec => sharedIn(a.executedPlan)
+    case p => SharedPlan.subPlan(p).toSeq
+  }.distinct
+
+  /** A shared sub-plan in the formatted-explain layout, numbered apart. */
+  private def sharedExplain(p: SparkPlan): String = {
+    val sb = new StringBuilder
+    ExplainUtils.processPlan[SparkPlan](p, s => sb.append(s))
+    "---- shared sub-plan (planned once; its stages run in the first action " +
+      "that reads it, later actions skip them) ----\n" + sb.toString
+  }
+
+  private[graft] def counts(ps: Seq[SparkPlan]): String = {
     val scans = ps.count {
       case _: DataSourceScanExec | _: BatchScanExec => true
       case _ => false

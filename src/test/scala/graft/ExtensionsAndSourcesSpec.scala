@@ -316,6 +316,7 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.graft.SharedPlan
     import graft.operators.{Gssha, PointExtract, TemporalResample}
     // the benchmark's request shape on a small day-partitioned lake
     val dir = Files.createTempDirectory("lake").toString
@@ -337,8 +338,9 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
       TableSink.write(PointExtract.pointsToTable(c, pts, "t2m"), s"$dir/out/req=$i.parquet")
       Gssha.wesRows(c, hmet, roundTo = Some(4)).select("line").collect().map(_.getString(0))
     }
-    // each shuffle exchange outside a broadcast, top-down: "time" for a
-    // hash partitioning on time alone, else its kind
+    // each shuffle exchange outside a broadcast, top-down, through the
+    // planned sub-plan of a shared relation: "time" for a hash
+    // partitioning on time alone, else its kind
     def exchanges(df: DataFrame): Seq[String] = {
       def walk(p: SparkPlan): Seq[String] = p match {
         case _: BroadcastExchangeExec => Nil
@@ -349,7 +351,7 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
             case _: RangePartitioning => "range"
             case other => other.getClass.getSimpleName
           }) +: walk(e.child)
-        case other => other.children.flatMap(walk)
+        case other => SharedPlan.subPlan(other).fold(other.children.flatMap(walk))(walk)
       }
       withoutAqe(walk(df.queryExecution.executedPlan))
     }
@@ -366,20 +368,34 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
       ("wesRows", Gssha.wesRows(coarse(g), hmet), Seq("time", "hash", "time")))
     for ((name, df, want) <- budget)
       assert(exchanges(df) == want, s"$name: exchanges ${exchanges(df)}, want $want")
-    // the bilinear plan's broadcast side shuffles nothing either
+    // the bilinear plan's broadcast side shuffles nothing either: its one
+    // shuffle is the crop exchange, planned inside the shared relation
     val bilinearPlan = withoutAqe(SpatialResample.bilinear(g, 2.0, 2.0).df.queryExecution.executedPlan)
-    assert(bilinearPlan.collect { case e: ShuffleExchangeExec => e }.size == 1)
+    val shared = bilinearPlan.flatMap(SharedPlan.subPlan)
+    assert(shared.size == 1)
+    assert((bilinearPlan +: shared).flatMap(_.collect { case e: ShuffleExchangeExec => e }).size == 1)
+    // building a regrid plans the crop exchange but runs nothing, with
+    // AQE on (the session's default) and off
+    val (_, aqeOn) = graft.tools.Profile.record(spark)(SpatialResample.bilinear(g, 2.0, 2.0))
+    val (_, aqeOff) = countingJobs(SpatialResample.bilinear(g, 2.0, 2.0))
+    assert(aqeOn.jobs.isEmpty && aqeOff == 0, s"bilinear ran ${aqeOn.jobs.size} / $aqeOff jobs")
     // a warm request: no load job, one broadcast job and one result job
-    // for the table write and again for the WES collect
+    // for the table write and again for the WES collect, whose crop
+    // stage is skipped (the table write wrote its shuffle output); no
+    // RDD is left persisted
     val first = request(0)
-    val (second, jobs) = countingJobs(request(1))
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val (second, rec) = withoutAqe(graft.tools.Profile.record(spark)(request(1)))
     assert(second.length == 8 && second.toSeq == first.toSeq)
-    assert(jobs == 4, s"warm request ran $jobs jobs")
+    assert(rec.jobs.size == 4, s"warm request ran ${rec.jobs.size} jobs")
+    assert(rec.jobs.map(_.skippedStages) == Seq(0, 0, 0, 1), s"skipped stages: ${rec.jobs}")
+    assert(rec.jobs.last.site.startsWith("collect"), rec.jobs.last.site)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == held)
     assert(spark.read.parquet(s"$dir/out/req=1.parquet").inputFiles.length == 1)
     // a second warm request over another bbox, window and station set
-    // compiles 5 classes: the scan stage of the table write and of the
-    // WES collect (their crop filters stay literals for pushdown), each
-    // once on the driver and once in a task, since the codegen cache is
+    // compiles 3 classes: the one scan stage of the shared crop (its crop
+    // filters stay literals for pushdown), once on the driver when the
+    // regrid plans it and once in a task, since the codegen cache is
     // keyed by class loader; and the station filter, which Catalyst folds
     // into the local target relation with a compiled predicate. Every
     // other stage (taps, join and aggregates, downsample, point table,
@@ -390,7 +406,7 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
       Seq(("q0", -82.7, 41.6), ("q1", -81.9, 41.8), ("q2", -81.3, 42.0), ("q3", -82.2, 42.1)))
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
     assert(other.length == 5 && spark.read.parquet(s"$dir/out/req=2.parquet").count() == 5)
-    assert(compiles == 5, s"second warm request compiled $compiles classes")
+    assert(compiles == 3, s"second warm request compiled $compiles classes")
   }
 
   test("lake axis catalog: jittered and 0.1-degree axes stay None and crop like the fallback") {

@@ -22,6 +22,9 @@ class ProfileSpec extends SparkSpec {
   test("Profile dump: countingJobs' job count, the job list, the result's rows and hash, scan counts") {
     val aqe = "spark.sql.adaptive.enabled"
     val savedAqe = spark.conf.getOption(aqe)
+    // read the query's tables once, so the dump and the countingJobs run
+    // below both find their schemas in the table catalog
+    SparkEntry.queries(q)(spark, sf)
     val text = profile("dump", q)
     assert(spark.conf.getOption(aqe) == savedAqe, "dump must restore the AQE setting")
     val jobs = s"(?m)^== $q: (\\d+) jobs ==$$".r.findFirstMatchIn(text)
@@ -49,5 +52,29 @@ class ProfileSpec extends SparkSpec {
     assert(ex.contains(s"========== $q ==========") && ex.contains("== Physical Plan =="))
     intercept[IllegalArgumentException](profile("bogus", q))
     intercept[IllegalArgumentException](profile("dump", "no_such_query"))
+  }
+
+  test("Profile dump and explain show a regrid's shared crop once, its scan and exchange counted") {
+    val g10 = "g10_spatial_bilinear_x2"
+    val header = "---- shared sub-plan"
+    def shownOnce(text: String) = {
+      assert(text.split(header, -1).length == 2, "the shared crop is shown once")
+      val shared = text.substring(text.indexOf(header))
+      assert(shared.contains("Exchange") && shared.contains("hashpartitioning(time"))
+    }
+    val dump = profile("dump", g10)
+    shownOnce(dump)
+    // the tap broadcast, the crop exchange and the ordering's range exchange
+    assert("(?m)^---- execution 1: .*, 3 exchanges, .*".r.findFirstIn(dump).isDefined)
+    shownOnce(profile("explain", g10))
+    // over a Parquet grid, the crop's scan counts among the plan's scans
+    val dir = java.nio.file.Files.createTempDirectory("grid").toString
+    graft.sources.SyntheticGrid.df(spark).write.parquet(s"$dir/grid")
+    val g = graft.model.GridDataset(spark.read.parquet(s"$dir/grid"),
+      graft.sources.SyntheticGrid.meta).selectVariables(Seq("t2m"))
+    val plan = withoutAqe(graft.operators.SpatialResample.bilinear(g, 2.0, 2.0).df
+      .queryExecution.executedPlan)
+    val walked = Profile.nodes(plan, scala.collection.mutable.ArrayBuffer.empty).map(_._2)
+    assert(Profile.counts(walked).endsWith(", 2 exchanges, 1 scans"), Profile.counts(walked))
   }
 }

@@ -160,4 +160,42 @@ class SpatialResampleSpec extends SparkSpec {
       abs(col("t2m") - col("x")) > lit(1e-9)).count()
     assert(bad == 0)
   }
+
+  test("shared crop: grid query rows are invariant under AQE and shuffle partitions") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.graft.{SharedPlan, StreamingIntrospect}
+    val regrids = Seq("g10_spatial_bilinear_x2", "g21_spatial_cubic_x2",
+      "g27_spatial_lanczos_x2", "g29_spatial_cubicspline_x2")
+    val queries = regrids ++ Seq("g05_points_table", "g09_spatial_nearest_x2",
+      "g15_gage_render", "g16_wes_render", "g22_flagship_pipeline")
+    def sha(rows: Seq[String]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.sorted.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // per query: the hash of its rows, and the shared relations its
+    // executed plan reads as (declared partitions, partitions of the RDD)
+    def run(aqe: String, partitions: String): Map[String, (String, Seq[(Int, Int)])] = {
+      val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      val saved = keys.map(spark.conf.getOption)
+      keys.zip(Seq(aqe, partitions)).foreach { case (k, v) => spark.conf.set(k, v) }
+      try (queries.map(q => q -> SparkEntry.queries(q)(spark, sf)) :+
+          ("entry" -> SparkEntry.entry(spark))).map { case (q, df) =>
+        val rows = df.collect().map(_.toString).toSeq
+        val scans = StreamingIntrospect.allPlanTrees(df.queryExecution.executedPlan)
+          .flatMap(_.collect { case s: RDDScanExec if SharedPlan.subPlan(s).isDefined =>
+            (s.outputPartitioning.numPartitions, s.rdd.getNumPartitions) })
+        q -> (sha(rows), scans)
+      }.toMap
+      finally keys.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val runs = Seq(("false", "4"), ("true", "4"), ("false", "7")).map { case (aqe, n) =>
+      (s"AQE $aqe, $n partitions", n.toInt, run(aqe, n))
+    }
+    val (_, _, base) = runs.head
+    for ((conf, n, r) <- runs; q <- queries :+ "entry") {
+      assert(r(q)._1 == base(q)._1, s"$q: rows differ under $conf")
+      val scans = r(q)._2
+      assert(scans.forall { case (declared, rdd) => declared == n && rdd == n },
+        s"$q under $conf: shared scans $scans")
+      assert(scans.size == (if (regrids.contains(q)) 1 else 0), s"$q under $conf: shared scans $scans")
+    }
+  }
 }
