@@ -86,6 +86,285 @@ object SparkEntry {
       | UNION ALL SELECT vec_id, embedding FROM planted),
       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM allv)""".stripMargin
 
+  /** n49's exact crawl-slice fixture as (existing, incoming): the
+    * published corpus is the even doc_ids, the slice the odd ones plus
+    * planted copies — three existing texts re-id'd (+2000001, which
+    * the cross-corpus anti-join must drop) and one within-slice copy
+    * of doc 1 (2000007, which the slice-local dedup must drop). Shared
+    * by n49/n64/n74; SQL twin [[exactSliceCtes]].
+    */
+  private def exactSlice(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = t(s, dir, "documents")
+    val existing = base.filter(col("doc_id") % 2 === 0)
+    val incoming = base.filter(col("doc_id") % 2 === 1)
+      .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
+        .withColumn("doc_id", col("doc_id") + 2000001L))
+      .unionAll(base.filter(col("doc_id") === 1L)
+        .withColumn("doc_id", lit(2000007L)))
+    (existing, incoming)
+  }
+
+  private def exactSliceCtes(carried: String): String =
+    s"""existing AS (
+       | SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
+       |incoming AS (
+       | SELECT doc_id, text, $carried FROM documents WHERE doc_id % 2 = 1
+       | UNION ALL SELECT doc_id + 2000001, text, $carried
+       |   FROM documents WHERE doc_id IN (0, 2, 4)
+       | UNION ALL SELECT 2000007, text, $carried
+       |   FROM documents WHERE doc_id = 1)""".stripMargin
+
+  /** n49's oracle: the slice deduped within (lowest id per text), then
+    * anti-joined on the corpus texts. */
+  private val exactSliceDedupSql: String =
+    s"""WITH ${exactSliceCtes("n_chars")},
+       |deduped AS (
+       | SELECT doc_id, text, n_chars FROM incoming
+       | QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1)
+       |SELECT doc_id, n_chars FROM deduped
+       |WHERE text NOT IN (SELECT text FROM existing)
+       |ORDER BY doc_id""".stripMargin
+
+  /** n150's near-dup crawl-slice fixture as (existing, incoming): the
+    * corpus is doc_id < 250, the slice the rest plus MUTATED copies
+    * (short appended tails: high Jaccard, different digest, so n49's
+    * exact path cannot catch them) of corpus docs 0/2/4 at +3000000
+    * and of slice mate 251 at 3000007. Ids keep the ingest-order
+    * invariant (old < 250 <= new). Shared by n150/n153/n154/n157/n162;
+    * SQL twin [[neardupSliceCte]].
+    */
+  private def neardupSlice(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = t(s, dir, "documents")
+    val existing = base.filter(col("doc_id") < 250)
+    val incoming = base.filter(col("doc_id") >= 250)
+      .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
+        .withColumn("doc_id", col("doc_id") + 3000000L)
+        .withColumn("text", concat(col("text"), lit(" tail bit"))))
+      // doc_id stays a COLUMN (251 + 2999756 = 3000007): a lit() id
+      // would fold the semi-join keys on this branch into constants
+      // and degrade every downstream id join to a nested loop —
+      // PlanLintSpec caught exactly that
+      .unionAll(base.filter(col("doc_id") === 251L)
+        .withColumn("doc_id", col("doc_id") + 2999756L)
+        .withColumn("text", concat(col("text"), lit(" x"))))
+    (existing, incoming)
+  }
+
+  private def neardupSliceCte(carried: String = "n_chars", corpusWhere: String = "",
+                              mateId: String = "3000007"): String =
+    s"""u AS (
+       | SELECT doc_id, text, $carried FROM documents$corpusWhere
+       | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', $carried
+       |   FROM documents WHERE doc_id IN (0, 2, 4)
+       | UNION ALL SELECT $mateId, text || ' x', $carried
+       |   FROM documents WHERE doc_id = 251)""".stripMargin
+
+  /** n150's oracle: batch minhash banding over the corpus ∪ slice
+    * union, survivors = slice rows that are no banded+verified pair's
+    * doc_id_b. `corpusWhere` cuts retracted docs from the corpus side
+    * (n154).
+    */
+  private def neardupSurvivorsSql(corpusWhere: String = ""): String =
+    s"""WITH ${neardupSliceCte(corpusWhere = corpusWhere)},
+       |p AS (SELECT doc_id_b FROM (${minhashOracleSql(k = 5, numHashes = 64,
+         bands = 16, threshold = 0.5, src = "u")}))
+       |SELECT doc_id, n_chars FROM u
+       |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id_b FROM p)
+       |ORDER BY doc_id""".stripMargin
+
+  /** n155's ExactSubstr fixture as (base, planted): doc 0's text
+    * shifted by a prefix word (4000001) and doc 1's extended past the
+    * chunk grid by a suffix tail (4000002). Plant ids stay COLUMNS
+    * (the n150 lit() lesson). Shared by n155/n164; the oracle twin is
+    * [[exactSubstrOracleSql]].
+    */
+  private def substrPlants(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = t(s, dir, "documents").select("doc_id", "text")
+    val planted = base.filter(col("doc_id") === 0L)
+      .select((col("doc_id") + 4000001L).as("doc_id"),
+        concat(lit("zyxprefix "), col("text")).as("text"))
+      .unionAll(base.filter(col("doc_id") === 1L)
+        .select((col("doc_id") + 4000002L).as("doc_id"),
+          concat(col("text"), lit(" zyxsuffix trailing words appended"))
+            .as("text")))
+    (base, planted)
+  }
+
+  /** ExactSubstr replay of [[substrPlants]] on gram STRINGS: word
+    * 8-grams anchored at every position, keep-first by (doc_id, pos),
+    * every later occurrence's 8-word span excised; `sliceOnly`
+    * restricts the output to the planted slice (n164).
+    */
+  private def exactSubstrOracleSql(sliceOnly: Boolean): String = {
+    val keptWhere = if (sliceOnly) " WHERE doc_id >= 4000000\n" else " "
+    s"""WITH u AS (
+       | SELECT doc_id, text FROM documents
+       | UNION ALL SELECT doc_id + 4000001, 'zyxprefix ' || text
+       |   FROM documents WHERE doc_id = 0
+       | UNION ALL SELECT doc_id + 4000002,
+       |   text || ' zyxsuffix trailing words appended'
+       |   FROM documents WHERE doc_id = 1),
+       |toks AS (SELECT doc_id,
+       |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
+       | FROM u),
+       |w AS (SELECT doc_id, len(ws) AS n_tokens, s.pos AS pos, s.word AS word
+       |  FROM (SELECT doc_id, ws,
+       |    unnest(list_transform(generate_series(1, len(ws)),
+       |      j -> {'pos': j, 'word': ws[j]})) AS s
+       |   FROM toks WHERE len(ws) > 0)),
+       |occ AS (SELECT doc_id, o.pos AS pos, o.g AS g
+       |  FROM (SELECT doc_id,
+       |    unnest(list_transform(generate_series(1, len(ws) - 7),
+       |      j -> {'pos': j, 'g': array_to_string(ws[j:j+7], ' ')})) AS o
+       |   FROM toks WHERE len(ws) >= 8)),
+       |ranked AS (SELECT doc_id, pos,
+       |   row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn,
+       |   count(*) OVER (PARTITION BY g) AS cnt FROM occ),
+       |dup AS (SELECT doc_id, pos FROM ranked WHERE cnt >= 2 AND rn >= 2),
+       |taint AS (SELECT DISTINCT w.doc_id, w.pos FROM w
+       |  JOIN dup d ON w.doc_id = d.doc_id AND w.pos BETWEEN d.pos AND d.pos + 7),
+       |kept AS (SELECT w.* FROM w ANTI JOIN taint USING (doc_id, pos))
+       |SELECT doc_id, CAST(any_value(n_tokens) AS BIGINT) AS n_tokens,
+       |  CAST(count(*) AS BIGINT) AS n_tokens_kept,
+       |  md5(string_agg(word, ' ' ORDER BY pos)) AS text_md5
+       |FROM kept${keptWhere}GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  }
+
+  /** Adjacent distinct-word pairs (src, dst) of every `text` in `docs`
+    * split on single spaces — the word-successor graph of n76/n97/n107
+    * and the graph family. SQL twin: [[wordPairsCtes]] over `w(ws)`.
+    */
+  private def wordPairs(docs: DataFrame): DataFrame =
+    docs.select(filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
+      .filter(size(col("ws")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(1, size(ws) - 1), " +
+          "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
+      .select(col("p.a").as("src"), col("p.b").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  private val wordPairsCtes: String =
+    """w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
+      |p AS (SELECT ws[i] AS a, ws[i+1] AS b
+      |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
+      |      WHERE ws[i] <> ws[i+1])""".stripMargin
+
+  /** documents ∪ planted (doc_id, text) rows (lang en, source planted,
+    * n_chars 0). */
+  private def withPlanted(s: SparkSession, dir: String,
+                          planted: (Long, String)*): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").unionByName(planted
+      .map { case (id, text) => (id, text, "en", "planted", 0L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars"))
+  }
+
+  /** n141's planted diameter-249 chain (doc_id -> doc_id + 1 below
+    * 249), welded to the simhash near-dup graph as the high-diameter
+    * connected-components fixture of n141/n165/n166. */
+  private def docChain(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") < 249)
+      .select(col("doc_id").as("doc_id_a"), (col("doc_id") + 1).as("doc_id_b"))
+
+  /** n105's quote-sweep corpus: documents plus one planted doc holding
+    * a four-word quote twice; [[quotePhrases]] are the swept quotes
+    * (two natural, the planted one). Shared by n105/n173. */
+  private def phraseDocs(s: SparkSession, dir: String): DataFrame =
+    withPlanted(s, dir,
+      9500002L -> "alpha beta gamma delta filler words alpha beta gamma delta")
+
+  private val quotePhrases = Seq(
+    "bench1" -> Seq("slow", "hash", "batch"),
+    "bench2" -> Seq("stream", "table", "hash"),
+    "planted" -> Seq("alpha", "beta", "gamma", "delta"))
+
+  /** n107's k-core cascade fixture (see [[kcoreHubText]]). */
+  private def kcoreDocs(s: SparkSession, dir: String): DataFrame =
+    withPlanted(s, dir, 9700001L -> kcoreHubText, 9700002L -> "spoke hub")
+
+  /** n136's DIRECTED successor-word graph `(src, dst, wt)` over the
+    * corpus plus a planted sink word (zzdangletail, never followed),
+    * shared by the dangling-mass rankers n136/n142/n143. SQL twin:
+    * [[danglingGraphCtes]].
+    */
+  private def danglingEdges(s: SparkSession, dir: String): DataFrame =
+    wordPairs(withPlanted(s, dir, 9990001L -> "zzdanglehead zzdangletail"))
+      .groupBy("src", "dst").agg(count(lit(1)).as("wt"))
+
+  private val danglingGraphCtes: String =
+    s"""WITH d AS (SELECT text FROM documents
+       | UNION ALL SELECT 'zzdanglehead zzdangletail'),
+       |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
+       |      FROM d),
+       |$wordPairsCtes,
+       |e AS (SELECT a AS src, b AS dst, CAST(count(*) AS BIGINT) AS wt
+       |      FROM p GROUP BY 1, 2)""".stripMargin
+
+  /** Three unrolled integer PageRank rounds over [[danglingGraphCtes]]
+    * with the sink words' mass re-entering each round (n136, n142):
+    * `setupCtes` defines `nn`, `dang` (the sinks) and the initial
+    * ranks `r0`; round k sums the sinks' rank (dx), the weighted
+    * in-flow (c) and builds `r$k` by `update(k)`. Emits the top 25
+    * (word, rank, rk). */
+  private def danglingRankOracleSql(setupCtes: String,
+                                    update: Int => String): String = {
+    val steps = (1 to 3).map { k =>
+      s"""dx$k AS (SELECT CAST(coalesce(sum(r.rank), 0) AS BIGINT) AS dsum
+         | FROM dang JOIN r${k - 1} r USING (word)),
+         |c$k AS (SELECT ed.dst AS word,
+         |  CAST(sum((r${k - 1}.rank * ed.wt) // ed.wdeg) AS BIGINT) AS csum
+         | FROM ed JOIN r${k - 1} ON ed.src = r${k - 1}.word GROUP BY 1),
+         |${update(k)}""".stripMargin
+    }.mkString(",\n")
+    s"""$danglingGraphCtes,
+       |deg AS (SELECT src, CAST(sum(wt) AS BIGINT) AS wdeg FROM e GROUP BY 1),
+       |ed AS (SELECT e.src, e.dst, e.wt, deg.wdeg FROM e JOIN deg USING (src)),
+       |nodes AS (SELECT src AS word FROM e UNION SELECT dst FROM e),
+       |$setupCtes,
+       |$steps
+       |SELECT word, CAST(rank AS BIGINT) AS rank,
+       | CAST(row_number() OVER (ORDER BY rank DESC, word) AS BIGINT) AS rk
+       |FROM r3 ORDER BY rank DESC, word LIMIT 25""".stripMargin
+  }
+
+  /** The top 25 words of a ranked (node, `score`) relation, with their
+    * 1-based rank `rk` (score DESC, word). */
+  private def top25Words(ranked: DataFrame, score: String): DataFrame =
+    ranked.orderBy(col(score).desc, col("word")).limit(25)
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col(score).desc, col("word"))).cast("long"))
+
+  /** A top-k neighbor relation as (query_id, vec_id, cos, rnk), the
+    * column shape of [[bruteForceTopKSql]]. */
+  private def knnRows(topK: DataFrame): DataFrame =
+    topK.select(col("query_id"), col("vec_id"),
+        round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
+      .orderBy("query_id", "rnk")
+
+  /** Exhaustive cosine top-`k` oracle: each `queries` vector against
+    * `corpus` (embeddings, or the survivors of `survivors`) minus the
+    * rows `where` excludes, ranked (cos DESC, vec_id). Every exact or
+    * full-probe search equals it: n08, the IVF/IVF-PQ full probes and
+    * their append/retract lifecycles, and n137's hard negatives.
+    */
+  private def bruteForceTopKSql(k: Int = 10, queries: String = "vec_id < 5",
+      survivors: Option[String] = None,
+      where: String = " WHERE e.vec_id <> q.query_id"): String = {
+    val surv = survivors.fold("")(w =>
+      s"surv AS (SELECT * FROM embeddings\n         WHERE $w),\n")
+    val corpus = if (survivors.isDefined) "surv" else "embeddings"
+    s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
+       |           FROM embeddings WHERE $queries),
+       |${surv}scored AS (
+       | SELECT q.query_id, e.vec_id,
+       |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
+       |  row_number() OVER (PARTITION BY q.query_id
+       |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
+       | FROM $corpus e, q$where)
+       |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
+       |FROM scored WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+  }
+
   /** Flagship: the reference's signature pipeline (SURVEY.md §3.1+§3.2)
     * — load a grid dataset via the accessor registry, crop to AOI and
     * time range, extract a points-to-wide time-series table. 73 rows.
@@ -227,6 +506,37 @@ object SparkEntry {
        |    list_transform(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
        |      tok -> ${fnvSql("tok")}) AS hl
        |   FROM documents)))""".stripMargin
+  // the simhash near-dup pairs at hamming <= 6 as p(u, v), u < v,
+  // opening a WITH RECURSIVE for the closures below
+  private def simhashPairsSql: String =
+    s"""WITH RECURSIVE $simhashCte,
+       |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
+       |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6)""".stripMargin
+  // transitive closure over a symmetric edge relation e(u, v): every
+  // (node, reachable node) pair — algorithm-independent, so it gates
+  // every connected-components variant against one definition
+  private val reachCte: String =
+    """reach(u, v) AS (
+      |  SELECT u, v FROM e
+      |  UNION
+      |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)""".stripMargin
+  // components of the simhash pairs plus `edgeCtes` (ending in e(u, v)):
+  // cluster id = min over a node and everything it reaches
+  private def componentsSql(edgeCtes: String): String =
+    s"""$simhashPairsSql,
+       |$edgeCtes,
+       |$reachCte
+       |SELECT u AS doc_id, CAST(least(u, min(v)) AS BIGINT) AS cluster_id
+       |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin
+  // n141's planted diameter-249 chain welded to the simhash pairs as
+  // pp(u, v) (SQL twin of docChain)
+  private val chainPairsCtes: String =
+    """ch AS (SELECT doc_id AS u, doc_id + 1 AS v FROM documents
+      |       WHERE doc_id < 249),
+      |pp AS (SELECT u, v FROM p UNION SELECT u, v FROM ch)""".stripMargin
+  private def chainComponentsSql: String = componentsSql(
+    s"$chainPairsCtes,\ne AS (SELECT u, v FROM pp UNION SELECT v, u FROM pp)")
+
   // unsigned rendering of a signed long for HUGEINT literals
   private def uns(l: Long): java.math.BigInteger =
     if (l >= 0) java.math.BigInteger.valueOf(l)
@@ -582,6 +892,111 @@ object SparkEntry {
     }.filter(t => math.abs(t._3) > 1e-12)
   }
 
+  /** n22's contamination replay CTEs: distinct word 5-grams of the
+    * eval suite (the 10% md5-hash sample) as `eg(gram)` and of the
+    * train rest (narrowed by `trainWhere`) as `tg(doc_id, gram)`. */
+  private def contaminationCtes(trainWhere: String = ""): String = {
+    val thr = graft.ops.Sampling.hexThreshold(0.1)
+    val grams = """list_distinct(list_transform(
+      | generate_series(1, len(ws) - 4),
+      | i -> array_to_string(ws[i:i+4], ' ')))""".stripMargin.replace("\n", "")
+    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |tg AS (SELECT doc_id, unnest($grams) AS gram FROM w
+       |       WHERE NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')$trainWhere),
+       |eg AS (SELECT DISTINCT unnest($grams) AS gram FROM w
+       |       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')""".stripMargin
+  }
+
+  /** Per train doc: its 5-gram count, how many the eval suite shares,
+    * and the shared fraction. */
+  private def contaminationSql(trainWhere: String = ""): String =
+    s"""${contaminationCtes(trainWhere)}
+       |SELECT tg.doc_id, count(*) AS n_grams, count(eg.gram) AS n_shared,
+       | CAST(count(eg.gram) AS DOUBLE) / count(*) AS contamination
+       |FROM tg LEFT JOIN eg ON tg.gram = eg.gram
+       |GROUP BY tg.doc_id ORDER BY tg.doc_id""".stripMargin
+
+  /** The upsample queries' source: the grid cropped to upBox as
+    * `src(time, y, x, t2m)`. */
+  private val upBoxSrcSql: String =
+    s"""WITH $grid,
+       |src AS (SELECT time, y, x, t2m FROM grid
+       |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
+       |          AND y BETWEEN ${upBox.south} AND ${upBox.north})""".stripMargin
+
+  /** The g07/g08/g14/g31 upsample replay head: the upBox cells on the
+    * 30-minute time axis, missing steps as NULL rows of
+    * `g(time, y, x, t2m)`. */
+  private val upsampleGapsSql: String =
+    s"""$upBoxSrcSql,
+       |times AS (SELECT generate_series AS time FROM generate_series(
+       |  TIMESTAMP '2019-01-30 00:00:00', TIMESTAMP '2019-02-02 00:00:00', INTERVAL 30 MINUTE)),
+       |cells AS (SELECT DISTINCT y, x FROM src),
+       |g AS (SELECT t.time, c.y, c.x, s.t2m
+       |      FROM times t CROSS JOIN cells c
+       |      LEFT JOIN src s ON s.time = t.time AND s.y = c.y AND s.x = c.x)""".stripMargin
+
+  /** [[upsampleGapsSql]] plus `f`: each row's previous (pv, pt) and
+    * next (nv, nt) observed value and time, for the linear and
+    * nearest fills. */
+  private val upsampleNeighborsSql: String =
+    s"""$upsampleGapsSql,
+       |f AS (SELECT time, y, x, t2m,
+       |  last_value(t2m IGNORE NULLS) OVER w AS pv,
+       |  last_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w AS pt,
+       |  first_value(t2m IGNORE NULLS) OVER w2 AS nv,
+       |  first_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w2 AS nt
+       | FROM g WINDOW
+       |  w AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+       |  w2 AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))""".stripMargin
+
+  /** The x2 regrid replay head: target cell ids `tgt(jy2, jx2)` and an
+    * unterminated `m` select of their centers (y2, x2), which each
+    * kernel completes with its source-index columns. */
+  private val x2TargetSql: String =
+    s"""WITH $grid,
+       |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
+       |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
+       |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
+       |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,""".stripMargin
+
+  /** [[x2TargetSql]] with `m` completed by the fractional source
+    * coordinates (gx, gy) the interpolating kernels tap around. */
+  private val x2FractionalSql: String =
+    s"""$x2TargetSql
+       |  (${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} AS gx,
+       |  (${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} AS gy
+       | FROM tgt)""".stripMargin
+
+  /** The interpolating regrids' weighted tap sum over
+    * `corners(y2, x2, jy, jx, w)`; `nudge` is added before rounding. */
+  private def x2CornerSum(nudge: String = ""): String =
+    s"""SELECT g.time, CAST(c.y2 AS DOUBLE) AS y, CAST(c.x2 AS DOUBLE) AS x, round(sum(g.t2m * c.w)$nudge, 6) AS t2m
+       |FROM grid g JOIN corners c ON g.jy = c.jy AND g.jx = c.jx
+       |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+
+  /** The 4x4-tap separable regrids (g21 cubic convolution, g29 cubic
+    * B-spline): `kern(d)` is the 1-D weight of a tap at distance d. */
+  private def x2FourTapSql(kern: String => String, nudge: String = ""): String = {
+    val weight = s"(${kern("gx - (floor(gx) + kx)")}) * (${kern("gy - (floor(gy) + ky)")})"
+    s"""$x2FractionalSql,
+       |taps AS (SELECT a.ky, b.kx
+       |         FROM (VALUES (-1),(0),(1),(2)) a(ky), (VALUES (-1),(0),(1),(2)) b(kx)),
+       |${x2TapSum(weight, "m, taps", nudge)}""".stripMargin
+  }
+
+  /** The tap regrids' (g21/g27/g29) `corners`: each target cell's
+    * `taps(ky, kx)` source indices clamped to the grid, weighted by
+    * `weight` over `from`, then the [[x2CornerSum]]. */
+  private def x2TapSum(weight: String, from: String, nudge: String = ""): String =
+    s"""corners AS (
+       | SELECT y2, x2,
+       |  least(greatest(CAST(floor(gy) + ky AS BIGINT), 0), ${ya.n - 1}) AS jy,
+       |  least(greatest(CAST(floor(gx) + kx AS BIGINT), 0), ${xa.n - 1}) AS jx,
+       |  $weight AS w
+       | FROM $from)
+       |${x2CornerSum(nudge)}""".stripMargin
+
   private def splineOracleSql(weights: Seq[(Int, Int, Double)],
                               nudge: Boolean = false): String = {
     val epoch0 = java.time.LocalDateTime.parse("2019-01-30T00:00:00")
@@ -590,10 +1005,7 @@ object SparkEntry {
       s"($qi, $j, ${dlit(w)})"
     }.mkString(",\n  ")
     val v = if (nudge) "sum(wt * t2m) + 1e-9" else "sum(wt * t2m)"
-    s"""WITH $grid,
-       |src AS (SELECT time, y, x, t2m FROM grid
-       |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
-       |          AND y BETWEEN ${upBox.south} AND ${upBox.north}),
+    s"""$upBoxSrcSql,
        |knots AS (SELECT y, x,
        |  CAST((epoch(time) - $epoch0) / 3600 AS BIGINT) AS j, t2m FROM src),
        |w(qi, j, wt) AS (VALUES
@@ -636,12 +1048,9 @@ object SparkEntry {
 
   private def textRankOracleSql(iters: Int, topK: Int): String =
     pageRankOracleSql(
-      """w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
+      s"""w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
         |       FROM documents),
-        |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-        |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-        |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-        |      WHERE ws[i] <> ws[i+1]),
+        |$wordPairsCtes,
         |und AS (SELECT a AS src, b AS dst FROM p
         |        UNION ALL SELECT b, a FROM p),
         |e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS wt
@@ -672,10 +1081,7 @@ object SparkEntry {
        |     UNION ALL SELECT 'zzb0 zzb1 zzb2 zzb0'),
        |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
        |           FROM d),
-       |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-       |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-       |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-       |      WHERE ws[i] <> ws[i+1]),
+       |$wordPairsCtes,
        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM p),
        |sym AS (SELECT u AS src, v AS dst FROM und
        |        UNION ALL SELECT v, u FROM und),
@@ -683,6 +1089,16 @@ object SparkEntry {
        |$steps
        |SELECT node AS word, label FROM l$rounds ORDER BY word""".stripMargin
   }
+
+  /** The n45 int8 quantizer over `e(vec_id, v)`: per-vector scale
+    * max|x| / 127 as `s`, round-half-up codes as `c(carried, codes)`. */
+  private def int8CodesCtes(carried: String = "vec_id"): String =
+    s"""s AS (SELECT vec_id, v,
+       |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
+       |c AS (SELECT $carried,
+       |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
+       |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
+       |       END AS codes FROM s)""".stripMargin
 
   /** Unrolled integer-Lloyd replay: the n45 quantizer CTEs, then per
     * round an argmin assignment (squared-L2 in BIGINT, (dist, cluster)
@@ -717,12 +1133,7 @@ object SparkEntry {
          |        WHERE cluster NOT IN (SELECT cluster FROM m$r))""".stripMargin
     }.mkString(",\n")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |s AS (SELECT vec_id, v,
-       |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-       |c AS (SELECT vec_id,
-       |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-       |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-       |       END AS codes FROM s),
+       |${int8CodesCtes()},
        |c0 AS (SELECT CAST(rn - 1 AS INT) AS cluster, codes AS cent
        |       FROM (SELECT codes, row_number() OVER (ORDER BY vec_id) AS rn
        |             FROM c)
@@ -885,10 +1296,7 @@ object SparkEntry {
        | UNION ALL SELECT '$kcoreHubText'
        | UNION ALL SELECT 'spoke hub'),
        |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM d),
-       |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-       |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-       |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-       |      WHERE ws[i] <> ws[i+1]),
+       |$wordPairsCtes,
        |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM p),
        |e0 AS (SELECT u AS src, v AS dst FROM und UNION ALL SELECT v, u FROM und),
        |$roundCtes
@@ -946,6 +1354,34 @@ object SparkEntry {
        |FROM cand WHERE bit_count(xor(sha, shb)) <= 2
        |ORDER BY doc_id_a, doc_id_b""".stripMargin
 
+  /** The Artetxe-Schwenk RATIO margin over candidate pair cosines
+    * `s(src_id, dst_id, cos)`, shared by n140 (all pairs) and n151
+    * (LSH shortlist): neighborhood sums fold in rank order (list(cos
+    * ORDER BY rank) reduced sequentially = Spark's sorted collect_list
+    * fold) and the margin is one pinned expression, so margins replay
+    * bit-for-bit. */
+  private val marginRankSql: String =
+    """r AS (SELECT *,
+      |      row_number() OVER (PARTITION BY src_id ORDER BY cos DESC, dst_id) AS rkx,
+      |      row_number() OVER (PARTITION BY dst_id ORDER BY cos DESC, src_id) AS rky
+      |      FROM s),
+      |sx AS (SELECT src_id,
+      |        list_reduce(list_prepend(0.0, list(cos ORDER BY rkx)),
+      |          (acc, c) -> acc + c) AS sumx
+      |       FROM r WHERE rkx <= 4 GROUP BY src_id),
+      |sy AS (SELECT dst_id,
+      |        list_reduce(list_prepend(0.0, list(cos ORDER BY rky)),
+      |          (acc, c) -> acc + c) AS sumy
+      |       FROM r WHERE rky <= 4 GROUP BY dst_id),
+      |m AS (SELECT r.src_id, r.dst_id, r.cos,
+      |       8.0 * r.cos / (sx.sumx + sy.sumy) AS margin
+      |      FROM r JOIN sx USING (src_id) JOIN sy USING (dst_id)
+      |      WHERE r.rkx <= 4)
+      |SELECT src_id, dst_id, round(cos, 6) AS cos, round(margin, 6) AS margin,
+      | CAST(row_number() OVER (PARTITION BY src_id
+      |   ORDER BY margin DESC, dst_id) AS BIGINT) AS mrank
+      |FROM m ORDER BY src_id, mrank""".stripMargin
+
   /** Unrolled greedy-MMR replay shared by n138 (full corpus) and n139
     * (exact top-`shortlist` candidates): step j scores candidate CTE
     * `s` with 0.75·simq − 0.25·greatest(cos to each prior pick) and
@@ -994,6 +1430,132 @@ object SparkEntry {
        |$out
        |ORDER BY rank""".stripMargin
   }
+
+  /** Definitional replay of the [[quotePhrases]] sweep over
+    * [[phraseDocs]] (consecutive-word equality per phrase, unioned);
+    * `docWhere` keeps the surviving docs (n173). */
+  private def quoteSweepOracleSql(docWhere: String = ""): String =
+    s"""WITH d AS (SELECT doc_id, text FROM documents$docWhere
+       | UNION ALL SELECT 9500002,
+       |  'alpha beta gamma delta filler words alpha beta gamma delta'),
+       |w AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+       |      FROM d),
+       |m AS (
+       | SELECT 'bench1' AS phrase_id, doc_id, i AS pos
+       |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
+       |  WHERE len(ws) >= 3 AND ws[i] = 'slow' AND ws[i+1] = 'hash' AND ws[i+2] = 'batch'
+       | UNION ALL
+       | SELECT 'bench2', doc_id, i
+       |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
+       |  WHERE len(ws) >= 3 AND ws[i] = 'stream' AND ws[i+1] = 'table' AND ws[i+2] = 'hash'
+       | UNION ALL
+       | SELECT 'planted', doc_id, i
+       |  FROM w, unnest(generate_series(1, len(ws) - 3)) AS t(i)
+       |  WHERE len(ws) >= 4 AND ws[i] = 'alpha' AND ws[i+1] = 'beta'
+       |    AND ws[i+2] = 'gamma' AND ws[i+3] = 'delta')
+       |SELECT phrase_id, doc_id, CAST(pos AS BIGINT) AS pos FROM m
+       |ORDER BY phrase_id, doc_id, pos""".stripMargin
+
+  /** SQL-surface queries whose Spark SQL is their DuckDB oracle
+    * verbatim: one text per query, run by both engines. */
+  private val portableSql: Map[String, String] = Map(
+    "q63_grouping_id" ->
+      """SELECT nullif(l_returnflag, 'N') AS rf, l_linestatus AS ls,
+        | CAST(grouping(nullif(l_returnflag, 'N')) AS BIGINT) AS g_rf,
+        | CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
+        | CAST(grouping(nullif(l_returnflag, 'N')) * 2
+        |   + grouping(l_linestatus) AS BIGINT) AS gid,
+        | CAST(count(*) AS BIGINT) AS n,
+        | round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem
+        |GROUP BY ROLLUP(nullif(l_returnflag, 'N'), l_linestatus)
+        |ORDER BY gid, rf NULLS FIRST, ls NULLS FIRST""".stripMargin,
+    "q52_not_in_nulls" ->
+      """WITH keys AS (SELECT CASE WHEN s_suppkey % 7 = 0 THEN NULL
+        |                     ELSE s_nationkey END AS k FROM supplier)
+        |SELECT 'not_in' AS variant, CAST(count(*) AS BIGINT) AS n
+        |FROM nation WHERE n_nationkey NOT IN (SELECT k FROM keys)
+        |UNION ALL
+        |SELECT 'not_exists', CAST(count(*) AS BIGINT)
+        |FROM nation WHERE NOT EXISTS (
+        |  SELECT 1 FROM keys WHERE keys.k = nation.n_nationkey)
+        |ORDER BY variant""".stripMargin,
+    "q49_limit_offset" ->
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin,
+    "q22_grouping_sets" ->
+      """SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+        |       coalesce(o_orderstatus, 'ALL') AS status,
+        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
+        |                        (o_orderpriority, o_orderstatus), ())
+        |ORDER BY priority, status""".stripMargin,
+    "q35_exists_surface" ->
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey
+        |                AND o.o_orderstatus = 'O')
+        |  AND NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey
+        |                    AND o.o_orderstatus = 'F'
+        |                    AND o.o_orderpriority = '1-URGENT')
+        |ORDER BY c_custkey""".stripMargin,
+    "q40_rank_stats" ->
+      """SELECT o_orderkey, o_orderpriority,
+        | round(percent_rank() OVER (PARTITION BY o_orderpriority
+        |   ORDER BY o_totalprice, o_orderkey), 6) AS pr,
+        | round(cume_dist() OVER (PARTITION BY o_orderpriority
+        |   ORDER BY o_totalprice, o_orderkey), 6) AS cd
+        |FROM orders
+        |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
+    "q37_lateral_join" ->
+      """SELECT c_custkey, c_name, o.n_orders, o.max_price
+        |FROM customer c,
+        |LATERAL (SELECT count(*) AS n_orders,
+        |                max(o_totalprice) AS max_price
+        |         FROM orders WHERE o_custkey = c_custkey) o
+        |WHERE o.n_orders >= 5
+        |ORDER BY c_custkey""".stripMargin,
+    "q34_scalar_subquery" ->
+      """SELECT o_orderkey, o_custkey,
+        |  round(o_totalprice / (SELECT max(o2.o_totalprice)
+        |                        FROM orders o2
+        |                        WHERE o2.o_custkey = o.o_custkey), 6)
+        |    AS price_share
+        |FROM orders o
+        |ORDER BY o_orderkey""".stripMargin,
+    "q59_time_range_frame" ->
+      """SELECT user_id, ts, event_id,
+        | CAST(count(*) OVER w AS BIGINT) AS n_events_1h,
+        | round(sum(value) OVER w, 6) AS sum_value_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, ts, event_id""".stripMargin,
+    "q58_regression" ->
+      """SELECT l_returnflag,
+        | CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n,
+        | round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
+        | round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
+        | round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
+        | round(corr(l_extendedprice, l_quantity), 6) AS corr_qty
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin,
+    "q43_nulls_order" ->
+      """SELECT o_orderkey,
+        | CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
+        |      ELSE o_totalprice END AS p
+        |FROM orders
+        |ORDER BY p DESC NULLS LAST, o_orderkey
+        |LIMIT 100""".stripMargin,
+    "q41_set_ops_all" ->
+      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
+        |INTERSECT ALL
+        |SELECT o_custkey FROM orders WHERE o_totalprice > 100000
+        |EXCEPT ALL
+        |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |ORDER BY o_custkey""".stripMargin)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
 
@@ -1100,15 +1662,7 @@ object SparkEntry {
       // standard, and a migration MUST know which one a query meant
       t(s, dir, "nation").createOrReplaceTempView("nation")
       t(s, dir, "supplier").createOrReplaceTempView("supplier")
-      s.sql("""WITH keys AS (SELECT CASE WHEN s_suppkey % 7 = 0 THEN NULL
-              |                     ELSE s_nationkey END AS k FROM supplier)
-              |SELECT 'not_in' AS variant, CAST(count(*) AS BIGINT) AS n
-              |FROM nation WHERE n_nationkey NOT IN (SELECT k FROM keys)
-              |UNION ALL
-              |SELECT 'not_exists', CAST(count(*) AS BIGINT)
-              |FROM nation WHERE NOT EXISTS (
-              |  SELECT 1 FROM keys WHERE keys.k = nation.n_nationkey)
-              |ORDER BY variant""".stripMargin)
+      s.sql(portableSql("q52_not_in_nulls"))
     }),
 
     "q64_union_by_name" -> ((s, dir) => {
@@ -1132,16 +1686,7 @@ object SparkEntry {
       // null-valued data row are indistinguishable — gid composes the
       // flags portably (2*g_rf + g_ls)
       t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql("""SELECT nullif(l_returnflag, 'N') AS rf, l_linestatus AS ls,
-              | CAST(grouping(nullif(l_returnflag, 'N')) AS BIGINT) AS g_rf,
-              | CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
-              | CAST(grouping(nullif(l_returnflag, 'N')) * 2
-              |   + grouping(l_linestatus) AS BIGINT) AS gid,
-              | CAST(count(*) AS BIGINT) AS n,
-              | round(sum(l_quantity), 2) AS sum_qty
-              |FROM lineitem
-              |GROUP BY ROLLUP(nullif(l_returnflag, 'N'), l_linestatus)
-              |ORDER BY gid, rf NULLS FIRST, ls NULLS FIRST""".stripMargin)
+      s.sql(portableSql("q63_grouping_id"))
     }),
 
     "q61_cohort_retention" -> ((s, dir) => {
@@ -1237,8 +1782,7 @@ object SparkEntry {
     "q49_limit_offset" -> ((s, dir) => {
       // pagination surface: LIMIT/OFFSET over a total order
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey, o_totalprice FROM orders
-              |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin)
+      s.sql(portableSql("q49_limit_offset"))
     }),
 
     "q31_pivot" -> ((s, dir) => {
@@ -1264,13 +1808,7 @@ object SparkEntry {
       // rewrite is what makes the surface usable at scale); max()
       // returns an input bit-for-bit, so the share division replays
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey, o_custkey,
-              |  round(o_totalprice / (SELECT max(o2.o_totalprice)
-              |                        FROM orders o2
-              |                        WHERE o2.o_custkey = o.o_custkey), 6)
-              |    AS price_share
-              |FROM orders o
-              |ORDER BY o_orderkey""".stripMargin)
+      s.sql(portableSql("q34_scalar_subquery"))
     }),
 
     "q35_exists_surface" -> ((s, dir) => {
@@ -1281,15 +1819,7 @@ object SparkEntry {
       // bloom-prunable shape (RuntimeFilterSpec)
       t(s, dir, "customer").createOrReplaceTempView("customer")
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT c_custkey, c_name FROM customer c
-              |WHERE EXISTS (SELECT 1 FROM orders o
-              |              WHERE o.o_custkey = c.c_custkey
-              |                AND o.o_orderstatus = 'O')
-              |  AND NOT EXISTS (SELECT 1 FROM orders o
-              |                  WHERE o.o_custkey = c.c_custkey
-              |                    AND o.o_orderstatus = 'F'
-              |                    AND o.o_orderpriority = '1-URGENT')
-              |ORDER BY c_custkey""".stripMargin)
+      s.sql(portableSql("q35_exists_surface"))
     }),
 
     "q36_posexplode" -> ((s, dir) => {
@@ -1314,13 +1844,7 @@ object SparkEntry {
       // through the multi-column LATERAL surface)
       t(s, dir, "customer").createOrReplaceTempView("customer")
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT c_custkey, c_name, o.n_orders, o.max_price
-              |FROM customer c,
-              |LATERAL (SELECT count(*) AS n_orders,
-              |                max(o_totalprice) AS max_price
-              |         FROM orders WHERE o_custkey = c_custkey) o
-              |WHERE o.n_orders >= 5
-              |ORDER BY c_custkey""".stripMargin)
+      s.sql(portableSql("q37_lateral_join"))
     }),
 
     "q38_filter_clause" -> ((s, dir) => {
@@ -1360,13 +1884,7 @@ object SparkEntry {
       // cross-engine. Partitioned by priority: a surface demo (the
       // scale path partitions by a high-cardinality key)
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey, o_orderpriority,
-              | round(percent_rank() OVER (PARTITION BY o_orderpriority
-              |   ORDER BY o_totalprice, o_orderkey), 6) AS pr,
-              | round(cume_dist() OVER (PARTITION BY o_orderpriority
-              |   ORDER BY o_totalprice, o_orderkey), 6) AS cd
-              |FROM orders
-              |ORDER BY o_orderpriority, o_orderkey""".stripMargin)
+      s.sql(portableSql("q40_rank_stats"))
     }),
 
     "q33_cube" -> ((s, dir) => {
@@ -1476,13 +1994,7 @@ object SparkEntry {
     "q22_grouping_sets" -> ((s, dir) => {
       // GROUPING SETS rollup of order statistics
       Seq("orders").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql("""SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-              |       coalesce(o_orderstatus, 'ALL') AS status,
-              |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
-              |FROM orders
-              |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
-              |                        (o_orderpriority, o_orderstatus), ())
-              |ORDER BY priority, status""".stripMargin)
+      s.sql(portableSql("q22_grouping_sets"))
     }),
 
     "q17_distinct_agg" -> ((s, dir) => {
@@ -2175,9 +2687,7 @@ object SparkEntry {
       // exact brute-force cosine top-k (guarded audit baseline)
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), 10)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n138_mmr_select" -> ((s, dir) => {
@@ -2261,9 +2771,7 @@ object SparkEntry {
       val positives = Seq((0L, 1L), (1L, 2L), (2L, 3L))
         .toDF("query_id", "pos_id")
       Similarity.hardNegatives(emb, queries, positives, k = 5)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n09_knn_lsh" -> ((s, dir) => {
@@ -2272,9 +2780,7 @@ object SparkEntry {
       // the candidate join, and the exact-cosine re-rank
       val emb = t(s, dir, "embeddings")
       Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5), 10, dim = 64)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n10_minhash_neardups" -> ((s, dir) => {
@@ -2380,13 +2886,7 @@ object SparkEntry {
       // crawl-yield report over n49's exact fixture: per source, how
       // much of the slice is new vs cross-corpus vs within-slice dup —
       // all-integer counts that partition the slice exactly
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") % 2 === 0)
-      val incoming = base.filter(col("doc_id") % 2 === 1)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 2000001L))
-        .unionAll(base.filter(col("doc_id") === 1L)
-          .withColumn("doc_id", lit(2000007L)))
+      val (existing, incoming) = exactSlice(s, dir)
       Dedup.sliceDiffReport(existing, incoming).orderBy("source")
     }),
 
@@ -2395,13 +2895,7 @@ object SparkEntry {
       // fixture — the result-equality law (bloom == plain anti-join)
       // is what the shared oracle proves; only might-contain rows
       // reach the shuffle join
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") % 2 === 0)
-      val incoming = base.filter(col("doc_id") % 2 === 1)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 2000001L))
-        .unionAll(base.filter(col("doc_id") === 1L)
-          .withColumn("doc_id", lit(2000007L)))
+      val (existing, incoming) = exactSlice(s, dir)
       Dedup.incrementalDedupBloom(
           existing.select(md5(col("text")).as("__digest")), incoming)
         .select("doc_id", "n_chars").orderBy("doc_id")
@@ -2415,13 +2909,7 @@ object SparkEntry {
       // doc 1, which the slice-local dedup must drop) — non-vacuous in
       // the n01 planting style: a bug either leaks a planted row in or
       // drops an original out
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") % 2 === 0)
-      val incoming = base.filter(col("doc_id") % 2 === 1)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 2000001L))
-        .unionAll(base.filter(col("doc_id") === 1L)
-          .withColumn("doc_id", lit(2000007L)))
+      val (existing, incoming) = exactSlice(s, dir)
       Dedup.incrementalDedup(existing, incoming)
         .select("doc_id", "n_chars").orderBy("doc_id")
     }),
@@ -2436,19 +2924,7 @@ object SparkEntry {
       // via the within-slice banding; genuinely new docs survive. Ids
       // keep the ingest-order invariant (old < 250 <= new), so the
       // oracle replays batch banding over the union and drops doc_id_b
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") < 250)
-      val incoming = base.filter(col("doc_id") >= 250)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 3000000L)
-          .withColumn("text", concat(col("text"), lit(" tail bit"))))
-        // doc_id stays a COLUMN (251 + 2999756 = 3000007): a lit() id
-        // would fold the semi-join keys on this branch into constants
-        // and degrade every downstream id join to a nested loop —
-        // PlanLintSpec caught exactly that
-        .unionAll(base.filter(col("doc_id") === 251L)
-          .withColumn("doc_id", col("doc_id") + 2999756L)
-          .withColumn("text", concat(col("text"), lit(" x"))))
+      val (existing, incoming) = neardupSlice(s, dir)
       val index = Dedup.minhashBandIndex(existing, k = 5, numHashes = 64,
         bands = 16)
       Dedup.incrementalMinhashDedup(index, existing, incoming,
@@ -2487,15 +2963,7 @@ object SparkEntry {
       // evidence), a lower-id slice mate (within), or is new; the
       // three buckets partition the slice and n_new matches the n150
       // survivor counts (spec laws). Same planted fixture as n150
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") < 250)
-      val incoming = base.filter(col("doc_id") >= 250)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 3000000L)
-          .withColumn("text", concat(col("text"), lit(" tail bit"))))
-        .unionAll(base.filter(col("doc_id") === 251L)
-          .withColumn("doc_id", col("doc_id") + 2999756L)
-          .withColumn("text", concat(col("text"), lit(" x"))))
+      val (existing, incoming) = neardupSlice(s, dir)
       val index = Dedup.minhashBandIndex(existing, k = 5, numHashes = 64,
         bands = 16)
       Dedup.minhashSliceDiffReport(index, existing, incoming,
@@ -2541,17 +3009,9 @@ object SparkEntry {
       // still drops via slice banding. Oracle: batch banding replayed
       // over corpus∖removed ∪ slice (retract-then-dedup ≡ rebuild
       // from corpus-minus-removed, the OpsSpec lifecycle law).
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") < 250)
+      val (existing, incoming) = neardupSlice(s, dir)
       val removed = existing.filter(col("doc_id").isin(0L, 2L))
         .select("doc_id")
-      val incoming = base.filter(col("doc_id") >= 250)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 3000000L)
-          .withColumn("text", concat(col("text"), lit(" tail bit"))))
-        .unionAll(base.filter(col("doc_id") === 251L)
-          .withColumn("doc_id", col("doc_id") + 2999756L)
-          .withColumn("text", concat(col("text"), lit(" x"))))
       val index = Dedup.minhashBandIndex(existing, k = 5, numHashes = 64,
         bands = 16)
       val retracted = Dedup.retractFromIndex(index, removed)
@@ -2569,15 +3029,7 @@ object SparkEntry {
       // pruned probe must return exactly the unpruned rows (the
       // OpsSpec law), and this row makes the driver's DuckDB gate
       // re-prove it at sf0.01 every round
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") < 250)
-      val incoming = base.filter(col("doc_id") >= 250)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 3000000L)
-          .withColumn("text", concat(col("text"), lit(" tail bit"))))
-        .unionAll(base.filter(col("doc_id") === 251L)
-          .withColumn("doc_id", col("doc_id") + 2999756L)
-          .withColumn("text", concat(col("text"), lit(" x"))))
+      val (existing, incoming) = neardupSlice(s, dir)
       val index = Dedup.minhashBandIndex(existing, k = 5, numHashes = 64,
         bands = 16)
       val bloom = Dedup.indexBloom(index)
@@ -2594,15 +3046,7 @@ object SparkEntry {
       // false negatives either, so the sharded-pruned dedup must
       // return exactly the unpruned rows, and this row makes the
       // driver's gate re-prove the sharding law at sf0.01 every round
-      val base = t(s, dir, "documents")
-      val existing = base.filter(col("doc_id") < 250)
-      val incoming = base.filter(col("doc_id") >= 250)
-        .unionAll(base.filter(col("doc_id").isin(0L, 2L, 4L))
-          .withColumn("doc_id", col("doc_id") + 3000000L)
-          .withColumn("text", concat(col("text"), lit(" tail bit"))))
-        .unionAll(base.filter(col("doc_id") === 251L)
-          .withColumn("doc_id", col("doc_id") + 2999756L)
-          .withColumn("text", concat(col("text"), lit(" x"))))
+      val (existing, incoming) = neardupSlice(s, dir)
       val index = Dedup.minhashBandIndex(existing, k = 5, numHashes = 64,
         bands = 16)
       val shards = Dedup.indexBloomPerBand(index)
@@ -2622,14 +3066,7 @@ object SparkEntry {
       // originals 0/1 keep their text). Natural duplicated 8-grams in
       // the corpus collapse identically in both engines. Plant ids
       // stay COLUMNS (the n150 lit() lesson).
-      val base = t(s, dir, "documents").select("doc_id", "text")
-      val planted = base.filter(col("doc_id") === 0L)
-        .select((col("doc_id") + 4000001L).as("doc_id"),
-          concat(lit("zyxprefix "), col("text")).as("text"))
-        .unionAll(base.filter(col("doc_id") === 1L)
-          .select((col("doc_id") + 4000002L).as("doc_id"),
-            concat(col("text"), lit(" zyxsuffix trailing words appended"))
-              .as("text")))
+      val (base, planted) = substrPlants(s, dir)
       TextAnalysis.exactSubstrDedup(base.unionAll(planted), n = 8)
         .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
           col("n_tokens_kept"), md5(col("text_clean")).as("text_md5"))
@@ -2643,14 +3080,7 @@ object SparkEntry {
       // stats (counts add, first takes the min) make the excision
       // equal batch exactSubstrDedup over the union restricted to the
       // slice, which is exactly what the oracle replays
-      val base = t(s, dir, "documents").select("doc_id", "text")
-      val planted = base.filter(col("doc_id") === 0L)
-        .select((col("doc_id") + 4000001L).as("doc_id"),
-          concat(lit("zyxprefix "), col("text")).as("text"))
-        .unionAll(base.filter(col("doc_id") === 1L)
-          .select((col("doc_id") + 4000002L).as("doc_id"),
-            concat(col("text"), lit(" zyxsuffix trailing words appended"))
-              .as("text")))
+      val (base, planted) = substrPlants(s, dir)
       val index = TextAnalysis.exactSubstrGramIndex(base, n = 8)
       TextAnalysis.incrementalExactSubstrDedup(index, planted, n = 8)
         .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
@@ -3007,16 +3437,9 @@ object SparkEntry {
       // disconnected word triangles prove multi-community output is
       // value-bearing, each converging to its own min label
       import s.implicits._
-      val ws = t(s, dir, "documents").select(col("text"))
+      val pairs = wordPairs(t(s, dir, "documents").select(col("text"))
         .unionAll(Seq("zza0 zza1 zza2 zza0", "zzb0 zzb1 zzb2 zzb0")
-          .toDF("text"))
-        .select(filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
+          .toDF("text")))
       graft.ops.Graph.labelPropagation(pairs, rounds = 3)
         .select(col("node").as("word"), col("label"))
         .orderBy("word")
@@ -3176,13 +3599,7 @@ object SparkEntry {
       // interval twin of q29's numeric RANGE frame; peers share
       // frames, so ties in ts are deterministic by construction
       t(s, dir, "events").createOrReplaceTempView("events")
-      s.sql("""SELECT user_id, ts, event_id,
-              | CAST(count(*) OVER w AS BIGINT) AS n_events_1h,
-              | round(sum(value) OVER w, 6) AS sum_value_1h
-              |FROM events
-              |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-              |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-              |ORDER BY user_id, ts, event_id""".stripMargin)
+      s.sql(portableSql("q59_time_range_frame"))
     }),
 
     "q58_regression" -> ((s, dir) => {
@@ -3191,14 +3608,7 @@ object SparkEntry {
       // correlated pair, so the fit is value-bearing. Order-dependent
       // double reductions rounded per the repo convention
       t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql("""SELECT l_returnflag,
-              | CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n,
-              | round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-              | round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
-              | round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
-              | round(corr(l_extendedprice, l_quantity), 6) AS corr_qty
-              |FROM lineitem GROUP BY l_returnflag
-              |ORDER BY l_returnflag""".stripMargin)
+      s.sql(portableSql("q58_regression"))
     }),
 
     "q56_collation" -> ((s, dir) => {
@@ -3302,19 +3712,7 @@ object SparkEntry {
       // most 4 rounds, replayed by 4 unrolled peel CTEs (the shared
       // peel kernel stops at the first round that removes no edge,
       // which is exact because extra rounds are no-ops there)
-      import s.implicits._
-      val planted = Seq(
-        (9700001L, kcoreHubText, "en", "planted", 0L),
-        (9700002L, "spoke hub", "en", "planted", 0L)
-      ).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val ws = t(s, dir, "documents").unionByName(planted).select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
+      val pairs = wordPairs(kcoreDocs(s, dir))
       graft.ops.Graph.kCore(pairs, k = 29, rounds = 4)
         .select(col("node").as("word"), col("degree"))
         .orderBy(col("degree").desc, col("word"))
@@ -3328,19 +3726,7 @@ object SparkEntry {
       // peeling is idempotent at the fixpoint, so extra rounds are
       // no-ops); the spec separately proves convergence beyond
       // kCore's rounds<=6 oracle bound
-      import s.implicits._
-      val planted = Seq(
-        (9700001L, kcoreHubText, "en", "planted", 0L),
-        (9700002L, "spoke hub", "en", "planted", 0L)
-      ).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val ws = t(s, dir, "documents").unionByName(planted).select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
+      val pairs = wordPairs(kcoreDocs(s, dir))
       graft.ops.Graph.kCoreConverged(pairs, k = 29)
         .select(col("node").as("word"), col("degree"))
         .orderBy(col("degree").desc, col("word"))
@@ -3353,24 +3739,10 @@ object SparkEntry {
       // uniformly, exercising the dangling-mass term end to end in
       // integer fixed point; the oracle replays the rounds with the
       // same dsum div n redistribution
-      import s.implicits._
-      val planted = Seq((9990001L, "zzdanglehead zzdangletail", "en",
-        "planted", 0L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val ws = t(s, dir, "documents").unionByName(planted).select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val edges = pairs.groupBy("src", "dst").agg(count(lit(1)).as("wt"))
+      val edges = danglingEdges(s, dir)
       graft.ops.Graph.integerPageRank(edges, iters = 3)
         .select(col("node").as("word"), col("rank"))
-        .orderBy(col("rank").desc, col("word")).limit(25)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("rank").desc, col("word"))).cast("long"))
+        .transform(top25Words(_, "rank"))
     }),
 
     "n141_cc_pointer_jump" -> ((s, dir) => {
@@ -3384,9 +3756,7 @@ object SparkEntry {
       // transitive closure is algorithm-independent, and the shortcut
       // provably shares plain min-label propagation's fixpoint
       val docs = t(s, dir, "documents")
-      val chain = docs.filter(col("doc_id") < 249)
-        .select(col("doc_id").as("doc_id_a"),
-          (col("doc_id") + 1).as("doc_id_b"))
+      val chain = docChain(docs)
       val pairs = Dedup.simhashNearDups(docs, maxDistance = 6)
         .select("doc_id_a", "doc_id_b").unionAll(chain)
       Dedup.dupClusters(pairs).orderBy("doc_id")
@@ -3404,9 +3774,7 @@ object SparkEntry {
       // algorithm-independent recursive-CTE closure verbatim (the
       // split cannot show in a correct answer)
       val docs = t(s, dir, "documents")
-      val chain = docs.filter(col("doc_id") < 249)
-        .select(col("doc_id").as("doc_id_a"),
-          (col("doc_id") + 1).as("doc_id_b"))
+      val chain = docChain(docs)
       val pairs = graft.ops.Iterate.lazyCheckpointed(
         Dedup.simhashNearDups(docs, maxDistance = 6)
           .select("doc_id_a", "doc_id_b").unionAll(chain))
@@ -3425,9 +3793,7 @@ object SparkEntry {
       // doc pass through verbatim; the oracle re-closes over exactly
       // the edges whose both endpoints survive
       val docs = t(s, dir, "documents")
-      val chain = docs.filter(col("doc_id") < 249)
-        .select(col("doc_id").as("doc_id_a"),
-          (col("doc_id") + 1).as("doc_id_b"))
+      val chain = docChain(docs)
       val pairs = graft.ops.Iterate.lazyCheckpointed(
         Dedup.simhashNearDups(docs, maxDistance = 6)
           .select("doc_id_a", "doc_id_b").unionAll(chain))
@@ -3507,27 +3873,13 @@ object SparkEntry {
       // authority decays with distance from the seeds; the oracle
       // replays every round's seed-conditional teleport and dsum div
       // ns redistribution in the same integer fixed point
-      import s.implicits._
-      val planted = Seq((9990001L, "zzdanglehead zzdangletail", "en",
-        "planted", 0L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val ws = t(s, dir, "documents").unionByName(planted).select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val edges = pairs.groupBy("src", "dst").agg(count(lit(1)).as("wt"))
+      val edges = danglingEdges(s, dir)
       val seeds = edges.select(col("src").as("node"))
         .unionAll(edges.select(col("dst").as("node"))).distinct()
         .orderBy("node").limit(5)
       graft.ops.Graph.trustRank(edges, seeds, iters = 3)
         .select(col("node").as("word"), col("rank"))
-        .orderBy(col("rank").desc, col("word")).limit(25)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("rank").desc, col("word"))).cast("long"))
+        .transform(top25Words(_, "rank"))
     }),
 
     "n143_hits" -> ((s, dir) => {
@@ -3538,24 +3890,10 @@ object SparkEntry {
       // hubs. Two I/O rounds in L1-normalized integer fixed point; the
       // oracle replays each half-round's raw sums and HUGEINT-scaled
       // normalization bit-exactly
-      import s.implicits._
-      val planted = Seq((9990001L, "zzdanglehead zzdangletail", "en",
-        "planted", 0L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val ws = t(s, dir, "documents").unionByName(planted).select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val edges = pairs.groupBy("src", "dst").agg(count(lit(1)).as("wt"))
+      val edges = danglingEdges(s, dir)
       graft.ops.Graph.hits(edges, iters = 2)
         .select(col("node").as("word"), col("hub"), col("auth"))
-        .orderBy(col("auth").desc, col("word")).limit(25)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("auth").desc, col("word"))).cast("long"))
+        .transform(top25Words(_, "auth"))
     }),
 
     "n144_gopher_rules" -> ((s, dir) => {
@@ -3711,17 +4049,7 @@ object SparkEntry {
       // ONE corpus pass (broadcast parts dim, offset-aligned count ==
       // phrase length). Two natural phrases + one planted four-word
       // quote occurring twice in one doc
-      import s.implicits._
-      val planted = Seq((9500002L,
-        "alpha beta gamma delta filler words alpha beta gamma delta",
-        "en", "planted", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      TextAnalysis.multiPhraseSearch(
-          t(s, dir, "documents").unionByName(planted),
-          Seq(
-            "bench1" -> Seq("slow", "hash", "batch"),
-            "bench2" -> Seq("stream", "table", "hash"),
-            "planted" -> Seq("alpha", "beta", "gamma", "delta")))
+      TextAnalysis.multiPhraseSearch(phraseDocs(s, dir), quotePhrases)
         .orderBy("phrase_id", "doc_id", "pos")
     }),
 
@@ -3733,23 +4061,14 @@ object SparkEntry {
       // probes the published state — the oracle replays the
       // consecutive-word definition over the surviving text, so the
       // index cannot drift from what a re-tokenization would find
-      import s.implicits._
-      val planted = Seq((9500002L,
-        "alpha beta gamma delta filler words alpha beta gamma delta",
-        "en", "planted", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      val all = t(s, dir, "documents").unionByName(planted)
+      val all = phraseDocs(s, dir)
       val removed = all.filter(col("doc_id") % 103 === 0).select("doc_id")
       val postings = Dedup.retractFromIndex(
         TextAnalysis.positionalPostings(all.filter(col("doc_id") % 2 === 0))
           .unionByName(TextAnalysis.positionalPostings(
             all.filter(col("doc_id") % 2 =!= 0))), removed)
         .select("word", "doc_id", "pos")
-      TextAnalysis.multiPhraseSearchAgainstIndex(postings,
-          Seq(
-            "bench1" -> Seq("slow", "hash", "batch"),
-            "bench2" -> Seq("stream", "table", "hash"),
-            "planted" -> Seq("alpha", "beta", "gamma", "delta")))
+      TextAnalysis.multiPhraseSearchAgainstIndex(postings, quotePhrases)
         .orderBy("phrase_id", "doc_id", "pos")
     }),
 
@@ -3938,14 +4257,7 @@ object SparkEntry {
       // states what a triangle IS), so green proves the orientation
       // trick finds every triangle exactly once, not that the
       // choreography replays
-      val ws = t(s, dir, "documents").select(
-          filter(split(col("text"), " "), w => w =!= lit("")).as("ws"))
-        .filter(size(col("ws")) >= 2)
-      val pairs = ws.select(explode(expr(
-          "transform(sequence(1, size(ws) - 1), " +
-            "i -> struct(element_at(ws, i) AS a, element_at(ws, i + 1) AS b))")).as("p"))
-        .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .filter(col("src") =!= col("dst"))
+      val pairs = wordPairs(t(s, dir, "documents"))
       graft.ops.Graph.triangleCounts(pairs)
         .select(col("node").as("word"), col("n_triangles"))
         .orderBy(col("n_triangles").desc, col("word"))
@@ -4009,9 +4321,7 @@ object SparkEntry {
       // the build instead of a second action inside it
       val idx = Ivf.build(emb, nLists = 8, nRows = emb.count())
       Ivf.search(idx, emb.filter(col("vec_id") < 5), 10, nProbe = 8)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n156_ivf_append" -> ((s, dir) => {
@@ -4028,9 +4338,7 @@ object SparkEntry {
       val idx = Ivf.build(old, nLists = 8, nRows = old.count())
       val appended = Ivf.append(idx, emb.filter(col("vec_id") % 2 === 1))
       Ivf.search(appended, emb.filter(col("vec_id") < 5), 10, nProbe = 8)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n160_ivf_retract" -> ((s, dir) => {
@@ -4048,9 +4356,7 @@ object SparkEntry {
         .select("vec_id")
       val retracted = Ivf.retract(idx, removed)
       Ivf.search(retracted, emb.filter(col("vec_id") < 5), 10, nProbe = 8)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n161_ivfpq_retract" -> ((s, dir) => {
@@ -4071,9 +4377,7 @@ object SparkEntry {
       val corpusAfter = emb.join(removed, Seq("vec_id"), "left_anti")
       Ivf.searchPq(rPq, corpusAfter, emb.filter(col("vec_id") < 5), 10,
           nProbe = 8, rerank = Ivf.rerankFor(n))
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n30_top_word_share" -> ((s, dir) => {
@@ -4226,12 +4530,7 @@ object SparkEntry {
       // the multiplicity-preserving complement of q28's distinct set
       // ops; Catalyst plans both as counted joins, no distinct shuffle
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-              |INTERSECT ALL
-              |SELECT o_custkey FROM orders WHERE o_totalprice > 100000
-              |EXCEPT ALL
-              |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-              |ORDER BY o_custkey""".stripMargin)
+      s.sql(portableSql("q41_set_ops_all"))
     }),
 
     "n87_html_extract" -> ((s, dir) => {
@@ -4370,12 +4669,7 @@ object SparkEntry {
       // default (Spark: nulls first on ASC; DuckDB: nulls last), so a
       // portable ordered query must pin it — this one does, both ways
       t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey,
-              | CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
-              |      ELSE o_totalprice END AS p
-              |FROM orders
-              |ORDER BY p DESC NULLS LAST, o_orderkey
-              |LIMIT 100""".stripMargin)
+      s.sql(portableSql("q43_nulls_order"))
     }),
 
     "n86_exact_quantiles" -> ((s, dir) => {
@@ -4649,9 +4943,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       Similarity.quantizedTopK(emb, emb.filter(col("vec_id") < 3),
           k = 5, shortlist = 4)
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n45_int8_quantize" -> ((s, dir) => {
@@ -4779,9 +5071,7 @@ object SparkEntry {
       val pq = Ivf.buildPq(idx, m = 16, codebookSize = 32, nRows = n)
       Ivf.searchPq(pq, emb, emb.filter(col("vec_id") < 5), 10,
           nProbe = 8, rerank = Ivf.rerankFor(n))
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n158_ivfpq_append" -> ((s, dir) => {
@@ -4800,9 +5090,7 @@ object SparkEntry {
       val appended = Ivf.appendPq(pq, emb.filter(col("vec_id") % 2 === 1))
       Ivf.searchPq(appended, emb, emb.filter(col("vec_id") < 5), 10,
           nProbe = 8, rerank = Ivf.rerankFor(nOld * 2))
-        .select(col("query_id"), col("vec_id"),
-          round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rnk"))
-        .orderBy("query_id", "rnk")
+        .transform(knnRows)
     }),
 
     "n19_deterministic_sample" -> ((s, dir) => {
@@ -5001,16 +5289,7 @@ object SparkEntry {
         |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         |ORDER BY custkey""".stripMargin,
 
-    "q52_not_in_nulls" ->
-      """WITH keys AS (SELECT CASE WHEN s_suppkey % 7 = 0 THEN NULL
-        |                     ELSE s_nationkey END AS k FROM supplier)
-        |SELECT 'not_in' AS variant, CAST(count(*) AS BIGINT) AS n
-        |FROM nation WHERE n_nationkey NOT IN (SELECT k FROM keys)
-        |UNION ALL
-        |SELECT 'not_exists', CAST(count(*) AS BIGINT)
-        |FROM nation WHERE NOT EXISTS (
-        |  SELECT 1 FROM keys WHERE keys.k = nation.n_nationkey)
-        |ORDER BY variant""".stripMargin,
+    "q52_not_in_nulls" -> portableSql("q52_not_in_nulls"),
 
     "q64_union_by_name" ->
       """SELECT name, kind, key FROM (
@@ -5021,17 +5300,7 @@ object SparkEntry {
         |   r_name AS name FROM region)
         |ORDER BY kind, key""".stripMargin,
 
-    "q63_grouping_id" ->
-      """SELECT nullif(l_returnflag, 'N') AS rf, l_linestatus AS ls,
-        | CAST(grouping(nullif(l_returnflag, 'N')) AS BIGINT) AS g_rf,
-        | CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
-        | CAST(grouping(nullif(l_returnflag, 'N')) * 2
-        |   + grouping(l_linestatus) AS BIGINT) AS gid,
-        | CAST(count(*) AS BIGINT) AS n,
-        | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem
-        |GROUP BY ROLLUP(nullif(l_returnflag, 'N'), l_linestatus)
-        |ORDER BY gid, rf NULLS FIRST, ls NULLS FIRST""".stripMargin,
+    "q63_grouping_id" -> portableSql("q63_grouping_id"),
 
     "q61_cohort_retention" ->
       """WITH f AS (SELECT user_id, min(ts) AS first_ts FROM events GROUP BY 1),
@@ -5101,9 +5370,7 @@ object SparkEntry {
         |FROM g GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin,
 
-    "q49_limit_offset" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin,
+    "q49_limit_offset" -> portableSql("q49_limit_offset"),
 
     "q30_sessionization" ->
       // identical gap-flag + running-sum choreography in integer
@@ -5195,14 +5462,7 @@ object SparkEntry {
         | round(quantile_cont(l_extendedprice, 0.9), 4) AS price_p90
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    "q22_grouping_sets" ->
-      """SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-        |       coalesce(o_orderstatus, 'ALL') AS status,
-        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
-        |                        (o_orderpriority, o_orderstatus), ())
-        |ORDER BY priority, status""".stripMargin,
+    "q22_grouping_sets" -> portableSql("q22_grouping_sets"),
 
     "q17_distinct_agg" ->
       """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
@@ -5563,24 +5823,7 @@ object SparkEntry {
          |ORDER BY time, y, x""".stripMargin,
 
     "g07_upsample_linear" ->
-      s"""WITH $grid,
-         |src AS (SELECT time, y, x, t2m FROM grid
-         |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
-         |          AND y BETWEEN ${upBox.south} AND ${upBox.north}),
-         |times AS (SELECT generate_series AS time FROM generate_series(
-         |  TIMESTAMP '2019-01-30 00:00:00', TIMESTAMP '2019-02-02 00:00:00', INTERVAL 30 MINUTE)),
-         |cells AS (SELECT DISTINCT y, x FROM src),
-         |g AS (SELECT t.time, c.y, c.x, s.t2m
-         |      FROM times t CROSS JOIN cells c
-         |      LEFT JOIN src s ON s.time = t.time AND s.y = c.y AND s.x = c.x),
-         |f AS (SELECT time, y, x, t2m,
-         |  last_value(t2m IGNORE NULLS) OVER w AS pv,
-         |  last_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w AS pt,
-         |  first_value(t2m IGNORE NULLS) OVER w2 AS nv,
-         |  first_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w2 AS nt
-         | FROM g WINDOW
-         |  w AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |  w2 AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+      s"""$upsampleNeighborsSql
          |SELECT time, y, x,
          | CASE WHEN t2m IS NOT NULL THEN t2m
          |      WHEN pt IS NULL OR nt IS NULL THEN NULL
@@ -5588,32 +5831,14 @@ object SparkEntry {
          |FROM f ORDER BY time, y, x""".stripMargin,
 
     "g08_upsample_ffill" ->
-      s"""WITH $grid,
-         |src AS (SELECT time, y, x, t2m FROM grid
-         |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
-         |          AND y BETWEEN ${upBox.south} AND ${upBox.north}),
-         |times AS (SELECT generate_series AS time FROM generate_series(
-         |  TIMESTAMP '2019-01-30 00:00:00', TIMESTAMP '2019-02-02 00:00:00', INTERVAL 30 MINUTE)),
-         |cells AS (SELECT DISTINCT y, x FROM src),
-         |g AS (SELECT t.time, c.y, c.x, s.t2m
-         |      FROM times t CROSS JOIN cells c
-         |      LEFT JOIN src s ON s.time = t.time AND s.y = c.y AND s.x = c.x)
+      s"""$upsampleGapsSql
          |SELECT time, y, x,
          | last_value(t2m IGNORE NULLS) OVER (PARTITION BY y, x ORDER BY time
          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t2m
          |FROM g ORDER BY time, y, x""".stripMargin,
 
     "g31_upsample_bfill" ->
-      s"""WITH $grid,
-         |src AS (SELECT time, y, x, t2m FROM grid
-         |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
-         |          AND y BETWEEN ${upBox.south} AND ${upBox.north}),
-         |times AS (SELECT generate_series AS time FROM generate_series(
-         |  TIMESTAMP '2019-01-30 00:00:00', TIMESTAMP '2019-02-02 00:00:00', INTERVAL 30 MINUTE)),
-         |cells AS (SELECT DISTINCT y, x FROM src),
-         |g AS (SELECT t.time, c.y, c.x, s.t2m
-         |      FROM times t CROSS JOIN cells c
-         |      LEFT JOIN src s ON s.time = t.time AND s.y = c.y AND s.x = c.x)
+      s"""$upsampleGapsSql
          |SELECT time, y, x,
          | first_value(t2m IGNORE NULLS) OVER (PARTITION BY y, x ORDER BY time
          |   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS t2m
@@ -5660,11 +5885,7 @@ object SparkEntry {
     },
 
     "g09_spatial_nearest_x2" ->
-      s"""WITH $grid,
-         |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
-         |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
-         |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
-         |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,
+      s"""$x2TargetSql
          |  least(greatest(CAST(floor((${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} + 0.5) AS BIGINT), 0), ${xa.n - 1}) AS jx,
          |  least(greatest(CAST(floor((${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} + 0.5) AS BIGINT), 0), ${ya.n - 1}) AS jy
          | FROM tgt)
@@ -5673,14 +5894,7 @@ object SparkEntry {
          |ORDER BY time, y, x""".stripMargin,
 
     "g10_spatial_bilinear_x2" ->
-      s"""WITH $grid,
-         |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
-         |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
-         |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
-         |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,
-         |  (${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} AS gx,
-         |  (${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} AS gy
-         | FROM tgt),
+      s"""$x2FractionalSql,
          |mb AS (SELECT y2, x2,
          |  least(greatest(CAST(floor(gx) AS BIGINT), 0), ${xa.n - 1}) AS jx0,
          |  least(greatest(CAST(floor(gx) AS BIGINT) + 1, 0), ${xa.n - 1}) AS jx1,
@@ -5693,69 +5907,25 @@ object SparkEntry {
          | UNION ALL SELECT y2, x2, jy0, jx1, (1.0 - wy1) * wx1 FROM mb
          | UNION ALL SELECT y2, x2, jy1, jx0, wy1 * (1.0 - wx1) FROM mb
          | UNION ALL SELECT y2, x2, jy1, jx1, wy1 * wx1 FROM mb)
-         |SELECT g.time, CAST(c.y2 AS DOUBLE) AS y, CAST(c.x2 AS DOUBLE) AS x, round(sum(g.t2m * c.w), 6) AS t2m
-         |FROM grid g JOIN corners c ON g.jy = c.jy AND g.jx = c.jx
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+         |${x2CornerSum()}""".stripMargin,
 
-    "g21_spatial_cubic_x2" -> {
-      def kern(d: String): String =
-        s"""CASE WHEN abs($d) <= 1.0
-           | THEN (1.5 * abs($d) - 2.5) * abs($d) * abs($d) + 1.0
-           | WHEN abs($d) < 2.0
-           | THEN ((-0.5 * abs($d) + 2.5) * abs($d) - 4.0) * abs($d) + 2.0
-           | ELSE 0.0 END""".stripMargin.replace("\n", " ")
-      s"""WITH $grid,
-         |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
-         |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
-         |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
-         |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,
-         |  (${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} AS gx,
-         |  (${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} AS gy
-         | FROM tgt),
-         |taps AS (SELECT a.ky, b.kx
-         |         FROM (VALUES (-1),(0),(1),(2)) a(ky), (VALUES (-1),(0),(1),(2)) b(kx)),
-         |corners AS (
-         | SELECT y2, x2,
-         |  least(greatest(CAST(floor(gy) + ky AS BIGINT), 0), ${ya.n - 1}) AS jy,
-         |  least(greatest(CAST(floor(gx) + kx AS BIGINT), 0), ${xa.n - 1}) AS jx,
-         |  (${kern("gx - (floor(gx) + kx)")}) * (${kern("gy - (floor(gy) + ky)")}) AS w
-         | FROM m, taps)
-         |SELECT g.time, CAST(c.y2 AS DOUBLE) AS y, CAST(c.x2 AS DOUBLE) AS x, round(sum(g.t2m * c.w), 6) AS t2m
-         |FROM grid g JOIN corners c ON g.jy = c.jy AND g.jx = c.jx
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-    },
+    "g21_spatial_cubic_x2" -> x2FourTapSql(d =>
+      s"""CASE WHEN abs($d) <= 1.0
+         | THEN (1.5 * abs($d) - 2.5) * abs($d) * abs($d) + 1.0
+         | WHEN abs($d) < 2.0
+         | THEN ((-0.5 * abs($d) + 2.5) * abs($d) - 4.0) * abs($d) + 2.0
+         | ELSE 0.0 END""".stripMargin.replace("\n", " ")),
 
     "g19_upsample_cubic" -> splineOracleSql(cubicWeights),
 
     "g20_upsample_quadratic" -> splineOracleSql(quadraticWeights, nudge = true),
 
-    "g29_spatial_cubicspline_x2" -> {
-      def kern(d: String): String =
-        s"""CASE WHEN abs($d) <= 1.0
-           | THEN (4.0 - 6.0 * abs($d) * abs($d) + 3.0 * abs($d) * abs($d) * abs($d)) / 6.0
-           | WHEN abs($d) < 2.0
-           | THEN (2.0 - abs($d)) * (2.0 - abs($d)) * (2.0 - abs($d)) / 6.0
-           | ELSE 0.0 END""".stripMargin.replace("\n", " ")
-      s"""WITH $grid,
-         |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
-         |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
-         |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
-         |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,
-         |  (${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} AS gx,
-         |  (${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} AS gy
-         | FROM tgt),
-         |taps AS (SELECT a.ky, b.kx
-         |         FROM (VALUES (-1),(0),(1),(2)) a(ky), (VALUES (-1),(0),(1),(2)) b(kx)),
-         |corners AS (
-         | SELECT y2, x2,
-         |  least(greatest(CAST(floor(gy) + ky AS BIGINT), 0), ${ya.n - 1}) AS jy,
-         |  least(greatest(CAST(floor(gx) + kx AS BIGINT), 0), ${xa.n - 1}) AS jx,
-         |  (${kern("gx - (floor(gx) + kx)")}) * (${kern("gy - (floor(gy) + ky)")}) AS w
-         | FROM m, taps)
-         |SELECT g.time, CAST(c.y2 AS DOUBLE) AS y, CAST(c.x2 AS DOUBLE) AS x, round(sum(g.t2m * c.w) + 1e-9, 6) AS t2m
-         |FROM grid g JOIN corners c ON g.jy = c.jy AND g.jx = c.jx
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-    },
+    "g29_spatial_cubicspline_x2" -> x2FourTapSql(d =>
+      s"""CASE WHEN abs($d) <= 1.0
+         | THEN (4.0 - 6.0 * abs($d) * abs($d) + 3.0 * abs($d) * abs($d) * abs($d)) / 6.0
+         | WHEN abs($d) < 2.0
+         | THEN (2.0 - abs($d)) * (2.0 - abs($d)) * (2.0 - abs($d)) / 6.0
+         | ELSE 0.0 END""".stripMargin.replace("\n", " "), nudge = " + 1e-9"),
 
     "g23_spatial_agg_half" ->
       s"""WITH $grid,
@@ -5816,28 +5986,14 @@ object SparkEntry {
            | ELSE 0.0 END""".stripMargin.replace("\n", " ")
       val swx = (-2 to 3).map(k => s"(${kern(s"fx - ($k)")})").mkString(" + ")
       val swy = (-2 to 3).map(k => s"(${kern(s"fy - ($k)")})").mkString(" + ")
-      s"""WITH $grid,
-         |tgt AS (SELECT id // ${xt2.n} AS jy2, id % ${xt2.n} AS jx2
-         |        FROM range(${xt2.n.toLong * yt2.n}) t(id)),
-         |m AS (SELECT (${yt2.origin} + jy2 * ${yt2.step}) AS y2,
-         |             (${xt2.origin} + jx2 * ${xt2.step}) AS x2,
-         |  (${xt2.origin} + jx2 * ${xt2.step} - ${xa.origin}) / ${xa.step} AS gx,
-         |  (${yt2.origin} + jy2 * ${yt2.step} - ${ya.origin}) / ${ya.step} AS gy
-         | FROM tgt),
+      val weight = s"(${kern("fx - (kx)")}) / swx * ((${kern("fy - (ky)")}) / swy)"
+      s"""$x2FractionalSql,
          |k AS (SELECT y2, x2, gx, gy, gx - floor(gx) AS fx, gy - floor(gy) AS fy,
          |  ($swx) AS swx, ($swy) AS swy FROM m),
          |taps AS (SELECT a.ky, b.kx
          |         FROM (VALUES (-2),(-1),(0),(1),(2),(3)) a(ky),
          |              (VALUES (-2),(-1),(0),(1),(2),(3)) b(kx)),
-         |corners AS (
-         | SELECT y2, x2,
-         |  least(greatest(CAST(floor(gy) + ky AS BIGINT), 0), ${ya.n - 1}) AS jy,
-         |  least(greatest(CAST(floor(gx) + kx AS BIGINT), 0), ${xa.n - 1}) AS jx,
-         |  (${kern("fx - (kx)")}) / swx * ((${kern("fy - (ky)")}) / swy) AS w
-         | FROM k, taps)
-         |SELECT g.time, CAST(c.y2 AS DOUBLE) AS y, CAST(c.x2 AS DOUBLE) AS x, round(sum(g.t2m * c.w), 6) AS t2m
-         |FROM grid g JOIN corners c ON g.jy = c.jy AND g.jx = c.jx
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+         |${x2TapSum(weight, "k, taps")}""".stripMargin
     },
 
     "g11_tz_subset" ->
@@ -5858,24 +6014,7 @@ object SparkEntry {
          |FROM grid GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
 
     "g14_upsample_nearest" ->
-      s"""WITH $grid,
-         |src AS (SELECT time, y, x, t2m FROM grid
-         |        WHERE x BETWEEN ${upBox.west} AND ${upBox.east}
-         |          AND y BETWEEN ${upBox.south} AND ${upBox.north}),
-         |times AS (SELECT generate_series AS time FROM generate_series(
-         |  TIMESTAMP '2019-01-30 00:00:00', TIMESTAMP '2019-02-02 00:00:00', INTERVAL 30 MINUTE)),
-         |cells AS (SELECT DISTINCT y, x FROM src),
-         |g AS (SELECT t.time, c.y, c.x, s.t2m
-         |      FROM times t CROSS JOIN cells c
-         |      LEFT JOIN src s ON s.time = t.time AND s.y = c.y AND s.x = c.x),
-         |f AS (SELECT time, y, x, t2m,
-         |  last_value(t2m IGNORE NULLS) OVER w AS pv,
-         |  last_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w AS pt,
-         |  first_value(t2m IGNORE NULLS) OVER w2 AS nv,
-         |  first_value(CASE WHEN t2m IS NOT NULL THEN time END IGNORE NULLS) OVER w2 AS nt
-         | FROM g WINDOW
-         |  w AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |  w2 AS (PARTITION BY y, x ORDER BY time ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+      s"""$upsampleNeighborsSql
          |SELECT time, y, x,
          | CASE WHEN t2m IS NOT NULL THEN t2m
          |      WHEN pt IS NULL THEN nv
@@ -6073,17 +6212,7 @@ object SparkEntry {
         |   AS rolling_fingerprint
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "n08_knn_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+    "n08_knn_bruteforce" -> bruteForceTopKSql(),
 
     // unrolled greedy replay (shared builder): identical IEEE
     // expressions, identical argmax; n139 narrows the candidate CTE
@@ -6091,36 +6220,14 @@ object SparkEntry {
     "n138_mmr_select" -> mmrOracleSql(None),
     "n139_mmr_shortlist" -> mmrOracleSql(Some(20)),
 
-    // margins replay exactly: the neighborhood sums fold in rank order
-    // (list(cos ORDER BY rank) reduced sequentially = Spark's sorted
-    // collect_list fold) and the margin is one pinned expression
     "n140_margin_mining" ->
-      """WITH a AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+      s"""WITH a AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         |           WHERE vec_id % 2 = 0 AND vec_id < 400),
         |b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         |      WHERE vec_id % 2 = 1),
         |s AS (SELECT a.vec_id AS src_id, b.vec_id AS dst_id,
         |       list_cosine_similarity(a.v, b.v) AS cos FROM a, b),
-        |r AS (SELECT *,
-        |      row_number() OVER (PARTITION BY src_id ORDER BY cos DESC, dst_id) AS rkx,
-        |      row_number() OVER (PARTITION BY dst_id ORDER BY cos DESC, src_id) AS rky
-        |      FROM s),
-        |sx AS (SELECT src_id,
-        |        list_reduce(list_prepend(0.0, list(cos ORDER BY rkx)),
-        |          (acc, c) -> acc + c) AS sumx
-        |       FROM r WHERE rkx <= 4 GROUP BY src_id),
-        |sy AS (SELECT dst_id,
-        |        list_reduce(list_prepend(0.0, list(cos ORDER BY rky)),
-        |          (acc, c) -> acc + c) AS sumy
-        |       FROM r WHERE rky <= 4 GROUP BY dst_id),
-        |m AS (SELECT r.src_id, r.dst_id, r.cos,
-        |       8.0 * r.cos / (sx.sumx + sy.sumy) AS margin
-        |      FROM r JOIN sx USING (src_id) JOIN sy USING (dst_id)
-        |      WHERE r.rkx <= 4)
-        |SELECT src_id, dst_id, round(cos, 6) AS cos, round(margin, 6) AS margin,
-        | CAST(row_number() OVER (PARTITION BY src_id
-        |   ORDER BY margin DESC, dst_id) AS BIGINT) AS mrank
-        |FROM m ORDER BY src_id, mrank""".stripMargin,
+        |$marginRankSql""".stripMargin,
 
     // the n140 margin replay with the pair relation narrowed to the
     // n09 sign-LSH bucket co-occurrences — the candidate CTE is the
@@ -6136,89 +6243,26 @@ object SparkEntry {
          |  list_cosine_similarity(ae.emb, be.emb) AS cos
          | FROM cand JOIN e ae ON ae.vec_id = cand.src_id
          |           JOIN e be ON be.vec_id = cand.dst_id),
-         |r AS (SELECT *,
-         |      row_number() OVER (PARTITION BY src_id ORDER BY cos DESC, dst_id) AS rkx,
-         |      row_number() OVER (PARTITION BY dst_id ORDER BY cos DESC, src_id) AS rky
-         |      FROM s),
-         |sx AS (SELECT src_id,
-         |        list_reduce(list_prepend(0.0, list(cos ORDER BY rkx)),
-         |          (acc, c) -> acc + c) AS sumx
-         |       FROM r WHERE rkx <= 4 GROUP BY src_id),
-         |sy AS (SELECT dst_id,
-         |        list_reduce(list_prepend(0.0, list(cos ORDER BY rky)),
-         |          (acc, c) -> acc + c) AS sumy
-         |       FROM r WHERE rky <= 4 GROUP BY dst_id),
-         |m AS (SELECT r.src_id, r.dst_id, r.cos,
-         |       8.0 * r.cos / (sx.sumx + sy.sumy) AS margin
-         |      FROM r JOIN sx USING (src_id) JOIN sy USING (dst_id)
-         |      WHERE r.rkx <= 4)
-         |SELECT src_id, dst_id, round(cos, 6) AS cos, round(margin, 6) AS margin,
-         | CAST(row_number() OVER (PARTITION BY src_id
-         |   ORDER BY margin DESC, dst_id) AS BIGINT) AS mrank
-         |FROM m ORDER BY src_id, mrank""".stripMargin,
+         |$marginRankSql""".stripMargin,
 
-    "n137_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 3),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q
-        | WHERE e.vec_id <> q.query_id AND e.vec_id <> q.query_id + 1)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
+    "n137_hard_negatives" -> bruteForceTopKSql(k = 5, queries = "vec_id < 3",
+      where = "\n WHERE e.vec_id <> q.query_id AND e.vec_id <> q.query_id + 1"),
 
-    "n22_contamination" -> {
-      val thr = graft.ops.Sampling.hexThreshold(0.1)
-      val grams = """list_distinct(list_transform(
-        | generate_series(1, len(ws) - 4),
-        | i -> array_to_string(ws[i:i+4], ' ')))""".stripMargin.replace("\n", "")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |tg AS (SELECT doc_id, unnest($grams) AS gram FROM w
-         |       WHERE NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')),
-         |eg AS (SELECT DISTINCT unnest($grams) AS gram FROM w
-         |       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')
-         |SELECT tg.doc_id, count(*) AS n_grams, count(eg.gram) AS n_shared,
-         | CAST(count(eg.gram) AS DOUBLE) / count(*) AS contamination
-         |FROM tg LEFT JOIN eg ON tg.gram = eg.gram
-         |GROUP BY tg.doc_id ORDER BY tg.doc_id""".stripMargin
-    },
+    "n22_contamination" -> contaminationSql(),
 
-    "n167_benchmark_decontamination" -> {
+    "n167_benchmark_decontamination" ->
       // n22's overlap replay VERBATIM: publish-then-probe with the
       // bloom pre-prune must land on the recompute-both-sides answer
       // (no false negatives + semi-join re-check), so the published
       // index and the sidecar cannot appear in a correct oracle
-      val thr = graft.ops.Sampling.hexThreshold(0.1)
-      val grams = """list_distinct(list_transform(
-        | generate_series(1, len(ws) - 4),
-        | i -> array_to_string(ws[i:i+4], ' ')))""".stripMargin.replace("\n", "")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |tg AS (SELECT doc_id, unnest($grams) AS gram FROM w
-         |       WHERE NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')),
-         |eg AS (SELECT DISTINCT unnest($grams) AS gram FROM w
-         |       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')
-         |SELECT tg.doc_id, count(*) AS n_grams, count(eg.gram) AS n_shared,
-         | CAST(count(eg.gram) AS DOUBLE) / count(*) AS contamination
-         |FROM tg LEFT JOIN eg ON tg.gram = eg.gram
-         |GROUP BY tg.doc_id ORDER BY tg.doc_id""".stripMargin
-    },
+      contaminationSql(),
 
     "n168_decontaminate" -> {
       // survivors at maxContamination = 0: every train doc with NO
       // shared gram — including the gram-less short docs the stats
       // relation never lists (they cannot be flagged)
       val thr = graft.ops.Sampling.hexThreshold(0.1)
-      val grams = """list_distinct(list_transform(
-        | generate_series(1, len(ws) - 4),
-        | i -> array_to_string(ws[i:i+4], ' ')))""".stripMargin.replace("\n", "")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |tg AS (SELECT doc_id, unnest($grams) AS gram FROM w
-         |       WHERE NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')),
-         |eg AS (SELECT DISTINCT unnest($grams) AS gram FROM w
-         |       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr'),
+      s"""${contaminationCtes()},
          |fl AS (SELECT DISTINCT tg.doc_id FROM tg JOIN eg USING (gram))
          |SELECT d.doc_id, d.source FROM documents d
          |WHERE NOT (substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < '$thr')
@@ -6341,16 +6385,7 @@ object SparkEntry {
          |  n_terms, round(score, 6) AS score
          |FROM pd QUALIFY rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
 
-    "q35_exists_surface" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_orderstatus = 'O')
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderstatus = 'F'
-        |                    AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
+    "q35_exists_surface" -> portableSql("q35_exists_surface"),
 
     // DuckDB zips parallel select-list unnests, giving (index, element)
     // pairs — the ordinality twin of Spark's posexplode
@@ -6373,23 +6408,9 @@ object SparkEntry {
         |FROM events
         |ORDER BY user_id, ts, event_id""".stripMargin,
 
-    "q40_rank_stats" ->
-      """SELECT o_orderkey, o_orderpriority,
-        | round(percent_rank() OVER (PARTITION BY o_orderpriority
-        |   ORDER BY o_totalprice, o_orderkey), 6) AS pr,
-        | round(cume_dist() OVER (PARTITION BY o_orderpriority
-        |   ORDER BY o_totalprice, o_orderkey), 6) AS cd
-        |FROM orders
-        |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
+    "q40_rank_stats" -> portableSql("q40_rank_stats"),
 
-    "q37_lateral_join" ->
-      """SELECT c_custkey, c_name, o.n_orders, o.max_price
-        |FROM customer c,
-        |LATERAL (SELECT count(*) AS n_orders,
-        |                max(o_totalprice) AS max_price
-        |         FROM orders WHERE o_custkey = c_custkey) o
-        |WHERE o.n_orders >= 5
-        |ORDER BY c_custkey""".stripMargin,
+    "q37_lateral_join" -> portableSql("q37_lateral_join"),
 
     "q38_filter_clause" ->
       """SELECT source,
@@ -6399,14 +6420,7 @@ object SparkEntry {
         | count(*) FILTER (WHERE n_chars >= 500) AS n_long
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
 
-    "q34_scalar_subquery" ->
-      """SELECT o_orderkey, o_custkey,
-        |  round(o_totalprice / (SELECT max(o2.o_totalprice)
-        |                        FROM orders o2
-        |                        WHERE o2.o_custkey = o.o_custkey), 6)
-        |    AS price_share
-        |FROM orders o
-        |ORDER BY o_orderkey""".stripMargin,
+    "q34_scalar_subquery" -> portableSql("q34_scalar_subquery"),
 
     "q33_cube" ->
       """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
@@ -6609,15 +6623,8 @@ object SparkEntry {
     "n64_slice_diff" ->
       // n49's fixture; md5-keyed first-of-digest window + corpus
       // membership, partitioned counts — all BIGINT
-      """WITH existing AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |incoming AS (
-        | SELECT doc_id, text, source FROM documents WHERE doc_id % 2 = 1
-        | UNION ALL SELECT doc_id + 2000001, text, source
-        |   FROM documents WHERE doc_id IN (0, 2, 4)
-        | UNION ALL SELECT 2000007, text, source
-        |   FROM documents WHERE doc_id = 1),
-        |m AS (SELECT source, doc_id, md5(text) AS dg,
+      s"""WITH ${exactSliceCtes("source")},
+         |m AS (SELECT source, doc_id, md5(text) AS dg,
         |        row_number() OVER (PARTITION BY md5(text)
         |                           ORDER BY doc_id, source) AS rn
         |      FROM incoming),
@@ -6634,37 +6641,11 @@ object SparkEntry {
     // (no false negatives + exact recheck), so n49's oracle serves
     // verbatim
     "n74_bloom_dedup" ->
-      """WITH existing AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |incoming AS (
-        | SELECT doc_id, text, n_chars FROM documents WHERE doc_id % 2 = 1
-        | UNION ALL SELECT doc_id + 2000001, text, n_chars
-        |   FROM documents WHERE doc_id IN (0, 2, 4)
-        | UNION ALL SELECT 2000007, text, n_chars
-        |   FROM documents WHERE doc_id = 1),
-        |deduped AS (
-        | SELECT doc_id, text, n_chars FROM incoming
-        | QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1)
-        |SELECT doc_id, n_chars FROM deduped
-        |WHERE text NOT IN (SELECT text FROM existing)
-        |ORDER BY doc_id""".stripMargin,
+      exactSliceDedupSql,
 
     "n49_incremental_dedup" ->
       // same text-equality replay as n01 (md5 collision risk accepted)
-      """WITH existing AS (
-        | SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |incoming AS (
-        | SELECT doc_id, text, n_chars FROM documents WHERE doc_id % 2 = 1
-        | UNION ALL SELECT doc_id + 2000001, text, n_chars
-        |   FROM documents WHERE doc_id IN (0, 2, 4)
-        | UNION ALL SELECT 2000007, text, n_chars
-        |   FROM documents WHERE doc_id = 1),
-        |deduped AS (
-        | SELECT doc_id, text, n_chars FROM incoming
-        | QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1)
-        |SELECT doc_id, n_chars FROM deduped
-        |WHERE text NOT IN (SELECT text FROM existing)
-        |ORDER BY doc_id""".stripMargin,
+      exactSliceDedupSql,
 
     // batch minhash banding replayed over the old∪new union (the
     // spec-pinned law: under the ingest-order id invariant the
@@ -6672,47 +6653,17 @@ object SparkEntry {
     // incoming rows, so the oracle IS the batch replay — every victim
     // is a doc_id_b of some banded+verified pair)
     "n150_incremental_neardup" ->
-      s"""WITH u AS (
-         | SELECT doc_id, text, n_chars FROM documents
-         | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', n_chars
-         |   FROM documents WHERE doc_id IN (0, 2, 4)
-         | UNION ALL SELECT 3000007, text || ' x', n_chars
-         |   FROM documents WHERE doc_id = 251),
-         |p AS (SELECT doc_id_b FROM (${minhashOracleSql(k = 5, numHashes = 64,
-               bands = 16, threshold = 0.5, src = "u")}))
-         |SELECT doc_id, n_chars FROM u
-         |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id_b FROM p)
-         |ORDER BY doc_id""".stripMargin,
+      neardupSurvivorsSql(),
 
     // bloom-pruned ≡ unpruned (no false negatives), so the oracle IS
     // n150's batch replay — the driver gate re-proves the sidecar law
     "n157_incremental_bloom" ->
-      s"""WITH u AS (
-         | SELECT doc_id, text, n_chars FROM documents
-         | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', n_chars
-         |   FROM documents WHERE doc_id IN (0, 2, 4)
-         | UNION ALL SELECT 3000007, text || ' x', n_chars
-         |   FROM documents WHERE doc_id = 251),
-         |p AS (SELECT doc_id_b FROM (${minhashOracleSql(k = 5, numHashes = 64,
-               bands = 16, threshold = 0.5, src = "u")}))
-         |SELECT doc_id, n_chars FROM u
-         |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id_b FROM p)
-         |ORDER BY doc_id""".stripMargin,
+      neardupSurvivorsSql(),
 
     // sharded blooms have no false negatives either: sharded-pruned ≡
     // unpruned ≡ n150's batch replay — same oracle by design
     "n162_incremental_bloom_perband" ->
-      s"""WITH u AS (
-         | SELECT doc_id, text, n_chars FROM documents
-         | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', n_chars
-         |   FROM documents WHERE doc_id IN (0, 2, 4)
-         | UNION ALL SELECT 3000007, text || ' x', n_chars
-         |   FROM documents WHERE doc_id = 251),
-         |p AS (SELECT doc_id_b FROM (${minhashOracleSql(k = 5, numHashes = 64,
-               bands = 16, threshold = 0.5, src = "u")}))
-         |SELECT doc_id, n_chars FROM u
-         |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id_b FROM p)
-         |ORDER BY doc_id""".stripMargin,
+      neardupSurvivorsSql(),
 
     // refcounted retraction replayed on text equality: live = corpus
     // texts of UNPURGED holders (string semantics — the refcount is
@@ -6740,18 +6691,7 @@ object SparkEntry {
     // 4's still drops). Identical construction to n150 with the two
     // retracted docs cut from the union's corpus side.
     "n154_index_retraction" ->
-      s"""WITH u AS (
-         | SELECT doc_id, text, n_chars FROM documents
-         |   WHERE doc_id NOT IN (0, 2)
-         | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', n_chars
-         |   FROM documents WHERE doc_id IN (0, 2, 4)
-         | UNION ALL SELECT 3000007, text || ' x', n_chars
-         |   FROM documents WHERE doc_id = 251),
-         |p AS (SELECT doc_id_b FROM (${minhashOracleSql(k = 5, numHashes = 64,
-               bands = 16, threshold = 0.5, src = "u")}))
-         |SELECT doc_id, n_chars FROM u
-         |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id_b FROM p)
-         |ORDER BY doc_id""".stripMargin,
+      neardupSurvivorsSql(corpusWhere = "\n   WHERE doc_id NOT IN (0, 2)"),
 
     // sign-LSH bucket replay over the old∪planted-slice union (the
     // n150 stance for embeddings): under the ingest-order id invariant
@@ -6786,12 +6726,7 @@ object SparkEntry {
     // lower side is an old doc — ids < 250 under the invariant) wins
     // over within evidence; the three buckets partition the slice
     "n153_neardup_slice_report" ->
-      s"""WITH u AS (
-         | SELECT doc_id, text, source FROM documents
-         | UNION ALL SELECT doc_id + 3000000, text || ' tail bit', source
-         |   FROM documents WHERE doc_id IN (0, 2, 4)
-         | UNION ALL SELECT doc_id + 2999756, text || ' x', source
-         |   FROM documents WHERE doc_id = 251),
+      s"""WITH ${neardupSliceCte(carried = "source", mateId = "doc_id + 2999756")},
          |p AS (SELECT doc_id_a, doc_id_b FROM (${minhashOracleSql(k = 5,
                numHashes = 64, bands = 16, threshold = 0.5, src = "u")})),
          |ev AS (SELECT doc_id_b AS doc_id,
@@ -6815,74 +6750,13 @@ object SparkEntry {
     // (doc_id, pos) minimum on both engines, and 1-based DuckDB
     // positions vs Spark's 0-based anchors induce identical covers
     "n155_exact_substr_dedup" ->
-      """WITH u AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL SELECT doc_id + 4000001, 'zyxprefix ' || text
-        |   FROM documents WHERE doc_id = 0
-        | UNION ALL SELECT doc_id + 4000002,
-        |   text || ' zyxsuffix trailing words appended'
-        |   FROM documents WHERE doc_id = 1),
-        |toks AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS ws
-        | FROM u),
-        |w AS (SELECT doc_id, len(ws) AS n_tokens, s.pos AS pos, s.word AS word
-        |  FROM (SELECT doc_id, ws,
-        |    unnest(list_transform(generate_series(1, len(ws)),
-        |      j -> {'pos': j, 'word': ws[j]})) AS s
-        |   FROM toks WHERE len(ws) > 0)),
-        |occ AS (SELECT doc_id, o.pos AS pos, o.g AS g
-        |  FROM (SELECT doc_id,
-        |    unnest(list_transform(generate_series(1, len(ws) - 7),
-        |      j -> {'pos': j, 'g': array_to_string(ws[j:j+7], ' ')})) AS o
-        |   FROM toks WHERE len(ws) >= 8)),
-        |ranked AS (SELECT doc_id, pos,
-        |   row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn,
-        |   count(*) OVER (PARTITION BY g) AS cnt FROM occ),
-        |dup AS (SELECT doc_id, pos FROM ranked WHERE cnt >= 2 AND rn >= 2),
-        |taint AS (SELECT DISTINCT w.doc_id, w.pos FROM w
-        |  JOIN dup d ON w.doc_id = d.doc_id AND w.pos BETWEEN d.pos AND d.pos + 7),
-        |kept AS (SELECT w.* FROM w ANTI JOIN taint USING (doc_id, pos))
-        |SELECT doc_id, CAST(any_value(n_tokens) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_tokens_kept,
-        |  md5(string_agg(word, ' ' ORDER BY pos)) AS text_md5
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      exactSubstrOracleSql(sliceOnly = false),
 
     // the incremental path equals batch over corpus ∪ slice restricted
     // to the slice (merged gram stats == union gram stats), so the
     // oracle IS n155's replay filtered to the planted slice ids
     "n164_incremental_exactsubstr" ->
-      """WITH u AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL SELECT doc_id + 4000001, 'zyxprefix ' || text
-        |   FROM documents WHERE doc_id = 0
-        | UNION ALL SELECT doc_id + 4000002,
-        |   text || ' zyxsuffix trailing words appended'
-        |   FROM documents WHERE doc_id = 1),
-        |toks AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS ws
-        | FROM u),
-        |w AS (SELECT doc_id, len(ws) AS n_tokens, s.pos AS pos, s.word AS word
-        |  FROM (SELECT doc_id, ws,
-        |    unnest(list_transform(generate_series(1, len(ws)),
-        |      j -> {'pos': j, 'word': ws[j]})) AS s
-        |   FROM toks WHERE len(ws) > 0)),
-        |occ AS (SELECT doc_id, o.pos AS pos, o.g AS g
-        |  FROM (SELECT doc_id,
-        |    unnest(list_transform(generate_series(1, len(ws) - 7),
-        |      j -> {'pos': j, 'g': array_to_string(ws[j:j+7], ' ')})) AS o
-        |   FROM toks WHERE len(ws) >= 8)),
-        |ranked AS (SELECT doc_id, pos,
-        |   row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn,
-        |   count(*) OVER (PARTITION BY g) AS cnt FROM occ),
-        |dup AS (SELECT doc_id, pos FROM ranked WHERE cnt >= 2 AND rn >= 2),
-        |taint AS (SELECT DISTINCT w.doc_id, w.pos FROM w
-        |  JOIN dup d ON w.doc_id = d.doc_id AND w.pos BETWEEN d.pos AND d.pos + 7),
-        |kept AS (SELECT w.* FROM w ANTI JOIN taint USING (doc_id, pos))
-        |SELECT doc_id, CAST(any_value(n_tokens) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_tokens_kept,
-        |  md5(string_agg(word, ' ' ORDER BY pos)) AS text_md5
-        |FROM kept WHERE doc_id >= 4000000
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      exactSubstrOracleSql(sliceOnly = true),
 
     "n50_line_dedup" ->
       // string-equality replay of the hash-keyed frequent-line set
@@ -7238,10 +7112,7 @@ object SparkEntry {
          |       WHERE levenshtein(a.key, b.key) <= 1),
          |e AS (SELECT u, v FROM ue UNION SELECT v, u FROM ue
          |      UNION SELECT u, v FROM te UNION SELECT v, u FROM te),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
+         |$reachCte,
          |ent AS (SELECT u AS doc_id, least(u, min(v)) AS ent
          |        FROM reach GROUP BY u)
          |SELECT d.doc_id,
@@ -7394,13 +7265,8 @@ object SparkEntry {
       // n45's proven code formula + list slices; both rankings are
       // integer dots (exact in double far below 2^53) with vec_id
       // tie-break, so the windows replay deterministically
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-        |c AS (SELECT vec_id,
-        |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-        |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-        |       END AS codes FROM s),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |${int8CodesCtes()},
         |q AS (SELECT vec_id AS query_id, codes AS qc FROM c WHERE vec_id < 5),
         |p AS (SELECT q.query_id, c.vec_id,
         |  CAST(list_dot_product(c.codes, q.qc) AS BIGINT) AS dot_full,
@@ -7580,24 +7446,9 @@ object SparkEntry {
         | CAST(strlen(substr(text, CAST((i - 1) * 500 + 1 AS INT), 500)) AS BIGINT) AS piece_len
         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
 
-    "q59_time_range_frame" ->
-      """SELECT user_id, ts, event_id,
-        | CAST(count(*) OVER w AS BIGINT) AS n_events_1h,
-        | round(sum(value) OVER w, 6) AS sum_value_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
+    "q59_time_range_frame" -> portableSql("q59_time_range_frame"),
 
-    "q58_regression" ->
-      """SELECT l_returnflag,
-        | CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n,
-        | round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-        | round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
-        | round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
-        | round(corr(l_extendedprice, l_quantity), 6) AS corr_qty
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+    "q58_regression" -> portableSql("q58_regression"),
 
     "q56_collation" ->
       // the collation collapse replayed as grouping by lower()
@@ -7669,39 +7520,16 @@ object SparkEntry {
 
     "n136_pagerank_dangling" -> {
       val S = graft.ops.Graph.Scale
-      val steps = (1 to 3).map { k =>
-        s"""dx$k AS (SELECT CAST(coalesce(sum(r.rank), 0) AS BIGINT) AS dsum
-           | FROM dang JOIN r${k - 1} r USING (word)),
-           |c$k AS (SELECT ed.dst AS word,
-           |  CAST(sum((r${k - 1}.rank * ed.wt) // ed.wdeg) AS BIGINT) AS csum
-           | FROM ed JOIN r${k - 1} ON ed.src = r${k - 1}.word GROUP BY 1),
-           |r$k AS (SELECT nodes.word,
+      danglingRankOracleSql(
+        s"""nn AS (SELECT count(*) AS n FROM nodes),
+           |dang AS (SELECT word FROM nodes
+           |         WHERE word NOT IN (SELECT src FROM e)),
+           |r0 AS (SELECT word, $S // n AS rank FROM nodes CROSS JOIN nn)""".stripMargin,
+        k => s"""r$k AS (SELECT nodes.word,
            |  ((15 * $S) // 100) // n +
            |    (85 * (coalesce(c$k.csum, 0) + dsum // n)) // 100 AS rank
            | FROM nodes LEFT JOIN c$k USING (word)
-           | CROSS JOIN nn CROSS JOIN dx$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS (SELECT text FROM documents
-         | UNION ALL SELECT 'zzdanglehead zzdangletail'),
-         |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
-         |      FROM d),
-         |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-         |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-         |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-         |      WHERE ws[i] <> ws[i+1]),
-         |e AS (SELECT a AS src, b AS dst, CAST(count(*) AS BIGINT) AS wt
-         |      FROM p GROUP BY 1, 2),
-         |deg AS (SELECT src, CAST(sum(wt) AS BIGINT) AS wdeg FROM e GROUP BY 1),
-         |ed AS (SELECT e.src, e.dst, e.wt, deg.wdeg FROM e JOIN deg USING (src)),
-         |nodes AS (SELECT src AS word FROM e UNION SELECT dst FROM e),
-         |nn AS (SELECT count(*) AS n FROM nodes),
-         |dang AS (SELECT word FROM nodes
-         |         WHERE word NOT IN (SELECT src FROM e)),
-         |r0 AS (SELECT word, $S // n AS rank FROM nodes CROSS JOIN nn),
-         |$steps
-         |SELECT word, CAST(rank AS BIGINT) AS rank,
-         | CAST(row_number() OVER (ORDER BY rank DESC, word) AS BIGINT) AS rk
-         |FROM r3 ORDER BY rank DESC, word LIMIT 25""".stripMargin
+           | CROSS JOIN nn CROSS JOIN dx$k)""".stripMargin)
     },
 
     "n141_cc_pointer_jump" ->
@@ -7709,38 +7537,14 @@ object SparkEntry {
       // independent, so it gates the pointer-jumping variant against
       // the same component-min definition — over the simhash edge set
       // UNION a planted doc_id chain (the high-diameter fixture)
-      s"""WITH RECURSIVE $simhashCte,
-         |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
-         |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6),
-         |ch AS (SELECT doc_id AS u, doc_id + 1 AS v FROM documents
-         |       WHERE doc_id < 249),
-         |pp AS (SELECT u, v FROM p UNION SELECT u, v FROM ch),
-         |e AS (SELECT u, v FROM pp UNION SELECT v, u FROM pp),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)
-         |SELECT u AS doc_id, CAST(least(u, min(v)) AS BIGINT) AS cluster_id
-         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
+      chainComponentsSql,
 
     "n165_incremental_clusters" ->
       // n141's closure VERBATIM: the maintained assignment (old crawl
       // clustered from scratch, slice folded in through the contracted
       // CC) must land on the batch fixpoint over the union, so the
       // old/slice split the engine used cannot appear in the oracle
-      s"""WITH RECURSIVE $simhashCte,
-         |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
-         |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6),
-         |ch AS (SELECT doc_id AS u, doc_id + 1 AS v FROM documents
-         |       WHERE doc_id < 249),
-         |pp AS (SELECT u, v FROM p UNION SELECT u, v FROM ch),
-         |e AS (SELECT u, v FROM pp UNION SELECT v, u FROM pp),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)
-         |SELECT u AS doc_id, CAST(least(u, min(v)) AS BIGINT) AS cluster_id
-         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
+      chainComponentsSql,
 
     "n166_cluster_retraction" ->
       // the closure over exactly the SURVIVING edges (both endpoints
@@ -7748,20 +7552,9 @@ object SparkEntry {
       // segments, removed-touching simhash edges vanish, and a doc
       // that lost its every edge carries no row — the component-local
       // recompute must reproduce this global re-closure
-      s"""WITH RECURSIVE $simhashCte,
-         |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
-         |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6),
-         |ch AS (SELECT doc_id AS u, doc_id + 1 AS v FROM documents
-         |       WHERE doc_id < 249),
-         |pp AS (SELECT u, v FROM p UNION SELECT u, v FROM ch),
-         |sv AS (SELECT u, v FROM pp WHERE u % 83 <> 0 AND v % 83 <> 0),
-         |e AS (SELECT u, v FROM sv UNION SELECT v, u FROM sv),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)
-         |SELECT u AS doc_id, CAST(least(u, min(v)) AS BIGINT) AS cluster_id
-         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
+      componentsSql(s"""$chainPairsCtes,
+        |sv AS (SELECT u, v FROM pp WHERE u % 83 <> 0 AND v % 83 <> 0),
+        |e AS (SELECT u, v FROM sv UNION SELECT v, u FROM sv)""".stripMargin),
 
     "n142_trustrank" -> {
       // n136's round replay with the seed-conditional teleport: rank
@@ -7769,44 +7562,21 @@ object SparkEntry {
       // (CASE == the engine's is_seed 0/1 multiply), and the dangling
       // sum re-enters at the seeds (dsum // ns), not uniformly
       val S = graft.ops.Graph.Scale
-      val steps = (1 to 3).map { k =>
-        s"""dx$k AS (SELECT CAST(coalesce(sum(r.rank), 0) AS BIGINT) AS dsum
-           | FROM dang JOIN r${k - 1} r USING (word)),
-           |c$k AS (SELECT ed.dst AS word,
-           |  CAST(sum((r${k - 1}.rank * ed.wt) // ed.wdeg) AS BIGINT) AS csum
-           | FROM ed JOIN r${k - 1} ON ed.src = r${k - 1}.word GROUP BY 1),
-           |r$k AS (SELECT nf.word,
+      danglingRankOracleSql(
+        s"""seeds AS (SELECT word FROM nodes ORDER BY word LIMIT 5),
+           |nn AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM seeds),
+           |nf AS (SELECT nodes.word,
+           |  CASE WHEN s.word IS NULL THEN 0 ELSE 1 END AS is_seed
+           | FROM nodes LEFT JOIN seeds s USING (word)),
+           |dang AS (SELECT word FROM nodes
+           |         WHERE word NOT IN (SELECT src FROM e)),
+           |r0 AS (SELECT word, is_seed * ($S // ns) AS rank
+           |       FROM nf CROSS JOIN nn)""".stripMargin,
+        k => s"""r$k AS (SELECT nf.word,
            |  nf.is_seed * (((15 * $S) // 100) // ns) +
            |    (85 * (coalesce(c$k.csum, 0) + nf.is_seed * (dsum // ns))) // 100 AS rank
            | FROM nf LEFT JOIN c$k USING (word)
-           | CROSS JOIN nn CROSS JOIN dx$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS (SELECT text FROM documents
-         | UNION ALL SELECT 'zzdanglehead zzdangletail'),
-         |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
-         |      FROM d),
-         |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-         |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-         |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-         |      WHERE ws[i] <> ws[i+1]),
-         |e AS (SELECT a AS src, b AS dst, CAST(count(*) AS BIGINT) AS wt
-         |      FROM p GROUP BY 1, 2),
-         |deg AS (SELECT src, CAST(sum(wt) AS BIGINT) AS wdeg FROM e GROUP BY 1),
-         |ed AS (SELECT e.src, e.dst, e.wt, deg.wdeg FROM e JOIN deg USING (src)),
-         |nodes AS (SELECT src AS word FROM e UNION SELECT dst FROM e),
-         |seeds AS (SELECT word FROM nodes ORDER BY word LIMIT 5),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM seeds),
-         |nf AS (SELECT nodes.word,
-         |  CASE WHEN s.word IS NULL THEN 0 ELSE 1 END AS is_seed
-         | FROM nodes LEFT JOIN seeds s USING (word)),
-         |dang AS (SELECT word FROM nodes
-         |         WHERE word NOT IN (SELECT src FROM e)),
-         |r0 AS (SELECT word, is_seed * ($S // ns) AS rank
-         |       FROM nf CROSS JOIN nn),
-         |$steps
-         |SELECT word, CAST(rank AS BIGINT) AS rank,
-         | CAST(row_number() OVER (ORDER BY rank DESC, word) AS BIGINT) AS rk
-         |FROM r3 ORDER BY rank DESC, word LIMIT 25""".stripMargin
+           | CROSS JOIN nn CROSS JOIN dx$k)""".stripMargin)
     },
 
     "n143_hits" -> {
@@ -7832,16 +7602,7 @@ object SparkEntry {
            |  CAST((CAST(coalesce(hraw, 0) AS HUGEINT) * $S) // hsum AS BIGINT) AS hub
            | FROM nodes LEFT JOIN h${k}r USING (word) CROSS JOIN hs$k)""".stripMargin
       }.mkString(",\n")
-      s"""WITH d AS (SELECT text FROM documents
-         | UNION ALL SELECT 'zzdanglehead zzdangletail'),
-         |w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
-         |      FROM d),
-         |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-         |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-         |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-         |      WHERE ws[i] <> ws[i+1]),
-         |e AS (SELECT a AS src, b AS dst, CAST(count(*) AS BIGINT) AS wt
-         |      FROM p GROUP BY 1, 2),
+      s"""$danglingGraphCtes,
          |nodes AS (SELECT src AS word FROM e UNION SELECT dst FROM e),
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
          |h0 AS (SELECT word, $S // n AS hub FROM nodes CROSS JOIN nn),
@@ -8014,12 +7775,7 @@ object SparkEntry {
          |   row_number() OVER (PARTITION BY qe.query_id
          |     ORDER BY list_cosine_similarity(e.v, qe.q_v) DESC, e.vec_id) AS rnk
          |  FROM e, qe WHERE e.vec_id <> qe.query_id) WHERE rnk <= $k),
-         |s AS (SELECT vec_id, v,
-         |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-         |c AS (SELECT vec_id,
-         |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-         |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-         |       END AS codes FROM s),
+         |${int8CodesCtes()},
          |q AS (SELECT vec_id AS query_id, codes AS q_codes FROM c WHERE vec_id < 5),
          |cd AS (SELECT query_id, vec_id, rnk AS rb FROM (
          |  SELECT q.query_id, c.vec_id,
@@ -8117,69 +7873,17 @@ object SparkEntry {
          |ORDER BY doc_id_contained, doc_id_container""".stripMargin,
 
     "n105_multi_phrase" -> // definitional per phrase, unioned
-      """WITH d AS (SELECT doc_id, text FROM documents
-        | UNION ALL SELECT 9500002,
-        |  'alpha beta gamma delta filler words alpha beta gamma delta'),
-        |w AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        |      FROM d),
-        |m AS (
-        | SELECT 'bench1' AS phrase_id, doc_id, i AS pos
-        |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3 AND ws[i] = 'slow' AND ws[i+1] = 'hash' AND ws[i+2] = 'batch'
-        | UNION ALL
-        | SELECT 'bench2', doc_id, i
-        |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3 AND ws[i] = 'stream' AND ws[i+1] = 'table' AND ws[i+2] = 'hash'
-        | UNION ALL
-        | SELECT 'planted', doc_id, i
-        |  FROM w, unnest(generate_series(1, len(ws) - 3)) AS t(i)
-        |  WHERE len(ws) >= 4 AND ws[i] = 'alpha' AND ws[i+1] = 'beta'
-        |    AND ws[i+2] = 'gamma' AND ws[i+3] = 'delta')
-        |SELECT phrase_id, doc_id, CAST(pos AS BIGINT) AS pos FROM m
-        |ORDER BY phrase_id, doc_id, pos""".stripMargin,
+      quoteSweepOracleSql(),
 
     "n173_phrase_index" -> // n105's definition over the SURVIVORS
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 103 <> 0
-        | UNION ALL SELECT 9500002,
-        |  'alpha beta gamma delta filler words alpha beta gamma delta'),
-        |w AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        |      FROM d),
-        |m AS (
-        | SELECT 'bench1' AS phrase_id, doc_id, i AS pos
-        |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3 AND ws[i] = 'slow' AND ws[i+1] = 'hash' AND ws[i+2] = 'batch'
-        | UNION ALL
-        | SELECT 'bench2', doc_id, i
-        |  FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3 AND ws[i] = 'stream' AND ws[i+1] = 'table' AND ws[i+2] = 'hash'
-        | UNION ALL
-        | SELECT 'planted', doc_id, i
-        |  FROM w, unnest(generate_series(1, len(ws) - 3)) AS t(i)
-        |  WHERE len(ws) >= 4 AND ws[i] = 'alpha' AND ws[i+1] = 'beta'
-        |    AND ws[i+2] = 'gamma' AND ws[i+3] = 'delta')
-        |SELECT phrase_id, doc_id, CAST(pos AS BIGINT) AS pos FROM m
-        |ORDER BY phrase_id, doc_id, pos""".stripMargin,
+      quoteSweepOracleSql(" WHERE doc_id % 103 <> 0"),
 
-    "n174_benchmark_lifecycle" -> {
+    "n174_benchmark_lifecycle" ->
       // the retracted two-suite index must equal the from-scratch
       // single-suite recompute, so the oracle is n167's replay with
       // eval = suite A and train excluding BOTH suites — the lifecycle
       // (append then retract) cannot appear in a correct oracle
-      val thr = graft.ops.Sampling.hexThreshold(0.1)
-      val grams = """list_distinct(list_transform(
-        | generate_series(1, len(ws) - 4),
-        | i -> array_to_string(ws[i:i+4], ' ')))""".stripMargin.replace("\n", "")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |tg AS (SELECT doc_id, unnest($grams) AS gram FROM w
-         |       WHERE NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')
-         |         AND doc_id % 7 <> 0),
-         |eg AS (SELECT DISTINCT unnest($grams) AS gram FROM w
-         |       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$thr')
-         |SELECT tg.doc_id, count(*) AS n_grams, count(eg.gram) AS n_shared,
-         | CAST(count(eg.gram) AS DOUBLE) / count(*) AS contamination
-         |FROM tg LEFT JOIN eg ON tg.gram = eg.gram
-         |GROUP BY tg.doc_id ORDER BY tg.doc_id""".stripMargin
-    },
+      contaminationSql(trainWhere = "\n         AND doc_id % 7 <> 0"),
 
     "n104_heavy_hitters_by_source" -> // definitional per group
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS word
@@ -8318,12 +8022,9 @@ object SparkEntry {
          |FROM best WHERE rk = 1 ORDER BY doc_id""".stripMargin,
 
     "n97_word_triangles" -> // definitional: ordered 3-way edge join
-      """WITH w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
+      s"""WITH w AS (SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
         |           FROM documents),
-        |w2 AS (SELECT ws FROM w WHERE len(ws) >= 2),
-        |p AS (SELECT ws[i] AS a, ws[i+1] AS b
-        |      FROM w2, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-        |      WHERE ws[i] <> ws[i+1]),
+        |$wordPairsCtes,
         |und AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM p),
         |tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
         |        FROM und e1
@@ -8380,90 +8081,30 @@ object SparkEntry {
         |ORDER BY vec_id_a, vec_id_b""".stripMargin,
 
     "n21_knn_ivfpq" -> // full probe + wide rerank == brute force (see query)
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+      bruteForceTopKSql(),
 
     // PQ append: frozen codebooks + full probe + wide rerank == brute
     // force over the union (the n21 oracle verbatim — the split must
     // be invisible to exhaustive search)
-    "n158_ivfpq_append" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+    "n158_ivfpq_append" -> bruteForceTopKSql(),
 
     // append-then-full-probe == brute force over the union == the n16
     // oracle verbatim (the even/odd split is invisible to exhaustive
     // probing — that invisibility IS the law being checked)
-    "n156_ivf_append" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+    "n156_ivf_append" -> bruteForceTopKSql(),
 
     // retraction ≡ rebuild on survivors: brute force with the takedown
     // list's WHERE — a removed vector never returned IS the oracle
     "n160_ivf_retract" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |surv AS (SELECT * FROM embeddings
-        |         WHERE NOT (vec_id >= 5 AND vec_id % 7 = 3)),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM surv e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+      bruteForceTopKSql(survivors = Some("NOT (vec_id >= 5 AND vec_id % 7 = 3)")),
 
     // the PQ flavor shares the survivor oracle (full probe + wide
     // rerank reproduces brute force, the n21/n158 law)
     "n161_ivfpq_retract" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |surv AS (SELECT * FROM embeddings
-        |         WHERE NOT (vec_id >= 5 AND vec_id % 7 = 3)),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM surv e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+      bruteForceTopKSql(survivors = Some("NOT (vec_id >= 5 AND vec_id % 7 = 3)")),
 
     "n16_knn_ivf" -> // exhaustive probe == brute force, same oracle as n08
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-        |           FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.query_id, e.vec_id,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) AS cos_raw,
-        |  row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q_emb) DESC, e.vec_id) AS rnk
-        | FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, round(cos_raw, 6) AS cos, rnk
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
+      bruteForceTopKSql(),
 
     "g18_resample_rms_udaf" ->
       s"""WITH $grid
@@ -8652,13 +8293,7 @@ object SparkEntry {
         | CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM l WHERE domain <> '' GROUP BY domain ORDER BY domain""".stripMargin,
 
-    "q43_nulls_order" ->
-      """SELECT o_orderkey,
-        | CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
-        |      ELSE o_totalprice END AS p
-        |FROM orders
-        |ORDER BY p DESC NULLS LAST, o_orderkey
-        |LIMIT 100""".stripMargin,
+    "q43_nulls_order" -> portableSql("q43_nulls_order"),
 
     "n87_html_extract" ->
       // same regex chain under RE2 with the 'g' flag (Spark's
@@ -8716,13 +8351,7 @@ object SparkEntry {
         |FROM documents GROUP BY ALL
         |ORDER BY source, lang""".stripMargin,
 
-    "q41_set_ops_all" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |INTERSECT ALL
-        |SELECT o_custkey FROM orders WHERE o_totalprice > 100000
-        |EXCEPT ALL
-        |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY o_custkey""".stripMargin,
+    "q41_set_ops_all" -> portableSql("q41_set_ops_all"),
 
     "n84_lsh_recall" ->
       s"""SELECT n_pred, n_truth, n_hit, n_truth - n_hit AS n_missed,
@@ -9032,19 +8661,14 @@ object SparkEntry {
       // truth = n08's exact-cosine replay; candidate = n46's quantizer
       // + integer-dot ranking (NO re-rank); metrics are pure integer
       // arithmetic over the two metadata-sized top-10 lists
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |qe AS (SELECT vec_id AS query_id, v AS q_v FROM e WHERE vec_id < 5),
         |tr AS (SELECT query_id, vec_id FROM (
         |  SELECT qe.query_id, e.vec_id,
         |   row_number() OVER (PARTITION BY qe.query_id
         |     ORDER BY list_cosine_similarity(e.v, qe.q_v) DESC, e.vec_id) AS rnk
         |  FROM e, qe WHERE e.vec_id <> qe.query_id) WHERE rnk <= 10),
-        |s AS (SELECT vec_id, v,
-        |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-        |c AS (SELECT vec_id,
-        |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-        |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-        |       END AS codes FROM s),
+        |${int8CodesCtes()},
         |q AS (SELECT vec_id AS query_id, codes AS q_codes FROM c WHERE vec_id < 5),
         |cd AS (SELECT query_id, vec_id, rnk AS crank FROM (
         |  SELECT q.query_id, c.vec_id,
@@ -9067,13 +8691,8 @@ object SparkEntry {
     "n46_knn_int8" ->
       // full replay: n45's quantizer CTEs, integer-dot shortlist ranked
       // (qcos DESC, vec_id), exact-cosine re-rank of the top k*4
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-        |c AS (SELECT vec_id, v,
-        |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-        |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-        |       END AS codes FROM s),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |${int8CodesCtes("vec_id, v")},
         |q AS (SELECT vec_id AS query_id, codes AS q_codes, v AS q_v FROM c
         |      WHERE vec_id < 3),
         |sc AS (SELECT q.query_id, c.vec_id, c.v, q.q_v,
@@ -9099,13 +8718,8 @@ object SparkEntry {
       // same quantizer: scale column first, then floor(x/scale + 0.5)
       // verbatim; integer dots are exact in any engine, and the two
       // sqrt/divide steps are single IEEE expressions
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |       list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-        |c AS (SELECT vec_id, v,
-        |       CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
-        |            ELSE list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INT))
-        |       END AS codes FROM s),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |${int8CodesCtes("vec_id, v")},
         |q AS (SELECT codes AS q_codes, v AS q_v FROM c WHERE vec_id = 0)
         |SELECT c.vec_id,
         |  round(CAST(list_dot_product(c.codes, q.q_codes) AS DOUBLE) /
@@ -9227,16 +8841,7 @@ object SparkEntry {
       // transitive closure over the replayed simhash edge set: reach
       // accumulates every (node, reachable node) path pair; the cluster
       // id is the min over node itself and everything reachable
-      s"""WITH RECURSIVE $simhashCte,
-         |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
-         |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6),
-         |e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)
-         |SELECT u AS doc_id, CAST(least(u, min(v)) AS BIGINT) AS cluster_id
-         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
+      componentsSql("e AS (SELECT u, v FROM p UNION SELECT v, u FROM p)"),
 
     "n60_temperature_sample" ->
       // rate = sqrt(nmin/n): one exact integer->double division and a
@@ -9315,14 +8920,9 @@ object SparkEntry {
       // n28's recursive-CTE components + n03's token-count replay; the
       // per-cluster winner is row_number over (tokens DESC, doc_id) —
       // an all-integer argmax, so selection is engine-exact
-      s"""WITH RECURSIVE $simhashCte,
-         |p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM shs a, shs b
-         |      WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sh, b.sh)) <= 6),
+      s"""$simhashPairsSql,
          |e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
+         |$reachCte,
          |cl AS (SELECT u AS doc_id, least(u, min(v)) AS cluster_id
          |       FROM reach GROUP BY u),
          |tk AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0

@@ -66,7 +66,7 @@ object Reproject {
     import spark.implicits._
     val mapDf = mapping.toDF("lon", "lat", "jy", "jx")
 
-    val src = withIndexes(g, xa, ya)
+    val src = SpatialResample.withIndexes(g, xa, ya)
     val vars = g.variables
     val out = src.join(broadcast(mapDf), Seq("jy", "jx"))
       .select((Seq(col(g.meta.timeDim), col("lat"), col("lon")) ++ vars.map(col)): _*)
@@ -76,10 +76,4 @@ object Reproject {
       timeStep = g.meta.timeStep, timeZone = g.meta.timeZone,
       xAxis = Some(lonAxis), yAxis = Some(latAxis)))
   }
-
-  // Always recomputed from current axis metadata (see
-  // SpatialResample.withIndexes for why trusting existing jx/jy is wrong
-  // after a crop rebases the axis origin).
-  private def withIndexes(g: GridDataset, xa: AxisSpec, ya: AxisSpec) =
-    SpatialResample.withIndexes(g, xa, ya)
 }

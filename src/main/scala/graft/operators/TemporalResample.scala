@@ -47,13 +47,8 @@ object TemporalResample {
     * Spark window duration, e.g. "6 hours". Bucket label = window start
     * (pandas/xarray left-labeled resample default).
     */
-  def downsample(g: GridDataset, freq: String, method: String): GridDataset = {
-    val aggs = g.variables.map(v => aggFor(method, col(v), g.time).as(v))
-    val out = g.df
-      .groupBy(window(g.time, freq).getField("start").as(g.meta.timeDim), g.y, g.x)
-      .agg(aggs.head, aggs.tail: _*)
-    g.copy(df = out)
-  }
+  def downsample(g: GridDataset, freq: String, method: String): GridDataset =
+    downsampleCustom(g, freq, v => aggFor(method, v, g.time))
 
   /** Downsample with a caller-supplied aggregation — the engine's
     * extension point mirroring `custom_resample_method` (reference:

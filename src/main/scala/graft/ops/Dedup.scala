@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -542,25 +542,8 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = math.max(if (expectedKeys > 0) expectedKeys else keys.count(), 1L)
-      val numBits = math.max(64L,
-        math.ceil(-n.toDouble * math.log(fpp) / (math.log(2.0) * math.log(2.0))).toLong)
-      // SIZE GUARD: Spark's BloomFilterAggregate silently Math.min-caps
-      // the requested items/bits against the runtime-filter confs
-      // (defaults 4M items / 64M bits ~ 8 MB) — a capped sketch keeps
-      // the requested fpp in name only and saturates toward fpp ~ 1,
-      // pruning nothing while still charging build + probe. Fail fast
-      // instead (the maxGroups convention): raise both confs for a
-      // bigger key set, or shard the sidecar.
-      val conf = keys.sparkSession.conf
-      val maxItems = conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-      val maxBits = conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-      require(n <= maxItems && numBits <= maxBits,
-        s"sidecar for $n keys wants $numBits bits but the aggregate caps at " +
-          s"$maxItems items / $maxBits bits (a capped sketch silently " +
-          "saturates toward fpp 1) — raise spark.sql.optimizer.runtime." +
-          s"bloomFilter.maxNumItems/maxNumBits or $shardAdvice")
+      val numBits = guardedBloomBits(keys.sparkSession, n, fpp,
+        s"sidecar for $n keys", s"or $shardAdvice")
       val row = keys.agg(bloom_filter_agg(hashed, n, numBits).as("bf")).head()
       if (row.isNullAt(0)) {
         val empty = org.apache.spark.util.sketch.BloomFilter.create(1L, 64L)
@@ -569,6 +552,31 @@ object Dedup {
         bos.toByteArray
       } else row.getAs[Array[Byte]](0)
     } finally keys.unpersist(blocking = false)
+  }
+
+  /** Bit count of a bloom sketch over `n` keys at `fpp`, refused past
+    * Spark's aggregate caps. SIZE GUARD: BloomFilterAggregate silently
+    * Math.min-caps the requested items/bits against the runtime-filter
+    * confs (defaults 4M items / 64M bits ~ 8 MB) — a capped sketch
+    * keeps the requested fpp in name only and saturates toward fpp ~ 1,
+    * pruning nothing while still charging build + probe. Fail fast
+    * instead (the maxGroups convention); `sketch` names what overflows
+    * and `advice` the escape besides raising both confs.
+    */
+  private def guardedBloomBits(spark: SparkSession, n: Long, fpp: Double,
+                               sketch: String, advice: String): Long = {
+    val numBits = math.max(64L,
+      math.ceil(-n.toDouble * math.log(fpp) / (math.log(2.0) * math.log(2.0))).toLong)
+    val maxItems = spark.conf.get(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
+    val maxBits = spark.conf.get(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
+    require(n <= maxItems && numBits <= maxBits,
+      s"$sketch wants $numBits bits but the aggregate caps at " +
+        s"$maxItems items / $maxBits bits (a capped sketch silently " +
+        "saturates toward fpp 1) — raise spark.sql.optimizer.runtime." +
+        s"bloomFilter.maxNumItems/maxNumBits $advice")
+    numBits
   }
 
   /** The SHARDED bloom sidecar — one sketch per band — the scale path
@@ -611,23 +619,11 @@ object Dedup {
       if (counts.isEmpty) Map.empty
       else {
         val nMax = math.max(counts.values.max, 1L)
-        val numBits = math.max(64L,
-          math.ceil(-nMax.toDouble * math.log(fpp) /
-            (math.log(2.0) * math.log(2.0))).toLong)
-        // the indexBloom size guard, per shard: a capped shard would
-        // silently saturate toward fpp ~ 1 — fail fast instead. The
-        // per-band split IS the first escape hatch, so tripping here
-        // means the confs themselves must rise.
-        val conf = index.sparkSession.conf
-        val maxItems = conf.get(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-        val maxBits = conf.get(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-        require(nMax <= maxItems && numBits <= maxBits,
-          s"largest band shard holds $nMax keys wanting $numBits bits but " +
-            s"the aggregate caps at $maxItems items / $maxBits bits — raise " +
-            "spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits " +
-            "(the per-band split already divided the keys)")
+        // the size guard, per shard: the per-band split IS the first
+        // escape hatch, so tripping here means the confs must rise
+        val numBits = guardedBloomBits(index.sparkSession, nMax, fpp,
+          s"largest band shard of $nMax keys",
+          "(the per-band split already divided the keys)")
         keys.groupBy(col("band"))
           .agg(bloom_filter_agg(xxhash64(col("band"), col("bucket")),
             nMax, numBits).as("bf"))

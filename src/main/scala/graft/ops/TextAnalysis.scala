@@ -1149,8 +1149,7 @@ object TextAnalysis {
     * so ranking ties cannot diverge. `queries` is (query_id, qtext).
     */
   def bm25Search(docs: DataFrame, queries: DataFrame, k: Int = 10,
-                 k1: Double = 1.2, b: Double = 0.75,
-                 materialize: Boolean = true): DataFrame = {
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, "k must be positive")
     val tok = docs.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))
@@ -1166,29 +1165,19 @@ object TextAnalysis {
     val qterms = qt.select("term").distinct()
     val tf0 = tok.join(broadcast(qterms), Seq("term"), "left_semi")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // materialize = false returns the LAZY plan (nothing persisted,
-    // nothing executed) — plan inspection and callers that compose the
-    // search into a larger pipeline and own caching themselves
-    if (!materialize) {
-      val stats = dl0.agg(count(lit(1)).as("nd"), sum(col("dl")).as("sumdl"))
-        .select(col("nd"),
-          (col("sumdl").cast("double") / col("nd")).as("avgdl"))
-      bm25ScoreTail(qt, tf0, dl0, stats, k, k1, b)
-    } else {
-      val dl = dl0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats = dl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("sumdl"))
-        .select(col("nd"),
-          (col("sumdl").cast("double") / col("nd")).as("avgdl"))
-      val tf = tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the top-k is queries x k sized — materialize it, then release
-      // the internal persists (the contaminationAgainstIndex convention:
-      // repeated searches in a long-lived session must not accumulate
-      // cached relations)
-      try graft.ops.Iterate.checkpointed(bm25ScoreTail(qt, tf, dl, stats, k, k1, b))
-      finally {
-        tf.unpersist(blocking = false)
-        dl.unpersist(blocking = false)
-      }
+    val dl = dl0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stats = dl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("sumdl"))
+      .select(col("nd"),
+        (col("sumdl").cast("double") / col("nd")).as("avgdl"))
+    val tf = tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the top-k is queries x k sized — materialize it, then release
+    // the internal persists (the contaminationAgainstIndex convention:
+    // repeated searches in a long-lived session must not accumulate
+    // cached relations)
+    try graft.ops.Iterate.checkpointed(bm25ScoreTail(qt, tf, dl, stats, k, k1, b))
+    finally {
+      tf.unpersist(blocking = false)
+      dl.unpersist(blocking = false)
     }
   }
 

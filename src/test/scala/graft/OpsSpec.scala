@@ -177,13 +177,15 @@ class OpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val qs = Seq((1L, "rare"), (2L, "common"), (3L, "rare common"), (4L, "absent"))
       .toDF("query_id", "qtext")
-    val res = TextAnalysis.bm25Search(corpus, qs, k = 2)
-    // plan-shape lint on the LAZY flavor: the materialized default
-    // checkpoints its result (no cache leak — the r13 ADVICE closure),
-    // which truncates the returned plan to a Scan ExistingRDD, so the
-    // shape is asserted on materialize = false (same tree, unexecuted)
-    val plan = TextAnalysis.bm25Search(corpus, qs, k = 2,
-      materialize = false).queryExecution.executedPlan.toString
+    // plan-shape lint on the plan the search's checkpoint executes: the
+    // returned relation is checkpointed (no cache leak — the r13 ADVICE
+    // closure), which truncates its own plan to a Scan ExistingRDD, so
+    // the shape is read off the checkpoint's query execution
+    val (res, rec) = graft.tools.Profile.record(spark)(
+      TextAnalysis.bm25Search(corpus, qs, k = 2))
+    val checkpoints = rec.executions.filter(_.action.toLowerCase.contains("checkpoint"))
+    assert(checkpoints.nonEmpty, rec.executions.map(_.action))
+    val plan = checkpoints.map(_.qe.executedPlan.toString).mkString("\n")
     assert(plan.contains("WindowGroupLimit"))
     // the postings probe is a broadcast left-semi on the query terms —
     // the term filter must run BEFORE any corpus aggregation
