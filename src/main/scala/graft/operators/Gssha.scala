@@ -149,7 +149,7 @@ object Gssha {
       .agg(cols.head, cols.tail: _*)
       .select(g.time, concat_ws(" ", (ts(g.time) +:
         HmetVariables.sortBy(_.wesIndex).map(hv => col(hv.asciiFileName).cast("string"))): _*).as("line"))
-      .coalesce(1) // one line per timestep: sort in one partition, no range shuffle
+      .repartition(1) // one line per timestep: gather, sort in one partition, no range shuffle
       .orderBy(g.time)
   }
 

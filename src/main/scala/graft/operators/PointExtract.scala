@@ -20,8 +20,12 @@ import graft.model.GridDataset
   * keyed by cell, and the table is ONE aggregate keyed by time with a
   * conditional `first` per point: one exchange on time, where a pivot
   * aggregates by (time, point_id) and then by time. The table has one row
-  * per timestep, so it is sorted in one partition: no range shuffle, no
-  * sampling job, one output file.
+  * per timestep, so it is gathered into one partition (a one-partition
+  * exchange of those rows) and sorted there: no range shuffle, no
+  * sampling job, one output file. A gather, not a coalesce: with no
+  * exchange below (a downsample over a regrid aggregates by time in the
+  * crop exchange's partitions), coalescing would run the whole regrid
+  * in one task.
   */
 object PointExtract {
 
@@ -71,7 +75,7 @@ object PointExtract {
       .select(g.time, explode(pointsByCell(cell(g.x, g.y))).as("point"), col(variable))
       .groupBy(g.time)
       .agg(columns.head, columns.tail: _*)
-      .coalesce(1)
+      .repartition(1)
       .orderBy(g.time)
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SharedPlan
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.{AxisSpec, GridDataset, GridMeta}
 
@@ -44,6 +45,16 @@ import graft.model.{AxisSpec, GridDataset, GridMeta}
   * reaches the scan any more, so crop before regridding, in the
   * reference's order: a bbox, time window or variable selection written
   * after the regrid filters the regridded rows, not the Parquet read.
+  *
+  * A temporal downsample written directly over an interpolating regrid
+  * ([[TemporalResample.downsample]]) re-plans it with that crop exchange
+  * keyed by the downsample's time bucket instead of by time
+  * ([[byBucket]]); the regrid and the downsample aggregate then both run
+  * after the one exchange, and so do the point table's and the WES
+  * rows' aggregates keyed by the bucket. A request exchanges the crop
+  * once and nothing else of its size. A persisted or further derived
+  * regrid output keeps the time-keyed plan, and the downsample adds its
+  * own exchange above it.
   */
 object SpatialResample {
 
@@ -249,21 +260,60 @@ object SpatialResample {
     * planned here, with no job run, and read as the same shuffle by
     * every later action, so the second sink of a request skips the scan
     * and exchange stage. It declares the exchange's hash partitioning,
-    * so the join and aggregate above plan exactly as before. Filters and
-    * column pruning written after the regrid stay above the cut; a
-    * point table's station filter still folds into the tap relation.
+    * so the join and aggregate above plan exactly as before. It carries
+    * only what the join and aggregate read (time, tap indices,
+    * variables), and the join's not-null test on the tap indices runs
+    * inside it, below the exchange. Filters and column pruning written
+    * after the regrid stay above the cut; a point table's station filter
+    * still folds into the tap relation.
+    *
+    * The output is remembered (weakly, by identity) with a way to plan
+    * the same regrid keyed by a time bucket instead: [[byBucket]].
     */
   private def tapRegrid(g: GridDataset, xa: AxisSpec, ya: AxisSpec, xt: AxisSpec,
                         yt: AxisSpec, taps: DataFrame): GridDataset = {
+    val t = col(g.meta.timeDim)
     val aggs = g.variables.map(v => sum(col(v) * col("w")).as(v))
-    val crop = SharedPlan(withIndexes(g, xa, ya).repartition(col(g.meta.timeDim)))
-    val out = crop
-      .join(broadcast(taps), Seq("jy", "jx"))
-      .groupBy(col(g.meta.timeDim), col("y2"), col("x2"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumnsRenamed(Map("y2" -> g.meta.yDim, "x2" -> g.meta.xDim))
+    val indexed = withIndexes(g, xa, ya)
+      .select((Seq(t, col("jy"), col("jx")) ++ g.variables.map(col)): _*)
+      .filter(col("jy").isNotNull && col("jx").isNotNull)
+    // the crop exchange is keyed by the first key, the aggregate by the
+    // keys and the target cell
+    def regrid(crop: DataFrame, keys: Column*): DataFrame =
+      SharedPlan(crop.repartition(keys.head))
+        .join(broadcast(taps), Seq("jy", "jx"))
+        .groupBy(keys ++ Seq(col("y2"), col("x2")): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumnsRenamed(Map("y2" -> g.meta.yDim, "x2" -> g.meta.xDim))
+    val out = regrid(indexed, t)
+    bucketed.put(out, freq =>
+      regrid(indexed.withColumn(Bucket, window(t, freq).getField("start")), col(Bucket), t))
     g.copy(df = out, meta = g.meta.copy(xAxis = Some(xt), yAxis = Some(yt)))
   }
+
+  /** The time-bucket column of a regrid planned by [[byBucket]]. */
+  private[operators] val Bucket = "_bucket"
+
+  /** Each live interpolating-regrid output, by identity, with the plan of
+    * the same regrid keyed by a downsample frequency's bucket.
+    */
+  private val bucketed = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, String => DataFrame]())
+
+  /** When `df` is exactly the output of an interpolating regrid, and not
+    * persisted, the same regrid with a [[Bucket]] column
+    * `window(time, freq).start`, computed on the crop and keying its
+    * shared exchange instead of time. The regrid aggregate groups by
+    * (bucket, time, y2, x2) and a downsample by (bucket, y, x); the one
+    * hash partitioning on the bucket satisfies both, and any aggregate
+    * keyed by the bucket above them, so the downsample plans no exchange
+    * of its own. `window` drops null times, here below the regrid,
+    * where a downsample over the regrid would drop their cells. A
+    * persisted output (its cached rows are cheaper than a new crop
+    * exchange) or anything derived from it (a new DataFrame) is None.
+    */
+  private[operators] def byBucket(df: DataFrame, freq: String): Option[DataFrame] =
+    Option(bucketed.get(df)).filter(_ => df.storageLevel == StorageLevel.NONE).map(_(freq))
 
   /** Map a coordinate column onto the downsample target-cell index:
     * floor((coord - west_edge) / target_step), edge-clamped. The GDAL

@@ -11,6 +11,10 @@ import graft.model.GridDataset
   * Downsampling = time-bucket aggregation (`groupBy(window(time, freq))`):
   * map-side partial aggregation + one shuffle on (bucket, y, x) — the
   * shuffle key count equals the output size, so this scales linearly.
+  * Directly over an interpolating regrid it needs no shuffle of its own:
+  * the regrid's crop exchange is keyed by the bucket instead
+  * ([[SpatialResample.byBucket]]), and that one hash partitioning serves
+  * the regrid's aggregate and this one.
   * Upsampling = target-time-grid generation (`sequence` + `explode`) +
   * left join + gap fill via window functions.
   *
@@ -54,12 +58,21 @@ object TemporalResample {
     * extension point mirroring `custom_resample_method` (reference:
     * core_functions.py:354,387,405-406). Pass any Column-level aggregate,
     * including a registered `Aggregator` UDAF.
+    *
+    * When `g.df` is exactly an interpolating regrid's output (not
+    * persisted, not derived further), the buckets come from that regrid
+    * re-planned with its crop exchange keyed by the bucket, so the
+    * aggregate below runs in the exchange's partitions; rows and schema
+    * are those of the plain path, up to the rounding of sums taken in
+    * another order. Each task then holds whole buckets, so a request
+    * runs at most min(buckets, shuffle partitions) tasks after the
+    * exchange.
     */
   def downsampleCustom(g: GridDataset, freq: String, customAgg: Column => Column): GridDataset = {
     val aggs = g.variables.map(v => customAgg(col(v)).as(v))
-    val out = g.df
-      .groupBy(window(g.time, freq).getField("start").as(g.meta.timeDim), g.y, g.x)
-      .agg(aggs.head, aggs.tail: _*)
+    val (src, bucket) = SpatialResample.byBucket(g.df, freq)
+      .fold((g.df, window(g.time, freq).getField("start")))(d => (d, col(SpatialResample.Bucket)))
+    val out = src.groupBy(bucket.as(g.meta.timeDim), g.y, g.x).agg(aggs.head, aggs.tail: _*)
     g.copy(df = out)
   }
 

@@ -34,6 +34,10 @@ import graft.{Bench, EnvFilter, LocalSession, SparkEntry}
   *     and, for the last of consecutive runs of a name, its 20 costliest
   *     stages. Repeat a name to get hot runs.
   *   - `explain`: the formatted physical plan of each query; runs nothing.
+  *   - `request` (no query names, no test data): writes the small
+  *     day-partitioned lake of [[LakeRequest]], runs one request to warm
+  *     the session, the lake catalog and the codegen cache, and dumps a
+  *     second request in the `dump` layout, with the classes it compiled.
   */
 object Profile {
 
@@ -117,13 +121,16 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
     val names = if (args.length > 1) args.toSeq.tail
       else EnvFilter.only.toSeq.flatMap(_.toSeq.sorted)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    val sfDir = if (mode == "request") "" else sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to the test-data directory"))
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    try run(spark, sfDir, args.headOption.getOrElse(""), names, System.out)
-    finally spark.stop()
+    try {
+      if (mode == "request") request(spark, System.out)
+      else run(spark, sfDir, mode, names, System.out)
+    } finally spark.stop()
   }
 
   /** Profile `names` on `spark` in `mode`, printing to `out`. The session
@@ -155,8 +162,6 @@ object Profile {
       (s, d) => { result = SparkEntry.queries(name)(s, d); result }))
     require(result != null, s"$name failed to build")
     val rows = result.collect().map(_.toString).sorted
-    val sha = MessageDigest.getInstance("SHA-256")
-      .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
     val testdata = new File(sfDir).getAbsoluteFile.getParent
     def clean(s: String): String =
       s.replaceAll("#\\d+", "").replace(testdata, "<testdata>")
@@ -174,12 +179,31 @@ object Profile {
       |# <testdata> is the test-data directory.
       |
       |== $name: ${rec.jobs.size} jobs ==""".stripMargin)
+    printJobs(rec, out)
+    out.println(s"result: ${rows.length} rows, sha256 of sorted rows ${sha16(rows)}")
+    printExecutions(rec, clean, out)
+  }
+
+  /** The first 16 hex digits of the SHA-256 of `lines`, newline-joined. */
+  private def sha16(lines: Array[String]): String =
+    MessageDigest.getInstance("SHA-256").digest(lines.mkString("\n").getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** One line per job: planned stages and tasks, the call site of its
+    * last stage, and what it skipped.
+    */
+  private def printJobs(rec: Record, out: PrintStream): Unit =
     rec.jobs.zipWithIndex.foreach { case (j, i) =>
       val skipped = if (j.skippedStages == 0) ""
         else s" skipped: ${j.skippedStages} stages, ${j.skippedTasks} tasks"
       out.println(f"job ${i + 1}%2d: stages=${j.stages} tasks=${j.tasks} site=${j.site}$skipped")
     }
-    out.println(s"result: ${rows.length} rows, sha256 of sorted rows ${sha.take(16)}")
+
+  /** Every SQL execution of `rec`: counts, formatted plan (through
+    * `clean`), each shared sub-plan after the first execution that reads
+    * it, and per-node metrics.
+    */
+  private def printExecutions(rec: Record, clean: String => String, out: PrintStream): Unit = {
     val shared = mutable.ArrayBuffer.empty[SparkPlan]
     val walked = rec.executions.map { e =>
       val before = shared.size
@@ -197,6 +221,43 @@ object Profile {
         val ms = metrics(p)
         out.println("  " * depth + p.nodeName + (if (ms.nonEmpty) s"  [$ms]" else ""))
       }
+    }
+  }
+
+  /** The `request` mode: a warm [[LakeRequest]] in the `dump` layout. */
+  def request(spark: SparkSession, out: PrintStream): Unit = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = LakeRequest.lake(spark)
+    withoutAqe(spark) {
+      LakeRequest(spark, dir, 0)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (lines, rec) = record(spark)(LakeRequest(spark, dir, 1, LakeRequest.OtherBox,
+        LakeRequest.OtherWindow, LakeRequest.OtherStations))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      val table = spark.read.parquet(s"$dir/out/req=1.parquet").collect().map(_.toString).sorted
+      val parts = spark.conf.get("spark.sql.shuffle.partitions")
+      val st = rec.stages
+      out.println(s"""# One warm analyst-path request (graft.tools.LakeRequest), written by
+        |# graft.tools.Profile request. Lake: the synthetic grid as Parquet, partitioned by day.
+        |# Request: bbox ${LakeRequest.OtherBox}, ${LakeRequest.OtherWindow._1} to
+        |# ${LakeRequest.OtherWindow._2}, t2m+u100 -> LakeAdapter.load -> SpatialResample.bilinear x2
+        |# -> TemporalResample.downsample 6 hours mean -> PointExtract.pointsToTable (TableSink.write)
+        |# -> Gssha.wesRows collect. ${spark.sparkContext.master}, $parts shuffle partitions, AQE off
+        |# (the benchmark's conf). Recorded around the SECOND request (the first, over another
+        |# bbox, window and station set, warms the session, the lake catalog and the codegen
+        |# cache): every job it started (stages and tasks as planned at job start,
+        |# the call site of its last stage, the stages it skipped because their shuffle output
+        |# was already written), the stages it ran, the classes it compiled
+        |# (CodegenMetrics.METRIC_COMPILATION_TIME delta), the hash of its sorted table rows
+        |# and WES lines, then every SQL execution as `dump` prints it. <work> is the directory
+        |# the lake was written to.
+        |
+        |== request: ${rec.jobs.size} jobs, ${st.size} stages run, ${st.map(_.tasks).sum} tasks run, $compiles classes compiled ==""".stripMargin)
+      printJobs(rec, out)
+      st.foreach(x => out.println(f"  stage: tasks=${x.tasks}%2d  ${x.name}"))
+      out.println(s"result: ${table.length} table rows, ${lines.length} WES lines, " +
+        s"sha256 of both ${sha16(table ++ lines)}")
+      printExecutions(rec, _.replaceAll("#\\d+", "").replace(dir, "<work>"), out)
     }
   }
 

@@ -1,10 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{ClassicConversions, Dataset}
+import org.apache.spark.sql.classic.{ClassicConversions, Dataset, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, SparkPlan}
 
 /** A relation planned once and read by every action over it.
@@ -20,8 +20,10 @@ import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, 
   *
   * The sub-plan is planned without adaptive execution (an adaptive plan
   * materializes its query stages when asked for its RDD), so building
-  * the relation runs no job with AQE on or off; it only compiles the
-  * sub-plan's generated code on the driver. The relation declares the
+  * the relation runs no job with AQE on or off. The sub-plan's RDD is
+  * made, and its generated code compiled on the driver, when the first
+  * action over the relation asks for it, so a relation no action reads
+  * costs its planning and nothing more. The relation declares the
   * partitioning the RDD has and keeps the optimized plan's statistics
   * and constraints, so the plan above it is planned as it was over
   * `df`: a hash partitioning that satisfied an aggregate above still
@@ -32,11 +34,17 @@ import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, 
 object SharedPlan {
 
   /** The sub-plan's RDD, keeping the plan it came from (not shipped to
-    * tasks) so that plan tools can show what the relation runs.
+    * tasks) so that plan tools can show what the relation runs. The plan
+    * is executed (its RDD made, its generated code compiled) the first
+    * time the scheduler asks for this RDD's partitions or dependencies.
     */
-  private final class PlannedRDD(@transient val plan: SparkPlan, prev: RDD[InternalRow])
-      extends RDD[InternalRow](prev) {
-    override protected def getPartitions: Array[Partition] = firstParent[InternalRow].partitions
+  private final class PlannedRDD(@transient val plan: SparkPlan,
+                                 @transient session: SparkSession)
+      extends RDD[InternalRow](session.sparkContext, Nil) {
+    @transient private lazy val executed = session.withActive(plan.execute())
+    override protected def getDependencies: Seq[Dependency[_]] =
+      Seq(new OneToOneDependency(executed))
+    override protected def getPartitions: Array[Partition] = executed.partitions
     override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
       firstParent[InternalRow].iterator(split, context)
   }
@@ -46,7 +54,7 @@ object SharedPlan {
     session.withActive {
       val optimized = df.queryExecution.optimizedPlan
       val plan = QueryExecution.prepareExecutedPlan(session, optimized)
-      val node = LogicalRDD(optimized.output, new PlannedRDD(plan, plan.execute()),
+      val node = LogicalRDD(optimized.output, new PlannedRDD(plan, session),
         plan.outputPartitioning, plan.outputOrdering)(
         session, Some(optimized.stats), Some(optimized.constraints))
       Dataset.ofRows(session, node)

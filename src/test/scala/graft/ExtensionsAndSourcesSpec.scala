@@ -311,63 +311,30 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
 
   test("analyst-path budget: the regrid exchanges the crop once on time, the sinks sort without a range shuffle") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.{FilterExec, RDDScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.graft.SharedPlan
-    import graft.operators.{Gssha, PointExtract, TemporalResample}
+    import graft.operators.{Gssha, PointExtract}
+    import graft.tools.LakeRequest
     // the benchmark's request shape on a small day-partitioned lake
-    val dir = Files.createTempDirectory("lake").toString
-    SyntheticGrid.df(spark).withColumn("day", dayofmonth(col("time")))
-      .write.partitionBy("day").parquet(s"$dir/grid")
-    LakeAdapter.root = dir
-    val stations = Seq(("p0", -82.4, 41.9), ("p1", -81.6, 42.1), ("p2", -80.9, 41.8),
-      ("p3", -81.1, 42.2))
-    val hmet = Map("t2m" -> "Dry Bulb Temperature", "u100" -> "Wind Speed")
-    val box = BBox(-82.9, 41.6, -80.2, 42.4)
-    val window = ("2019-01-31 00:00:00", "2019-02-01 23:00:00")
-    def load(b: BBox = box, w: (String, String) = window) =
-      LakeAdapter.load(spark, "grid", Seq("t2m", "u100"), Some(b), Some(w))
-    def coarse(g: GridDataset) =
-      TemporalResample.downsample(SpatialResample.bilinear(g, 2.0, 2.0), "6 hours", "mean")
-    def request(i: Int, b: BBox = box, w: (String, String) = window,
-                pts: Seq[(String, Double, Double)] = stations): Array[String] = {
-      val c = coarse(load(b, w))
-      TableSink.write(PointExtract.pointsToTable(c, pts, "t2m"), s"$dir/out/req=$i.parquet")
-      Gssha.wesRows(c, hmet, roundTo = Some(4)).select("line").collect().map(_.getString(0))
-    }
-    // each shuffle exchange outside a broadcast, top-down, through the
-    // planned sub-plan of a shared relation: "time" for a hash
-    // partitioning on time alone, else its kind
-    def exchanges(df: DataFrame): Seq[String] = {
-      def walk(p: SparkPlan): Seq[String] = p match {
-        case _: BroadcastExchangeExec => Nil
-        case e: ShuffleExchangeExec =>
-          (e.outputPartitioning match {
-            case HashPartitioning(Seq(a: Attribute), _) if a.name == "time" => "time"
-            case _: HashPartitioning => "hash"
-            case _: RangePartitioning => "range"
-            case other => other.getClass.getSimpleName
-          }) +: walk(e.child)
-        case other => SharedPlan.subPlan(other).fold(other.children.flatMap(walk))(walk)
-      }
-      withoutAqe(walk(df.queryExecution.executedPlan))
-    }
-    val g = load()
+    val dir = LakeRequest.lake(spark)
+    val g = LakeRequest.load(spark)
+    def coarse = LakeRequest.coarse(g)
     val budget = Seq(
       ("bilinear", SpatialResample.bilinear(g, 2.0, 2.0).df, Seq("time")),
       ("cubic", SpatialResample.cubic(g, 2.0, 2.0).df, Seq("time")),
       ("cubicSpline", SpatialResample.cubicSpline(g, 2.0, 2.0).df, Seq("time")),
       ("lanczos", SpatialResample.lanczos(g, 2.0, 2.0).df, Seq("time")),
-      ("bilinear -> downsample", coarse(g).df, Seq("hash", "time")),
-      // the wide table is one aggregate keyed by time
-      ("pointsToTable", PointExtract.pointsToTable(coarse(g), stations, "t2m"),
-        Seq("time", "hash", "time")),
-      ("wesRows", Gssha.wesRows(coarse(g), hmet), Seq("time", "hash", "time")))
+      // the crop exchange, keyed by the 6-hour bucket, satisfies the
+      // regrid and downsample aggregates both
+      ("bilinear -> downsample", coarse.df, Seq("bucket")),
+      // the table and the WES lines aggregate by time (the bucket) with
+      // no exchange, and gather their one row per timestep
+      ("pointsToTable", PointExtract.pointsToTable(coarse, LakeRequest.Stations, "t2m"),
+        Seq("gather", "bucket")),
+      ("wesRows", Gssha.wesRows(coarse, LakeRequest.Hmet), Seq("gather", "bucket")))
     for ((name, df, want) <- budget)
-      assert(exchanges(df) == want, s"$name: exchanges ${exchanges(df)}, want $want")
+      assert(shuffleExchanges(df) == want, s"$name: exchanges ${shuffleExchanges(df)}, want $want")
     // the bilinear plan's broadcast side shuffles nothing either: its one
     // shuffle is the crop exchange, planned inside the shared relation
     val bilinearPlan = withoutAqe(SpatialResample.bilinear(g, 2.0, 2.0).df.queryExecution.executedPlan)
@@ -381,29 +348,39 @@ class ExtensionsAndSourcesSpec extends SparkSpec {
     assert(aqeOn.jobs.isEmpty && aqeOff == 0, s"bilinear ran ${aqeOn.jobs.size} / $aqeOff jobs")
     // a warm request: no load job, one broadcast job and one result job
     // for the table write and again for the WES collect, whose crop
-    // stage is skipped (the table write wrote its shuffle output); no
-    // RDD is left persisted
-    val first = request(0)
+    // stage is skipped (the table write wrote its shuffle output); after
+    // the crop exchange each job runs one task per shuffle partition, then
+    // one gathering task; no RDD is left persisted
+    val first = LakeRequest(spark, dir, 0)
     val held = spark.sparkContext.getPersistentRDDs.keySet
-    val (second, rec) = withoutAqe(graft.tools.Profile.record(spark)(request(1)))
+    val (second, rec) = withoutAqe(graft.tools.Profile.record(spark)(LakeRequest(spark, dir, 1)))
     assert(second.length == 8 && second.toSeq == first.toSeq)
     assert(rec.jobs.size == 4, s"warm request ran ${rec.jobs.size} jobs")
     assert(rec.jobs.map(_.skippedStages) == Seq(0, 0, 0, 1), s"skipped stages: ${rec.jobs}")
     assert(rec.jobs.last.site.startsWith("collect"), rec.jobs.last.site)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(rec.stages.takeRight(2).map(_.tasks) == Seq(parts, 1), s"stages: ${rec.stages}")
     assert(spark.sparkContext.getPersistentRDDs.keySet == held)
     assert(spark.read.parquet(s"$dir/out/req=1.parquet").inputFiles.length == 1)
+    // the join's not-null test on the tap indices runs inside the shared
+    // crop: neither action filters the rows it reads from it
+    val plans = rec.executions.map(_.qe.executedPlan)
+    assert(plans.size == 2)
+    assert(plans.forall(_.collect { case f: FilterExec if f.child.isInstanceOf[RDDScanExec] => f }
+      .isEmpty), plans.mkString("\n"))
     // a second warm request over another bbox, window and station set
     // compiles 3 classes: the one scan stage of the shared crop (its crop
     // filters stay literals for pushdown), once on the driver when the
-    // regrid plans it and once in a task, since the codegen cache is
-    // keyed by class loader; and the station filter, which Catalyst folds
-    // into the local target relation with a compiled predicate. Every
-    // other stage (taps, join and aggregates, downsample, point table,
-    // WES lines) reuses the classes the request above compiled.
+    // table write first reads it and once in a task, since the codegen
+    // cache is keyed by class loader; and the station filter, which
+    // Catalyst folds into the local target relation with a compiled
+    // predicate. The regrid's own time-keyed crop, which the downsample
+    // re-keys, is never read, so it never compiles. Every other stage
+    // (taps, join and aggregates, downsample, point table, WES lines)
+    // reuses the classes the request above compiled.
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val other = request(2, BBox(-83.2, 41.4, -81.0, 42.2),
-      ("2019-01-30 06:00:00", "2019-01-31 11:00:00"),
-      Seq(("q0", -82.7, 41.6), ("q1", -81.9, 41.8), ("q2", -81.3, 42.0), ("q3", -82.2, 42.1)))
+    val other = LakeRequest(spark, dir, 2, LakeRequest.OtherBox, LakeRequest.OtherWindow,
+      LakeRequest.OtherStations)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
     assert(other.length == 5 && spark.read.parquet(s"$dir/out/req=2.parquet").count() == 5)
     assert(compiles == 3, s"second warm request compiled $compiles classes")

@@ -74,4 +74,19 @@ class ProfileSpec extends SparkSpec {
     val walked = Profile.nodes(plan, scala.collection.mutable.ArrayBuffer.empty).map(_._2)
     assert(Profile.counts(walked).endsWith(", 2 exchanges, 1 scans"), Profile.counts(walked))
   }
+
+  test("Profile request dumps one warm analyst-path request: 4 jobs, the crop exchange keyed by the bucket") {
+    val buf = new ByteArrayOutputStream
+    Profile.request(spark, new PrintStream(buf, true, "UTF-8"))
+    val text = buf.toString("UTF-8")
+    assert("(?m)^== request: 4 jobs, \\d+ stages run, \\d+ tasks run, \\d+ classes compiled ==$".r
+      .findFirstIn(text).isDefined, text.take(2000))
+    assert("(?m)^job +\\d+: stages=".r.findAllIn(text).size == 4)
+    assert("(?m)^result: 5 table rows, 5 WES lines, sha256 of both [0-9a-f]{16}$".r
+      .findFirstIn(text).isDefined)
+    assert("(?m)^---- execution \\d+: ".r.findAllIn(text).size == 2)
+    // the one shared crop, shown once, hash-partitioned on the bucket
+    assert(text.split("---- shared sub-plan", -1).length == 2)
+    assert(text.contains("hashpartitioning(_bucket"))
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.SpatialResample
+import graft.model.{AxisSpec, GridDataset, GridMeta}
+import graft.operators.{SpatialResample, TemporalResample}
 import graft.sources.SyntheticGrid
 
 class SpatialResampleSpec extends SparkSpec {
@@ -197,5 +199,66 @@ class SpatialResampleSpec extends SparkSpec {
         s"$q under $conf: shared scans $scans")
       assert(scans.size == (if (regrids.contains(q)) 1 else 0), s"$q under $conf: shared scans $scans")
     }
+  }
+
+  test("a downsample over an interpolating regrid keys the crop exchange by its bucket: same rows as the plain path") {
+    // 5 x 4 cells, hourly from 1969-12-31 09:00 to 1970-01-02 00:00 UTC
+    // (buckets before and across the epoch), values that are not dyadic,
+    // and one row whose time is null
+    val (nx, ny, hours) = (5, 4, 40)
+    val cells = nx * ny
+    val t0 = java.time.Instant.parse("1969-12-31T09:00:00Z").getEpochSecond
+    val rows = spark.range(hours.toLong * cells).select(
+      timestamp_seconds(lit(t0) + floor(col("id") / cells) * 3600L).as("time"),
+      (lit(41.0) + floor(col("id") % cells / nx) * 0.25).as("y"),
+      (lit(-83.0) + col("id") % nx * 0.25).as("x"),
+      (lit(250.0) + sin(col("id") * 0.37) * 10.0).as("t2m"),
+      cos(col("id") * 0.11).as("u100"))
+    val nullTime = spark.range(1).select(lit(null).cast("timestamp").as("time"),
+      lit(41.25).as("y"), lit(-82.75).as("x"), lit(1e6).as("t2m"), lit(-1e6).as("u100"))
+    val g = GridDataset(rows.union(nullTime), GridMeta("epoch",
+      xAxis = Some(AxisSpec(-83.0, 0.25, nx)), yAxis = Some(AxisSpec(41.0, 0.25, ny))))
+    val regrids = Seq[(String, GridDataset => GridDataset)](
+      "bilinear" -> (SpatialResample.bilinear(_, 2.0, 2.0)),
+      "cubic" -> (SpatialResample.cubic(_, 2.0, 2.0)),
+      "lanczos" -> (SpatialResample.lanczos(_, 2.0, 2.0)))
+    val methods: Seq[(String, (GridDataset, String) => GridDataset)] =
+      Seq("mean", "sum", "first", "last", "median").map(m =>
+        m -> ((d: GridDataset, f: String) => TemporalResample.downsample(d, f, m))) :+
+      ("rms UDAF" -> ((d: GridDataset, f: String) =>
+        TemporalResample.downsampleCustom(d, f, c => graft.functions.Udafs.rms(c))))
+    def rowsOf(df: DataFrame): Seq[Row] = df.orderBy("time", "y", "x").collect().toSeq
+    // keys exactly; values up to the rounding of sums taken in another order
+    def same(a: Row, b: Row): Boolean = (0 until 3).forall(i => a.get(i) == b.get(i)) &&
+      (3 until a.length).forall { i =>
+        val (u, v) = (a.getDouble(i), b.getDouble(i))
+        math.abs(u - v) <= 1e-9 * math.max(1.0, math.abs(u))
+      }
+    for ((rn, regrid) <- regrids; freq <- Seq("6 hours", "90 minutes", "1 day")) {
+      val fine = regrid(g)
+      def run(want: Seq[String]): Seq[Seq[Row]] = methods.map { case (m, down) =>
+        val df = down(fine, freq).df
+        assert(shuffleExchanges(df) == want, s"$rn, $freq, $m: ${shuffleExchanges(df)}")
+        rowsOf(df)
+      }
+      val fused = run(Seq("bucket"))
+      // a persisted regrid output keeps the two-exchange plan: the
+      // downsample's exchange over the cached time-keyed crop exchange
+      // (cached as planned with AQE off, so the walk sees its exchanges)
+      withoutAqe(fine.df.persist())
+      val plain = try run(Seq("hash", "time")) finally fine.df.unpersist(blocking = true)
+      for (((m, _), (f, p)) <- methods.zip(fused.zip(plain))) {
+        assert(f.nonEmpty && f.forall(!_.isNullAt(0)), s"$rn, $freq, $m")
+        assert(f.length == p.length && f.zip(p).forall { case (a, b) => same(a, b) },
+          s"$rn, $freq, $m: fused ${f.take(3)} ..., plain ${p.take(3)} ...")
+      }
+    }
+    // a regrid output derived further keeps the two-exchange plan too
+    val fine = SpatialResample.bilinear(g, 2.0, 2.0)
+    for (derived <- Seq(fine.whereMask(col("t2m") > 250.0),
+                        fine.copy(df = fine.df.filter(col("u100") > 0.0)),
+                        fine.copy(df = fine.df.select("time", "y", "x", "t2m"))))
+      assert(shuffleExchanges(TemporalResample.downsample(derived, "6 hours", "mean").df) ==
+        Seq("hash", "time"))
   }
 }
